@@ -24,14 +24,16 @@ the driver (one row — the k-means-centroid pattern) and rides into
 the next round as a literal. Production BPE trainers iterate hundreds
 of rounds on a SAMPLED subset for exactly this reason — the per-round
 corpus pass is the cost driver, and the sample bound is a knob, not a
-redesign. The corpus is ``localCheckpoint``-ed per round so the plan
-stays flat.
+redesign. The corpus is staged per round (lazily, label ``bpe_corpus``)
+so the plan stays flat, and each superseded round is released.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .staging import materialize, release
 
 # adjacent pairs of the CURRENT tokenization, as ready-to-replace
 # literal patterns '[x][y]'
@@ -54,13 +56,19 @@ def corpus_strings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).where(F.expr(f"size(split(trim(lower({text_col})), '\\\\s+')) >= 1"))
 
 
+def stage_corpus(corpus: DataFrame) -> DataFrame:
+    """Lazily staged corpus (label ``bpe_corpus``): the next action
+    that reads it also writes it, so a learn round costs one corpus
+    pass instead of two."""
+    return materialize(corpus, label="bpe_corpus", default="checkpoint", eager=False)
+
+
 def learn_bpe_merges(
     docs: DataFrame,
     *,
     id_col: str,
     text_col: str,
     rounds: int,
-    checkpoint: bool = True,
     track_tokens: bool = True,
     corpus: DataFrame | None = None,
 ) -> DataFrame:
@@ -71,9 +79,9 @@ def learn_bpe_merges(
     ``tokens_after`` aggregation (emitted as NULL) — one fewer full
     corpus pass per round for callers that only consume the merge
     table itself (the encode path). ``corpus`` lets a caller share one
-    (doc_id, s) tokenized frame (``corpus_strings``, ideally lazily
-    checkpointed) between learn and encode — the caller then owns its
-    lineage cut and this function skips its own initial checkpoint."""
+    (doc_id, s) tokenized frame (``stage_corpus(corpus_strings(...))``)
+    between learn and encode — the caller then owns its lineage cut,
+    and this function never releases it."""
     if rounds < 1:
         raise ValueError(f"learn_bpe_merges: rounds must be >= 1, got {rounds}")
     for c in (id_col, text_col):
@@ -81,22 +89,16 @@ def learn_bpe_merges(
             raise ValueError(f"learn_bpe_merges: column {c!r} not in docs")
 
     spark = docs.sparkSession
-    # Lazy checkpoints: each round's pair-count collect materializes the
-    # checkpoint it reads in the SAME job, so a round costs one corpus
-    # pass instead of two (eager ran a dedicated materialization job per
-    # round, plus one for the final round's corpus that nothing reads —
-    # measured 4.1→2.7 s best-of-3 for the q114 learn+encode at sf0.1).
+    given = corpus
     if corpus is None:
-        corpus = corpus_strings(docs, id_col, text_col)
-        if checkpoint:
-            corpus = corpus.localCheckpoint(eager=False)
+        corpus = stage_corpus(corpus_strings(docs, id_col, text_col))
+    prev = None
     out_rows: list = []
     for k in range(1, rounds + 1):
         # The winning pair is ONE row — collect it so the replace rides
-        # into the next round as literals. (The previous broadcast-join
-        # form deferred the pairs aggregation into the output plan, so
-        # consuming the merge table re-ran every round's pair count a
-        # second time.) The pattern alphabet is hex + '[]+' — no SQL
+        # into the next round as literals (a broadcast-join form would
+        # defer the pair count into the output plan and re-run it per
+        # consumer). The pattern alphabet is hex + '[]+' — no SQL
         # quoting hazards.
         top = (
             corpus.select(F.expr(_TOKENS_EXPR).alias("t"))
@@ -107,16 +109,18 @@ def learn_bpe_merges(
             .limit(1)
             .collect()
         )
+        if prev is not given:  # that collect staged `corpus`; its source can go
+            release(prev)
         if not top:
             break
         pattern = top[0]["pattern"]
         merged = pattern.replace("][", "+")
         pair_count = int(top[0]["pair_count"])
-        corpus = corpus.select(
+        prev, corpus = corpus, corpus.select(
             "doc_id", F.expr(f"replace(s, '{pattern}', '{merged}')").alias("s")
         )
-        if checkpoint:
-            corpus = corpus.localCheckpoint(eager=False)
+        if k < rounds:  # the last round's corpus is read at most once
+            corpus = stage_corpus(corpus)
         tokens_after = None
         if track_tokens:
             v = corpus.agg(
@@ -124,6 +128,9 @@ def learn_bpe_merges(
             ).collect()[0]["n"]
             tokens_after = int(v) if v is not None else None
         out_rows.append((k, pattern, merged, pair_count, tokens_after))
+    for frame in (prev, corpus):  # the merge rows are on the driver now
+        if frame is not given:
+            release(frame)
     return spark.createDataFrame(
         out_rows,
         "merge_round int, pattern string, merged string, pair_count long, tokens_after long",

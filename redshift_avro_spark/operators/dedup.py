@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .staging import materialize, release
+
 __all__ = [
     "content_hash",
     "exact_dup_groups",
@@ -311,8 +313,6 @@ def ngram_jaccard_pairs(
     the candidate-sliver staging rule — g is bounded by the candidate
     member set, and its recompute-from-source on executor loss is one
     scan + transform."""
-    from .staging import materialize
-
     src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
     if candidates is not None:
         member_ids = (
@@ -494,11 +494,12 @@ def connected_components(
     graph diameter; near-dup graphs are unions of overlapping LSH-band
     cliques with single-digit diameter, so propagation beats the
     O(log n)-round star-contraction alternative (Kiveris et al.,
-    MapReduce CC) on constant factors. Labels are localCheckpoint'ed
-    eagerly per round — without the lineage cut, round k's plan
-    re-derives rounds 1..k-1 and the convergence-check action pays it
-    again. Edge sets at or under ``driver_cap`` rows instead collect
-    once and label in-process (identical result, no per-round jobs).
+    MapReduce CC) on constant factors. Labels are staged eagerly per
+    round (label ``cc_labels``) and the superseded round released —
+    without the lineage cut, round k's plan re-derives rounds 1..k-1
+    and the convergence-check action pays it again. Edge sets at or
+    under ``driver_cap`` rows instead collect once and label
+    in-process (identical result, no per-round jobs).
     Returns (id, component_id)."""
     # Near-dup edge sets are slivers of the corpus; under the cap
     # (a parameter — 500k edges keeps the Python adjacency well under
@@ -507,14 +508,17 @@ def connected_components(
     # result (a graph property, not an execution artifact) without
     # diameter × 3 scheduled jobs. Larger edge sets take the
     # distributed propagation below. The projected edge frame is
-    # checkpointed FIRST so the cap probe evaluates the upstream edge
+    # staged FIRST so the cap probe evaluates the upstream edge
     # plan once and the over-cap distributed loop reuses the
     # materialized blocks instead of re-deriving it.
-    edges_uv = edges.select(
-        F.col(src_col).alias("u"), F.col(dst_col).alias("v")
-    ).localCheckpoint(eager=True)
+    edges_uv = materialize(
+        edges.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v")),
+        label="cc_edges",
+        default="checkpoint",
+    )
     head = edges_uv.limit(driver_cap + 1).collect()
     if len(head) <= driver_cap:
+        release(edges_uv)
         adj: dict = {}
         for r in head:
             u, v = r["u"], r["v"]
@@ -547,24 +551,29 @@ def connected_components(
         .unionByName(edges_uv.select(F.col("v").alias("u"), F.col("u").alias("v")))
         .distinct()
     )
-    labels = sym.select("u").distinct().withColumn("label", F.col("u"))
-    labels = labels.localCheckpoint(eager=True)
+    labels = materialize(
+        sym.select("u").distinct().withColumn("label", F.col("u")),
+        label="cc_labels",
+        default="checkpoint",
+    )
     for _ in range(max_iter):
         neighbor_min = (
             sym.join(labels.withColumnRenamed("u", "v"), "v")
             .groupBy("u")
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = (
+        new_labels = materialize(
             labels.join(neighbor_min, "u", "left")
-            .select("u", F.least("label", F.coalesce("nmin", "label")).alias("label"))
-            .localCheckpoint(eager=True)
+            .select("u", F.least("label", F.coalesce("nmin", "label")).alias("label")),
+            label="cc_labels",
+            default="checkpoint",
         )
         converged = (
             new_labels.join(labels.withColumnRenamed("label", "old"), "u")
             .where(F.col("label") != F.col("old"))
             .isEmpty()
         )
+        release(labels)
         labels = new_labels
         if converged:
             break

@@ -22,15 +22,18 @@ aggregation on dst — O(E) per round, no driver-side state beyond the
 loop counter. Lineage is cut per round through
 :func:`..operators.staging.materialize` (checkpoint default — the q63
 pattern; env-flippable to parquet where O(E) staging must live on
-disk) so the plan stays flat at any iteration count. A
-power-law hub is ordinary key skew: AQE skew-join handles the join
-side, and the dst aggregation map-side combines.
+disk) so the plan stays flat at any iteration count, and each
+superseded round is released. A power-law hub is ordinary key skew:
+AQE skew-join handles the join side, and the dst aggregation map-side
+combines.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .staging import materialize, release
 
 TOTAL_MASS = 1_000_000_000_000  # 10^12 fixed-point units across all nodes
 
@@ -41,7 +44,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     iterations: int = 5,
-    checkpoint: bool = True,
 ) -> DataFrame:
     """Fixed-round PageRank over a directed edge list.
 
@@ -62,8 +64,6 @@ def pagerank(
     if missing:
         raise ValueError(f"pagerank: edge columns {missing} not in edges")
 
-    from .staging import materialize
-
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     # explode instead of a two-branch union (one evaluation of the
     # caller's edge subplan, same node multiset)
@@ -72,30 +72,25 @@ def pagerank(
     )
     outdeg = e.groupBy("src").agg(F.count("*").cast("long").alias("outdeg"))
     # edge list annotated with the source's out-degree, computed once
-    # and reused every round. Cuts route through materialize (round
-    # 11): the former hard-coded localCheckpoint pinned the O(E)
-    # frames to executor-storage blocks (deserialized JVM objects,
-    # ~5-10x the on-disk bytes) with no way to flip the mode — the
+    # and reused every round. The O(E) frames default to checkpoint;
+    # SPARK_GRAFT_MATERIALIZE[_<LABEL>]=parquet moves them to disk (a
     # 100x trade-graph sweep OOMed a 32g single-JVM session on
-    # exactly this. Defaults stay "checkpoint" (local numbers and
-    # fault story unchanged); SPARK_GRAFT_MATERIALIZE[_<LABEL>]
-    # selects parquet where O(E) staging must live on disk.
-    ew = e.join(outdeg, "src")
-    if checkpoint:
-        ew = materialize(ew, label="pagerank_ew", default="checkpoint")
-        # nodes is loop-INVARIANT but was never cut: every round's
-        # left join AND the per-round broadcast of n_nodes replayed
-        # the edge-scan + distinct subplan (cut BEFORE n_df/ranks so
-        # both consume the materialized frame)
-        nodes = materialize(nodes, label="pagerank_nodes", default="checkpoint")
+    # executor-storage blocks).
+    ew = materialize(e.join(outdeg, "src"), label="pagerank_ew", default="checkpoint")
+    # nodes is loop-INVARIANT: cut it BEFORE n_df/ranks so every
+    # round's left join and the n_nodes broadcast read the staged frame
+    # instead of replaying the edge-scan + distinct subplan
+    nodes = materialize(nodes, label="pagerank_nodes", default="checkpoint")
     n_df = F.broadcast(nodes.agg(F.count("*").cast("long").alias("n_nodes")))
 
     base = F.expr(f"({15 * TOTAL_MASS} div (100 * n_nodes))")
-    ranks = nodes.crossJoin(n_df).select(
-        "node", F.expr(f"({TOTAL_MASS} div n_nodes)").cast("long").alias("rank_fp")
+    ranks = materialize(
+        nodes.crossJoin(n_df).select(
+            "node", F.expr(f"({TOTAL_MASS} div n_nodes)").cast("long").alias("rank_fp")
+        ),
+        label="pagerank_ranks",
+        default="checkpoint",
     )
-    if checkpoint:
-        ranks = materialize(ranks, label="pagerank_ranks", default="checkpoint")
     for _ in range(iterations):
         inc = (
             ew.join(ranks, ew.src == ranks.node)
@@ -104,16 +99,18 @@ def pagerank(
             .agg(F.sum("c").cast("long").alias("inc"))
             .withColumnRenamed("dst", "node")
         )
-        ranks = (
+        new_ranks = materialize(
             nodes.join(inc, "node", "left")
             .crossJoin(n_df)
             .select(
                 "node",
                 (base + F.coalesce(F.col("inc"), F.lit(0))).cast("long").alias("rank_fp"),
-            )
+            ),
+            label="pagerank_ranks",
+            default="checkpoint",
         )
-        if checkpoint:
-            ranks = materialize(ranks, label="pagerank_ranks", default="checkpoint")
+        release(ranks)
+        ranks = new_ranks
     return (
         ranks.join(outdeg, ranks.node == outdeg.src, "left")
         .select("node", F.coalesce("outdeg", F.lit(0)).cast("long").alias("outdeg"), "rank_fp")
@@ -173,8 +170,6 @@ def triangle_count(
         # edge⋈degree chain per consumer (routed through materialize
         # since round 11 — see pagerank's comment; default unchanged)
     )
-    from .staging import materialize
-
     oriented = materialize(
         oriented, label="triangle_oriented", default="checkpoint"
     )
@@ -225,32 +220,30 @@ def bfs_distances(
         raise ValueError(f"bfs_distances: max_hops must be >= 0, got {max_hops}")
     if "node" not in seeds.columns:
         raise ValueError("bfs_distances: seeds must have a 'node' column")
-    from .staging import materialize
-
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     und = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))).distinct()
-    # cuts routed through materialize since round 11 (see pagerank's
-    # comment; defaults unchanged — und is the O(E) frame)
     und = materialize(und, label="bfs_und", default="checkpoint")
 
+    # One staged frame per hop: the frontier is the previous hop's rows
+    # of `visited`, so each hop is a single boundary and the superseded
+    # `visited` can be released as soon as the next one is staged.
     visited = materialize(
         seeds.select("node", F.lit(0).alias("dist")).distinct(),
         label="bfs_visited",
         default="checkpoint",
     )
-    frontier = visited.select("node")
     for hop in range(1, max_hops + 1):
-        nxt = materialize(
-            und.join(frontier.withColumnRenamed("node", "a"), "a")
+        frontier = visited.where(F.col("dist") == hop - 1).select(F.col("node").alias("a"))
+        nxt = (
+            und.join(frontier, "a")
             .select(F.col("b").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .select("node", F.lit(hop).alias("dist")),
-            label="bfs_frontier",
-            default="checkpoint",
+            .select("node", F.lit(hop).alias("dist"))
         )
-        visited = materialize(
+        new_visited = materialize(
             visited.unionByName(nxt), label="bfs_visited", default="checkpoint"
         )
-        frontier = nxt.select("node")
+        release(visited)
+        visited = new_visited
     return visited

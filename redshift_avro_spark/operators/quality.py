@@ -32,6 +32,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .staging import materialize
+
 __all__ = ["RowConstraint", "UniqueConstraint", "ForeignKeyConstraint", "validate"]
 
 
@@ -85,7 +87,8 @@ def validate(df: DataFrame, constraints: list) -> DataFrame:
                     F.when(F.expr(c.predicate), F.lit(0)).otherwise(F.lit(1))
                 ).cast("long").alias(f"__v_{order[c.name]}")
             )
-        one = df.agg(*aggs).localCheckpoint()  # consumed once per row constraint
+        # consumed once per row constraint
+        one = materialize(df.agg(*aggs), label="validate_row_counts", default="checkpoint")
         for c in row_cs:
             parts.append(
                 one.select(

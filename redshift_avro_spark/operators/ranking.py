@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .staging import materialize
+
 __all__ = ["distributed_rank"]
 
 
@@ -74,14 +76,18 @@ def distributed_rank(
         F.max(i).cast("long").alias("__hi"),
     )
     w_off = Window.orderBy("__v").rowsBetween(Window.unboundedPreceding, -1)
-    plan = stats.select(
-        "__v",
-        F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off"),
-        # number of id-range splits for this value group; 1 = no split
-        F.expr(f"(__n + {split_threshold} - 1) div {split_threshold}").alias("__s"),
-        "__lo",
-        "__hi",
-    ).localCheckpoint(eager=True)  # tiny; probed once, joined twice
+    plan = materialize(  # tiny; probed once, joined twice
+        stats.select(
+            "__v",
+            F.coalesce(F.sum("__n").over(w_off), F.lit(0)).alias("__off"),
+            # number of id-range splits for this value group; 1 = no split
+            F.expr(f"(__n + {split_threshold} - 1) div {split_threshold}").alias("__s"),
+            "__lo",
+            "__hi",
+        ),
+        label="rank_plan",
+        default="checkpoint",
+    )
 
     joined = df.join(
         F.broadcast(plan), df[value_col] == F.col("__v"), "inner"

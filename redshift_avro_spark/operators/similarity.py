@@ -1554,8 +1554,9 @@ def knn_graph(
     # r10 #4): the self-join consumed it from both sides via exchange
     # reuse — correct, but dependent on the two subplans staying
     # byte-identical through optimizer changes; the explicit cut makes
-    # the hyperplane pass single-evaluation by construction. Three
-    # narrow ints per corpus row → candidate-sliver staging rule,
+    # the hyperplane pass single-evaluation by construction. n_bands
+    # rows of three narrow ints per corpus row — a sliver of the input
+    # by BYTES, not rows (SCALING.md, "Materialization boundaries") →
     # checkpoint default.
     from .staging import materialize
 

@@ -1,40 +1,39 @@
-"""Unified materialization-boundary helper.
+"""Staging: the one module that cuts lineage, releases staged
+generations and memoizes per-corpus frames.
 
-The repo's recurring perf fix is cutting MULTI-CONSUMER SUBPLAN
-RE-EVALUATION: a frame feeding two consumers (candidate list →
-semi-join + pair join; postings → rank + relevance; signal join → two
-rank phases) re-runs its whole upstream pipeline once per consumer
-unless a lineage cut materializes it. There are three ways to cut,
-with different executor-loss trades at 100 TB:
+:func:`materialize` cuts the lineage of a frame that several consumers
+read (or that a loop rebuilds each round), so its upstream plan runs
+once. Each site passes a LABEL and a default mode:
 
 ``parquet``
-    Write/read a temp parquet dir — a stage boundary that SURVIVES
-    executor loss (blocks live in the warehouse filesystem, lineage
-    can always re-read). The right default for corpus-scale frames
-    (q49's survivors): losing an executor mid-pipeline does not force
-    a recompute of everything upstream.
+    Write/read a temp parquet dir. Survives executor loss (blocks live
+    in the filesystem): the default for corpus-scale frames.
 ``checkpoint``
-    ``localCheckpoint(eager=True)`` — executor-storage blocks with the
-    lineage CUT, so a lost executor loses its blocks unrecoverably and
-    the job fails/restarts. In-session lifecycle (no files), cheapest
-    boundary. The right default for candidate-sliver / small-index
-    frames whose recompute-from-source on a restart is cheap relative
-    to the corpus stages around them.
+    ``localCheckpoint`` into executor storage. Cheapest, but a lost
+    executor loses its blocks and the job fails: the default for
+    small-index and candidate-sliver frames and for loop state.
+    ``eager=False`` defers the write to the next action that reads the
+    frame (only the BPE corpus: ``operators.bpe.stage_corpus``).
 ``none``
-    No boundary — recompute per consumer (the round-1 behavior;
-    useful for measurement and for single-consumer callers).
+    No boundary: recompute per consumer.
 
-Every eager-checkpoint site in the query surface routes through
-:func:`materialize` with a LABEL and a per-site default mode
-(VERDICT r5 "What's wrong" #1 — previously only q49's survivors had
-the knob while ~10 sites hard-coded eager checkpoints). Overrides:
+``SPARK_GRAFT_MATERIALIZE_<LABEL>`` (upper-cased label) overrides one
+site, then ``SPARK_GRAFT_MATERIALIZE`` all of them. Values are the same
+under every mode. SCALING.md's "Materialization boundaries" lists the
+labels, their defaults and the measurements behind them.
 
-* ``SPARK_GRAFT_MATERIALIZE_<LABEL>`` (upper-cased label) — per site,
-* ``SPARK_GRAFT_MATERIALIZE`` — global,
-* else the site's documented default.
+Each staged frame is a generation of its label. Per label the newest
+``_GENERATIONS_PER_LABEL`` stay staged; an older one is evicted with a
+warning, since a consumer still holding it would fail with
+FileNotFoundException / CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (the cap sits
+well above the widest real liveness window: a composite holds at most
+~7 same-label member frames). Loops instead :func:`release` each
+generation they supersede, quietly, so any round count keeps one or two
+staged.
 
-SCALING.md's "Materialization boundaries" section records the default
-per family and the measurements behind them.
+:func:`memoized` builds a frame several queries share (a trained model,
+an encoded corpus) once per (label, Spark application, corpus dir),
+keeping the newest ``_MEMO_CORPORA_PER_LABEL`` corpora per label.
 """
 
 from __future__ import annotations
@@ -48,147 +47,131 @@ import tempfile
 
 from pyspark.sql import DataFrame
 
-__all__ = ["materialize", "resolve_mode", "MODES"]
+__all__ = ["materialize", "release", "memoized", "resolve_mode", "MODES"]
 
 MODES = ("checkpoint", "parquet", "none")
 
 _LOG = logging.getLogger(__name__)
 
-# One staging dir per materialize() INVOCATION (label + monotone
-# counter + application id), removed at interpreter exit. The path
-# must be invocation-unique, not label-unique: composites (e.g. q86
-# unions q33+q123+q160+q175 lazily) share labels like
-# 'lsh_candidates' across members, and a later member overwriting a
-# shared path would delete part files an earlier member's lazy
-# read.parquet already listed → FileNotFoundException at action time
-# (ADVICE r6 #1). Growth stays BOUNDED: per label only the newest
-# _GENERATIONS_PER_LABEL dirs are kept (a long-lived process — bench
-# best-of-3 over ~180 queries, the gate replica — would otherwise
-# accumulate one corpus-sized dir per call). The cap is sized well
-# above the widest real liveness window (one composite evaluation
-# holds ≤ ~7 same-label member frames at once); an eviction that
-# fires while the evicted frame is still lazily referenced would
-# resurface the FileNotFoundException bug at this higher threshold,
-# so every eviction logs the evicted path loudly (ADVICE r7 #1) —
-# a FileNotFound after such a warning means the liveness window
-# outgrew the cap and _GENERATIONS_PER_LABEL must be raised.
-#
-# Checkpoint mode has the SAME lifecycle problem in the opposite
-# resource: localCheckpoint blocks live in executor storage with the
-# lineage CUT, and nothing ever released them (VERDICT r7 "What's
-# wrong" #1 — ~200 queries' worth of blocks accumulate in the shared
-# 8g session until the suite dies). Superseded same-label checkpoint
-# frames are therefore evicted under the identical newest-N policy:
-# the backing LogicalRDD is unpersisted once N newer generations of
-# the label exist. Reading an evicted frame fails LOUDLY
-# (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND — the lineage is cut, Spark
-# cannot silently recompute), matching the parquet arm's failure
-# mode, hence the same generous cap and the same eviction warning.
-_CLEANUP_REGISTERED: set = set()
-_INVOCATION_COUNTER = 0
 _GENERATIONS_PER_LABEL = 16
-_LABEL_GENERATIONS: dict = {}
-_LABEL_CHECKPOINTS: dict = {}
+_MEMO_CORPORA_PER_LABEL = 4
+# label -> [(staged frame, parquet dir or None for a checkpoint)], oldest first
+_GENERATIONS: dict = {}
+# label -> {(applicationId, abspath(sf_dir)): built value}, oldest first
+_MEMO: dict = {}
+_INVOCATION_COUNTER = 0
 
 
 def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Release the executor-storage blocks behind a localCheckpoint'd
-    frame. The checkpointed Dataset's analyzed plan is the LogicalRDD
-    wrapping the persisted internal RDD; unpersist(blocking=False)
-    drops its blocks. Best-effort: plan-shape drift across Spark
-    versions degrades to the old keep-forever behavior, never to a
-    wrong answer."""
+    """Drop the executor-storage blocks behind a checkpointed frame (the
+    LogicalRDD at its plan root). Best-effort: plan-shape drift across
+    Spark versions degrades to keeping the blocks, never to a wrong
+    answer."""
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
     except Exception:  # pragma: no cover - defensive, version drift
         _LOG.debug("checkpoint unpersist navigation failed", exc_info=True)
 
 
-def resolve_mode(label: str, default: str, *, extra_env: str | None = None) -> str:
+def _drop(frame: DataFrame, path: str | None) -> None:
+    if path is None:
+        _unpersist_checkpoint(frame)
+    else:
+        shutil.rmtree(path, ignore_errors=True)
+
+
+@atexit.register
+def _drop_parquet_generations() -> None:
+    for gens in _GENERATIONS.values():
+        for _, path in gens:
+            if path is not None:
+                shutil.rmtree(path, ignore_errors=True)
+
+
+def resolve_mode(label: str, default: str) -> str:
     """Resolve the materialization mode for a labeled site: per-site
-    env > legacy/extra env key > global env > the site default.
-    Unknown values fall back to the default."""
+    env > global env > the site default. Unknown values fall back to
+    the default."""
     if default not in MODES:
         raise ValueError(f"materialize: unknown default mode {default!r}")
     key = "SPARK_GRAFT_MATERIALIZE_" + re.sub(r"[^A-Za-z0-9]+", "_", label).upper()
-    for candidate in (
-        os.environ.get(key),
-        os.environ.get(extra_env) if extra_env else None,
-        os.environ.get("SPARK_GRAFT_MATERIALIZE"),
-    ):
+    for candidate in (os.environ.get(key), os.environ.get("SPARK_GRAFT_MATERIALIZE")):
         if candidate in MODES:
             return candidate
     return default
 
 
 def materialize(
-    df: DataFrame,
-    *,
-    label: str,
-    default: str = "checkpoint",
-    extra_env: str | None = None,
+    df: DataFrame, *, label: str, default: str = "checkpoint", eager: bool = True
 ) -> DataFrame:
-    """Cut the lineage of a multi-consumer frame under the site's
-    resolved mode (see module docstring). Values are identical under
-    every mode — only the boundary's cost/fault-tolerance changes."""
-    mode = resolve_mode(label, default, extra_env=extra_env)
+    """Cut the lineage of ``df`` under the site's resolved mode (see
+    the module docstring) and track the result as a generation of
+    ``label``. ``eager`` only matters in checkpoint mode; a parquet
+    stage is always written at once."""
+    mode = resolve_mode(label, default)
     if mode == "none":
         return df
+    path = None
     if mode == "parquet":
+        # One dir per INVOCATION: composite members share labels, and a
+        # later member overwriting a shared path would delete part files
+        # an earlier member's lazy read already listed.
         global _INVOCATION_COUNTER
         spark = df.sparkSession
-        safe = re.sub(r"[^A-Za-z0-9._-]+", "_", label)
         _INVOCATION_COUNTER += 1
         path = os.path.join(
             tempfile.gettempdir(),
-            f"stage_{safe}_{spark.sparkContext.applicationId}_{_INVOCATION_COUNTER}",
+            f"stage_{re.sub(r'[^A-Za-z0-9._-]+', '_', label)}"
+            f"_{spark.sparkContext.applicationId}_{_INVOCATION_COUNTER}",
         )
-        if path not in _CLEANUP_REGISTERED:
-            _CLEANUP_REGISTERED.add(path)
-            atexit.register(shutil.rmtree, path, ignore_errors=True)
-        gens = _LABEL_GENERATIONS.setdefault(safe, [])
-        gens.append(path)
-        while len(gens) > _GENERATIONS_PER_LABEL:
-            old = gens.pop(0)
-            _LOG.warning(
-                "materialize[%s]: evicting staged parquet generation %s "
-                "(> %d newer generations exist); a FileNotFoundException "
-                "after this warning means a consumer outlived the "
-                "liveness window — raise _GENERATIONS_PER_LABEL",
-                label,
-                old,
-                _GENERATIONS_PER_LABEL,
-            )
-            shutil.rmtree(old, ignore_errors=True)
-        # Writer knobs (round 11, VERDICT r10 #1 — measured rather than
-        # assumed): at sf0.1 every staged frame already lands as ONE
-        # part file (AQE partition coalescing), and a snappy / zstd /
-        # lz4 / uncompressed A/B on the largest staged frame (q49
-        # survivors) was flat within noise (1.502/1.515/1.515/1.547 s
-        # best-of-5) — so no codec default changes and no coalesce is
-        # forced (a coalesce would throttle the upstream stage's
-        # parallelism; AQE already sizes the write). The codec stays a
-        # deployment knob: a 100 TB cluster whose staging volume is
-        # disk- or network-bound sets SPARK_GRAFT_STAGE_CODEC=zstd (or
-        # lz4 for CPU-bound hosts) without touching code.
-        codec = os.environ.get("SPARK_GRAFT_STAGE_CODEC")
-        writer = df.write.mode("overwrite")
-        if codec:
-            writer = writer.option("compression", codec)
-        writer.parquet(path)
-        return spark.read.parquet(path)
-    cp = df.localCheckpoint(eager=True)
-    cps = _LABEL_CHECKPOINTS.setdefault(label, [])
-    cps.append(cp)
-    while len(cps) > _GENERATIONS_PER_LABEL:
-        old_cp = cps.pop(0)
+        # Writer defaults on purpose: every staged frame lands as one
+        # part file at sf0.1 (AQE coalescing), and a snappy / zstd / lz4
+        # / uncompressed A/B on the largest one (q49 survivors) was flat
+        # (1.502/1.515/1.515/1.547 s best-of-5).
+        df.write.mode("overwrite").parquet(path)
+        staged = spark.read.parquet(path)
+    else:
+        staged = df.localCheckpoint(eager=eager)
+    gens = _GENERATIONS.setdefault(label, [])
+    gens.append((staged, path))
+    while len(gens) > _GENERATIONS_PER_LABEL:
+        old, old_path = gens.pop(0)
         _LOG.warning(
-            "materialize[%s]: unpersisting superseded checkpoint generation "
-            "(> %d newer generations exist); a CHECKPOINT_RDD_BLOCK_ID_NOT_"
-            "FOUND after this warning means a consumer outlived the "
-            "liveness window — raise _GENERATIONS_PER_LABEL",
+            "materialize[%s]: evicting staged generation %s (> %d newer "
+            "generations exist); a FileNotFoundException or CHECKPOINT_RDD_"
+            "BLOCK_ID_NOT_FOUND after this warning means a consumer outlived "
+            "the liveness window — raise _GENERATIONS_PER_LABEL",
             label,
+            old_path or "(checkpoint)",
             _GENERATIONS_PER_LABEL,
         )
-        _unpersist_checkpoint(old_cp)
-    return cp
+        _drop(old, old_path)
+    return staged
+
+
+def release(df: DataFrame | None) -> None:
+    """Drop a staged generation its caller has superseded: delete its
+    parquet dir or unpersist its checkpoint blocks, quietly. Call it
+    only once nothing will read ``df`` again, i.e. every frame computed
+    from it is itself staged. A frame :func:`materialize` did not stage
+    (mode ``none``, or never staged) is left alone."""
+    for gens in _GENERATIONS.values():
+        for i, (frame, path) in enumerate(gens):
+            if frame is df:
+                del gens[i]
+                _drop(frame, path)
+                return
+
+
+def memoized(label: str, spark, sf_dir: str, build):
+    """``build()``'s result, built once per (label, Spark application,
+    abspath(sf_dir)) and shared by every later caller; the newest
+    ``_MEMO_CORPORA_PER_LABEL`` corpora are kept per label, well inside
+    a memoized staged frame's generation window."""
+    memo = _MEMO.setdefault(label, {})
+    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
+    if key not in memo:
+        memo[key] = build()
+        while len(memo) > _MEMO_CORPORA_PER_LABEL:
+            memo.pop(next(iter(memo)))
+    return memo[key]

@@ -44,7 +44,7 @@ _MIN_WORDS = 20
 # parquet | none; measurements live in ONE place: SCALING.md's q49
 # entry — best-of-3 at sf0.1, parquet fastest and also the 100 TB shape
 # for this corpus-scale frame, since parquet blocks survive executor
-# loss where localCheckpoint's storage blocks do not).
+# loss where checkpoint-mode storage blocks do not).
 
 
 @register(
@@ -124,8 +124,7 @@ def q49_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # slower than recompute in round 1 — repeated invocations leak
     # never-unpersisted cache blocks — so the staging is a lineage cut,
     # not a cache). Corpus-scale frame → parquet default
-    # (executor-loss-safe); SPARK_GRAFT_Q49_MATERIALIZE kept as the
-    # legacy override key.
+    # (executor-loss-safe).
     survivors = materialize(
         kept.withColumn(
             "keeper",
@@ -135,7 +134,6 @@ def q49_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .drop("keeper"),
         label="q49_survivors",
         default="parquet",
-        extra_env="SPARK_GRAFT_Q49_MATERIALIZE",
     )
     # the candidate list is a sliver of the corpus but feeds two
     # consumers inside the verify stage (member semi-join + pair

@@ -16,6 +16,7 @@ from pyspark.sql.window import Window
 
 from . import REGISTRY, load_table, register
 from ..operators.similarity import DEFAULT_CELL_CAP, lsh_bucket_topk, topk_neighbors
+from ..operators.staging import memoized
 
 # One trained semantic-dedup cell assignment per (application, corpus):
 # q94, q181 and therefore the q93 composite share the SAME (assign,
@@ -24,25 +25,19 @@ from ..operators.similarity import DEFAULT_CELL_CAP, lsh_bucket_topk, topk_neigh
 # composite ran twice before (ADVICE r7 #4). Safe to share because the
 # trajectory is fully deterministic (md5 seeding, decimal-exact means)
 # and ``assign`` is parquet-staged, so the reuse is a cheap re-read.
-# Bounded: the memo keeps the 4 newest corpora, well under the staging
-# layer's 16-generation liveness window for the shared label.
-_SD_CELLS_MEMO: dict = {}
-
-
 def _sd_cells(spark: SparkSession, sf_dir: str) -> tuple:
-    import os
+    from ..operators.similarity import _semantic_cells
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _SD_CELLS_MEMO:
-        from ..operators.similarity import _semantic_cells
+    return memoized(
+        "sd_cells",
+        spark,
+        sf_dir,
+        lambda: _semantic_cells(
+            load_table(spark, sf_dir, "embeddings"),
+            "vec_id", "embedding", 8, 2, 64, DEFAULT_CELL_CAP, 4,
+        ),
+    )
 
-        emb = load_table(spark, sf_dir, "embeddings")
-        _SD_CELLS_MEMO[key] = _semantic_cells(
-            emb, "vec_id", "embedding", 8, 2, 64, DEFAULT_CELL_CAP, 4
-        )
-        while len(_SD_CELLS_MEMO) > 4:
-            _SD_CELLS_MEMO.pop(next(iter(_SD_CELLS_MEMO)))
-    return _SD_CELLS_MEMO[key]
 
 _COS = (
     "(list_aggregate(list_transform(list_zip(qvec, cvec),"
@@ -1985,8 +1980,6 @@ REGISTRY["q202_ivf_nprobe_sweep"].oracle = _q202_oracle()
 
 _COST_PROBES = _SWEEP_PROBES  # one probe ladder for recall AND cost
 
-_IVF_EVAL_MEMO: dict = {}
-
 
 def _ivf_eval_index(spark: SparkSession, sf_dir: str) -> tuple:
     """ONE (centers, materialized assignment) per (app, corpus) for
@@ -1994,13 +1987,10 @@ def _ivf_eval_index(spark: SparkSession, sf_dir: str) -> tuple:
     arguments (8 centroids, 2 Lloyd iterations, dim 64, oversample
     seed), trained once and reused by every probe setting of both
     consumers."""
-    import os
-
     from ..operators.similarity import _assign_nearest, ivf_train_centers
     from ..operators.staging import materialize
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _IVF_EVAL_MEMO:
+    def build() -> tuple:
         emb = load_table(spark, sf_dir, "embeddings")
         centers = ivf_train_centers(emb, "vec_id", "embedding", 8, 2, 64)
         c = emb.select(
@@ -2012,10 +2002,9 @@ def _ivf_eval_index(spark: SparkSession, sf_dir: str) -> tuple:
             label="ivf_eval_assign",
             default="checkpoint",
         )
-        _IVF_EVAL_MEMO[key] = (centers, assign)
-        while len(_IVF_EVAL_MEMO) > 4:
-            _IVF_EVAL_MEMO.pop(next(iter(_IVF_EVAL_MEMO)))
-    return _IVF_EVAL_MEMO[key]
+        return centers, assign
+
+    return memoized("ivf_eval_index", spark, sf_dir, build)
 
 
 def _q205_oracle() -> str:

@@ -1480,26 +1480,20 @@ def q188_trigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ONE training per (app, corpus) instead of re-deriving the five count
 # tables per consumer. The scored frame is corpus-ROW-scale → parquet
 # staging boundary per the staging rule.
-_KN_MEMO: dict = {}
-
-
 def _kn_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    from ..operators.staging import materialize
+    from ..operators.staging import materialize, memoized
     from ..operators.text import trigram_lm_scores
 
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _KN_MEMO:
-        docs = load_table(spark, sf_dir, "documents")
-        _KN_MEMO[key] = materialize(
-            trigram_lm_scores(docs, "doc_id", "text"),
+    return memoized(
+        "kn_scores",
+        spark,
+        sf_dir,
+        lambda: materialize(
+            trigram_lm_scores(load_table(spark, sf_dir, "documents"), "doc_id", "text"),
             label="kn_scores",
             default="parquet",
-        )
-        while len(_KN_MEMO) > 4:
-            _KN_MEMO.pop(next(iter(_KN_MEMO)))
-    return _KN_MEMO[key]
+        ),
+    )
 
 
 # --------------------------------------------------------------- q189

@@ -13,9 +13,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.staging import materialize
 from . import load_table, register
-from ..operators.bpe import apply_bpe_merges, learn_bpe_merges
+from ..operators.bpe import apply_bpe_merges, corpus_strings, learn_bpe_merges, stage_corpus
+from ..operators.staging import materialize, memoized
 
 _ROUNDS = 5
 
@@ -74,8 +74,8 @@ def q105_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape (per round): one narrow re-tokenization, one
     uniform-key pair aggregation, a 1-row TakeOrdered whose winner
-    rides back in as a broadcast — no driver collect; corpus
-    localCheckpoint keeps the plan flat. Production BPE trainers run
+    rides back in as a broadcast — no driver collect; a per-round
+    corpus cut keeps the plan flat. Production BPE trainers run
     hundreds of rounds on a SAMPLED subset — the sample size is a
     knob on the same plan, not a redesign."""
     docs = load_table(spark, sf_dir, "documents")
@@ -103,23 +103,13 @@ _ENC_CTES = f"""{_BASE_CTES},
 # ONE BPE training + corpus fold per (app, corpus) instead of one per
 # consumer. Corpus-ROW-scale frame → parquet staging boundary per the
 # staging rule.
-_BPE_MEMO: dict = {}
-
-
 def _bpe_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir))
-    if key not in _BPE_MEMO:
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents")
-        from ..operators.bpe import corpus_strings
-
-        # ONE md5 tokenization shared by learn and encode: the lazy
-        # checkpoint materializes in learn's first pair-count job and
-        # the encode fold reads the same blocks. EXEMPT from the
-        # materialize() routing rule: a LAZY checkpoint feeding an
-        # ITERATIVE loop — the documented iterative exemption.
-        corpus = corpus_strings(docs, "doc_id", "text").localCheckpoint(eager=False)
+        # ONE md5 tokenization shared by learn and encode: the lazy cut
+        # is written by learn's first pair-count job and the encode fold
+        # reads the same blocks.
+        corpus = stage_corpus(corpus_strings(docs, "doc_id", "text"))
         merges = learn_bpe_merges(
             docs,
             id_col="doc_id",
@@ -128,14 +118,13 @@ def _bpe_encoded(spark: SparkSession, sf_dir: str) -> DataFrame:
             track_tokens=False,
             corpus=corpus,
         ).select("merge_round", "pattern", "merged")
-        _BPE_MEMO[key] = materialize(
+        return materialize(
             apply_bpe_merges(docs, merges, id_col="doc_id", text_col="text", corpus=corpus),
             label="bpe_encoded",
             default="parquet",
         )
-        while len(_BPE_MEMO) > 4:
-            _BPE_MEMO.pop(next(iter(_BPE_MEMO)))
-    return _BPE_MEMO[key]
+
+    return memoized("bpe_encoded", spark, sf_dir, build)
 
 
 @register(

@@ -4,7 +4,7 @@ Test strategy follows the reference's two workable patterns (SURVEY §5):
 write-then-read round-trips through our own encoder, and golden
 byte-level fixtures with exact equality — the golden hex below is the
 reference's own Redshift batch fixture
-(/root/reference/avro-file-udf/payload.json), whose container decodes to
+(avro-file-udf/payload.json), whose container decodes to
 the Alyssa/Ben rows (SURVEY §5)."""
 
 from __future__ import annotations
@@ -50,7 +50,7 @@ USER_SCHEMA = parse_schema(
     }
 )
 
-# /root/reference/avro-file-udf/payload.json arguments[0][0]
+# the reference's avro-file-udf/payload.json arguments[0][0]
 GOLDEN_CONTAINER_HEX = (
     "4f626a0104146176726f2e636f646563086e756c6c166176726f2e736368656d61ba037b2274797065223a2022"
     "7265636f7264222c20226e616d65223a202255736572222c20226e616d657370616365223a20226578616d706c"

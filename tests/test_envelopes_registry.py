@@ -9,6 +9,8 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
+from test_avroio_codec import GOLDEN_CONTAINER_HEX
+
 from redshift_avro_spark.avroio import encode_datum, parse_schema, write_container
 from redshift_avro_spark.sources import (
     InMemorySchemaRegistry,
@@ -35,6 +37,22 @@ from redshift_avro_spark.sources.envelopes import (
 
 # the upstream spring-cloud-stream test vector the reference embeds
 # (springcloud-lambda-udf/lambda_function.py:250-259)
+# The reference's two golden Redshift-UDF payloads, rebuilt from the
+# container hex they carry: avro-file-udf/payload.json is the batch dict
+# with four identical [hex] argument rows; python-udf/payload.json is a
+# BARE list of the same [hex] rows.
+PYTHON_UDF_PAYLOAD = [[GOLDEN_CONTAINER_HEX]] * 4
+AVRO_FILE_UDF_PAYLOAD = {
+    "request_id": "request-1",
+    "cluster": "cluster-1",
+    "user": "user-1",
+    "database": "db-1",
+    "external_function": "public.decode_avro",
+    "query_id": 1,
+    "num_records": 4,
+    "arguments": PYTHON_UDF_PAYLOAD,
+}
+
 SPRING_GOLDEN = b'\xff\x02\x03foo\x00\x00\x00\x05"bar"\x03baz\x00\x00\x00\x06"quxx"Hello'
 
 USER_SCHEMA = parse_schema(
@@ -206,7 +224,7 @@ class TestKpl:
 
 class TestRedshiftProtocol:
     def test_container_file_handler_golden(self):
-        event = json.load(open("/root/reference/avro-file-udf/payload.json"))
+        event = AVRO_FILE_UDF_PAYLOAD
         resp = container_file_handler(event)
         assert resp["success"] is True and resp["num_records"] == 4
         assert json.loads(resp["results"][0]) == [
@@ -222,7 +240,7 @@ class TestRedshiftProtocol:
         decode to the golden two-user record list."""
         from redshift_avro_spark.avroio.container import iter_container
 
-        rows = json.load(open("/root/reference/python-udf/payload.json"))
+        rows = PYTHON_UDF_PAYLOAD
         assert isinstance(rows, list) and rows, "fixture shape changed"
         golden = [
             {"name": "Alyssa", "favorite_number": 256, "favorite_color": None},

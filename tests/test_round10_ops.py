@@ -372,16 +372,6 @@ class TestTokenizerEfficiency:
             assert r["n_tokens"] == exp[src]["n_tokens"]
             assert r["saved_ppm"] == (r["n_words"] - r["n_tokens"]) * 1_000_000 // r["n_words"]
 
-    def test_memo_shares_one_encode(self, spark):
-        from redshift_avro_spark.queries.vocab_q import _BPE_MEMO, _bpe_encoded
-        import os
-
-        a = _bpe_encoded(spark, SF_SMOKE)
-        b = _bpe_encoded(spark, SF_SMOKE)
-        assert a is b  # second consumer reads the same staged frame
-        key = (spark.sparkContext.applicationId, os.path.abspath(SF_SMOKE))
-        assert key in _BPE_MEMO
-
 
 class TestFilterThresholdSweep:
     """q196 (round 10): kept-docs/kept-tokens vs quality-threshold

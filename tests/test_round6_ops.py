@@ -1,6 +1,6 @@
 """Round-6 regression tests: decimal-cast boundary equivalence, the
-skew-safe distributed rank, staged-materialization knob, and the
-broadcast-hinted Levenshtein verify."""
+skew-safe distributed rank and the broadcast-hinted Levenshtein
+verify."""
 
 from __future__ import annotations
 
@@ -401,46 +401,6 @@ class TestContainerAppendFuzz:
             assert got == expected
 
         run()
-
-
-class TestMaterializeHelper:
-    """The unified materialization-boundary knob (VERDICT r5 #1)."""
-
-    def test_modes_value_identical(self, spark):
-        from redshift_avro_spark.operators.staging import materialize
-
-        df = spark.range(100).withColumn("v", F.col("id") * 3)
-        base = sorted(tuple(r) for r in df.collect())
-        for mode in ("checkpoint", "parquet", "none"):
-            out = materialize(df, label=f"t_{mode}", default=mode)
-            assert sorted(tuple(r) for r in out.collect()) == base
-
-    def test_env_resolution_order(self, monkeypatch):
-        from redshift_avro_spark.operators.staging import resolve_mode
-
-        monkeypatch.delenv("SPARK_GRAFT_MATERIALIZE", raising=False)
-        assert resolve_mode("q49_survivors", "parquet") == "parquet"
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "none")
-        assert resolve_mode("q49_survivors", "parquet") == "none"
-        monkeypatch.setenv("SPARK_GRAFT_Q49_MATERIALIZE", "checkpoint")
-        assert (
-            resolve_mode(
-                "q49_survivors", "parquet", extra_env="SPARK_GRAFT_Q49_MATERIALIZE"
-            )
-            == "checkpoint"
-        )
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_Q49_SURVIVORS", "parquet")
-        assert (
-            resolve_mode(
-                "q49_survivors", "parquet", extra_env="SPARK_GRAFT_Q49_MATERIALIZE"
-            )
-            == "parquet"
-        )
-        # unknown values fall through to the default
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE_Q49_SURVIVORS", "bogus")
-        monkeypatch.delenv("SPARK_GRAFT_Q49_MATERIALIZE")
-        monkeypatch.delenv("SPARK_GRAFT_MATERIALIZE")
-        assert resolve_mode("q49_survivors", "parquet") == "parquet"
 
 
 class TestIvfDelete:

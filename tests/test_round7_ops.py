@@ -1,38 +1,9 @@
-"""Round-7 fixes: staging-path uniqueness per invocation, null-text
-handling in the linear cross-encoder (both from ADVICE r6), and the
-round's operator hardening."""
+"""Round-7 fixes: null-text handling in the linear cross-encoder
+(ADVICE r6) and the round's operator hardening."""
 
 from __future__ import annotations
 
 import pytest
-
-
-
-class TestStagingPathPerInvocation:
-    """ADVICE r6 #1: composites reuse one label ('lsh_candidates')
-    across members; parquet mode must not let a later member's write
-    clobber part files an earlier member's lazy read already listed."""
-
-    def test_parquet_label_reuse_keeps_both_frames(self, spark, monkeypatch):
-        from redshift_avro_spark.operators.staging import materialize
-
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "parquet")
-        a = materialize(spark.range(0, 5), label="shared_label")
-        b = materialize(spark.range(100, 102), label="shared_label")
-        # action AFTER both writes — the composite evaluation order
-        assert sorted(r[0] for r in a.collect()) == [0, 1, 2, 3, 4]
-        assert sorted(r[0] for r in b.collect()) == [100, 101]
-        assert a.unionAll(b).count() == 7
-
-    def test_parquet_paths_are_invocation_unique(self, spark, monkeypatch):
-        from redshift_avro_spark.operators.staging import materialize
-
-        monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "parquet")
-        a = materialize(spark.range(3), label="uniq")
-        b = materialize(spark.range(3), label="uniq")
-        pa = a.inputFiles()[0].rsplit("/", 1)[0]
-        pb = b.inputFiles()[0].rsplit("/", 1)[0]
-        assert pa != pb
 
 
 class TestLinearCeNullText:
@@ -359,24 +330,3 @@ class TestRepetitionAudit:
         assert out[3].n_bigrams == 0 and out[3].top2gram_share_ppm is None
         assert out[3].max_word_run == 1
         assert out[4].max_word_run == 2
-
-def test_parquet_generations_are_bounded_per_label(spark, monkeypatch):
-    """A long-lived process must not accumulate one staging dir per
-    invocation forever: only the newest _GENERATIONS_PER_LABEL dirs
-    per label survive."""
-    import os
-
-    from redshift_avro_spark.operators import staging
-
-    monkeypatch.setenv("SPARK_GRAFT_MATERIALIZE", "parquet")
-    frames = [
-        staging.materialize(spark.range(i, i + 1), label="bounded")
-        for i in range(staging._GENERATIONS_PER_LABEL + 5)
-    ]
-    gens = staging._LABEL_GENERATIONS["bounded"]
-    assert len(gens) == staging._GENERATIONS_PER_LABEL
-    live = [p for p in gens if os.path.isdir(p)]
-    assert len(live) == staging._GENERATIONS_PER_LABEL
-    # the newest frames (within the window) still read fine
-    assert frames[-1].collect()[0][0] == staging._GENERATIONS_PER_LABEL + 4
-    assert frames[-staging._GENERATIONS_PER_LABEL].count() == 1

@@ -1,68 +1,10 @@
-"""Round-8 fixes: bounded checkpoint-block lifecycle in materialize()
-(VERDICT r7 "What's wrong" #1 — 25 checkpoint-mode sites never
-unpersisted, so ~200 queries' worth of executor-storage blocks
-accumulated in the shared session until the suite exhausted memory).
-"""
+"""Round-8 operator tests: URL canonicalization, embedding and IVF
+decontamination, the repetition audit, the C4 line filter and the
+zero-norm seed guard."""
 
 from __future__ import annotations
 
 import pytest
-
-
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
-class TestCheckpointGenerationBound:
-    def test_superseded_checkpoints_are_unpersisted(self, spark):
-        """> _GENERATIONS_PER_LABEL same-label checkpoint frames: only
-        the newest N keep their blocks; the evicted ones release
-        executor storage (the round-7 leak) and fail LOUDLY on read
-        (lineage is cut — same failure mode as the parquet arm's
-        evicted dirs, never a silent wrong answer)."""
-        from redshift_avro_spark.operators import staging
-
-        label = "cp_bounded_r8"
-        before = _persistent_rdd_count(spark)
-        frames = [
-            staging.materialize(
-                spark.range(i, i + 1), label=label, default="checkpoint"
-            )
-            for i in range(staging._GENERATIONS_PER_LABEL + 5)
-        ]
-        kept = staging._LABEL_CHECKPOINTS[label]
-        assert len(kept) == staging._GENERATIONS_PER_LABEL
-        # storage growth is bounded by the cap, not the call count
-        assert (
-            _persistent_rdd_count(spark) - before
-            <= staging._GENERATIONS_PER_LABEL
-        )
-        # the full liveness window stays readable
-        assert frames[-1].collect()[0][0] == staging._GENERATIONS_PER_LABEL + 4
-        assert frames[-staging._GENERATIONS_PER_LABEL].count() == 1
-        # an evicted generation fails loudly, not silently wrong
-        with pytest.raises(Exception):
-            frames[0].collect()
-        # cleanup: release this test's own blocks
-        for f in kept:
-            staging._unpersist_checkpoint(f)
-        staging._LABEL_CHECKPOINTS.pop(label, None)
-
-    def test_unpersist_checkpoint_releases_blocks(self, spark):
-        from redshift_avro_spark.operators import staging
-
-        before = _persistent_rdd_count(spark)
-        cp = spark.range(10).localCheckpoint(eager=True)
-        assert _persistent_rdd_count(spark) == before + 1
-        staging._unpersist_checkpoint(cp)
-        assert _persistent_rdd_count(spark) == before
-
-    def test_unpersist_checkpoint_is_best_effort(self, spark):
-        """A non-checkpoint frame (no LogicalRDD at the plan root) must
-        degrade to a no-op, never raise."""
-        from redshift_avro_spark.operators.staging import _unpersist_checkpoint
-
-        _unpersist_checkpoint(spark.range(3).selectExpr("id * 2 AS v"))
 
 
 class TestUrlCanonicalization:
@@ -147,22 +89,6 @@ class TestZeroNormSeedGuard:
             None,
         )
         assert len(ok) == 2
-
-
-class TestSemanticCellsShared:
-    def test_q93_members_share_one_training(self, spark):
-        """ADVICE r7 #4: q94 and q181 (and hence the q93 composite)
-        reuse ONE trained cell assignment per (app, corpus) instead of
-        re-running seeding + Lloyd + assignment per member."""
-        from conftest import SF_SMOKE
-
-        from redshift_avro_spark.queries import similarity as qs
-
-        qs._SD_CELLS_MEMO.clear()
-        a = qs._sd_cells(spark, SF_SMOKE)
-        b = qs._sd_cells(spark, SF_SMOKE)
-        assert a is b
-        assert len(qs._SD_CELLS_MEMO) == 1
 
 
 class TestEmbeddingDecontaminate:

@@ -273,19 +273,3 @@ class TestTopNOverlapCutoff:
             assert r["containment_ppm"] == r["shared_topn"] * 1_000_000 // min(
                 r["topn_a"], r["topn_b"]
             )
-
-
-class TestKnScoresShared:
-    def test_q188_q189_share_one_training(self, spark):
-        """q188 and q189 reuse ONE trigram-LM training per
-        (app, corpus) — the r8 _sd_cells pattern; the memo must return
-        the identical staged frame object, not retrain."""
-        from conftest import SF_SMOKE
-
-        from redshift_avro_spark.queries import text as qt
-
-        qt._KN_MEMO.clear()
-        a = qt._kn_scores(spark, SF_SMOKE)
-        b = qt._kn_scores(spark, SF_SMOKE)
-        assert a is b
-        assert len(qt._KN_MEMO) == 1

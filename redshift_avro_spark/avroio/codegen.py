@@ -17,8 +17,9 @@ strategy). Guarantees:
   closure codec for that subtree via a BinaryReader/BinaryWriter shim —
   coverage is total.
 - Any unexpected codegen failure makes ``get_batch_decoder`` /
-  ``get_batch_encoder`` return ``None`` and callers use the closure
-  path — a generator bug degrades to slow, never to wrong.
+  ``get_batch_encoder`` return ``None`` and the decoder ladder
+  (:mod:`.ladder`) uses the closure path — a generator bug degrades to
+  slow, never to wrong.
 
 Entry points (both lru-cached per (schema-json, mode), so each executor
 process compiles once per schema):

@@ -31,7 +31,7 @@ Anything the vector path can't express — nested types, logical types
 other than raw-int timestamps, multi-branch unions, malformed or
 invalid-UTF-8 input (caught by Arrow's full validation), timestamps
 outside datetime's range — raises :class:`VectorFallback` and the
-caller re-decodes the batch with the generated per-datum decoder,
+decoder ladder (:mod:`.ladder`) re-decodes the batch on its next tier,
 which owns exact per-row error semantics (PERMISSIVE nulls, typed
 errors). A vector-path surprise therefore degrades to slower, never to
 wrong — the same safety ladder codegen sits on (codegen → closures).
@@ -44,7 +44,6 @@ tests/test_vectorized_decoder.py.
 
 from __future__ import annotations
 
-import json  # noqa: F401  (kept for parity with sibling codec modules)
 from functools import lru_cache
 from typing import Optional
 
@@ -795,14 +794,6 @@ class VectorizedEncoder:
             len(row_offs) - 1,
             [None, pa.py_buffer(row_offs.astype(np.int32).tobytes()), pa.py_buffer(out.tobytes())],
         )
-
-    def encode_pandas(self, pdf):
-        """→ pandas Series (ArrowDtype(binary), zero-copy back to Arrow
-        in the Spark serializer)."""
-        import pandas as pd
-
-        arr = self.encode_pandas_to_arrow(pdf)
-        return pd.Series(arr, dtype=pd.ArrowDtype(arr.type))
 
 
 def _build_encoder(schema: AvroSchema) -> Optional[VectorizedEncoder]:

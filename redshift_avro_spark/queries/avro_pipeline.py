@@ -119,7 +119,6 @@ def q21_container_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             if not len(pdf):
                 continue
             buf = _io.BytesIO()
-            # vector → codegen → closure ladder inside append_pandas
             w = ContainerWriter(buf, schema_json)
             w.append_pandas(pdf[list(_EVENT_COLS)])
             w.close()
@@ -294,7 +293,7 @@ def q24_kpl_spring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     with its KPL decode bug fixed per spec — SURVEY Appendix A.6)."""
     import json as _json
 
-    from ..avroio.binary import encode_datum
+    from ..avroio.ladder import get_encoder
     from ..avroio.schema_model import parse_schema
     from ..sources.envelopes import (
         build_spring_message,
@@ -302,15 +301,13 @@ def q24_kpl_spring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         unwrap_kpl_spring_avro,
     )
 
-    from ..avroio.codegen import get_batch_encoder
-
     schema = parse_schema(_json.dumps(_KPL_EVENT_SCHEMA))
     schema_json = _json.dumps(schema.to_json())
     content_type = "application/vnd.kplevent.v1+avro"
     kpl_cols = ["event_id", "user_id", "event_type", "value"]
 
     def make_cells(batches):
-        be = get_batch_encoder(schema_json)
+        enc = get_encoder(schema_json)
         # the Spring header block is CONSTANT across rows — encode it
         # once per batch instead of json.dumps-ing the same dict per
         # row (the per-row build dominated q24's measured time; the
@@ -319,11 +316,7 @@ def q24_kpl_spring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            if be is not None:
-                cols = be.columns_from_pandas(pdf)
-                bodies = be.encode_columns(cols, len(pdf))
-            else:
-                bodies = [encode_datum(schema, r) for r in pdf[kpl_cols].to_dict("records")]
+            bodies = enc.encode_arrow(pdf).to_pylist()
             blob = encode_kpl_simple("pk", [spring_prefix + body for body in bodies])
             yield pd.DataFrame({"hexcell": [blob.hex()]})
 

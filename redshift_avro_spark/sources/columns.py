@@ -15,10 +15,11 @@ Reference parity map (SURVEY §2.1/§2.2):
   exact ``json.dumps`` contract.
 
 Design notes for 100 TB: every UDF here is a *scalar pandas UDF* (Arrow
-batches, one compile per executor task, plain closure calls per row —
-no per-row schema interpretation), decode is a narrow map stage with no
-shuffle, and hex decode stays JVM-side so Catalyst can prune/pushdown
-around it. PERMISSIVE mode yields per-row nulls instead of failing the
+batches) whose codec comes from the decoder ladder (avroio/ladder.py:
+numpy vector, generated or closure tier, built once per executor
+process and schema — no per-row schema interpretation), decode is a
+narrow map stage with no shuffle, and hex decode stays JVM-side so
+Catalyst can prune/pushdown around it. PERMISSIVE mode yields per-row nulls instead of failing the
 batch — an intentional improvement over the reference's all-or-nothing
 batch failure envelope (avro-file-udf/lambda_function.py:9-30).
 """
@@ -34,22 +35,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-from ..avroio.binary import (
-    BinaryReader,
-    BinaryWriter,
-    compile_decoder,
-    compile_encoder,
-    compile_resolver,
-)
-from ..avroio.codegen import get_batch_decoder, get_batch_encoder, get_batch_resolver
-from ..avroio.vectorized import (
-    VectorFallback,
-    get_vector_decoder,
-    get_vector_encoder,
-)
-from ..avroio.container import iter_container, read_header
+from ..avroio.binary import BinaryReader, compile_decoder, compile_resolver
+from ..avroio.block_codecs import get_codec
+from ..avroio.container import ContainerHeader, iter_container, iter_raw_blocks, read_header
 from ..avroio.convert import avro_to_spark_type, df_schema_to_avro
 from ..avroio.jsonio import datum_to_json
+from ..avroio.ladder import get_decoder, get_encoder
 from ..avroio.schema_model import AvroSchema, parse_schema
 
 __all__ = [
@@ -96,6 +87,13 @@ def _schema_json(schema: Union[AvroSchema, str, dict]) -> str:
     return json.dumps(_as_schema(schema).to_json())
 
 
+def _cell_blocks(blob: bytes, header: ContainerHeader) -> Iterator[tuple[int, bytes]]:
+    """A container cell's blocks as (datum count, decompressed payload)."""
+    codec = get_codec(header.codec)
+    for count, payload in iter_raw_blocks(blob, header.header_len, header.sync):
+        yield count, codec.decompress(payload)
+
+
 def from_hex(col: Union[str, Column]) -> Column:
     """S1: Redshift VARBINARY arrives hex-encoded; decode JVM-side."""
     return F.unhex(col)
@@ -136,57 +134,12 @@ def from_avro(
     if not isinstance(struct_type, T.StructType):
         raise TypeError("from_avro requires a record schema at top level")
     permissive = mode.upper() == "PERMISSIVE"
-    names = [f.name for f in struct_type.fields]
 
     @pandas_udf(returnType=struct_type)
     def _decode(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        writer = parse_schema(writer_json)
-        # decode ladder (fast → semantically-rooted): numpy vectorized
-        # (flat schemas, whole-batch array passes — avroio/vectorized.py)
-        # → exec-generated per-datum (codegen.py; also the per-row error
-        # authority the vector path falls back to on anomalous batches)
-        # → closure codecs. The resolver variant covers evolution.
-        vd = None
-        if reader_json is None or reader_json == writer_json:
-            vd = get_vector_decoder(writer_json)
-            bd = get_batch_decoder(writer_json, mode="spark")
-        else:
-            bd = get_batch_resolver(writer_json, reader_json, mode="spark")
-        if bd is not None:
-            for series in batches:
-                if vd is not None:
-                    try:
-                        yield pd.DataFrame(
-                            vd.decode_blobs_to_pandas(
-                                series.values, series.isna().values
-                            )
-                        )
-                        continue
-                    except VectorFallback:
-                        pass  # anomalous batch → exact per-row semantics
-                outs = bd.new_columns()
-                bd.decode_blobs(series.values, outs, permissive)
-                yield pd.DataFrame(bd.to_pandas(outs))
-            return
-        if reader_json is not None:
-            fn = compile_resolver(writer, parse_schema(reader_json), mode="spark")
-        else:
-            fn = compile_decoder(writer, mode="spark")
-        null_row = {n: None for n in names}
+        dec = get_decoder(writer_json, reader_json)
         for series in batches:
-            rows = []
-            for blob in series:
-                if blob is None:
-                    rows.append(null_row)
-                    continue
-                if permissive:
-                    try:
-                        rows.append(fn(BinaryReader(bytes(blob))))
-                    except Exception:
-                        rows.append(null_row)
-                else:
-                    rows.append(fn(BinaryReader(bytes(blob))))
-            yield pd.DataFrame(rows, columns=names, dtype=object)
+            yield pd.DataFrame(dec.decode_blobs(series.values, permissive, series.isna().values))
 
     return _decode(col)
 
@@ -217,35 +170,10 @@ def to_avro(
 
     @pandas_udf(returnType=T.BinaryType())
     def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-        # encode ladder mirrors decode: vectorized (numpy/Arrow batch
-        # passes, byte-identical output) → generated per-datum →
-        # closure encoder (typed AvroEncodeError authority)
-        ve = get_vector_encoder(schema_json_str)
-        be = get_batch_encoder(schema_json_str)
-        enc = None
+        enc = get_encoder(schema_json_str)
         for pdf in batches:
-            if ve is not None and all(n_ in pdf.columns for n_ in ve.names):
-                try:
-                    yield ve.encode_pandas(pdf)
-                    continue
-                except VectorFallback:
-                    pass  # unexpected shape → exact typed errors below
-            if be is not None and all(n_ in pdf.columns for n_ in be.names):
-                cols = be.columns_from_pandas(pdf)
-                yield pd.Series(be.encode_columns(cols, len(pdf)), dtype=object)
-                continue
-            # closure path: schema fields absent from the struct take
-            # their defaults per-row (rare shape), or codegen declined
-            if enc is None:
-                enc = compile_encoder(parse_schema(schema_json_str))
-            cols_d = {name: pdf[name].tolist() for name in pdf.columns}
-            names_ = list(cols_d)
-            out = []
-            for i in range(len(pdf)):
-                w = BinaryWriter()
-                enc(w, {name: cols_d[name][i] for name in names_})
-                out.append(w.getvalue())
-            yield pd.Series(out, dtype=object)
+            arr = enc.encode_arrow(pdf)
+            yield pd.Series(arr, dtype=pd.ArrowDtype(arr.type))
 
     return _encode(col)
 
@@ -309,82 +237,18 @@ def decode_container(
         import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_type
 
-        from ..avroio.block_codecs import get_codec
-        from ..avroio.container import iter_raw_blocks
-        from ..avroio.vectorized import VectorFallback, get_vector_decoder
-
-        target = parse_schema(schema_json_str)
-        target_canon = json.dumps(target.to_json())
+        target_canon = json.dumps(parse_schema(schema_json_str).to_json())
         arrow_struct = to_arrow_type(struct_type)
-        vdec = get_vector_decoder(target_canon)
-        # per-cell writer schemas can differ; cache the per-schema decode
-        # strategy by header schema text (registry-cache pattern, glue
-        # lambda_function.py:14): numpy vector stream decoder when the
-        # writer schema matches the target (S2 twin of the raw-datum
-        # vector path — blocks segment via composed skip tables), then
-        # generated columnar decoder/resolver (codegen.py), closure
-        # resolver only when codegen declines
-        strategies: dict[str, tuple] = {}
-
-        def decode_cell_rows(blob: bytes, header) -> list:
-            strat = strategies.get(header.schema_json)
-            if strat is None:
-                bd = get_batch_resolver(
-                    json.dumps(header.schema.to_json()), target_canon, mode="spark"
-                )
-                if bd is not None:
-                    strat = ("gen", bd)
-                else:
-                    strat = ("res", compile_resolver(header.schema, target, mode="spark"))
-                strategies[header.schema_json] = strat
-            codec = get_codec(header.codec)
-            out: list = []
-            if strat[0] == "gen":
-                bd = strat[1]
-                for count, payload in iter_raw_blocks(blob, header.header_len, header.sync):
-                    bd.decode_stream_rows(codec.decompress(payload), 0, count, out)
-                return out
-            fn = strat[1]
-            for count, payload in iter_raw_blocks(blob, header.header_len, header.sync):
-                br = BinaryReader(codec.decompress(payload))
-                for _ in range(count):
-                    out.append(fn(br))
-            return out
-
-        field_names = [f.name for f in struct_type.fields]
+        record_schema = pa.schema(list(arrow_struct))
 
         def decode_cell_struct(blob: bytes) -> "pa.Array":
-            """One cell → StructArray (vector path when the embedded
-            writer schema IS the target; per-datum ladder otherwise)."""
             header = read_header(blob)
-            if vdec is not None and (
-                header.schema_json == target_canon
-                or json.dumps(header.schema.to_json()) == target_canon
-            ):
-                try:
-                    codec = get_codec(header.codec)
-                    chunks = []
-                    for count, payload in iter_raw_blocks(
-                        blob, header.header_len, header.sync
-                    ):
-                        cols = vdec.decode_stream_arrow(codec.decompress(payload), count)
-                        arrs = []
-                        for nm, fld in zip(field_names, arrow_struct):
-                            a = cols[nm]
-                            # e.g. naive timestamp[us] → Spark's
-                            # timestamp[us, UTC]: same int64 epochs
-                            arrs.append(a if a.type == fld.type else a.cast(fld.type))
-                        chunks.append(
-                            pa.StructArray.from_arrays(arrs, fields=list(arrow_struct))
-                        )
-                    if not chunks:
-                        return pa.array([], type=arrow_struct)
-                    sa = pa.concat_arrays(chunks)
-                    return sa if sa.type == arrow_struct else sa.cast(arrow_struct)
-                except VectorFallback:
-                    pass
-            rows = decode_cell_rows(blob, header)
-            return pa.array(rows, type=arrow_struct)
+            dec = get_decoder(json.dumps(header.schema.to_json()), target_canon)
+            chunks = [
+                rb.to_struct_array()
+                for rb in dec.decode_blocks(_cell_blocks(blob, header), record_schema)
+            ]
+            return pa.concat_arrays(chunks) if chunks else pa.array([], type=arrow_struct)
 
         list_type = pa.list_(arrow_struct)
         for series in batches:
@@ -506,7 +370,7 @@ def explode_containers(
     keep_cols: Optional[list[str]] = None,
 ) -> DataFrame:
     """Whole-partition container decode: one row per datum, streamed
-    via ``mapInPandas`` (SURVEY §7.4's mitigation for
+    via ``mapInArrow`` (SURVEY §7.4's mitigation for
     container-in-column at scale).
 
     Unlike ``decode_container`` + ``explode`` — which materializes each
@@ -526,86 +390,28 @@ def explode_containers(
     if not isinstance(struct_type, T.StructType):
         raise TypeError("container record schema required")
     keep = list(keep_cols or [])
-    out_type = T.StructType(
-        [f for f in df.select(*keep).schema.fields] + list(struct_type.fields)
-        if keep
-        else list(struct_type.fields)
-    )
-    names = [f.name for f in struct_type.fields]
-    batch_rows = 10_000
+    out_type = T.StructType(list(df.select(*keep).schema.fields) + list(struct_type.fields))
 
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..avroio.block_codecs import get_codec
-        from ..avroio.container import iter_raw_blocks
+    def decode(batches: Iterator) -> Iterator:
+        import numpy as np
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
 
-        target = parse_schema(schema_json_str)
-        target_canon = json.dumps(target.to_json())
-        # columnar generated decoder per matching writer schema, closure
-        # resolver otherwise (see decode_container)
-        strategies: dict[str, tuple] = {}
-
-        gen_bd = get_batch_decoder(target_canon, mode="spark")
-
-        def flush(cols: list[list], kept: list[tuple]) -> pd.DataFrame:
-            if gen_bd is not None and gen_bd.names == names:
-                out = pd.DataFrame(gen_bd.to_pandas(cols))
-            else:
-                out = pd.DataFrame(
-                    {n_: pd.Series(c, dtype=object) for n_, c in zip(names, cols)}
-                )
-            for i, k in enumerate(keep):
-                out.insert(i, k, [t[i] for t in kept])
-            return out
-
-        for pdf in batches:
-            cols: list[list] = [[] for _ in names]
-            kept: list[tuple] = []
-            n_rows = 0
-            for row in pdf.itertuples(index=False):
-                rowd = dict(zip(pdf.columns, row))
-                blob = rowd[col]
+        target_canon = json.dumps(parse_schema(schema_json_str).to_json())
+        record_schema = pa.schema(list(to_arrow_type(struct_type)))
+        for batch in batches:
+            out_schema = pa.schema(list(batch.schema)[: len(keep)] + list(record_schema))
+            for i, blob in enumerate(batch.column(len(keep)).to_pylist()):
                 if blob is None:
                     continue
-                blob = bytes(blob)
                 header = read_header(blob)
-                strat = strategies.get(header.schema_json)
-                if strat is None:
-                    bd = None
-                    if gen_bd is not None:
-                        # flush converts raw ts columns via gen_bd, so
-                        # generated strategies require it
-                        bd = get_batch_resolver(
-                            json.dumps(header.schema.to_json()), target_canon, mode="spark"
-                        )
-                    if bd is not None:
-                        strat = ("gen", bd)
-                    else:
-                        strat = ("res", compile_resolver(header.schema, target, mode="spark"))
-                    strategies[header.schema_json] = strat
-                codec = get_codec(header.codec)
-                kv = tuple(rowd[k] for k in keep)
-                for count, payload in iter_raw_blocks(blob, header.header_len, header.sync):
-                    if strat[0] == "gen":
-                        strat[1].decode_stream(codec.decompress(payload), 0, count, cols)
-                    else:
-                        fn = strat[1]
-                        br = BinaryReader(codec.decompress(payload))
-                        for _ in range(count):
-                            row = fn(br)  # keys may sit in writer order —
-                            for c, n_ in zip(cols, names):  # map by name
-                                c.append(row[n_])
-                    added = len(cols[0]) - n_rows
-                    kept.extend([kv] * added)
-                    n_rows = len(cols[0])
-                    if n_rows >= batch_rows:
-                        yield flush(cols, kept)
-                        cols = [[] for _ in names]
-                        kept = []
-                        n_rows = 0
-            if n_rows:
-                yield flush(cols, kept)
+                dec = get_decoder(json.dumps(header.schema.to_json()), target_canon)
+                for rb in dec.decode_blocks(_cell_blocks(blob, header), record_schema):
+                    idx = pa.array(np.full(rb.num_rows, i))
+                    kept = [batch.column(j).take(idx) for j in range(len(keep))]
+                    yield pa.RecordBatch.from_arrays(kept + rb.columns, schema=out_schema)
 
-    return df.select(*keep, col).mapInPandas(decode, out_type)
+    return df.select(*keep, col).mapInArrow(decode, out_type)
 
 
 def from_avro_single_object(
@@ -626,10 +432,10 @@ def from_avro_single_object(
     evolves to.
 
     Scale shape: per Arrow batch, rows are grouped by fingerprint and
-    each group decodes through the same compiled batch decoders /
-    resolvers as :func:`from_avro` — per-row work is only the 10-byte
-    header parse. mode="PERMISSIVE" maps bad framing / unknown
-    fingerprints / undecodable rows to null rows instead of failing.
+    each group decodes through the same decoder ladder as
+    :func:`from_avro` — per-row work is only the 10-byte header parse.
+    mode="PERMISSIVE" maps bad framing / unknown fingerprints /
+    undecodable rows to null rows instead of failing.
     """
     import struct as _struct
 
@@ -656,26 +462,6 @@ def from_avro_single_object(
         by_fp = {}
         for sj in schema_jsons:
             by_fp[fingerprint64(parse_schema(sj))] = sj
-        decoders: dict = {}
-
-        def batch_decoder(fp: int):
-            if fp not in decoders:
-                sj = by_fp[fp]
-                if sj == reader_json:
-                    bd = get_batch_decoder(sj, mode="spark")
-                else:
-                    bd = get_batch_resolver(sj, reader_json, mode="spark")
-                if bd is None:  # codegen declined (recursive types etc.)
-                    writer = parse_schema(sj)
-                    reader = parse_schema(reader_json)
-                    fn = (
-                        compile_decoder(writer, mode="spark")
-                        if sj == reader_json
-                        else compile_resolver(writer, reader, mode="spark")
-                    )
-                    bd = ("closure", fn)
-                decoders[fp] = bd
-            return decoders[fp]
 
         for series in batches:
             vals = series.values
@@ -709,17 +495,9 @@ def from_avro_single_object(
                 payloads = np.empty(len(idxs), dtype=object)
                 for j, i in enumerate(idxs):
                     payloads[j] = bytes(vals[i])[HEADER_LEN:]
-                bd = batch_decoder(fp)
-                if isinstance(bd, tuple):  # closure fallback
-                    fn = bd[1]
-                    rows = []
-                    for p in payloads:
-                        rows.append(fn(BinaryReader(p)))
-                    pdf = pd.DataFrame(rows, columns=names)
-                else:
-                    outs = bd.new_columns()
-                    bd.decode_blobs(payloads, outs, permissive)
-                    pdf = pd.DataFrame(bd.to_pandas(outs))
+                pdf = pd.DataFrame(
+                    get_decoder(by_fp[fp], reader_json).decode_blobs(payloads, permissive)
+                )
                 pdf.index = idxs
                 parts.append(pdf)
             if null_rows:

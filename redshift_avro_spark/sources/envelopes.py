@@ -354,13 +354,12 @@ def unwrap_kpl_spring_avro(df, col: str, schema):
 
     Equivalent to ``explode(explode_kpl(col)) → extract_spring_headers →
     from_avro`` but pays the Python/Arrow stage cost once instead of
-    three times; the Avro body decodes through the generated batch
-    decoder (avroio/codegen.py) with the closure codec as fallback.
-    Headers and partition keys are dropped — use the composable column
-    functions when the pipeline needs them."""
-    from ..avroio.binary import BinaryReader, compile_decoder
-    from ..avroio.codegen import get_batch_decoder
+    three times; each batch's Avro bodies decode in one call to the
+    decoder ladder (avroio/ladder.py). Headers and partition keys are
+    dropped — use the composable column functions when the pipeline
+    needs them."""
     from ..avroio.convert import avro_to_spark_type
+    from ..avroio.ladder import get_decoder
     from ..avroio.schema_model import AvroSchema
     from ..avroio.schema_model import parse_schema as _parse
     from .columns import _nullable_struct
@@ -370,16 +369,11 @@ def unwrap_kpl_spring_avro(df, col: str, schema):
     struct_type = _nullable_struct(avro_to_spark_type(sch))
     if not isinstance(struct_type, T.StructType):
         raise TypeError("unwrap_kpl_spring_avro requires a record schema")
-    names = [f.name for f in struct_type.fields]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
 
-        from ..avroio.vectorized import VectorFallback, get_vector_decoder
-
-        vd = get_vector_decoder(schema_json)
-        bd = get_batch_decoder(schema_json, "spark")
-        dec = None if bd is not None else compile_decoder(_parse(schema_json), mode="spark")
+        dec = get_decoder(schema_json)
         for pdf in batches:
             # unwrap the KPL/Spring envelopes first (per-record Python —
             # protobuf/header parsing), collecting the Avro bodies so
@@ -391,29 +385,8 @@ def unwrap_kpl_spring_avro(df, col: str, schema):
                 for rec in decode_kpl_aggregate(bytes(blob)).records:
                     _, body = parse_spring_message(rec.data)
                     bodies.append(body)
-            if vd is not None:
-                try:
-                    yield pd.DataFrame(
-                        vd.decode_blobs_to_pandas(
-                            bodies, np.zeros(len(bodies), dtype=bool)
-                        )
-                    )
-                    continue
-                except VectorFallback:
-                    pass  # anomalous batch → per-datum semantics below
-            cols: list[list] = bd.new_columns() if bd is not None else [[] for _ in names]
-            for body in bodies:
-                if bd is not None:
-                    bd.decode_stream(body, 0, 1, cols)
-                else:
-                    v = dec(BinaryReader(body))
-                    for c, n in zip(cols, names):
-                        c.append(v[n])
-            if bd is not None:
-                yield pd.DataFrame(bd.to_pandas(cols))
-            else:
-                yield pd.DataFrame(
-                    {n: pd.Series(c, dtype=object) for n, c in zip(names, cols)}
-                )
+            yield pd.DataFrame(
+                dec.decode_blobs(bodies, null_mask=np.zeros(len(bodies), dtype=bool))
+            )
 
     return df.select(col).mapInPandas(run, struct_type)

@@ -57,8 +57,8 @@ from ..avroio.container import (
     iter_block_spans,
     read_header,
 )
-from ..avroio.binary import BinaryReader, compile_resolver
 from ..avroio.convert import avro_to_spark_type, df_schema_to_avro
+from ..avroio.ladder import get_decoder
 from ..avroio.schema_model import AvroSchema, parse_schema
 
 DEFAULT_SPLIT_SIZE = 32 * 1024 * 1024  # bytes; ~spark.sql.files.maxPartitionBytes
@@ -134,15 +134,14 @@ def _decode_split(
     """Decode one byte-range split of a container file into Arrow
     RecordBatches (shared by the batch reader and the streaming
     reader below)."""
-    import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
-    from ..avroio.codegen import get_batch_resolver
     from ..avroio.container import ContainerHeader
 
-    writer_schema = parse_schema(partition.schema_json)
-    target_json = reader_schema_json or partition.schema_json
-    target = parse_schema(target_json)
+    writer_json = json.dumps(parse_schema(partition.schema_json).to_json())
+    target_json = (
+        json.dumps(parse_schema(reader_schema_json).to_json()) if reader_schema_json else None
+    )
     header = ContainerHeader(
         schema_json=partition.schema_json,
         codec=partition.codec,
@@ -150,87 +149,12 @@ def _decode_split(
         meta={},
         header_len=partition.header_len,
     )
-    arrow_schema = to_arrow_schema(spark_schema)
-    names = [f.name for f in spark_schema.fields]
-    # reads take the numpy vector stream decoder when the schemas are
-    # identical (each block segments via composed skip tables and the
-    # columns land in Arrow with no per-value Python objects — the S2
-    # container twin of the raw-datum vector path), falling back PER
-    # BLOCK to the generated columnar decoder (resolver variant for
-    # evolution; order preserved by flushing pending codegen columns
-    # before a vector batch); closure resolver only when codegen
-    # declines
-    from ..avroio.vectorized import VectorFallback, get_vector_decoder
-
-    vdec = None
-    if json.dumps(writer_schema.to_json()) == json.dumps(target.to_json()):
-        cand = get_vector_decoder(json.dumps(target.to_json()))
-        if cand is not None and [f[0] for f in cand.fields] == names:
-            vdec = cand
-    bd = get_batch_resolver(
-        json.dumps(writer_schema.to_json()), json.dumps(target.to_json()), mode="spark"
-    )
-    if bd is not None and bd.names == names:
-        cols = bd.new_columns()
-        with open(partition.path, "rb") as fobj:
-            for count, block in iter_block_spans(fobj, header, partition.start, partition.end):
-                if vdec is not None:
-                    try:
-                        varrs = vdec.decode_stream_arrow(block, count)
-                        if cols[0]:  # keep row order across mixed paths
-                            yield _cols_to_record_batch(bd, cols, arrow_schema)
-                            cols = bd.new_columns()
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                varrs[nm]
-                                if varrs[nm].type == arrow_schema.field(i).type
-                                else varrs[nm].cast(arrow_schema.field(i).type)
-                                for i, nm in enumerate(names)
-                            ],
-                            schema=arrow_schema,
-                        )
-                        continue
-                    except VectorFallback:
-                        pass
-                bd.decode_stream(block, 0, count, cols)
-                if len(cols[0]) >= 8192:
-                    yield _cols_to_record_batch(bd, cols, arrow_schema)
-                    cols = bd.new_columns()
-        if cols[0]:
-            yield _cols_to_record_batch(bd, cols, arrow_schema)
-        return
-    decode = compile_resolver(writer_schema, target, mode="spark")
-    rows: list[dict] = []
+    decoder = get_decoder(writer_json, target_json)
     with open(partition.path, "rb") as fobj:
-        for count, block in iter_block_spans(fobj, header, partition.start, partition.end):
-            br = BinaryReader(block)
-            for _ in range(count):
-                rows.append(decode(br))
-            if len(rows) >= 8192:
-                yield _to_record_batch(rows, names, arrow_schema)
-                rows = []
-    if rows:
-        yield _to_record_batch(rows, names, arrow_schema)
-
-
-def _cols_to_record_batch(bd, cols: list[list], arrow_schema) -> Any:
-    import pyarrow as pa
-
-    arrays = []
-    for i, col in enumerate(cols):
-        series = bd.column_series(i, col)  # M8 view for raw-ts columns
-        arrays.append(pa.Array.from_pandas(series, type=arrow_schema.field(i).type))
-    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
-
-
-def _to_record_batch(rows: list[dict], names: list[str], arrow_schema) -> Any:
-    import pyarrow as pa
-
-    arrays = []
-    for i, name in enumerate(names):
-        col = [r.get(name) for r in rows]
-        arrays.append(pa.array(col, type=arrow_schema.field(i).type, from_pandas=True))
-    return pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
+        yield from decoder.decode_blocks(
+            iter_block_spans(fobj, header, partition.start, partition.end),
+            to_arrow_schema(spark_schema),
+        )
 
 
 @dataclass

@@ -1,0 +1,235 @@
+"""Decoder ladder (avroio/ladder.py), in process with no SparkSession:
+each schema shape reaches its tier by shape alone, every tier returns
+the closure reference's values on the blob and block paths, PERMISSIVE
+nulls and FAILFAST errors hold on every tier, and the encoders are
+byte-identical to ``encode_datum``."""
+
+from __future__ import annotations
+
+import datetime as dt
+import json
+import pathlib
+import re
+
+import pandas as pd
+import pyarrow as pa
+import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
+
+import redshift_avro_spark
+from redshift_avro_spark.avroio.binary import (
+    AvroDecodeError,
+    BinaryReader,
+    compile_decoder,
+    compile_resolver,
+    encode_datum,
+)
+from redshift_avro_spark.avroio.convert import avro_to_spark_type
+from redshift_avro_spark.avroio.ladder import get_decoder, get_encoder
+from redshift_avro_spark.avroio.schema_model import parse_schema
+from redshift_avro_spark.sources.columns import _nullable_struct
+
+FLAT = {
+    "type": "record",
+    "name": "Flat",
+    "fields": [
+        {"name": "id", "type": "long"},
+        {"name": "n", "type": "int"},
+        {"name": "ok", "type": "boolean"},
+        {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}},
+        {"name": "score", "type": "double"},
+        {"name": "kind", "type": "string"},
+        {"name": "note", "type": ["null", "string"]},
+    ],
+}
+NESTED = {
+    "type": "record",
+    "name": "Nested",
+    "fields": [
+        {"name": "id", "type": "long"},
+        {
+            "name": "geo",
+            "type": {
+                "type": "record",
+                "name": "Geo",
+                "fields": [{"name": "lat", "type": "double"}, {"name": "city", "type": "string"}],
+            },
+        },
+        {"name": "tags", "type": {"type": "array", "items": "string"}},
+        {"name": "attrs", "type": {"type": "map", "values": "long"}},
+        {"name": "ref", "type": ["null", "long"]},
+        {"name": "at", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+    ],
+}
+WIDE = {
+    "type": "record",
+    "name": "Wide",
+    "fields": [{"name": f"f{i}", "type": ["null", "string"]} for i in range(300)],
+}
+EVOLVED_WRITER = {
+    "type": "record",
+    "name": "Ev",
+    "fields": [
+        {"name": "id", "type": "int"},
+        {"name": "dropped", "type": "string"},
+        {"name": "kind", "type": "string"},
+    ],
+}
+EVOLVED_READER = {
+    "type": "record",
+    "name": "Ev",
+    "fields": [
+        {"name": "kind", "type": "string"},
+        {"name": "id", "type": "long"},
+        {"name": "score", "type": "double", "default": 1.5},
+    ],
+}
+
+
+def _rows(shape: str, n: int = 40) -> list[dict]:
+    if shape == "flat":
+        return [
+            {
+                "id": i * 1_000_003,
+                "n": -i,
+                "ok": i % 2 == 0,
+                "ts": dt.datetime(2024, 1, 1) + dt.timedelta(seconds=i),
+                "score": i / 8.0,
+                "kind": f"k{i % 3}é",
+                "note": None if i % 3 else f"note {i}",
+            }
+            for i in range(n)
+        ]
+    if shape == "nested":
+        return [
+            {
+                "id": i,
+                "geo": {"lat": i / 4.0, "city": f"c{i}"},
+                "tags": [f"t{j}" for j in range(i % 4)],
+                "attrs": {f"a{j}": j * i for j in range(i % 3)},
+                "ref": None if i % 2 else i * 7,
+                "at": dt.datetime(2001, 2, 3) + dt.timedelta(milliseconds=37 * i),
+            }
+            for i in range(n)
+        ]
+    if shape == "wide":
+        return [
+            {f"f{j}": None if (i + j) % 5 == 0 else f"v{i}.{j}" for j in range(300)}
+            for i in range(n)
+        ]
+    return [{"id": i, "dropped": "x" * i, "kind": f"k{i}"} for i in range(n)]
+
+
+# shape → (writer, reader or None, tier the ladder must pick)
+SHAPES = {
+    "flat": (FLAT, None, "vector"),
+    "nested": (NESTED, None, "generated"),
+    "wide": (WIDE, None, "vector"),
+    "evolved": (EVOLVED_WRITER, EVOLVED_READER, "generated"),
+}
+
+
+def _canon(schema) -> str:
+    return json.dumps(parse_schema(schema).to_json())
+
+
+def _case(shape: str):
+    writer, reader, tier = SHAPES[shape]
+    writer_s = parse_schema(writer)
+    reader_s = parse_schema(reader) if reader else writer_s
+    blobs = [encode_datum(writer_s, r) for r in _rows(shape)]
+    reference = (
+        compile_resolver(writer_s, reader_s, mode="spark")
+        if reader
+        else compile_decoder(writer_s, mode="spark")
+    )
+    dec = get_decoder(_canon(writer), _canon(reader) if reader else None)
+    arrow_schema = to_arrow_schema(_nullable_struct(avro_to_spark_type(reader_s)))
+    return dec, blobs, reference, arrow_schema, tier
+
+
+def _tier(dec) -> str:
+    if dec._vector is not None:
+        return "vector"
+    return "generated" if dec._generated is not None else "closure"
+
+
+def _columns(out: dict) -> dict:
+    return {n: s.tolist() for n, s in out.items()}
+
+
+@pytest.mark.parametrize("shape", list(SHAPES))
+def test_shape_picks_its_tier(shape):
+    dec, *_, tier = _case(shape)
+    assert _tier(dec) == tier
+    if shape == "wide":  # codegen declines: a failed vector batch falls to closures
+        assert dec._generated is None and dec._closure is not None
+
+
+@pytest.mark.parametrize("shape", list(SHAPES))
+def test_blob_path_matches_closure_reference(shape):
+    dec, blobs, reference, *_ = _case(shape)
+    want_rows = [reference(BinaryReader(b)) for b in blobs]
+    got = _columns(dec.decode_blobs(blobs + [None]))
+    want = {n: [r[n] for r in want_rows] + [None] for n in dec.names}
+    assert got == want
+
+
+@pytest.mark.parametrize("shape", list(SHAPES))
+def test_block_path_matches_closure_reference(shape):
+    dec, blobs, reference, arrow_schema, _ = _case(shape)
+    blocks = [(len(part), b"".join(part)) for part in (blobs[:7], blobs[7:8], blobs[8:])]
+    got = pa.Table.from_batches(list(dec.decode_blocks(blocks, arrow_schema)), arrow_schema)
+    want_rows = [reference(BinaryReader(b)) for b in blobs]
+    assert got.to_pylist() == pa.Table.from_pylist(want_rows, arrow_schema).to_pylist()
+
+
+@pytest.mark.parametrize("shape", list(SHAPES))
+def test_truncated_row_is_permissive_null_or_typed_error(shape):
+    dec, blobs, reference, *_ = _case(shape)
+    batch = [blobs[1], blobs[1][:-5], blobs[2]]
+    got = _columns(dec.decode_blobs(batch, permissive=True))
+    for n in dec.names:
+        assert got[n][1] is None
+        assert got[n][0] == reference(BinaryReader(blobs[1]))[n]
+    with pytest.raises(AvroDecodeError):
+        dec.decode_blobs(batch)
+
+
+@pytest.mark.parametrize("shape", list(SHAPES))
+def test_truncated_block_raises_typed_error(shape):
+    dec, blobs, _, arrow_schema, _ = _case(shape)
+    with pytest.raises(AvroDecodeError):
+        list(dec.decode_blocks([(3, b"".join(blobs[:3])[:-5])], arrow_schema))
+
+
+@pytest.mark.parametrize("shape", ["flat", "nested", "wide"])
+@pytest.mark.parametrize("columns", ["all", "missing_default"])
+def test_encoder_matches_encode_datum(shape, columns):
+    schema = dict(SHAPES[shape][0])
+    rows = _rows(shape)
+    if columns == "missing_default":  # a field absent from the batch takes its default
+        schema["fields"] = schema["fields"] + [
+            {"name": "extra", "type": "string", "default": "dflt"}
+        ]
+    parsed = parse_schema(schema)
+    # object columns keep nullable longs as ints (pandas would make them float)
+    pdf = pd.DataFrame(rows, dtype=object if shape == "nested" else None)
+    want = [encode_datum(parsed, r) for r in rows]
+    enc = get_encoder(_canon(schema))
+    assert enc.encode_arrow(pdf).to_pylist() == want
+    offs, buf = enc.encode_buffer(pdf)
+    assert buf.tobytes() == b"".join(want)
+    assert offs.tolist() == [0] + list(pd.Series([len(w) for w in want]).cumsum())
+
+
+def test_only_the_ladder_chooses_a_tier():
+    pkg = pathlib.Path(redshift_avro_spark.__file__).parent
+    tier_modules = {"avroio/ladder.py", "avroio/codegen.py", "avroio/vectorized.py"}
+    pattern = re.compile(r"get_(vector|batch)_\w+|VectorFallback")
+    offenders = [
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if str(p.relative_to(pkg)) not in tier_modules and pattern.search(p.read_text())
+    ]
+    assert offenders == []

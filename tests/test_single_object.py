@@ -152,3 +152,31 @@ def test_spark_column_decode_mixed_versions(spark):
     )
     with _pytest.raises(Exception, match="framing|marker"):
         strict.collect()
+
+
+def test_spark_column_permissive_on_closure_tier(spark):
+    """A record too wide for codegen (300 nullable strings): a message
+    cut short decodes to a null row under PERMISSIVE, as from_avro
+    does, instead of failing the job."""
+    from pyspark.sql import functions as F
+
+    from redshift_avro_spark.sources.columns import from_avro, from_avro_single_object
+
+    wide = parse_schema(
+        {
+            "type": "record",
+            "name": "Wide",
+            "fields": [{"name": f"f{i}", "type": ["null", "string"]} for i in range(300)],
+        }
+    )
+    msg = encode_single_object(wide, {f"f{i}": "v" for i in range(300)})
+    df = spark.createDataFrame([(0, msg), (1, msg[:-5])], "row_id long, msg binary")
+    single = df.select(
+        "row_id", from_avro_single_object("msg", [wide], mode="PERMISSIVE").alias("e")
+    )
+    raw = df.select(
+        "row_id",
+        from_avro(F.expr(f"substring(msg, {HEADER_LEN + 1})"), wide, mode="PERMISSIVE").alias("e"),
+    )
+    for out in (single, raw):
+        assert [r.f0 for r in out.orderBy("row_id").select("e.f0").collect()] == ["v", None]

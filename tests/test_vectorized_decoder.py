@@ -167,7 +167,8 @@ def test_stream_decode_rejects_garbage():
 
 def test_append_pandas_layout_matches_per_datum_path():
     """ContainerWriter.append_pandas (vector block write) must produce
-    the same records AND the same block boundaries as append_encoded."""
+    the same records AND the same block boundaries as append_encoded,
+    also when the frame arrives over several calls."""
     import io
 
     import pandas as pd
@@ -202,10 +203,12 @@ def test_append_pandas_layout_matches_per_datum_path():
             "props": pd.Series([r["props"] for r in rows], dtype=object),
         }
     )
-    b = io.BytesIO()
-    with ContainerWriter(b, schema_json, sync_marker=sync) as w:
-        w.append_pandas(pdf)
-    assert a.getvalue() == b.getvalue()  # byte-identical incl. blocks
+    for cuts in ([], [1234, 1235, 3000]):
+        b = io.BytesIO()
+        with ContainerWriter(b, schema_json, sync_marker=sync) as w:
+            for lo, hi in zip([0] + cuts, cuts + [n]):
+                w.append_pandas(pdf.iloc[lo:hi])
+        assert a.getvalue() == b.getvalue()  # byte-identical incl. blocks
     ha = read_header(a.getvalue())
     assert len(list(iter_raw_blocks(a.getvalue(), ha.header_len, ha.sync))) > 1
     back = list(ContainerReader(b.getvalue()))

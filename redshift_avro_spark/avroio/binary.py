@@ -6,7 +6,7 @@ on schema type per value (io.py:678-791), each schema compiles ONCE into
 a tree of closures — decode, encode, skip, and a writer→reader resolving
 decode (io.py:990-1039 semantics) — so the per-datum hot path is plain
 function calls. This matters because the Spark integration calls these
-from Arrow-batched pandas UDFs.
+from Arrow UDFs, batch by batch.
 
 Intended-spec semantics, not the port's bugs (SURVEY.md Appendix A):
 float codec works (A.1), encode paths work (A.2), timestamp encode works

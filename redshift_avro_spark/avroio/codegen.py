@@ -6,7 +6,7 @@ call overhead and ``BinaryReader`` attribute traffic. This module
 generates ONE flat Python function per schema (``exec`` of generated
 source): varint/zigzag/string reads inlined on local variables, no
 reader object, no per-field calls, and output assembled directly into
-per-field column lists (skipping the rows-of-dicts → pandas pivot).
+per-field column lists (no rows-of-dicts pivot).
 
 Semantics are identical to the closure codecs (reference
 io.py:235-1337 parity lives there; this changes only the execution
@@ -21,14 +21,18 @@ strategy). Guarantees:
   (:mod:`.ladder`) uses the closure path — a generator bug degrades to
   slow, never to wrong.
 
-Entry points (both lru-cached per (schema-json, mode), so each executor
-process compiles once per schema):
+Decoders emit Spark-mode values only (the values Spark's Arrow types
+take: naive-UTC datetimes, member-struct unions, time logical types as
+raw ints); python-mode values stay with the closures.
 
-- :func:`get_batch_decoder` → :class:`BatchDecoder` with
-  ``decode_blobs`` (one datum per blob → columns), ``decode_stream``
-  (N consecutive datums from one buffer → columns, for container
-  blocks) and ``decode_stream_rows`` (same, but dict rows — the
-  ``array<struct>`` cell shape).
+Entry points (lru-cached per schema JSON, so each executor process
+compiles once per schema):
+
+- :func:`get_batch_decoder` / :func:`get_batch_resolver` →
+  :class:`BatchDecoder` with ``decode_blobs`` (one datum per blob →
+  columns), ``decode_stream`` (N consecutive datums from one buffer →
+  columns, for container blocks) and ``column_array`` (one column →
+  a pyarrow Array of Spark's Arrow type).
 - :func:`get_batch_encoder` → :class:`BatchEncoder` with
   ``encode_columns`` (per-field value lists → list of datum bytes).
 """
@@ -36,7 +40,6 @@ process compiles once per schema):
 from __future__ import annotations
 
 import datetime as dt
-import json
 import uuid as uuid_mod
 from functools import lru_cache
 from typing import Any, Callable, Optional
@@ -45,7 +48,6 @@ from .binary import (
     _BOOL_TYPES,
     _EPOCH_DATE,
     _EPOCH_NAIVE,
-    _EPOCH_UTC,
     _FLOAT_TYPES,
     _INT_TYPES,
     _PROMOTIONS,
@@ -67,8 +69,6 @@ from .binary import (
     _names_match,
     adapt_spark_value,
     schemas_match,
-    _micros_to_time,
-    _millis_to_time,
     _time_to_micros,
     _ts_to_micros,
     _unscaled_from_decimal,
@@ -123,10 +123,7 @@ def _base_env() -> dict:
         "_dtt": dt.time,
         "_UUID": uuid_mod.UUID,
         "_EPN": _EPOCH_NAIVE,
-        "_EPU": _EPOCH_UTC,
         "_EO": _EPOCH_DATE.toordinal(),
-        "_mil2t": _millis_to_time,
-        "_mic2t": _micros_to_time,
         "_t2mic": _time_to_micros,
         "_ts2mic": _ts_to_micros,
         "_unscaled": _unscaled_from_decimal,
@@ -140,9 +137,7 @@ def _base_env() -> dict:
 class _Emitter:
     """Shared plumbing: indented line buffer + env-constant interning."""
 
-    def __init__(self, mode: str) -> None:
-        self.mode = mode
-        self.spark = mode == "spark"
+    def __init__(self) -> None:
         self.lines: list[str] = []
         self.env = _base_env()
         self._n = 0
@@ -169,18 +164,14 @@ class _Emitter:
 
 
 class _DecEmitter(_Emitter):
-    """``raw_ts=True`` emits top-level-column timestamps as raw epoch
-    ints (micros/millis) instead of datetime objects — the caller
-    converts whole columns via numpy ``.view('M8[us]')``, which skips
-    per-row datetime construction AND makes the Arrow handoff a buffer
-    copy. Only applies where the value lands directly in a column
-    (``raw`` flag threads through nullable unions but goes False inside
-    records/member-structs/arrays/maps, whose dict/list payloads must
-    carry real datetime objects for Arrow)."""
-
-    def __init__(self, mode: str, raw_ts: bool = False) -> None:
-        super().__init__(mode)
-        self.raw_ts = raw_ts
+    """Emits top-level-column timestamps as raw epoch ints
+    (micros/millis) instead of datetime objects —
+    :meth:`BatchDecoder.column_array` views a whole column as an Arrow
+    timestamp array, skipping per-row datetime construction. Only where
+    the value lands directly in a column: the ``raw`` flag threads
+    through nullable unions but goes False inside records,
+    member-structs, arrays and maps, whose dict/list payloads carry
+    datetime objects."""
 
     def varint(self, ind: int, dst: str) -> None:
         """Zigzag varint → signed int in ``dst`` (replica of
@@ -217,7 +208,7 @@ class _DecEmitter(_Emitter):
         self.w(ind, f"pos = {e}")
 
     def fallback(self, ind: int, schema: AvroSchema, dst: str) -> None:
-        fb = self.const("fb", _compile_dec(schema, {"__mode__": self.mode}))
+        fb = self.const("fb", _compile_dec(schema, {"__mode__": "spark"}))
         r = self.tmp()
         self.w(ind, f"{r} = _BR(data, pos)")
         self.w(ind, f"{dst} = {fb}({r})")
@@ -261,23 +252,16 @@ class _DecEmitter(_Emitter):
                 w(ind, f"{dst} = _dfo(_EO + {v})")
                 return
             if lt in ("time-millis", "time-micros"):
-                v = self.tmp()
-                self.varint(ind, v)
-                if self.spark:
-                    w(ind, f"{dst} = {v}")
-                else:
-                    helper = "_mil2t" if lt == "time-millis" else "_mic2t"
-                    w(ind, f"{dst} = {helper}({v})")
+                self.varint(ind, dst)
                 return
             if lt in ("timestamp-millis", "timestamp-micros"):
-                if self.raw_ts and raw:
+                if raw:
                     self.varint(ind, dst)
                     return
                 v = self.tmp()
                 self.varint(ind, v)
-                epoch = "_EPN" if self.spark else "_EPU"
                 unit = "milliseconds" if lt == "timestamp-millis" else "microseconds"
-                w(ind, f"{dst} = {epoch} + _td({unit}={v})")
+                w(ind, f"{dst} = _EPN + _td({unit}={v})")
                 return
             if lt == "uuid":
                 self.length_prefixed(
@@ -353,7 +337,7 @@ class _DecEmitter(_Emitter):
             i = self.tmp()
             self.varint(ind, i)
             non_null = s.non_null_branches()
-            member_struct = self.spark and len(non_null) >= 2
+            member_struct = len(non_null) >= 2
             members = [f"member{j}" for j in range(len(non_null))]
             v = self.tmp()
             kw = "if"
@@ -375,7 +359,7 @@ class _DecEmitter(_Emitter):
                     # nullable-single union: branch value lands directly
                     # in the column, so raw-ts may thread through (multi-
                     # branch bare unions could mix int-typed branches with
-                    # raw timestamps — keep those rich)
+                    # raw timestamps — keep those as datetimes)
                     self.emit(b, dst, ind + 1, raw=raw and len(non_null) == 1)
             w(ind, "else:")
             w(ind + 1, f'raise _ADE("union branch %d out of range" % {i})')
@@ -419,7 +403,7 @@ class _ResEmitter(_DecEmitter):
     runtime — a branch that can't resolve only errors if data uses it)."""
 
     def res_fallback(self, ind: int, writer: AvroSchema, reader: AvroSchema, dst: str) -> None:
-        fb = self.const("frb", _compile_res(writer, reader, {"__mode__": self.mode}))
+        fb = self.const("frb", _compile_res(writer, reader, {"__mode__": "spark"}))
         r = self.tmp()
         self.w(ind, f"{r} = _BR(data, pos)")
         self.w(ind, f"{dst} = {fb}({r})")
@@ -558,7 +542,7 @@ class _ResEmitter(_DecEmitter):
                     f"writer {w_s.type} matches no branch of reader union"
                 )
             non_null = r_s.non_null_branches()
-            if self.spark and len(non_null) >= 2:
+            if len(non_null) >= 2:
                 if chosen.type == "null":
                     w(ind, f"{dst} = None")
                     return
@@ -732,10 +716,7 @@ def _emit_res_fields(
                     f"reader field {reader.fullname}.{rf.name} has no "
                     "default and is absent from writer schema"
                 )
-            dv = default_value(rf)
-            if em.spark:
-                dv = adapt_spark_value(rf.schema, dv)
-            v = em.const("df", dv)
+            v = em.const("df", adapt_spark_value(rf.schema, default_value(rf)))
         out.append((rf.name, v))
     return out
 
@@ -1016,7 +997,7 @@ class _EncEmitter(_Emitter):
 
 
 # datetime's representable range in epoch micros (year 1 .. 9999); raw
-# int64 timestamps outside it take the per-element path, which raises
+# timestamps outside it take the per-element path, which raises
 # OverflowError exactly like the closure decoder would
 _TS_MIN_US = -62135596800000000
 _TS_MAX_US = 253402300799999999
@@ -1025,28 +1006,18 @@ _TS_MAX_US = 253402300799999999
 class BatchDecoder:
     """Generated columnar decoder for a top-level record schema.
 
-    ``decode_blobs`` / ``decode_stream`` fill per-field column lists;
-    top-level timestamp columns arrive as raw epoch ints — hand each
-    column to :meth:`column_series` to get the right pandas Series
-    (vectorized ``M8[us]`` view when clean, object fallback when the
-    column mixes None / datetime objects from a closure-decoded cell).
-    Non-nullable numeric/boolean columns convert through one
-    ``np.asarray`` instead of an object Series, making the Arrow
-    handoff a buffer copy. ``decode_stream_rows`` appends dict rows
-    with rich values (the ``array<struct>`` cell shape)."""
+    ``decode_blobs`` / ``decode_stream`` fill per-field column lists of
+    Spark-mode values, except that top-level timestamp columns hold raw
+    epoch ints; :meth:`column_array` turns each column into a pyarrow
+    Array of Spark's Arrow type (timestamps by one buffer view)."""
 
-    __slots__ = ("names", "ts_units", "np_dtypes", "_epoch", "_blobs", "_stream", "_rows")
+    __slots__ = ("names", "ts_units", "_blobs", "_stream")
 
-    def __init__(
-        self, names, ts_units, epoch, blobs_fn, stream_fn, rows_fn, np_dtypes=None
-    ) -> None:
+    def __init__(self, names, ts_units, blobs_fn, stream_fn) -> None:
         self.names = names
         self.ts_units = ts_units
-        self.np_dtypes = np_dtypes or [None] * len(names)
-        self._epoch = epoch
         self._blobs = blobs_fn
         self._stream = stream_fn
-        self._rows = rows_fn
 
     def new_columns(self) -> list[list]:
         return [[] for _ in self.names]
@@ -1056,56 +1027,39 @@ class BatchDecoder:
         self._blobs(blobs, outs, permissive)
 
     def decode_stream(self, data: bytes, pos: int, count: int, outs) -> int:
-        """``count`` consecutive datums from ``data`` at ``pos`` → columns."""
+        """``count`` consecutive datums from ``data`` at ``pos`` → columns;
+        returns the position after the last datum."""
         return self._stream(data, pos, count, outs)
 
-    def decode_stream_rows(self, data: bytes, pos: int, count: int, out: list) -> int:
-        """Same, but appends one dict per datum (array<struct> cell shape)."""
-        return self._rows(data, pos, count, out)
-
-    def column_series(self, i: int, col: list):
-        import numpy as np
-        import pandas as pd
+    def column_array(self, i: int, col: list, typ):
+        """Column ``i``'s list → pyarrow Array of ``typ``. NaN stays a
+        float value (``from_pandas=False``)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
 
         unit = self.ts_units[i]
-        if unit is None:
-            nd = self.np_dtypes[i]
-            # the None scan is load-bearing: np.asarray silently maps
-            # None -> nan/False for float/bool dtypes, which would turn
-            # permissive null rows into values instead of Arrow nulls
-            if nd is not None and None not in col:
-                try:
-                    return pd.Series(np.asarray(col, dtype=nd))
-                except (TypeError, ValueError, OverflowError):
-                    pass
-            return pd.Series(col, dtype=object)
-        arr = None
-        try:
-            arr = np.asarray(col, dtype="int64")
-        except (TypeError, ValueError, OverflowError):
-            arr = None
-        if arr is not None and len(arr):
-            lo, hi = (_TS_MIN_US, _TS_MAX_US)
-            if unit == "ms":
-                lo, hi = lo // 1000, hi // 1000
-            if int(arr.min()) < lo or int(arr.max()) > hi:
-                arr = None
-        if arr is not None:
-            return pd.Series(arr.view("M8[us]" if unit == "us" else "M8[ms]"))
-        kw = "microseconds" if unit == "us" else "milliseconds"
-        ep = self._epoch
-        return pd.Series(
-            [
-                v if v is None or isinstance(v, dt.datetime) else ep + dt.timedelta(**{kw: v})
+        if unit is not None:
+            try:
+                ints = pa.array(col, type=pa.int64())
+            except (TypeError, ValueError, OverflowError):  # datetime reader defaults
+                ints = None
+            if ints is not None:
+                lo, hi = (_TS_MIN_US, _TS_MAX_US)
+                if unit == "ms":
+                    lo, hi = lo // 1000, hi // 1000
+                bounds = pc.min_max(ints)
+                if ints.null_count == len(ints) or (
+                    bounds["min"].as_py() >= lo and bounds["max"].as_py() <= hi
+                ):
+                    ts = ints.view(pa.timestamp(unit, typ.tz))
+                    return ts if ts.type == typ else ts.cast(typ)
+            kw = "microseconds" if unit == "us" else "milliseconds"
+            col = [
+                v if v is None or isinstance(v, dt.datetime)
+                else _EPOCH_NAIVE + dt.timedelta(**{kw: v})
                 for v in col
-            ],
-            dtype=object,
-        )
-
-    def to_pandas(self, outs):
-        """Column lists → dict of name → pandas Series (ready for a
-        pandas-UDF DataFrame yield)."""
-        return {n: self.column_series(i, c) for i, (n, c) in enumerate(zip(self.names, outs))}
+            ]
+        return pa.array(col, type=typ, from_pandas=False)
 
 
 class BatchEncoder:
@@ -1130,7 +1084,6 @@ class BatchEncoder:
         passthrough), so this skips per-row datetime arithmetic without
         changing a byte of output. NaT (nullable ts) falls back to None
         per element."""
-        import numpy as np
         import pandas as pd
 
         out = []
@@ -1155,23 +1108,9 @@ class BatchEncoder:
         return out
 
 
-def _np_dtype(s: AvroSchema) -> Optional[str]:
-    """numpy dtype for a NON-NULLABLE plain numeric/boolean field (no
-    union threading — a nullable column would fail the conversion every
-    batch; those stay object)."""
-    if isinstance(s, PrimitiveSchema) and s.logical is None:
-        if s.type in ("int", "long"):
-            return "int64"
-        if s.type in ("float", "double"):
-            return "float64"
-        if s.type == "boolean":
-            return "bool"
-    return None
-
-
 def _ts_unit(s: AvroSchema) -> Optional[str]:
-    """'us'/'ms' when a top-level field surfaces raw ints under raw_ts
-    (mirrors the emitter's raw threading through nullable unions)."""
+    """'us'/'ms' when a top-level field surfaces raw ints (mirrors the
+    emitter's raw threading through nullable unions)."""
     if isinstance(s, UnionSchema):
         non_null = s.non_null_branches()
         if len(non_null) != 1:
@@ -1185,49 +1124,25 @@ def _ts_unit(s: AvroSchema) -> Optional[str]:
     return None
 
 
-def _build_decoder(schema: AvroSchema, mode: str) -> Optional[BatchDecoder]:
+def _build_decoder(schema: AvroSchema) -> Optional[BatchDecoder]:
     if not isinstance(schema, RecordSchema) or not schema.fields:
         return None
-    em = _DecEmitter(mode, raw_ts=True)
+    em = _DecEmitter()
     fvars = [f"r{i}" for i in range(len(schema.fields))]
-    # raw body (columns entry points) + rich body (dict-rows entry point)
     for f, fv in zip(schema.fields, fvars):
         em.emit(f.schema, fv, 0, raw=True)
-    body = em.lines
-    em_rich = _DecEmitter(mode, raw_ts=False)
-    em_rich.env = em.env  # share interned constants / one globals dict
-    em_rich._n = em._n
-    for f, fv in zip(schema.fields, fvars):
-        em_rich.emit(f.schema, fv, 0)
-    body_rich = em_rich.lines
-    names = [f.name for f in schema.fields]
-    ts_units = [_ts_unit(f.schema) for f in schema.fields]
-    np_dtypes = [_np_dtype(f.schema) for f in schema.fields]
-    return _assemble_decoder(
-        em.env, body, body_rich, fvars, names, ts_units, mode, schema.fullname, np_dtypes
-    )
+    return _assemble_decoder(em, fvars, schema.fields, schema.fullname)
 
 
 def _assemble_decoder(
-    glb_env: dict,
-    body: list,
-    body_rich: list,
-    fvars: list,
-    names: list,
-    ts_units: list,
-    mode: str,
-    fullname: str,
-    np_dtypes: Optional[list] = None,
+    em: _DecEmitter, fvars: list, fields: list, fullname: str
 ) -> BatchDecoder:
-    k = len(names)
-    aps = [f"_a{i}" for i in range(k)]
-    ap_bind = f"{', '.join(aps)}{',' if k == 1 else ''} = [_o.append for _o in outs]"
+    names = [f.name for f in fields]
+    aps = [f"_a{i}" for i in range(len(names))]
+    ap_bind = f"{', '.join(aps)}{',' if len(aps) == 1 else ''} = [_o.append for _o in outs]"
     null_row = "; ".join(f"{a}(None)" for a in aps)
     appends = "; ".join(f"{a}({v})" for a, v in zip(aps, fvars))
-    dict_lit = "{" + ", ".join(f"{n!r}: {v}" for n, v in zip(names, fvars)) + "}"
-
-    def indent(lines: list[str], by: int) -> list[str]:
-        return ["    " * by + ln for ln in lines]
+    body = ["            " + ln for ln in em.lines]
 
     src: list[str] = []
     src.append("def _dec_blobs(blobs, outs, permissive):")
@@ -1241,7 +1156,7 @@ def _assemble_decoder(
     src.append("        pos = 0")
     src.append("        L = len(data)")
     src.append("        try:")
-    src.extend(indent(body, 3))
+    src.extend(body)
     src.append("        except IndexError:")
     src.append("            if permissive:")
     src.append(f"                {null_row}")
@@ -1261,37 +1176,18 @@ def _assemble_decoder(
     src.append("    L = len(data)")
     src.append("    for _ in range(count):")
     src.append("        try:")
-    src.extend(indent(body, 3))
+    src.extend(body)
     src.append("        except IndexError:")
     src.append('            raise _ADE("truncated varint") from None')
     src.append(f"        {appends}")
     src.append("    return pos")
-    src.append("")
-    src.append("def _dec_rows(data, pos, count, out):")
-    src.append("    _ap = out.append")
-    src.append("    if type(data) is not bytes:")
-    src.append("        data = bytes(data)")
-    src.append("    L = len(data)")
-    src.append("    for _ in range(count):")
-    src.append("        try:")
-    src.extend(indent(body_rich, 3))
-    src.append("        except IndexError:")
-    src.append('            raise _ADE("truncated varint") from None')
-    src.append(f"        _ap({dict_lit})")
-    src.append("    return pos")
-    code = "\n".join(src)
-    glb = glb_env
-    exec(compile(code, f"<avro-dec:{fullname}>", "exec"), glb)  # noqa: S102
-    epoch = _EPOCH_NAIVE if mode == "spark" else _EPOCH_UTC
-    return BatchDecoder(
-        names, ts_units, epoch, glb["_dec_blobs"], glb["_dec_stream"], glb["_dec_rows"],
-        np_dtypes,
-    )
+    glb = em.env
+    exec(compile("\n".join(src), f"<avro-dec:{fullname}>", "exec"), glb)  # noqa: S102
+    ts_units = [_ts_unit(f.schema) for f in fields]
+    return BatchDecoder(names, ts_units, glb["_dec_blobs"], glb["_dec_stream"])
 
 
-def _build_resolver(
-    writer: AvroSchema, reader: AvroSchema, mode: str
-) -> Optional[BatchDecoder]:
+def _build_resolver(writer: AvroSchema, reader: AvroSchema) -> Optional[BatchDecoder]:
     if (
         not isinstance(writer, RecordSchema)
         or not isinstance(reader, RecordSchema)
@@ -1302,44 +1198,15 @@ def _build_resolver(
         raise SchemaResolutionError(
             f"record name mismatch: {writer.fullname} vs {reader.fullname}"
         )
-    em = _ResEmitter(mode, raw_ts=True)
-    pairs = _emit_res_fields(em, writer, reader, 0, raw=True)
-    fvars = [v for _, v in pairs]
-    body = em.lines
-    em_rich = _ResEmitter(mode, raw_ts=False)
-    em_rich.env = em.env  # share interned constants / one globals dict
-    em_rich._n = em._n
-    body_rich = em_rich.lines
-    pairs_rich = _emit_res_fields(em_rich, writer, reader, 0)
-    # both emissions produce the same var-per-slot plan; entry points are
-    # separate functions so var names may differ — use the rich names for
-    # the rich body's dict literal by re-assembling with its own fvars
-    names = [f.name for f in reader.fields]
-    ts_units = [_ts_unit(f.schema) for f in reader.fields]
-    np_dtypes = [_np_dtype(f.schema) for f in reader.fields]
-    # align: _assemble_decoder uses ONE fvars list for all three entry
-    # points, so rebind the rich body's slot vars onto the raw body's
-    for (n1, v_raw), (n2, v_rich) in zip(pairs, pairs_rich):
-        if v_raw != v_rich:
-            em_rich.w(0, f"{v_raw} = {v_rich}")
-    body_rich = em_rich.lines
-    return _assemble_decoder(
-        em.env,
-        body,
-        body_rich,
-        fvars,
-        names,
-        ts_units,
-        mode,
-        f"{writer.fullname}->{reader.fullname}",
-        np_dtypes,
-    )
+    em = _ResEmitter()
+    fvars = [v for _, v in _emit_res_fields(em, writer, reader, 0, raw=True)]
+    return _assemble_decoder(em, fvars, reader.fields, f"{writer.fullname}->{reader.fullname}")
 
 
 def _build_encoder(schema: AvroSchema) -> Optional[BatchEncoder]:
     if not isinstance(schema, RecordSchema) or not schema.fields:
         return None
-    em = _EncEmitter("python")
+    em = _EncEmitter()
     names = [f.name for f in schema.fields]
     k = len(names)
     body: list[str] = []
@@ -1367,21 +1234,17 @@ def _build_encoder(schema: AvroSchema) -> Optional[BatchEncoder]:
 
 
 @lru_cache(maxsize=256)
-def _cached_decoder(schema_json: str, mode: str) -> Optional[BatchDecoder]:
+def _cached_decoder(schema_json: str) -> Optional[BatchDecoder]:
     try:
-        return _build_decoder(parse_schema(schema_json), mode)
+        return _build_decoder(parse_schema(schema_json))
     except Exception:  # noqa: BLE001 — degrade to the closure path, never break
         return None
 
 
 @lru_cache(maxsize=256)
-def _cached_resolver(
-    writer_json: str, reader_json: str, mode: str
-) -> Optional[BatchDecoder]:
+def _cached_resolver(writer_json: str, reader_json: str) -> Optional[BatchDecoder]:
     try:
-        return _build_resolver(
-            parse_schema(writer_json), parse_schema(reader_json), mode
-        )
+        return _build_resolver(parse_schema(writer_json), parse_schema(reader_json))
     except Exception:  # noqa: BLE001 — degrade to the closure resolver;
         # genuine resolution errors re-raise identically on that path
         return None
@@ -1395,10 +1258,16 @@ def _cached_encoder(schema_json: str) -> Optional[BatchEncoder]:
         return None
 
 
+def _spark_mode(mode: str) -> None:
+    if mode != "spark":
+        raise ValueError(f"generated decoders emit Spark-mode values only, not mode={mode!r}")
+
+
 def get_batch_decoder(schema_json: str, mode: str = "spark") -> Optional[BatchDecoder]:
     """Generated columnar decoder for ``schema_json`` (top-level record),
     or None if codegen declines (caller must fall back to closures)."""
-    return _cached_decoder(schema_json, mode)
+    _spark_mode(mode)
+    return _cached_decoder(schema_json)
 
 
 def get_batch_encoder(schema_json: str) -> Optional[BatchEncoder]:
@@ -1416,6 +1285,7 @@ def get_batch_resolver(
     ``compile_resolver``, which raises the same SchemaResolutionError for
     genuinely irresolvable pairs. Identical schemas short-circuit to the
     plain generated decoder."""
+    _spark_mode(mode)
     if writer_json == reader_json:
-        return _cached_decoder(writer_json, mode)
-    return _cached_resolver(writer_json, reader_json, mode)
+        return _cached_decoder(writer_json)
+    return _cached_resolver(writer_json, reader_json)

@@ -123,6 +123,28 @@ def avro_to_struct_type(schema: Union[AvroSchema, str, dict]) -> T.StructType:
     return dtype
 
 
+def nullable_struct(dtype: T.DataType) -> T.DataType:
+    """Mark every field nullable, recursively, and strip Avro metadata.
+    A decode can always produce nulls (null input cell, PERMISSIVE
+    failure), so its declared type must allow them — same convention as
+    spark-avro's from_avro. Metadata must go because the Arrow batches a
+    decode yields carry none, and Spark's ARROW_TYPE_MISMATCH check
+    compares fields metadata-sensitively (keep `avro_to_spark_type` for
+    the metadata-bearing schema)."""
+    if isinstance(dtype, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, nullable_struct(f.dataType), nullable=True)
+                for f in dtype.fields
+            ]
+        )
+    if isinstance(dtype, T.ArrayType):
+        return T.ArrayType(nullable_struct(dtype.elementType), containsNull=True)
+    if isinstance(dtype, T.MapType):
+        return T.MapType(dtype.keyType, nullable_struct(dtype.valueType), valueContainsNull=True)
+    return dtype
+
+
 # ---------------------------------------------------------------------------
 # Spark → Avro (for to_avro-style encoding with a generated schema)
 # ---------------------------------------------------------------------------

@@ -21,6 +21,13 @@ bytes, invalid UTF-8, an unexpected pandas dtype) re-runs that batch on
 the next tier, so a surprise costs time, never a value. PERMISSIVE
 gives a null row for each undecodable datum on every tier.
 
+Decoders hand Spark Arrow on every tier: a RecordBatch whose schema is
+Spark's Arrow form of the reader schema (``arrow_schema``), built by
+one :func:`_record_batch`. Arrow keeps a double NaN as NaN and a
+timestamp as a UTC instant, whatever the session time zone; the
+generated tier's top-level timestamps become Arrow by one buffer view.
+Encoders take a pandas batch, as the container writer builds one.
+
 Both factories are cached per schema, so each executor process builds
 a tier once; decoders and encoders hold no per-call state.
 """
@@ -31,7 +38,6 @@ from functools import lru_cache
 from typing import Iterable, Iterator, Optional
 
 import numpy as np
-import pandas as pd
 
 from .binary import (
     BinaryReader,
@@ -41,6 +47,7 @@ from .binary import (
     compile_resolver,
 )
 from .codegen import get_batch_encoder, get_batch_resolver
+from .convert import avro_to_spark_type, nullable_struct
 from .schema_model import parse_schema
 from .vectorized import VectorFallback, get_vector_decoder, get_vector_encoder
 
@@ -56,43 +63,48 @@ class LadderDecoder:
     columns are the reader's top-level fields."""
 
     def __init__(self, writer_json: str, reader_json: str) -> None:
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         self._vector = get_vector_decoder(writer_json) if writer_json == reader_json else None
         self._generated = get_batch_resolver(writer_json, reader_json, mode="spark")
         self._closure = None
+        reader = parse_schema(reader_json)
         if self._generated is None:
             writer = parse_schema(writer_json)
             self._closure = (
                 compile_decoder(writer, mode="spark")
                 if writer_json == reader_json
-                else compile_resolver(writer, parse_schema(reader_json), mode="spark")
+                else compile_resolver(writer, reader, mode="spark")
             )
-        self.names = [f.name for f in parse_schema(reader_json).fields]
+        self.names = [f.name for f in reader.fields]
+        self.arrow_schema = to_arrow_schema(nullable_struct(avro_to_spark_type(reader)))
 
-    def decode_blobs(self, blobs, permissive: bool = False, null_mask=None) -> dict:
-        """One datum per blob (None → null row) → name → pandas Series,
-        in the dtypes of the generated tier's ``to_pandas``.
-        ``null_mask`` (True = None blob) saves the vector tier a scan."""
+    def decode_blobs(self, blobs, permissive: bool = False, null_mask=None):
+        """One datum per blob (None → a row of nulls) → RecordBatch of
+        ``arrow_schema``. ``null_mask`` (True = None blob) saves the
+        vector tier a scan."""
         if self._vector is not None:
             try:
-                return self._vector.decode_blobs_to_pandas(blobs, null_mask)
+                arrays = self._vector.decode_blobs_arrow(blobs, null_mask)
             except VectorFallback:
                 pass
+            else:
+                return _record_batch(arrays, len(blobs), self.arrow_schema)
+        cols = self._new_columns()
         if self._generated is not None:
-            outs = self._generated.new_columns()
-            self._generated.decode_blobs(blobs, outs, permissive)
-            return self._generated.to_pandas(outs)
-        cols: list[list] = [[] for _ in self.names]
-        for blob in blobs:
-            row = None
-            if blob is not None:
-                try:
-                    row = self._closure(BinaryReader(bytes(blob)))
-                except Exception:
-                    if not permissive:
-                        raise
-            for c, n in zip(cols, self.names):
-                c.append(None if row is None else row[n])
-        return {n: pd.Series(c, dtype=object) for n, c in zip(self.names, cols)}
+            self._generated.decode_blobs(blobs, cols, permissive)
+        else:
+            for blob in blobs:
+                row = None
+                if blob is not None:
+                    try:
+                        row = self._closure(BinaryReader(bytes(blob)))
+                    except Exception:
+                        if not permissive:
+                            raise
+                for c, n in zip(cols, self.names):
+                    c.append(None if row is None else row[n])
+        return self._flush(cols, self.arrow_schema)
 
     def decode_blocks(self, blocks: Iterable[tuple[int, bytes]], arrow_schema) -> Iterator:
         """Decompressed container blocks ``(count, data)`` → RecordBatches
@@ -129,21 +141,20 @@ class LadderDecoder:
         return [[] for _ in self.names]
 
     def _flush(self, cols: list[list], arrow_schema):
+        """Generated or closure column lists → RecordBatch."""
+        named = dict(zip(self.names, cols))
         if self._generated is not None:
-            # raw epoch ints of timestamp columns → datetime values
             named = {
-                n: self._generated.column_series(i, c)
-                for i, (n, c) in enumerate(zip(self.names, cols))
+                n: self._generated.column_array(i, c, arrow_schema.field(n).type)
+                for i, (n, c) in enumerate(named.items())
+                if n in arrow_schema.names
             }
-        else:
-            named = dict(zip(self.names, cols))
         return _record_batch(named, len(cols[0]), arrow_schema)
 
 
 def _record_batch(columns: dict, n: int, arrow_schema):
-    """name → pyarrow Array / pandas Series / list → RecordBatch. NaN
-    stays a float value (``from_pandas=False``), as the vector tier
-    leaves it."""
+    """name → pyarrow Array or list → RecordBatch. NaN stays a float
+    value (``from_pandas=False``), as the vector tier leaves it."""
     import pyarrow as pa
 
     arrays = []

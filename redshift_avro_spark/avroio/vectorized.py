@@ -21,9 +21,8 @@ streaming-ingestion shape, README.md:12):
 - Strings/bytes gather their scattered value runs with ONE fancy-index
   (``repeat(starts, lens) + ramp``) into a contiguous values buffer and
   become Arrow ``StringArray``/``BinaryArray`` via ``from_buffers`` —
-  no per-value Python object anywhere; pandas gets zero-copy ArrowDtype
-  columns that Spark's pandas-UDF serializer converts straight back to
-  Arrow.
+  no per-value Python object anywhere; the decoder ladder hands these
+  Arrow arrays to Spark as they are.
 - Doubles/floats gather ``pos[:, None] + arange(width)`` and
   reinterpret the bytes.
 
@@ -467,8 +466,8 @@ class VectorizedBlobDecoder:
         """blobs (sequence of bytes-like / None) → dict name →
         pyarrow.Array (length n; None blobs → null in every column).
         ``null_mask`` (bool array, True = null cell) skips the
-        per-blob None scan when the caller already has one (pandas
-        ``Series.isna()`` computes it at C speed).
+        per-blob None scan when the caller already has one (Arrow's
+        ``is_null()`` computes it at C speed).
 
         Raises VectorFallback on anything the vector path can't decode
         exactly."""
@@ -500,13 +499,13 @@ class VectorizedBlobDecoder:
         return out
 
     def decode_blobs_to_pandas(self, blobs, null_mask=None):
-        """blobs → dict name → pandas Series with EXACTLY the dtypes
-        the generated decoder's ``to_pandas`` produces (numpy
-        int64/float/bool and M8 for non-null columns, object-with-None
-        for anything nullable, object str/bytes for text): downstream
-        consumers — including a chained re-encode UDF — must not be
-        able to tell which decode path ran. ArrowDtype output was
-        measured marginally faster but leaks pd.NA into consumers."""
+        """blobs → dict name → pandas Series (numpy int64/float/bool and
+        M8 for non-null columns, object-with-None for anything nullable,
+        object str/bytes for text).
+
+        No engine path calls this: Spark gets :meth:`decode_blobs_arrow`
+        through the decoder ladder. It is kept only for the benchmark's
+        flat-decode and ``accepted_share`` probes (perfbench/probes.py)."""
         import pandas as pd
 
         arrays = self.decode_blobs_arrow(blobs, null_mask)

@@ -3,8 +3,9 @@
 Local testing runs on ``local[N]``; the conf choices below are the ones
 that carry to a real cluster: AQE on (runtime re-planning, skew-join
 splitting, partition coalescing), explicit shuffle partitions, Arrow
-enabled for every pandas UDF boundary, UTC session timezone so results
-compare bit-for-bit against the DuckDB oracle.
+enabled for pandas UDFs and ``createDataFrame``/``toPandas`` (the Avro
+codec functions hand Spark Arrow themselves), UTC session timezone so
+results compare bit-for-bit against the DuckDB oracle.
 """
 
 from __future__ import annotations

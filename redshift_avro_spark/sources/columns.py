@@ -4,8 +4,8 @@ reference's UDF surface.
 Reference parity map (SURVEY §2.1/§2.2):
 
 - S1 hex-decode scan  → :func:`from_hex` (built-in ``F.unhex``, JVM-side)
-- S3 raw-datum decode → :func:`from_avro` (Arrow-batched pandas UDF over
-  our compiled codec; reference io.py:669-676)
+- S3 raw-datum decode → :func:`from_avro` (Arrow UDF over our compiled
+  codec; reference io.py:669-676)
 - K4 raw-datum encode → :func:`to_avro` (reference io.py:1103-1337)
 - S2 container-bytes-in-column decode → :func:`decode_container` /
   :func:`decode_container_json` (reference avro-file-udf/
@@ -14,14 +14,19 @@ Reference parity map (SURVEY §2.1/§2.2):
 - K1 JSON re-serialization → :func:`decode_container_json` returns the
   exact ``json.dumps`` contract.
 
-Design notes for 100 TB: every UDF here is a *scalar pandas UDF* (Arrow
-batches) whose codec comes from the decoder ladder (avroio/ladder.py:
-numpy vector, generated or closure tier, built once per executor
-process and schema — no per-row schema interpretation), decode is a
-narrow map stage with no shuffle, and hex decode stays JVM-side so
-Catalyst can prune/pushdown around it. PERMISSIVE mode yields per-row nulls instead of failing the
-batch — an intentional improvement over the reference's all-or-nothing
-batch failure envelope (avro-file-udf/lambda_function.py:9-30).
+Design notes for 100 TB: every codec UDF here is a scalar *Arrow* UDF
+(``arrow_udf``: pyarrow Arrays in and out, no pandas in between) or a
+``mapInArrow`` stage whose codec comes from the decoder ladder
+(avroio/ladder.py: numpy vector, generated or closure tier, built once
+per executor process and schema — no per-row schema interpretation).
+Arrow keeps a double NaN as NaN and a timestamp as a UTC instant
+whatever the session time zone; only :func:`decode_container_json`,
+which returns text, is a pandas UDF. Decode is a narrow map stage with
+no shuffle, and hex decode stays JVM-side so Catalyst can
+prune/pushdown around it. PERMISSIVE mode yields per-row nulls instead
+of failing the batch — an intentional improvement over the reference's
+all-or-nothing batch failure envelope (avro-file-udf/
+lambda_function.py:9-30).
 """
 
 from __future__ import annotations
@@ -30,15 +35,17 @@ import json
 from typing import Iterator, Optional, Union
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.pandas.types import to_arrow_type
 
 from ..avroio.binary import BinaryReader, compile_decoder, compile_resolver
 from ..avroio.block_codecs import get_codec
 from ..avroio.container import ContainerHeader, iter_container, iter_raw_blocks, read_header
-from ..avroio.convert import avro_to_spark_type, df_schema_to_avro
+from ..avroio.convert import avro_to_spark_type, df_schema_to_avro, nullable_struct
 from ..avroio.jsonio import datum_to_json
 from ..avroio.ladder import get_decoder, get_encoder
 from ..avroio.schema_model import AvroSchema, parse_schema
@@ -59,28 +66,6 @@ __all__ = [
 
 def _as_schema(schema: Union[AvroSchema, str, dict]) -> AvroSchema:
     return schema if isinstance(schema, AvroSchema) else parse_schema(schema)
-
-
-def _nullable_struct(dtype: T.DataType) -> T.DataType:
-    """Mark every field nullable, recursively, and strip Avro metadata.
-    A decode UDF can always produce nulls (null input cell, PERMISSIVE
-    failure), so its declared return type must allow them — same
-    convention as spark-avro's from_avro. Metadata must go because the
-    Arrow batches a pandas UDF yields carry none, and Spark's
-    ARROW_TYPE_MISMATCH check compares fields metadata-sensitively
-    (keep `avro_to_spark_type` for the metadata-bearing schema)."""
-    if isinstance(dtype, T.StructType):
-        return T.StructType(
-            [
-                T.StructField(f.name, _nullable_struct(f.dataType), nullable=True)
-                for f in dtype.fields
-            ]
-        )
-    if isinstance(dtype, T.ArrayType):
-        return T.ArrayType(_nullable_struct(dtype.elementType), containsNull=True)
-    if isinstance(dtype, T.MapType):
-        return T.MapType(dtype.keyType, _nullable_struct(dtype.valueType), valueContainsNull=True)
-    return dtype
 
 
 def _schema_json(schema: Union[AvroSchema, str, dict]) -> str:
@@ -130,16 +115,17 @@ def from_avro(
     writer_json = _schema_json(schema)
     reader_json = _schema_json(reader_schema) if reader_schema is not None else None
     out_schema = _as_schema(reader_schema if reader_schema is not None else schema)
-    struct_type = _nullable_struct(avro_to_spark_type(out_schema))
+    struct_type = nullable_struct(avro_to_spark_type(out_schema))
     if not isinstance(struct_type, T.StructType):
         raise TypeError("from_avro requires a record schema at top level")
     permissive = mode.upper() == "PERMISSIVE"
 
-    @pandas_udf(returnType=struct_type)
-    def _decode(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    @arrow_udf(returnType=struct_type)
+    def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         dec = get_decoder(writer_json, reader_json)
-        for series in batches:
-            yield pd.DataFrame(dec.decode_blobs(series.values, permissive, series.isna().values))
+        for arr in batches:
+            mask = arr.is_null().to_numpy(zero_copy_only=False)
+            yield dec.decode_blobs(arr.to_pylist(), permissive, mask).to_struct_array()
 
     return _decode(col)
 
@@ -168,14 +154,26 @@ def to_avro(
         schema = df_schema_to_avro(dtype, name=record_name)
     schema_json_str = _schema_json(schema)
 
-    @pandas_udf(returnType=T.BinaryType())
-    def _encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
+    @arrow_udf(returnType=T.BinaryType())
+    def _encode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         enc = get_encoder(schema_json_str)
-        for pdf in batches:
-            arr = enc.encode_arrow(pdf)
-            yield pd.Series(arr, dtype=pd.ArrowDtype(arr.type))
+        for arr in batches:
+            yield enc.encode_arrow(_struct_to_pandas(arr))
 
     return _encode(col)
+
+
+def _struct_to_pandas(arr: pa.StructArray) -> pd.DataFrame:
+    """A struct column → the encoder's pandas batch, one column per
+    field. Object ints keep a NULL long None (not NaN) and timestamps
+    are UTC instants. Nested fields hold Python values: ``to_pandas``
+    would give numpy arrays, with NaN or NaT for a NULL element."""
+    table = pa.Table.from_struct_array(arr)
+    pdf = table.to_pandas(integer_object_nulls=True)
+    for name, column in zip(table.column_names, table.columns):
+        if pa.types.is_nested(column.type):
+            pdf[name] = pd.Series(column.to_pylist(), dtype=object, index=pdf.index)
+    return pdf
 
 
 # ---------------------------------------------------------------------------
@@ -227,16 +225,15 @@ def decode_container(
     if reader_schema is not None:
         schema_json_str = _schema_json(reader_schema)
         struct_type = avro_to_spark_type(_as_schema(reader_schema))
-    struct_type = _nullable_struct(struct_type)
+    struct_type = nullable_struct(struct_type)
     if not isinstance(struct_type, T.StructType):
         raise TypeError("container record schema required")
     permissive = mode.upper() == "PERMISSIVE"
 
-    @pandas_udf(returnType=T.ArrayType(struct_type))
-    def _decode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
+    list_spark_type = T.ArrayType(struct_type)
 
+    @arrow_udf(returnType=list_spark_type)
+    def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         target_canon = json.dumps(parse_schema(schema_json_str).to_json())
         arrow_struct = to_arrow_type(struct_type)
         record_schema = pa.schema(list(arrow_struct))
@@ -250,25 +247,25 @@ def decode_container(
             ]
             return pa.concat_arrays(chunks) if chunks else pa.array([], type=arrow_struct)
 
-        list_type = pa.list_(arrow_struct)
-        for series in batches:
+        list_type = to_arrow_type(list_spark_type)
+        for arr in batches:
             chunks = []
             offs: list = [0]
             mask: list = []
-            for blob in series:
+            for blob in arr.to_pylist():
                 if blob is None:
                     mask.append(True)
                     offs.append(offs[-1])
                     continue
                 if permissive:
                     try:
-                        sa = decode_cell_struct(bytes(blob))
+                        sa = decode_cell_struct(blob)
                     except Exception:
                         mask.append(True)
                         offs.append(offs[-1])
                         continue
                 else:
-                    sa = decode_cell_struct(bytes(blob))
+                    sa = decode_cell_struct(blob)
                 chunks.append(sa)
                 mask.append(False)
                 offs.append(offs[-1] + len(sa))
@@ -278,9 +275,7 @@ def decode_container(
             la = pa.ListArray.from_arrays(
                 pa.array(offs, pa.int32()), values, mask=pa.array(mask, pa.bool_())
             )
-            if la.type != list_type:  # pragma: no cover - defensive
-                la = la.cast(list_type)
-            yield pd.Series(la, dtype=pd.ArrowDtype(la.type))
+            yield la if la.type == list_type else la.cast(list_type)
 
     return _decode(col)
 
@@ -329,35 +324,41 @@ def from_avro_with_errors(
     writer_json = _schema_json(schema)
     reader_json = _schema_json(reader_schema) if reader_schema is not None else None
     out_schema = _as_schema(reader_schema if reader_schema is not None else schema)
-    struct_type = _nullable_struct(avro_to_spark_type(out_schema))
+    struct_type = nullable_struct(avro_to_spark_type(out_schema))
     if not isinstance(struct_type, T.StructType):
         raise TypeError("from_avro_with_errors requires a record schema at top level")
-    names = [f.name for f in struct_type.fields]
     wrapped = T.StructType(
         [T.StructField("record", struct_type, True), T.StructField("_error", T.StringType(), True)]
     )
 
-    @pandas_udf(returnType=wrapped)
-    def _decode(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
+    @arrow_udf(returnType=wrapped)
+    def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         writer = parse_schema(writer_json)
         if reader_json is not None:
             fn = compile_resolver(writer, parse_schema(reader_json), mode="spark")
         else:
             fn = compile_decoder(writer, mode="spark")
-        for series in batches:
+        fields = list(to_arrow_type(wrapped))
+        for arr in batches:
             recs, errs = [], []
-            for blob in series:
+            for blob in arr.to_pylist():
                 if blob is None:
                     recs.append(None)
                     errs.append("null input cell")
                     continue
                 try:
-                    recs.append(fn(BinaryReader(bytes(blob))))
+                    recs.append(fn(BinaryReader(blob)))
                     errs.append(None)
                 except Exception as ex:  # noqa: BLE001 — error channel
                     recs.append(None)
                     errs.append(f"{type(ex).__name__}: {ex}")
-            yield pd.DataFrame({"record": recs, "_error": errs})
+            yield pa.StructArray.from_arrays(
+                [
+                    pa.array(recs, type=fields[0].type, from_pandas=False),
+                    pa.array(errs, type=fields[1].type),
+                ],
+                fields=fields,
+            )
 
     return _decode(col)
 
@@ -386,7 +387,7 @@ def explode_containers(
     if reader_schema is not None:
         schema_json_str = _schema_json(reader_schema)
         struct_type = avro_to_spark_type(_as_schema(reader_schema))
-    struct_type = _nullable_struct(struct_type)
+    struct_type = nullable_struct(struct_type)
     if not isinstance(struct_type, T.StructType):
         raise TypeError("container record schema required")
     keep = list(keep_cols or [])
@@ -451,28 +452,24 @@ def from_avro_single_object(
     reader_json = (
         _schema_json(reader_schema) if reader_schema is not None else schema_jsons[0]
     )
-    struct_type = _nullable_struct(avro_to_spark_type(_as_schema(reader_json)))
+    struct_type = nullable_struct(avro_to_spark_type(_as_schema(reader_json)))
     if not isinstance(struct_type, T.StructType):
         raise TypeError("from_avro_single_object requires a record schema at top level")
     permissive = mode.upper() == "PERMISSIVE"
-    names = [f.name for f in struct_type.fields]
 
-    @pandas_udf(returnType=struct_type)
-    def _decode(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        by_fp = {}
-        for sj in schema_jsons:
-            by_fp[fingerprint64(parse_schema(sj))] = sj
+    @arrow_udf(returnType=struct_type)
+    def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        by_fp = {fingerprint64(parse_schema(sj)): sj for sj in schema_jsons}
+        arrow_struct = to_arrow_type(struct_type)
 
-        for series in batches:
-            vals = series.values
-            n = len(vals)
+        for arr in batches:
+            vals = arr.to_pylist()
             groups: dict = {}
             null_rows = []
-            for i, v in enumerate(vals):
-                if v is None:
+            for i, b in enumerate(vals):
+                if b is None:
                     null_rows.append(i)
                     continue
-                b = bytes(v)
                 if len(b) < HEADER_LEN or b[:2] != V1_MARKER:
                     if permissive:
                         null_rows.append(i)
@@ -490,25 +487,20 @@ def from_avro_single_object(
                         f"unknown writer schema fingerprint {fp:#018x} at row {i}"
                     )
                 groups.setdefault(fp, []).append(i)
-            parts = []
+            parts, order = [], []
             for fp, idxs in groups.items():
-                payloads = np.empty(len(idxs), dtype=object)
-                for j, i in enumerate(idxs):
-                    payloads[j] = bytes(vals[i])[HEADER_LEN:]
-                pdf = pd.DataFrame(
-                    get_decoder(by_fp[fp], reader_json).decode_blobs(payloads, permissive)
-                )
-                pdf.index = idxs
-                parts.append(pdf)
-            if null_rows:
-                parts.append(
-                    pd.DataFrame(
-                        {c: [None] * len(null_rows) for c in names}, index=null_rows
-                    )
-                )
-            if parts:
-                yield pd.concat(parts).sort_index()
-            else:
-                yield pd.DataFrame({c: [] for c in names})
+                dec = get_decoder(by_fp[fp], reader_json)
+                payloads = [vals[i][HEADER_LEN:] for i in idxs]
+                parts.append(dec.decode_blobs(payloads, permissive).to_struct_array())
+                order.extend(idxs)
+            if null_rows:  # non-null structs of null fields, as from_avro gives
+                nulls = [pa.nulls(len(null_rows), f.type) for f in arrow_struct]
+                parts.append(pa.StructArray.from_arrays(nulls, fields=list(arrow_struct)))
+                order.extend(null_rows)
+            if not parts:
+                yield pa.array([], type=arrow_struct)
+                continue
+            # back to row order: out[i] is the part row holding input row i
+            yield pa.concat_arrays(parts).take(pa.array(np.argsort(order)))
 
     return _decode(F.col(col) if isinstance(col, str) else col)

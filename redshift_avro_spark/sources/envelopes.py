@@ -21,12 +21,12 @@ A Kinesis cell can nest three envelopes before the Avro body:
   build test fixtures.
 
 Spark-side: :func:`spring_headers_udf` and :func:`explode_kpl` wrap
-these as Arrow-batched UDFs so a DataFrame pipeline can express
+these as pandas UDFs so a DataFrame pipeline can express
 ``unhex → explode(kpl) → headers → from_avro(body)`` (SURVEY §3.3);
 :func:`unwrap_kpl_spring_avro` fuses that whole chain into one
-``mapInPandas`` stage when the pipeline only needs the decoded body —
-each chained pandas UDF costs an Arrow round trip, and the fused form
-pays it once.
+``mapInArrow`` stage when the pipeline only needs the decoded body —
+each chained UDF costs a JVM↔Python round trip, and the fused form pays
+it once, with Arrow in and out and no pandas in between.
 """
 
 from __future__ import annotations
@@ -349,7 +349,7 @@ def explode_kpl(col: Union[str, Column]) -> Column:
 
 def unwrap_kpl_spring_avro(df, col: str, schema):
     """Fused envelope unwrap: KPL aggregate bytes → sub-records → Spring
-    headers stripped → Avro datum decoded, in ONE ``mapInPandas`` stage
+    headers stripped → Avro datum decoded, in ONE ``mapInArrow`` stage
     (one row per sub-record, record fields as top-level columns).
 
     Equivalent to ``explode(explode_kpl(col)) → extract_spring_headers →
@@ -358,35 +358,32 @@ def unwrap_kpl_spring_avro(df, col: str, schema):
     decoder ladder (avroio/ladder.py). Headers and partition keys are
     dropped — use the composable column functions when the pipeline
     needs them."""
-    from ..avroio.convert import avro_to_spark_type
+    from ..avroio.convert import avro_to_spark_type, nullable_struct
     from ..avroio.ladder import get_decoder
     from ..avroio.schema_model import AvroSchema
     from ..avroio.schema_model import parse_schema as _parse
-    from .columns import _nullable_struct
 
     sch = schema if isinstance(schema, AvroSchema) else _parse(schema)
     schema_json = json.dumps(sch.to_json())
-    struct_type = _nullable_struct(avro_to_spark_type(sch))
+    struct_type = nullable_struct(avro_to_spark_type(sch))
     if not isinstance(struct_type, T.StructType):
         raise TypeError("unwrap_kpl_spring_avro requires a record schema")
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator) -> Iterator:
         import numpy as np
 
         dec = get_decoder(schema_json)
-        for pdf in batches:
+        for batch in batches:
             # unwrap the KPL/Spring envelopes first (per-record Python —
             # protobuf/header parsing), collecting the Avro bodies so
             # the datum decode itself can run as one vectorized batch
             bodies: list = []
-            for blob in pdf[col]:
+            for blob in batch.column(0).to_pylist():
                 if blob is None:
                     continue
-                for rec in decode_kpl_aggregate(bytes(blob)).records:
+                for rec in decode_kpl_aggregate(blob).records:
                     _, body = parse_spring_message(rec.data)
                     bodies.append(body)
-            yield pd.DataFrame(
-                dec.decode_blobs(bodies, null_mask=np.zeros(len(bodies), dtype=bool))
-            )
+            yield dec.decode_blobs(bodies, null_mask=np.zeros(len(bodies), dtype=bool))
 
-    return df.select(col).mapInPandas(run, struct_type)
+    return df.select(col).mapInArrow(run, struct_type)

@@ -1,7 +1,8 @@
 """Differential tests: generated batch codecs (avroio/codegen.py) vs the
-closure codecs (avroio/binary.py). The generated code must be a pure
-execution-strategy change — byte-identical encode, value-identical
-decode, same error classes — across the full §1.2 type surface."""
+spark-mode closure codecs (avroio/binary.py). The generated code must
+be a pure execution-strategy change — byte-identical encode,
+value-identical decode, same error classes — across the full §1.2 type
+surface."""
 
 from __future__ import annotations
 
@@ -9,9 +10,11 @@ import datetime as dt
 import json
 from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from redshift_avro_spark.avroio import parse_schema
 from redshift_avro_spark.avroio.binary import (
@@ -23,6 +26,27 @@ from redshift_avro_spark.avroio.binary import (
     encode_datum,
 )
 from redshift_avro_spark.avroio.codegen import get_batch_decoder, get_batch_encoder
+from redshift_avro_spark.avroio.convert import avro_to_spark_type, nullable_struct
+
+_EPOCH = dt.datetime(1970, 1, 1)
+
+
+def arrow_schema(schema):
+    """Spark's Arrow types for a decoded record schema."""
+    return to_arrow_schema(nullable_struct(avro_to_spark_type(schema)))
+
+
+def stream_rows(bd, data: bytes, count: int) -> tuple[list, int]:
+    """``decode_stream`` → (dict rows, end position). Top-level timestamp
+    columns hold raw epoch ints; they become naive-UTC datetimes, as the
+    spark-mode closures give them."""
+    outs = bd.new_columns()
+    end = bd.decode_stream(data, 0, count, outs)
+    for i, unit in enumerate(bd.ts_units):
+        if unit:
+            kw = "microseconds" if unit == "us" else "milliseconds"
+            outs[i] = [None if v is None else _EPOCH + dt.timedelta(**{kw: v}) for v in outs[i]]
+    return [dict(zip(bd.names, vals)) for vals in zip(*outs)], end
 
 KITCHEN = {
     "type": "record",
@@ -107,14 +131,13 @@ class TestDecodeParity:
         assert bd is not None
         outs = bd.new_columns()
         bd.decode_blobs(blobs, outs, False)
-        # ts columns come out raw; column_series restores datetimes
-        series = bd.to_pandas(outs)
+        # ts columns come out raw; column_array views them as Arrow timestamps
+        types = arrow_schema(sch)
         for i, name in enumerate(bd.names):
-            got = list(series[name])
-            want = [r[name] for r in closure_rows]
-            if bd.ts_units[i]:
-                got = [None if v is None else v.to_pydatetime() for v in series[name]]
-            assert got == want, name
+            typ = types.field(name).type
+            got = bd.column_array(i, outs[i], typ)
+            assert got.type == typ, name
+            assert got.to_pylist() == pa.array([r[name] for r in closure_rows], typ).to_pylist(), name
 
     def test_stream_rows_match_closure(self, kitchen):
         sch, sj, rows, blobs = kitchen
@@ -122,19 +145,14 @@ class TestDecodeParity:
         closure_rows = [dec(BinaryReader(b)) for b in blobs]
         bd = get_batch_decoder(sj, "spark")
         payload = b"".join(blobs)
-        out: list = []
-        pos = bd.decode_stream_rows(payload, 0, len(blobs), out)
+        got, pos = stream_rows(bd, payload, len(blobs))
         assert pos == len(payload)
-        assert out == closure_rows
+        assert got == closure_rows
 
-    def test_python_mode_matches_closure(self, kitchen):
+    def test_only_spark_mode_is_generated(self, kitchen):
         sch, sj, rows, blobs = kitchen
-        dec = compile_decoder(sch, mode="python")
-        closure_rows = [dec(BinaryReader(b)) for b in blobs]
-        bd = get_batch_decoder(sj, "python")
-        out: list = []
-        bd.decode_stream_rows(b"".join(blobs), 0, len(blobs), out)
-        assert out == closure_rows
+        with pytest.raises(ValueError):
+            get_batch_decoder(sj, "python")
 
     def test_permissive_nulls_and_failfast_raises(self, kitchen):
         sch, sj, rows, blobs = kitchen
@@ -191,10 +209,9 @@ class TestEncodeParity:
 
 class TestTypedColumnSeries:
     def test_permissive_nulls_stay_null_and_clean_batches_type(self):
-        """Non-nullable numeric/bool columns convert to typed numpy
-        buffers ONLY when null-free: np.asarray silently maps None ->
-        nan/False, so a permissive null row must force the object
-        fallback (Arrow null, not a fabricated value)."""
+        """Column lists become Arrow arrays of Spark's types: a
+        permissive null row is an Arrow null, never a fabricated value
+        (nan/False), and a clean batch is typed and null-free."""
         sch = parse_schema(
             {
                 "type": "record",
@@ -213,18 +230,50 @@ class TestTypedColumnSeries:
             b"\xff\xff",  # poison -> permissive null row
             encode_datum(sch, {"a": 3, "f": 0.5, "b": False}),
         ]
+        types = arrow_schema(sch)
         outs = bd.new_columns()
         bd.decode_blobs(blobs, outs, True)
-        sp = bd.to_pandas(outs)
-        for name in ("a", "f", "b"):
-            assert sp[name].dtype == object and sp[name][1] is None, name
+        for i, name in enumerate(("a", "f", "b")):
+            arr = bd.column_array(i, outs[i], types.field(name).type)
+            assert arr.null_count == 1 and not arr[1].is_valid, name
         outs2 = bd.new_columns()
         bd.decode_blobs([blobs[0], blobs[2]], outs2, False)
-        sp2 = bd.to_pandas(outs2)
-        assert str(sp2["a"].dtype) == "int64"
-        assert str(sp2["f"].dtype) == "float64"
-        assert str(sp2["b"].dtype) == "bool"
-        assert list(sp2["a"]) == [1, 3] and list(sp2["b"]) == [True, False]
+        arrs = [bd.column_array(i, c, types.field(n).type) for i, (n, c) in enumerate(zip(bd.names, outs2))]
+        assert [str(a.type) for a in arrs] == ["int64", "double", "bool"]
+        assert all(a.null_count == 0 for a in arrs)
+        assert arrs[0].to_pylist() == [1, 3] and arrs[2].to_pylist() == [True, False]
+
+    def test_timestamp_columns_are_utc_instants(self):
+        """Raw epoch ints (micros and millis) view as Spark's
+        timestamp[us, UTC], datetimes convert as they are, and a value
+        outside datetime's range raises like the closure decoder does."""
+        sch = parse_schema(
+            {
+                "type": "record",
+                "name": "T",
+                "fields": [
+                    {"name": "us", "type": ["null", {"type": "long", "logicalType": "timestamp-micros"}]},
+                    {"name": "ms", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+                ],
+            }
+        )
+        bd = get_batch_decoder(json.dumps(sch.to_json()), "spark")
+        types = arrow_schema(sch)
+        utc = dt.timezone.utc
+        us = bd.column_array(0, [0, None, -1], types.field("us").type)
+        assert us.type == pa.timestamp("us", tz="UTC")
+        assert us.to_pylist() == [
+            dt.datetime(1970, 1, 1, tzinfo=utc),
+            None,
+            dt.datetime(1969, 12, 31, 23, 59, 59, 999999, tzinfo=utc),
+        ]
+        ms = bd.column_array(1, [1500], types.field("ms").type)
+        assert ms.to_pylist() == [dt.datetime(1970, 1, 1, 0, 0, 1, 500000, tzinfo=utc)]
+        # a reader-default column holds naive-UTC datetimes, not raw ints
+        dflt = bd.column_array(0, [dt.datetime(2020, 1, 1), None], types.field("us").type)
+        assert dflt.to_pylist() == [dt.datetime(2020, 1, 1, tzinfo=utc), None]
+        with pytest.raises(OverflowError):
+            bd.column_array(0, [2**62], types.field("us").type)
 
 
 class TestRecursiveFallback:
@@ -242,12 +291,12 @@ class TestRecursiveFallback:
         sj = json.dumps(sch.to_json())
         datum = {"v": 1, "next": {"v": 2, "next": {"v": 3, "next": None}}}
         blob = encode_datum(sch, datum)
-        bd = get_batch_decoder(sj, "python")
+        bd = get_batch_decoder(sj, "spark")
         if bd is None:  # emitter declined entirely — closure path covers it
             return
-        out: list = []
-        bd.decode_stream_rows(blob, 0, 1, out)
-        assert out == [compile_decoder(sch)(BinaryReader(blob))]
+        got, end = stream_rows(bd, blob, 1)
+        assert end == len(blob)
+        assert got == [compile_decoder(sch, mode="spark")(BinaryReader(blob))]
 
     def test_recursive_schema_encodes_via_fallback(self):
         sch = parse_schema(self.LINKED)

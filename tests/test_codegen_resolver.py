@@ -11,6 +11,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 
+import pyarrow as pa
 import pytest
 
 from redshift_avro_spark.avroio import parse_schema
@@ -21,6 +22,7 @@ from redshift_avro_spark.avroio.binary import (
     encode_datum,
 )
 from redshift_avro_spark.avroio.codegen import get_batch_resolver
+from tests.test_codegen_codec import arrow_schema, stream_rows
 
 
 def _pair(writer: dict, reader: dict):
@@ -28,28 +30,24 @@ def _pair(writer: dict, reader: dict):
     return ws, rs, json.dumps(ws.to_json()), json.dumps(rs.to_json())
 
 
-def _assert_parity(writer: dict, reader: dict, rows: list[dict], modes=("spark", "python")):
+def _assert_parity(writer: dict, reader: dict, rows: list[dict]):
     ws, rs, wj, rj = _pair(writer, reader)
     blobs = [encode_datum(ws, r) for r in rows]
     payload = b"".join(blobs)
-    for mode in modes:
-        res = compile_resolver(ws, rs, mode=mode)
-        want = [res(BinaryReader(b)) for b in blobs]
-        br = get_batch_resolver(wj, rj, mode)
-        assert br is not None, f"codegen declined ({mode})"
-        out: list = []
-        assert br.decode_stream_rows(payload, 0, len(blobs), out) == len(payload)
-        assert out == want, mode
-        if mode != "spark":
-            continue  # columns/to_pandas entry is the Arrow (spark) path
-        outs = br.new_columns()
-        br.decode_blobs(blobs, outs, False)
-        series = br.to_pandas(outs)
-        for i, name in enumerate(br.names):
-            got = list(series[name])
-            if br.ts_units[i]:
-                got = [None if v is None else v.to_pydatetime() for v in got]
-            assert got == [r[name] for r in want], (mode, name)
+    res = compile_resolver(ws, rs, mode="spark")
+    want = [res(BinaryReader(b)) for b in blobs]
+    br = get_batch_resolver(wj, rj, "spark")
+    assert br is not None, "codegen declined"
+    got, end = stream_rows(br, payload, len(blobs))
+    assert end == len(payload)
+    assert got == want
+    outs = br.new_columns()
+    br.decode_blobs(blobs, outs, False)
+    types = arrow_schema(rs)
+    for i, name in enumerate(br.names):
+        typ = types.field(name).type
+        got_col = br.column_array(i, outs[i], typ).to_pylist()
+        assert got_col == pa.array([r[name] for r in want], typ).to_pylist(), name
     return br
 
 
@@ -143,8 +141,7 @@ class TestKitchenEvolution:
         assert br is not None
         rows = _rows(5)
         blobs = [encode_datum(ws, r) for r in rows]
-        out: list = []
-        br.decode_stream_rows(b"".join(blobs), 0, len(blobs), out)
+        out, _ = stream_rows(br, b"".join(blobs), len(blobs))
         res = compile_resolver(ws, ws, mode="spark")
         assert out == [res(BinaryReader(b)) for b in blobs]
 
@@ -166,10 +163,7 @@ class TestUnionResolution:
         # spark mode must surface member-structs keyed by READER branch order
         ws, rs, wj, rj = _pair(writer, reader)
         blobs = [encode_datum(ws, r) for r in rows]
-        out: list = []
-        get_batch_resolver(wj, rj, "spark").decode_stream_rows(
-            b"".join(blobs), 0, len(blobs), out
-        )
+        out, _ = stream_rows(get_batch_resolver(wj, rj, "spark"), b"".join(blobs), len(blobs))
         assert out[0]["u"] == {"member0": None, "member1": 5}
         assert out[1]["u"] == {"member0": "s", "member1": None}
         assert out[2]["u"] is None
@@ -205,7 +199,7 @@ class TestUnionResolution:
         bad = encode_datum(ws, {"v": "boom"})
         br = get_batch_resolver(wj, rj, "spark")
         with pytest.raises(SchemaResolutionError):
-            br.decode_stream_rows(bad, 0, 1, [])
+            br.decode_stream(bad, 0, 1, br.new_columns())
         with pytest.raises(SchemaResolutionError):
             compile_resolver(ws, rs, mode="spark")(BinaryReader(bad))
 
@@ -230,8 +224,9 @@ class TestEnumRemap:
         ws, rs, wj, rj = _pair(self.WRITER, reader)
         _assert_parity(self.WRITER, reader, [{"c": "R"}, {"c": "G"}])
         bad = encode_datum(ws, {"c": "B"})
+        br = get_batch_resolver(wj, rj, "spark")
         with pytest.raises(SchemaResolutionError):
-            get_batch_resolver(wj, rj, "spark").decode_stream_rows(bad, 0, 1, [])
+            br.decode_stream(bad, 0, 1, br.new_columns())
         with pytest.raises(SchemaResolutionError):
             compile_resolver(ws, rs)(BinaryReader(bad))
 
@@ -272,12 +267,12 @@ class TestErrorsAndFallbacks:
         ws, rs, wj, rj = _pair(node, node)
         datum = {"v": 1, "next": {"v": 2, "next": None}}
         blob = encode_datum(ws, datum)
-        br = get_batch_resolver(wj, rj, "python")
+        br = get_batch_resolver(wj, rj, "spark")
         if br is None:  # declined entirely — closure path covers it
             return
-        out: list = []
-        br.decode_stream_rows(blob, 0, 1, out)
-        assert out == [compile_resolver(ws, rs, mode="python")(BinaryReader(blob))]
+        out, end = stream_rows(br, blob, 1)
+        assert end == len(blob)
+        assert out == [compile_resolver(ws, rs, mode="spark")(BinaryReader(blob))]
 
     def test_truncated_input_same_error(self):
         from redshift_avro_spark.avroio.binary import AvroDecodeError
@@ -286,7 +281,7 @@ class TestErrorsAndFallbacks:
         blob = encode_datum(ws, _rows(1)[0])
         br = get_batch_resolver(wj, rj, "spark")
         with pytest.raises(AvroDecodeError):
-            br.decode_stream_rows(blob[: len(blob) // 2], 0, 1, [])
+            br.decode_stream(blob[: len(blob) // 2], 0, 1, br.new_columns())
 
 
 class TestSkipFastPaths:
@@ -323,7 +318,7 @@ class TestSkipFastPaths:
         w.write_utf8("kept")
         blob = w.getvalue()
         want = compile_resolver(ws, rs, mode="spark")(BinaryReader(blob))
-        out: list = []
         br = get_batch_resolver(wj, rj, "spark")
-        assert br.decode_stream_rows(blob, 0, 1, out) == len(blob)
+        out, end = stream_rows(br, blob, 1)
+        assert end == len(blob)
         assert out == [want] == [{"keep": "kept"}]

@@ -1,7 +1,8 @@
 """Deterministic fuzz: 500 random nested datums through the FULL Spark
 column path (createDataFrame → to_avro → from_avro → collect) must come
-back value-identical. Complements the pure-Python hypothesis tests in
-test_avroio_codec with the Arrow/pandas-UDF boundary in the loop.
+back value-identical, plus rows with a NaN ``ratio``, which must come
+back NaN. Complements the pure-Python hypothesis tests in
+test_avroio_codec with the Spark↔Arrow UDF boundary in the loop.
 """
 
 from __future__ import annotations
@@ -60,6 +61,7 @@ def test_fuzz_roundtrip(spark):
 
     rng = random.Random(20260813)
     rows = [_rand_row(rng) for _ in range(500)]
+    rows += [r[:2] + (math.nan,) + r[3:] for r in (_rand_row(rng) for _ in range(5))]
     df = spark.createDataFrame(rows, DDL)
     out = (
         df.select(to_avro(F.struct(*df.columns), SCHEMA).alias("p"))
@@ -67,7 +69,7 @@ def test_fuzz_roundtrip(spark):
         .select("r.*")
         .collect()
     )
-    assert len(out) == 500
+    assert len(out) == len(rows)
 
     def norm(row):
         return (

@@ -1,6 +1,7 @@
 """Decoder ladder (avroio/ladder.py), in process with no SparkSession:
 each schema shape reaches its tier by shape alone, every tier returns
-the closure reference's values on the blob and block paths, PERMISSIVE
+the closure reference's values, as Spark's Arrow types, on the blob and
+block paths, PERMISSIVE
 nulls and FAILFAST errors hold on every tier, and the encoders are
 byte-identical to ``encode_datum``."""
 
@@ -24,10 +25,9 @@ from redshift_avro_spark.avroio.binary import (
     compile_resolver,
     encode_datum,
 )
-from redshift_avro_spark.avroio.convert import avro_to_spark_type
+from redshift_avro_spark.avroio.convert import avro_to_spark_type, nullable_struct
 from redshift_avro_spark.avroio.ladder import get_decoder, get_encoder
 from redshift_avro_spark.avroio.schema_model import parse_schema
-from redshift_avro_spark.sources.columns import _nullable_struct
 
 FLAT = {
     "type": "record",
@@ -144,7 +144,7 @@ def _case(shape: str):
         else compile_decoder(writer_s, mode="spark")
     )
     dec = get_decoder(_canon(writer), _canon(reader) if reader else None)
-    arrow_schema = to_arrow_schema(_nullable_struct(avro_to_spark_type(reader_s)))
+    arrow_schema = to_arrow_schema(nullable_struct(avro_to_spark_type(reader_s)))
     return dec, blobs, reference, arrow_schema, tier
 
 
@@ -154,8 +154,9 @@ def _tier(dec) -> str:
     return "generated" if dec._generated is not None else "closure"
 
 
-def _columns(out: dict) -> dict:
-    return {n: s.tolist() for n, s in out.items()}
+def _arrow_columns(rows: list, arrow_schema) -> dict:
+    """Reference rows (None → a row of nulls) as Spark's Arrow types."""
+    return pa.Table.from_pylist([r or {} for r in rows], arrow_schema).to_pydict()
 
 
 @pytest.mark.parametrize("shape", list(SHAPES))
@@ -168,11 +169,11 @@ def test_shape_picks_its_tier(shape):
 
 @pytest.mark.parametrize("shape", list(SHAPES))
 def test_blob_path_matches_closure_reference(shape):
-    dec, blobs, reference, *_ = _case(shape)
+    dec, blobs, reference, arrow_schema, _ = _case(shape)
     want_rows = [reference(BinaryReader(b)) for b in blobs]
-    got = _columns(dec.decode_blobs(blobs + [None]))
-    want = {n: [r[n] for r in want_rows] + [None] for n in dec.names}
-    assert got == want
+    got = dec.decode_blobs(blobs + [None])
+    assert got.schema == arrow_schema
+    assert got.to_pydict() == _arrow_columns(want_rows + [None], arrow_schema)
 
 
 @pytest.mark.parametrize("shape", list(SHAPES))
@@ -186,12 +187,12 @@ def test_block_path_matches_closure_reference(shape):
 
 @pytest.mark.parametrize("shape", list(SHAPES))
 def test_truncated_row_is_permissive_null_or_typed_error(shape):
-    dec, blobs, reference, *_ = _case(shape)
+    dec, blobs, reference, arrow_schema, _ = _case(shape)
     batch = [blobs[1], blobs[1][:-5], blobs[2]]
-    got = _columns(dec.decode_blobs(batch, permissive=True))
+    got = dec.decode_blobs(batch, permissive=True).to_pydict()
+    want = _arrow_columns([reference(BinaryReader(b)) for b in blobs[1:3]], arrow_schema)
     for n in dec.names:
-        assert got[n][1] is None
-        assert got[n][0] == reference(BinaryReader(blobs[1]))[n]
+        assert got[n] == [want[n][0], None, want[n][1]]
     with pytest.raises(AvroDecodeError):
         dec.decode_blobs(batch)
 

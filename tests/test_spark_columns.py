@@ -1,5 +1,5 @@
 """Spark column codec tests: from_avro/to_avro/decode_container over a
-real SparkSession (Arrow-batched pandas UDFs)."""
+real SparkSession (Arrow UDFs)."""
 
 from __future__ import annotations
 
@@ -122,7 +122,8 @@ class TestToAvro:
         assert all(isinstance(bytes(r.bin), bytes) and len(r.bin) > 0 for r in rows)
 
     def test_typed_roundtrip(self, spark):
-        """date / timestamp / decimal / array / map survive the trip."""
+        """date / timestamp / decimal / array / map, and timestamps
+        inside an array, survive the trip."""
         schema = T.StructType(
             [
                 T.StructField("d", T.DateType()),
@@ -130,6 +131,7 @@ class TestToAvro:
                 T.StructField("dec", T.DecimalType(10, 2)),
                 T.StructField("arr", T.ArrayType(T.LongType())),
                 T.StructField("m", T.MapType(T.StringType(), T.DoubleType())),
+                T.StructField("tss", T.ArrayType(T.TimestampType())),
             ]
         )
         rows = [
@@ -139,6 +141,7 @@ class TestToAvro:
                 Decimal("12345.67"),
                 [1, 2, 3],
                 {"a": 1.5},
+                [dt.datetime(2024, 6, 1, 12, 30, 0, 250000), None],
             )
         ]
         df = spark.createDataFrame(rows, schema).select(F.struct(*schema.names).alias("s"))
@@ -151,6 +154,13 @@ class TestToAvro:
                 {"name": "dec", "type": {"type": "bytes", "logicalType": "decimal", "precision": 10, "scale": 2}},
                 {"name": "arr", "type": {"type": "array", "items": "long"}},
                 {"name": "m", "type": {"type": "map", "values": "double"}},
+                {
+                    "name": "tss",
+                    "type": {
+                        "type": "array",
+                        "items": ["null", {"type": "long", "logicalType": "timestamp-micros"}],
+                    },
+                },
             ],
         }
         enc = df.select(to_avro("s", avro_schema).alias("bin"))
@@ -160,6 +170,7 @@ class TestToAvro:
         assert dec.dec == Decimal("12345.67")
         assert dec.arr == [1, 2, 3]
         assert dec.m == {"a": 1.5}
+        assert dec.tss == [dt.datetime(2024, 6, 1, 12, 30, 0, 250000), None]
 
 
 class TestContainerColumn:
@@ -387,3 +398,149 @@ class TestMultimodalPlumbing:
         ).select("topic", "offset", "ev.*")
         got = out.orderBy("offset").collect()
         assert len(got) == 20 and got[5].event_id == 5 and got[0].topic == "events"
+
+
+NAN_SCHEMAS = {
+    # flat records take the vector tier, an array field the generated tier
+    "flat": {"type": "record", "name": "N", "fields": [{"name": "d", "type": "double"}]},
+    "nested": {
+        "type": "record",
+        "name": "N",
+        "fields": [
+            {"name": "d", "type": "double"},
+            {"name": "xs", "type": {"type": "array", "items": "long"}},
+        ],
+    },
+}
+NAN_SITES = [
+    "from_avro",
+    "from_avro_with_errors",
+    "from_avro_single_object",
+    "decode_container",
+    "unwrap_kpl_spring_avro",
+]
+TS_SCHEMA = {
+    "type": "record",
+    "name": "T",
+    "fields": [{"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}}],
+}
+
+
+def _nan_column(spark, site: str, schema: dict, datum: dict):
+    """One datum through ``site`` → a one-row frame of its ``d``."""
+    import struct as _struct
+
+    from redshift_avro_spark.avroio import encode_datum
+    from redshift_avro_spark.avroio.schema_model import fingerprint64
+    from redshift_avro_spark.sources import envelopes
+    from redshift_avro_spark.sources.columns import (
+        from_avro_single_object,
+        from_avro_with_errors,
+    )
+
+    parsed = parse_schema(schema)
+    blob = encode_datum(parsed, datum)
+    if site == "unwrap_kpl_spring_avro":
+        agg = envelopes.encode_kpl_aggregate(
+            envelopes.KplAggregate(
+                partition_key_table=["k"],
+                records=[envelopes.KplRecord(partition_key_index=0, data=blob)],
+            )
+        )
+        df = spark.createDataFrame([(bytearray(agg),)], "c binary")
+        return envelopes.unwrap_kpl_spring_avro(df, "c", schema).select("d")
+    if site == "decode_container":
+        df = spark.createDataFrame([(bytearray(write_container([datum], parsed)),)], "c binary")
+        return df.select(F.explode(decode_container("c", schema)).alias("r")).select("r.d")
+    if site == "from_avro_single_object":
+        framed = b"\xc3\x01" + _struct.pack("<Q", fingerprint64(parsed)) + blob
+        df = spark.createDataFrame([(bytearray(framed),)], "p binary")
+        return df.select(from_avro_single_object("p", [schema]).alias("r")).select("r.d")
+    df = spark.createDataFrame([(bytearray(blob),)], "p binary")
+    if site == "from_avro_with_errors":
+        return df.select(from_avro_with_errors("p", schema).alias("r")).select("r.record.d")
+    return df.select(from_avro("p", schema).alias("r")).select("r.d")
+
+
+class TestArrowBoundary:
+    """The codec column functions hand Spark Arrow: no pandas hop turns
+    a NaN into NULL, shifts a timestamp by the session time zone, or
+    fails on a NULL cell."""
+
+    @pytest.mark.parametrize("shape", list(NAN_SCHEMAS))
+    @pytest.mark.parametrize("site", NAN_SITES)
+    def test_double_nan_stays_nan(self, spark, tmp_path, site, shape):
+        from redshift_avro_spark.sources import read_avro
+
+        schema = NAN_SCHEMAS[shape]
+        datum = {"d": float("nan"), "xs": [1, 2]}
+        with open(tmp_path / "nan.avro", "wb") as fh:
+            fh.write(write_container([datum], parse_schema(schema)))
+        want = [repr(r.d) for r in read_avro(spark, str(tmp_path)).select("d").collect()]
+        got = [repr(r.d) for r in _nan_column(spark, site, schema, datum).collect()]
+        assert got == want == ["nan"]
+
+    def test_timestamps_ignore_session_time_zone(self, spark):
+        from redshift_avro_spark.avroio import encode_datum
+
+        parsed = parse_schema(TS_SCHEMA)
+        blob = bytearray(encode_datum(parsed, {"ts": 0}))
+        cell = bytearray(write_container([{"ts": 0}], parsed))
+        old_tz = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        try:
+            blobs = spark.createDataFrame([(blob,)], "p binary")
+            got = blobs.select(F.unix_micros(from_avro("p", TS_SCHEMA).ts).alias("us")).collect()
+            assert [r.us for r in got] == [0]
+            cells = spark.createDataFrame([(cell,)], "c binary")
+            got = (
+                cells.select(F.explode(decode_container("c", TS_SCHEMA)).alias("r"))
+                .select(F.unix_micros("r.ts").alias("us"))
+                .collect()
+            )
+            assert [r.us for r in got] == [0]
+            structs = spark.sql("SELECT named_struct('ts', timestamp_micros(0)) AS s")
+            got = structs.select(F.hex(to_avro("s", TS_SCHEMA)).alias("h")).collect()
+            assert [r.h for r in got] == ["00"]
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", old_tz)
+
+    @pytest.mark.parametrize(
+        "second, mode", [(None, "FAILFAST"), (bytearray(b"junk"), "PERMISSIVE")]
+    )
+    def test_decode_container_null_cell_is_null_list(self, spark, second, mode):
+        parsed = parse_schema(USER_SCHEMA_JSON)
+        rows = [{"name": "Alyssa", "favorite_number": 256, "favorite_color": None}]
+        cell = bytearray(write_container(rows, parsed))
+        df = spark.createDataFrame([(0, cell), (1, second)], "id int, c binary")
+        got = (
+            df.select("id", decode_container("c", USER_SCHEMA_JSON, mode=mode).alias("l"))
+            .orderBy("id")
+            .collect()
+        )
+        assert [r.l is None for r in got] == [False, True]
+        assert [(u.name, u.favorite_number, u.favorite_color) for u in got[0].l] == [
+            ("Alyssa", 256, None)
+        ]
+
+    def test_to_avro_null_long_beside_array(self, spark):
+        """An array field makes the vector encoder decline; a NULL in the
+        nullable long must still encode as the null branch."""
+        from redshift_avro_spark.avroio import encode_datum
+
+        schema = {
+            "type": "record",
+            "name": "topLevelRecord",
+            "fields": [
+                {"name": "d", "type": "double"},
+                {"name": "xs", "type": {"type": "array", "items": "long"}},
+                {"name": "n", "type": ["null", "long"]},
+            ],
+        }
+        rows = [(1.5, [1, 2], 7), (2.5, [3], None)]
+        df = spark.createDataFrame(rows, "d double, xs array<long>, n long")
+        encoded = to_avro(F.struct("d", "xs", "n"), schema).alias("b")
+        got = df.select(F.monotonically_increasing_id().alias("i"), encoded).orderBy("i").collect()
+        parsed = parse_schema(schema)
+        want = [encode_datum(parsed, {"d": d, "xs": xs, "n": n}) for d, xs, n in rows]
+        assert [bytes(r.b) for r in got] == want

@@ -728,8 +728,8 @@ def _compile_enc(schema: AvroSchema, env: dict[int, EncodeFn]) -> EncodeFn:
         val = _compile_enc(schema.values, env)
 
         def enc_map(w: BinaryWriter, v: Any) -> None:
-            # accept dict or iterable of (key, value) pairs (Arrow hands
-            # maps to pandas as lists of tuples)
+            # accept dict or iterable of (key, value) pairs (Arrow's
+            # to_pylist hands a map as a list of tuples)
             if isinstance(v, dict):
                 items = v.items()
             elif isinstance(v, (list, tuple)):

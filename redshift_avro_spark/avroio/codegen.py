@@ -34,6 +34,7 @@ compiles once per schema):
   columns, for container blocks) and ``column_array`` (one column →
   a pyarrow Array of Spark's Arrow type).
 - :func:`get_batch_encoder` → :class:`BatchEncoder` with
+  ``columns_from_arrow`` (a RecordBatch → per-field value lists) and
   ``encode_columns`` (per-field value lists → list of datum bytes).
 """
 
@@ -1075,37 +1076,59 @@ class BatchEncoder:
         """``cols`` matches ``names`` order; returns ``n`` datum byte-strings."""
         return self._cols(cols, n)
 
-    def columns_from_pandas(self, pdf) -> list:
-        """Extract ``names``-ordered value columns from a pandas frame.
+    def columns_from_arrow(self, batch) -> list:
+        """``names``-ordered value lists from an Arrow RecordBatch."""
+        return [_arrow_values(batch.column(name)) for name in self.names]
 
-        datetime64 columns are converted to epoch-micros int64 as ONE
-        numpy view instead of 100k ``Timestamp`` objects — the encoder's
-        timestamp kernels accept raw micros (``_ts_to_micros`` int
-        passthrough), so this skips per-row datetime arithmetic without
-        changing a byte of output. NaT (nullable ts) falls back to None
-        per element."""
-        import pandas as pd
 
-        out = []
-        for n_ in self.names:
-            s = pdf[n_]
-            if s.dtype.kind == "M":
-                ints = s.values.astype("datetime64[us]").astype("int64")
-                mask = s.isna().values
-                if mask.any():
-                    out.append(
-                        [None if m else int(v) for v, m in zip(ints.tolist(), mask.tolist())]
-                    )
-                else:
-                    out.append(ints.tolist())
-            elif isinstance(s.dtype, pd.api.extensions.ExtensionDtype):
-                # extension/Arrow-backed columns surface pd.NA, which
-                # the encoders' type checks (correctly) reject — map to
-                # plain python values with None
-                out.append(s.to_numpy(dtype=object, na_value=None).tolist())
-            else:
-                out.append(s.tolist())
-        return out
+def _arrow_values(arr) -> list:
+    """An Arrow array's values as the generated encoder takes them —
+    structs as dicts, lists as lists, maps as (key, value) pairs, NULL
+    as None, timestamps as raw epoch micros (the timestamp kernels'
+    ``_ts_to_micros`` int passthrough, so no row builds a datetime) —
+    built one child column at a time: pyarrow's per-element
+    ``to_pylist`` costs ~5× as much on nested columns."""
+    import pyarrow as pa
+
+    typ = arr.type
+    if pa.types.is_timestamp(typ):
+        arr = arr.cast(pa.timestamp("us", typ.tz)).cast(pa.int64())
+        typ = arr.type
+    if pa.types.is_struct(typ):
+        names = [f.name for f in typ]
+        cols = [_arrow_values(arr.field(i)) for i in range(len(names))]
+        out = [dict(zip(names, row)) for row in zip(*cols)] if cols else [{} for _ in range(len(arr))]
+    elif isinstance(arr, (pa.ListArray, pa.LargeListArray)):  # MapArray included
+        offs = arr.offsets.to_numpy()
+        lo, hi = int(offs[0]), int(offs[-1])
+        if isinstance(arr, pa.MapArray):
+            keys = _arrow_values(arr.keys.slice(lo, hi - lo))
+            flat = list(zip(keys, _arrow_values(arr.items.slice(lo, hi - lo))))
+        else:
+            flat = _arrow_values(arr.values.slice(lo, hi - lo))
+        offs = (offs - lo).tolist()
+        out = [flat[a:b] for a, b in zip(offs, offs[1:])]
+    elif (
+        pa.types.is_integer(typ)
+        or pa.types.is_floating(typ)
+        or pa.types.is_boolean(typ)
+        or pa.types.is_string(typ)
+        or pa.types.is_large_string(typ)
+        or pa.types.is_binary(typ)
+        or pa.types.is_large_binary(typ)
+    ):
+        # numpy's tolist gives the same Python values, in C; the
+        # non-null values go alone, so no NULL becomes a NaN
+        vals = (arr.drop_null() if arr.null_count else arr).to_numpy(zero_copy_only=False).tolist()
+        if not arr.null_count:
+            return vals
+        it = iter(vals)
+        return [None if m else next(it) for m in arr.is_null().to_numpy(zero_copy_only=False)]
+    else:  # decimal, date, time, ...: Python objects either way
+        return arr.to_pylist()
+    if arr.null_count:
+        return [None if m else v for v, m in zip(out, arr.is_null().to_numpy(zero_copy_only=False))]
+    return out
 
 
 def _ts_unit(s: AvroSchema) -> Optional[str]:

@@ -235,9 +235,9 @@ class ContainerWriter:
         self._buffered_count = 0
         self._buffered_size = 0
 
-    def append_pandas(self, pdf) -> None:
-        """Encode a pandas batch through the codec ladder
-        (:mod:`.ladder`) and buffer its datums under
+    def append_arrow(self, batch) -> None:
+        """Encode an Arrow RecordBatch (or StructArray) through the codec
+        ladder (:mod:`.ladder`) and buffer its datums under
         :meth:`append_encoded`'s rule (a block ends after the row that
         reaches sync_interval), so the file is byte-identical to
         appending the rows one at a time."""
@@ -245,7 +245,7 @@ class ContainerWriter:
 
         from .ladder import get_encoder
 
-        offs, data = get_encoder(json.dumps(self.schema.to_json())).encode_buffer(pdf)
+        offs, data = get_encoder(json.dumps(self.schema.to_json())).encode_buffer(batch)
         n = len(offs) - 1
         start = 0
         while start < n:

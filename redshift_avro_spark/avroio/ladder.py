@@ -17,16 +17,20 @@ Three tiers decode (and encode) the same values:
 The rule, at every decode and encode site: the vector tier when it
 accepts the schema and the batch, else the generated tier when codegen
 accepts the schema, else closures. A :class:`VectorFallback` (malformed
-bytes, invalid UTF-8, an unexpected pandas dtype) re-runs that batch on
-the next tier, so a surprise costs time, never a value. PERMISSIVE
-gives a null row for each undecodable datum on every tier.
+bytes, invalid UTF-8, an Arrow type the vector encoder can't take)
+re-runs that batch on the next tier, so a surprise costs time, never a
+value. PERMISSIVE gives a null row for each undecodable datum on every
+tier.
 
 Decoders hand Spark Arrow on every tier: a RecordBatch whose schema is
 Spark's Arrow form of the reader schema (``arrow_schema``), built by
 one :func:`_record_batch`. Arrow keeps a double NaN as NaN and a
 timestamp as a UTC instant, whatever the session time zone; the
 generated tier's top-level timestamps become Arrow by one buffer view.
-Encoders take a pandas batch, as the container writer builds one.
+Encoders take Arrow too: a RecordBatch (or StructArray), whose validity
+bitmaps alone say which values are null, so a double NaN stays a value
+on every tier and timestamps are taken as the UTC instants Arrow
+holds.
 
 Both factories are cached per schema, so each executor process builds
 a tier once; decoders and encoders hold no per-call state.
@@ -179,23 +183,27 @@ class LadderEncoder:
         self._generated = get_batch_encoder(schema_json)
         self._closure = compile_encoder(parse_schema(schema_json))
 
-    def encode_buffer(self, pdf) -> tuple[np.ndarray, np.ndarray]:
-        """pandas batch → (row offsets int64[n+1], uint8 buffer): datum
-        i is ``buf[offs[i]:offs[i+1]]``, so any row range is a container
-        block's payload."""
-        columns = set(pdf.columns)
+    def encode_buffer(self, batch) -> tuple[np.ndarray, np.ndarray]:
+        """Arrow RecordBatch or StructArray → (row offsets int64[n+1],
+        uint8 buffer): datum i is ``buf[offs[i]:offs[i+1]]``, so any row
+        range is a container block's payload."""
+        import pyarrow as pa
+
+        if isinstance(batch, pa.StructArray):
+            batch = pa.RecordBatch.from_struct_array(batch)
+        columns = set(batch.schema.names)
         if self._vector is not None and columns.issuperset(self._vector.names):
             try:
-                return self._vector.encode_pandas_buffer(pdf)
+                return self._vector.encode_buffer(batch)
             except VectorFallback:
                 pass
         if self._generated is not None and columns.issuperset(self._generated.names):
             datums = self._generated.encode_columns(
-                self._generated.columns_from_pandas(pdf), len(pdf)
+                self._generated.columns_from_arrow(batch), batch.num_rows
             )
         else:
             datums = []
-            for rec in pdf.to_dict("records"):
+            for rec in batch.to_pylist():
                 w = BinaryWriter()
                 self._closure(w, rec)
                 datums.append(w.getvalue())
@@ -203,11 +211,12 @@ class LadderEncoder:
         np.cumsum(np.fromiter(map(len, datums), dtype=np.int64, count=len(datums)), out=offs[1:])
         return offs, np.frombuffer(b"".join(datums), dtype=np.uint8)
 
-    def encode_arrow(self, pdf):
-        """pandas batch → pyarrow binary array, one datum per row."""
+    def encode_arrow(self, batch):
+        """Arrow RecordBatch or StructArray → pyarrow binary array, one
+        datum per row."""
         import pyarrow as pa
 
-        offs, buf = self.encode_buffer(pdf)
+        offs, buf = self.encode_buffer(batch)
         # int32 offsets cap a binary array at 2 GiB
         typ = pa.binary() if int(offs[-1]) < 2**31 else pa.large_binary()
         offs = offs.astype(np.int32 if typ == pa.binary() else np.int64)

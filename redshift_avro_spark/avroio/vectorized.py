@@ -557,18 +557,21 @@ def get_vector_decoder(schema_json: str) -> Optional[VectorizedBlobDecoder]:
 
 
 class VectorizedEncoder:
-    """Vector ENCODER for the same eligible flat schemas: per-field
-    byte streams are produced with numpy passes (zigzag varints via a
-    10-wide byte matrix + fused scatter; strings UTF-8-encoded in C by
-    Arrow; doubles reinterpreted), then interleaved into row-major
-    datums with one scatter per field. Output is an Arrow BinaryArray
-    (zero per-row bytes objects) — byte-identical to the closure
+    """Vector ENCODER for the same eligible flat schemas, fed an Arrow
+    RecordBatch: per-field byte streams are produced with numpy passes
+    (zigzag varints via a 10-wide byte matrix + fused scatter; string
+    and bytes runs read straight from the Arrow offset and data
+    buffers; doubles reinterpreted), then interleaved into row-major
+    datums with one scatter per field — byte-identical to the closure
     encoder (differential-pinned).
 
-    Anything unexpected (wrong dtype, nulls in a non-nullable field,
-    int32 overflow, non-string objects) raises VectorFallback; the
-    caller uses the generated/closure encoder, which owns the typed
-    AvroEncodeError semantics."""
+    A null comes only from the Arrow validity bitmap, so a double NaN
+    is always a value and a NULL double always the null branch.
+    Timestamps are Arrow's epoch micros (a UTC instant), whatever the
+    column's time zone. Anything unexpected (an Arrow type the kind
+    can't take, nulls in a non-nullable field, int32 overflow) raises
+    VectorFallback; the caller uses the generated/closure encoder,
+    which owns the typed AvroEncodeError semantics."""
 
     def __init__(self, fields) -> None:
         self.fields = fields
@@ -603,90 +606,66 @@ class VectorizedEncoder:
         return lens, mat.ravel()[idx]
 
     @staticmethod
-    def _numeric(col, pa, pa_type, np_dtype):
-        """Column → numpy array of ``np_dtype`` via Arrow's checked
-        conversion when the input is an object column (nullable fields
-        arrive as object-with-the-Nones-already-filtered); numpy
-        columns of the right kind pass through."""
-        vals = np.asarray(col)
-        if vals.dtype == np.object_:
-            try:
-                vals = pa.array(col.tolist() if hasattr(col, "tolist") else list(col), type=pa_type).to_numpy(
-                    zero_copy_only=False
-                )
-            except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError) as exc:
-                raise VectorFallback(f"numeric conversion: {exc}") from None
-        if vals.dtype != np_dtype and np_dtype is not np.float32:
-            try:
-                cast = vals.astype(np_dtype)
-            except (TypeError, ValueError) as exc:
-                raise VectorFallback(f"numeric cast: {exc}") from None
-            if not np.array_equal(cast, vals, equal_nan=(np_dtype == np.float64)):
-                raise VectorFallback("lossy numeric cast")
-            vals = cast
-        return vals
+    def _cast(pa, arr, typ):
+        """Arrow's checked cast (an int too wide for a double, or out of
+        int64, raises) → numpy values."""
+        try:
+            return arr.cast(typ).to_numpy(zero_copy_only=False)
+        except (pa.ArrowInvalid, pa.ArrowNotImplementedError) as exc:
+            raise VectorFallback(f"{arr.type} → {typ}: {exc}") from None
 
     @staticmethod
-    def _utf8_columns(col, pa, typ):
-        """Object column of str/bytes (no nulls) → (lens, flat buf)
-        with UTF-8 encoding done in Arrow's C++ conversion."""
-        try:
-            arr = pa.array(col, type=typ)
-        except (pa.ArrowInvalid, pa.ArrowTypeError) as exc:
-            raise VectorFallback(f"string/bytes conversion: {exc}") from None
-        if arr.null_count:
-            raise VectorFallback("unexpected null in non-nullable string")
-        if isinstance(arr, pa.ChunkedArray):  # pragma: no cover - large
-            raise VectorFallback("chunked conversion")
-        bufs = arr.buffers()
-        offs = np.frombuffer(bufs[1], dtype=np.int32, count=len(arr) + 1)
-        data = np.frombuffer(bufs[2], dtype=np.uint8, count=int(offs[-1])) if offs[-1] else np.empty(0, np.uint8)
-        # account for a non-zero start offset (sliced arrays)
-        lens = np.diff(offs).astype(np.int64)
-        if offs[0] != 0:  # pragma: no cover - defensive
-            raise VectorFallback("sliced arrow buffer")
-        return lens, data
+    def _runs(pa, arr):
+        """Null-free string/binary array → (lens, flat buf) read from its
+        offset and data buffers, honouring ``arr.offset``."""
+        n = len(arr)
+        if n == 0:
+            return np.zeros(0, dtype=np.int64), np.zeros(0, dtype=np.uint8)
+        large = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+        odt = np.dtype(np.int64 if large else np.int32)
+        _, offs_buf, data_buf = arr.buffers()
+        offs = np.frombuffer(
+            offs_buf, dtype=odt, count=n + 1, offset=arr.offset * odt.itemsize
+        ).astype(np.int64)
+        data = np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None else np.zeros(0, np.uint8)
+        return np.diff(offs), data[offs[0]:offs[-1]]
 
-    def _field_stream(self, pa, kind, col, n):
-        """→ (lens, flat buf) for one field's value bytes."""
+    def _field_stream(self, pa, kind, arr):
+        """Null-free Arrow array → (lens, flat buf) for one field's value
+        bytes."""
+        n = len(arr)
+        typ = arr.type
         if kind in ("long", "int", "ts_us", "ts_ms"):
-            vals = np.asarray(col)
-            if vals.dtype.kind == "O":
-                # object columns (nullable ints arrive as object with
-                # the Nones already filtered): Arrow's safe cast keeps
-                # this exact — non-integral values raise, not truncate
-                try:
-                    vals = pa.array(col, type=pa.int64()).to_numpy(
-                        zero_copy_only=False
-                    )
-                except (pa.ArrowInvalid, pa.ArrowTypeError, OverflowError) as exc:
-                    raise VectorFallback(f"non-integer column for {kind}: {exc}") from None
-            if vals.dtype.kind != "i":
-                raise VectorFallback(f"non-integer column for {kind}")
-            if kind == "int" and len(vals) and (
-                (vals > 2147483647) | (vals < -2147483648)
-            ).any():
+            if pa.types.is_timestamp(typ):
+                arr = arr.cast(pa.timestamp("us", typ.tz))
+            elif not pa.types.is_integer(typ):
+                raise VectorFallback(f"{typ} column for {kind}")
+            vals = self._cast(pa, arr, pa.int64())
+            if kind == "ts_ms":
+                vals = vals // 1000
+            if kind == "int" and n and ((vals > 2147483647) | (vals < -2147483648)).any():
                 raise VectorFallback("int out of range")
             return self._varint_bytes(vals)
-        if kind == "double":
-            vals = self._numeric(col, pa, pa.float64(), np.float64)
-            return np.full(n, 8, dtype=np.int64), np.ascontiguousarray(vals).view(np.uint8)
-        if kind == "float":
-            vals = self._numeric(col, pa, pa.float32(), np.float32)
-            if vals.dtype != np.float32:
-                vals = vals.astype(np.float32)
-            return np.full(n, 4, dtype=np.int64), np.ascontiguousarray(vals).view(np.uint8)
+        if kind in ("double", "float"):
+            if not (pa.types.is_floating(typ) or pa.types.is_integer(typ)):
+                raise VectorFallback(f"{typ} column for {kind}")
+            vals = self._cast(pa, arr, pa.float64())
+            width = 8 if kind == "double" else 4
+            vals = vals.astype(np.float64 if width == 8 else np.float32, copy=False)
+            return np.full(n, width, dtype=np.int64), np.ascontiguousarray(vals).view(np.uint8)
         if kind == "boolean":
-            vals = np.asarray(col)
-            if vals.dtype == np.object_:
-                vals = self._numeric(col, pa, pa.bool_(), np.bool_)
-            if vals.dtype != np.bool_:
-                raise VectorFallback("non-bool column for boolean")
-            return np.ones(n, dtype=np.int64), vals.astype(np.uint8)
+            if not pa.types.is_boolean(typ):
+                raise VectorFallback(f"{typ} column for boolean")
+            return np.ones(n, dtype=np.int64), arr.to_numpy(zero_copy_only=False).astype(np.uint8)
         if kind in ("string", "bytes"):
-            slens, sbuf = self._utf8_columns(
-                col, pa, pa.utf8() if kind == "string" else pa.binary()
+            ok = (
+                pa.types.is_string(typ) or pa.types.is_large_string(typ)
+                if kind == "string"
+                else pa.types.is_binary(typ) or pa.types.is_large_binary(typ)
             )
+            if not ok:
+                raise VectorFallback(f"{typ} column for {kind}")
+            slens, sbuf = self._runs(pa, arr)
             plens, pbuf = self._varint_bytes(slens)
             # interleave prefix + payload per row
             lens = plens + slens
@@ -713,86 +692,45 @@ class VectorizedEncoder:
 
     # -- whole batch ----------------------------------------------------
 
-    def encode_pandas_buffer(self, pdf):
-        """pandas DataFrame (schema field columns) → (row_offsets
+    def encode_buffer(self, batch):
+        """Arrow RecordBatch (schema field columns) → (row_offsets
         int64[n+1], contiguous uint8 buffer) of row-major Avro datums —
         the pre-slicing form: ``buf[offs[i]:offs[i+1]]`` is datum i,
         and any contiguous row range is exactly an Avro container
         block's decompressed payload (the S2/K3 batch write shape)."""
-        import pandas as pd
         import pyarrow as pa
 
-        n = len(pdf)
+        n = batch.num_rows
         streams = []  # (lens, buf) per physical byte stream in row order
         for name, kind, nullable, null_idx in self.fields:
-            s = pdf[name]
-            if s.dtype.kind == "M":
-                vals = s.values.astype(
-                    "datetime64[us]" if kind == "ts_us" else "datetime64[ms]"
-                ).astype("int64")
-                if not nullable and s.isna().values.any():
-                    raise VectorFallback("NaT in non-nullable timestamp column")
-                col = vals
-            else:
-                col = s.values
-            if nullable:
-                if s.dtype.kind == "M":
-                    mask = s.isna().values  # NaT rows take the null branch
-                elif s.dtype.kind in ("i", "u", "b"):
-                    mask = np.zeros(n, dtype=bool)
-                elif s.dtype.kind == "f":
-                    mask = np.isnan(col)
-                    if mask.any() and kind in ("float", "double"):
-                        # NaN is a VALID float value — only treat as
-                        # null when the source was an object column
-                        mask = np.zeros(n, dtype=bool)
-                else:
-                    mask = pd.isna(s).values
-                nn = 1 - null_idx
-                branch_byte = np.where(mask, null_idx * 2, nn * 2).astype(np.uint8)
-                streams.append((np.ones(n, dtype=np.int64), branch_byte))
-                if mask.any():
-                    # value bytes only for non-null rows, zero-length
-                    # elsewhere: build dense stream then expand lens
-                    live = np.flatnonzero(~mask)
-                    dense_col = np.asarray(col, dtype=object)[live] if s.dtype.kind == "O" else np.asarray(col)[live]
-                    dlens, dbuf = self._field_stream(pa, kind, dense_col, len(live))
-                    lens = np.zeros(n, dtype=np.int64)
-                    lens[live] = dlens
-                    streams.append((lens, dbuf))
-                else:
-                    streams.append(self._field_stream(pa, kind, col, n))
-            else:
-                if s.dtype.kind == "O" and pd.isna(s).values.any():
-                    raise VectorFallback("null in non-nullable field")
-                streams.append(self._field_stream(pa, kind, col, n))
+            arr = batch.column(name)
+            if not arr.null_count:
+                if nullable:
+                    streams.append((np.ones(n, dtype=np.int64), np.full(n, (1 - null_idx) * 2, np.uint8)))
+                streams.append(self._field_stream(pa, kind, arr))
+                continue
+            if not nullable:
+                raise VectorFallback("null in non-nullable field")
+            mask = arr.is_null().to_numpy(zero_copy_only=False)
+            streams.append(
+                (np.ones(n, dtype=np.int64), np.where(mask, null_idx * 2, (1 - null_idx) * 2).astype(np.uint8))
+            )
+            # value bytes only for non-null rows, zero-length elsewhere
+            dlens, dbuf = self._field_stream(pa, kind, arr.drop_null())
+            lens = np.zeros(n, dtype=np.int64)
+            lens[~mask] = dlens
+            streams.append((lens, dbuf))
         row_lens = np.zeros(n, dtype=np.int64)
         for lens, _ in streams:
             row_lens += lens
         row_offs = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(row_lens, out=row_offs[1:])
-        total = int(row_offs[-1])
-        out = np.empty(total, dtype=np.uint8)
+        out = np.empty(int(row_offs[-1]), dtype=np.uint8)
         cursor = row_offs[:-1].copy()
         for lens, buf in streams:
             self._scatter(out, cursor, lens, np.asarray(buf))
             cursor = cursor + lens
         return row_offs, out
-
-    def encode_pandas_to_arrow(self, pdf):
-        """pandas DataFrame (schema field columns) → pyarrow
-        BinaryArray of row-major Avro datums, byte-identical to the
-        closure encoder."""
-        import pyarrow as pa
-
-        row_offs, out = self.encode_pandas_buffer(pdf)
-        if int(row_offs[-1]) >= 2**31:  # int32 Arrow offsets
-            raise VectorFallback("batch too large for binary offsets")
-        return pa.Array.from_buffers(
-            pa.binary(),
-            len(row_offs) - 1,
-            [None, pa.py_buffer(row_offs.astype(np.int32).tobytes()), pa.py_buffer(out.tobytes())],
-        )
 
 
 def _build_encoder(schema: AvroSchema) -> Optional[VectorizedEncoder]:

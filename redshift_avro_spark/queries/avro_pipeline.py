@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -100,7 +100,7 @@ def q20_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q21_container_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§3.1 flagship shape: pack events into Object Container Files
-    built DISTRIBUTED via per-partition ``mapInPandas`` (K3) — one cell
+    built DISTRIBUTED via per-partition ``mapInArrow`` (K3) — one cell
     per Arrow batch, so parallelism follows the input partitioning and
     no group ever materializes unbounded (the round-1 per-bucket
     ``applyInPandas`` capped parallelism at 32 tasks and held a whole
@@ -115,20 +115,20 @@ def q21_container_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema_json = json.dumps(EVENT_AVRO_SCHEMA)
 
     def make_cells(batches):
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
             buf = _io.BytesIO()
             w = ContainerWriter(buf, schema_json)
-            w.append_pandas(pdf[list(_EVENT_COLS)])
+            w.append_arrow(batch)
             w.close()
-            yield pd.DataFrame({"cell": [buf.getvalue()]})
+            yield pa.RecordBatch.from_pydict({"cell": pa.array([buf.getvalue()], pa.binary())})
 
     # spread cell building across cores when the input arrives as one
     # small file split (real multi-split input makes this a cheap no-op)
     cells = spread_codec_input(
         e.select(*_EVENT_COLS), spark, _parquet_file_count(sf_dir, "events")
-    ).mapInPandas(
+    ).mapInArrow(
         make_cells, "cell binary"
     )
     decoded = cells.select(
@@ -283,10 +283,10 @@ _KPL_EVENT_SCHEMA = {
 def q24_kpl_spring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SURVEY §3.3 end-to-end: three nested envelopes built
     DISTRIBUTED (Avro datum → Spring embedded-header message → KPL
-    protobuf aggregate per Arrow batch via mapInPandas → hex, the exact
+    protobuf aggregate per Arrow batch via mapInArrow → hex, the exact
     VARBINARY shape the springcloud UDF receives), then unwrapped with
     ``unhex`` (JVM) + the fused ``unwrap_kpl_spring_avro`` stage (KPL
-    deagg → Spring headers → Avro decode in ONE mapInPandas — the
+    deagg → Spring headers → Avro decode in ONE mapInArrow — the
     composable ``explode_kpl → extract_spring_headers → from_avro``
     chain costs an Arrow round trip per link) and aggregated. Identity oracle proves the whole envelope stack is
     lossless (springcloud-lambda-udf/lambda_function.py:142-181,
@@ -313,17 +313,17 @@ def q24_kpl_spring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         # row (the per-row build dominated q24's measured time; the
         # concat below is byte-identical to build_spring_message)
         spring_prefix = build_spring_message({"contentType": content_type}, b"")
-        for pdf in batches:
-            if not len(pdf):
+        for batch in batches:
+            if not batch.num_rows:
                 continue
-            bodies = enc.encode_arrow(pdf).to_pylist()
+            bodies = enc.encode_arrow(batch).to_pylist()
             blob = encode_kpl_simple("pk", [spring_prefix + body for body in bodies])
-            yield pd.DataFrame({"hexcell": [blob.hex()]})
+            yield pa.RecordBatch.from_pydict({"hexcell": pa.array([blob.hex()], pa.string())})
 
     e = load_table(spark, sf_dir, "events")
     cells = spread_codec_input(
         e.select(*kpl_cols), spark, _parquet_file_count(sf_dir, "events")
-    ).mapInPandas(
+    ).mapInArrow(
         make_cells, "hexcell string"
     )
     decoded = unwrap_kpl_spring_avro(

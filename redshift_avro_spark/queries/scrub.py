@@ -404,22 +404,22 @@ def q168_winnowing_fps(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded lambdas over one document's grams); the shared set is ONE
     map-side-combining min<>max aggregation on the uniform fingerprint
     key (the q146 trick) plus the join-back on the same key; per-doc
-    output is one row."""
+    output is one row. The gram hashes are bound once per document
+    through a single-element ``transform`` scope, so no optimizer rule
+    can inline their md5s into the per-window lambda (a Project-level
+    alias was inlined by the ``size(fp) > 0`` filter ``explode`` infers:
+    O(L²) md5 calls per document)."""
     k, w = _WIN_K, _WIN_W
     hx = (
         f"transform(sequence(1, length(text) - {k - 1}), "
         f"i -> CAST(conv(substring(md5(substring(text, i, {k})), 1, 15), 16, 10) AS BIGINT))"
     )
     fp = (
-        f"array_distinct(transform(sequence(1, size(__h) - {w - 1}), "
-        f"j -> array_min(slice(__h, j, {w}))))"
+        f"transform(array({hx}), __h -> array_distinct(transform("
+        f"sequence(1, size(__h) - {w - 1}), j -> array_min(slice(__h, j, {w})))))[0]"
     )
     docs = load_table(spark, sf_dir, "documents")
-    fps = (
-        docs.where(F.length("text") >= k + w - 1)
-        .select("doc_id", F.expr(hx).alias("__h"))
-        .select("doc_id", F.expr(fp).alias("fp"))
-    )
+    fps = docs.where(F.length("text") >= k + w - 1).select("doc_id", F.expr(fp).alias("fp"))
     exploded = fps.select("doc_id", F.explode("fp").alias("f"))
     shared = (
         exploded.groupBy("f")

@@ -19,11 +19,11 @@ Design notes for 100 TB: every codec UDF here is a scalar *Arrow* UDF
 ``mapInArrow`` stage whose codec comes from the decoder ladder
 (avroio/ladder.py: numpy vector, generated or closure tier, built once
 per executor process and schema — no per-row schema interpretation).
-Arrow keeps a double NaN as NaN and a timestamp as a UTC instant
-whatever the session time zone; only :func:`decode_container_json`,
-which returns text, is a pandas UDF. Decode is a narrow map stage with
-no shuffle, and hex decode stays JVM-side so Catalyst can
-prune/pushdown around it. PERMISSIVE mode yields per-row nulls instead
+Arrow keeps a double NaN as NaN, a NULL apart from NaN, and a
+timestamp as a UTC instant whatever the session time zone, in both
+directions: :func:`to_avro` hands the encoder its struct column as it
+is. Decode is a narrow map stage with no shuffle, and hex decode stays
+JVM-side so Catalyst can prune/pushdown around it. PERMISSIVE mode yields per-row nulls instead
 of failing the batch — an intentional improvement over the reference's
 all-or-nothing batch failure envelope (avro-file-udf/
 lambda_function.py:9-30).
@@ -34,12 +34,11 @@ from __future__ import annotations
 import json
 from typing import Iterator, Optional, Union
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import arrow_udf, pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 
 from ..avroio.binary import BinaryReader, compile_decoder, compile_resolver
@@ -158,22 +157,9 @@ def to_avro(
     def _encode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         enc = get_encoder(schema_json_str)
         for arr in batches:
-            yield enc.encode_arrow(_struct_to_pandas(arr))
+            yield enc.encode_arrow(arr)
 
     return _encode(col)
-
-
-def _struct_to_pandas(arr: pa.StructArray) -> pd.DataFrame:
-    """A struct column → the encoder's pandas batch, one column per
-    field. Object ints keep a NULL long None (not NaN) and timestamps
-    are UTC instants. Nested fields hold Python values: ``to_pandas``
-    would give numpy arrays, with NaN or NaT for a NULL element."""
-    table = pa.Table.from_struct_array(arr)
-    pdf = table.to_pandas(integer_object_nulls=True)
-    for name, column in zip(table.column_names, table.columns):
-        if pa.types.is_nested(column.type):
-            pdf[name] = pd.Series(column.to_pylist(), dtype=object, index=pdf.index)
-    return pdf
 
 
 # ---------------------------------------------------------------------------
@@ -287,22 +273,22 @@ def decode_container_json(col: Union[str, Column], mode: str = "FAILFAST") -> Co
     its own embedded writer schema."""
     permissive = mode.upper() == "PERMISSIVE"
 
-    @pandas_udf(returnType=T.StringType())
-    def _decode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in batches:
+    @arrow_udf(returnType=T.StringType())
+    def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for arr in batches:
             out = []
-            for blob in series:
+            for blob in arr.to_pylist():
                 if blob is None:
                     out.append(None)
                     continue
                 if permissive:
                     try:
-                        out.append(datum_to_json(list(iter_container(bytes(blob)))))
+                        out.append(datum_to_json(list(iter_container(blob))))
                     except Exception:
                         out.append(None)
                 else:
-                    out.append(datum_to_json(list(iter_container(bytes(blob)))))
-            yield pd.Series(out, dtype=object)
+                    out.append(datum_to_json(list(iter_container(blob))))
+            yield pa.array(out, type=pa.string())
 
     return _decode(col)
 

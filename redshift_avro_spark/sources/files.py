@@ -16,9 +16,13 @@ the absent built-in module) providing:
   heterogeneous/evolved files to one shape (reference io.py:990-1039).
 - **Arrow-batched decode**: tasks yield pyarrow RecordBatches, skipping
   row-by-row Python→JVM conversion.
-- **Writes**: one container file per partition with the configured
-  codec (``compression`` option: null/deflate/bzip2/...), block-buffered
-  at SYNC_INTERVAL like the reference writer (datafile.py:39).
+- **Writes**: Arrow writers (batch and streaming) — each task takes
+  Spark's Arrow batches and encodes them through the codec ladder
+  (vector, generated or closure tier) into one container file per
+  partition with the configured codec (``compression`` option:
+  null/deflate/bzip2/...), block-buffered at SYNC_INTERVAL like the
+  reference writer (datafile.py:39). Timestamps are written as the
+  UTC instants Arrow holds, whatever the session time zone.
 
 - **Streaming reads** (round 3): :class:`AvroStreamReader` turns a
   landing-zone directory into a checkpointed micro-batch stream —
@@ -44,10 +48,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
+    DataSourceArrowWriter,
     DataSourceReader,
+    DataSourceStreamArrowWriter,
     DataSourceStreamReader,
-    DataSourceStreamWriter,
-    DataSourceWriter,
     InputPartition,
     WriterCommitMessage,
 )
@@ -163,7 +167,31 @@ class AvroCommit(WriterCommitMessage):
     rows: int
 
 
-class AvroWriter(DataSourceWriter):
+def _write_part(sink: Any, fname: str, batches: Iterator[Any]) -> int:
+    """Write one task's Arrow batches to the container file ``fname``
+    through the codec ladder (``ContainerWriter.append_arrow``) → the
+    row count. ``sink`` is the batch or streaming writer, whose options
+    give the schema and codec."""
+    if sink.avro_schema_json:
+        schema = parse_schema(sink.avro_schema_json)
+    else:
+        schema = df_schema_to_avro(sink.spark_schema, name=sink.record_name)
+    n = 0
+    with open(fname, "wb") as fh, ContainerWriter(fh, schema, codec=sink.codec) as w:
+        for batch in batches:
+            w.append_arrow(batch)
+            n += batch.num_rows
+    return n
+
+
+def _partition_id() -> int:
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()
+    return tc.partitionId() if tc is not None else 0
+
+
+class AvroWriter(DataSourceArrowWriter):
     def __init__(self, spark_schema: T.StructType, options: dict, overwrite: bool) -> None:
         self.path = options.get("path")
         if not self.path:
@@ -184,26 +212,11 @@ class AvroWriter(DataSourceWriter):
         return f".staged-{self.run_id}-"
 
     def write(self, iterator: Iterator[Any]) -> AvroCommit:
-        from pyspark import TaskContext
-
-        if self.avro_schema_json:
-            schema = parse_schema(self.avro_schema_json)
-        else:
-            schema = df_schema_to_avro(self.spark_schema, name=self.record_name)
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
         fname = os.path.join(
             self.path,
-            f"{self._staging_prefix()}part-{pid:05d}-{uuid.uuid4().hex[:8]}.avro",
+            f"{self._staging_prefix()}part-{_partition_id():05d}-{uuid.uuid4().hex[:8]}.avro",
         )
-        n = 0
-        field_names = [f.name for f in self.spark_schema.fields]
-        with open(fname, "wb") as fh:
-            with ContainerWriter(fh, schema, codec=self.codec) as w:
-                for row in iterator:
-                    w.append(_row_to_dict(row, field_names))
-                    n += 1
-        return AvroCommit(file=fname, rows=n)
+        return AvroCommit(file=fname, rows=_write_part(self, fname, iterator))
 
     def commit(self, messages: list[AvroCommit]) -> None:  # type: ignore[override]
         if self.overwrite:
@@ -225,13 +238,6 @@ class AvroWriter(DataSourceWriter):
         for m in messages:
             if m is not None and os.path.exists(m.file):
                 os.remove(m.file)
-
-
-def _row_to_dict(row: Any, field_names: list[str]) -> dict:
-    if isinstance(row, dict):
-        return row
-    d = row.asDict(recursive=True) if hasattr(row, "asDict") else dict(zip(field_names, row))
-    return d
 
 
 class AvroDataSource(DataSource):
@@ -450,7 +456,7 @@ def read_avro_stream(
     return reader.load()
 
 
-class AvroStreamWriter(DataSourceStreamWriter):
+class AvroStreamWriter(DataSourceStreamArrowWriter):
     """Micro-batch streaming SINK: each batch lands as Avro container
     files (one per non-empty partition) under ``path`` — the writer
     half of the landing-zone connector, producing exactly the layout
@@ -474,22 +480,9 @@ class AvroStreamWriter(DataSourceStreamWriter):
         os.makedirs(self.path, exist_ok=True)
 
     def write(self, iterator: Iterator[Any]) -> AvroCommit:
-        from pyspark import TaskContext
-
-        if self.avro_schema_json:
-            schema = parse_schema(self.avro_schema_json)
-        else:
-            schema = df_schema_to_avro(self.spark_schema, name=self.record_name)
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else 0
+        pid = _partition_id()
         staged = os.path.join(self.path, f".staged-{uuid.uuid4().hex[:8]}-{pid:05d}.avro")
-        n = 0
-        field_names = [f.name for f in self.spark_schema.fields]
-        with open(staged, "wb") as fh:
-            with ContainerWriter(fh, schema, codec=self.codec) as w:
-                for row in iterator:
-                    w.append(_row_to_dict(row, field_names))
-                    n += 1
+        n = _write_part(self, staged, iterator)
         if n == 0:
             os.remove(staged)
             return AvroCommit(file="", rows=0)

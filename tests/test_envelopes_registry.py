@@ -32,6 +32,7 @@ from redshift_avro_spark.sources.envelopes import (
     KplTag,
     build_spring_message,
     encode_kpl_aggregate,
+    encode_kpl_simple,
     kpl_sub_payloads,
 )
 
@@ -266,3 +267,18 @@ class TestRedshiftProtocol:
     def test_failure_envelope(self):
         resp = container_file_handler({"arguments": [["zz-not-hex"]], "num_records": 1})
         assert resp["success"] is False and "error_msg" in resp
+
+
+class TestEncodeKplSimple:
+    def test_byte_identical_to_general_encoder(self):
+        """encode_kpl_simple is a bulk fast path for the single-pk /
+        index-0 / no-tags shape q24 synthesizes — must stay
+        byte-identical to the general encoder."""
+        datas = [b"", b"x", b"hello world" * 20, bytes(range(256)) * 5]
+        general = encode_kpl_aggregate(
+            KplAggregate(
+                partition_key_table=["pk"],
+                records=[KplRecord(partition_key_index=0, data=d) for d in datas],
+            )
+        )
+        assert encode_kpl_simple("pk", datas) == general

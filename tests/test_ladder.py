@@ -2,8 +2,8 @@
 each schema shape reaches its tier by shape alone, every tier returns
 the closure reference's values, as Spark's Arrow types, on the blob and
 block paths, PERMISSIVE
-nulls and FAILFAST errors hold on every tier, and the encoders are
-byte-identical to ``encode_datum``."""
+nulls and FAILFAST errors hold on every tier, and the encoders, fed
+Arrow batches, are byte-identical to ``encode_datum``."""
 
 from __future__ import annotations
 
@@ -12,7 +12,7 @@ import json
 import pathlib
 import re
 
-import pandas as pd
+import numpy as np
 import pyarrow as pa
 import pytest
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -214,14 +214,51 @@ def test_encoder_matches_encode_datum(shape, columns):
             {"name": "extra", "type": "string", "default": "dflt"}
         ]
     parsed = parse_schema(schema)
-    # object columns keep nullable longs as ints (pandas would make them float)
-    pdf = pd.DataFrame(rows, dtype=object if shape == "nested" else None)
+    # the batch Spark hands an encode site: Spark's Arrow form of the rows
+    arrow_schema = to_arrow_schema(avro_to_spark_type(parse_schema(SHAPES[shape][0])))
+    batch = pa.RecordBatch.from_pylist(rows, schema=arrow_schema)
     want = [encode_datum(parsed, r) for r in rows]
     enc = get_encoder(_canon(schema))
-    assert enc.encode_arrow(pdf).to_pylist() == want
-    offs, buf = enc.encode_buffer(pdf)
+    assert enc.encode_arrow(batch).to_pylist() == want
+    assert enc.encode_arrow(batch.to_struct_array()).to_pylist() == want
+    offs, buf = enc.encode_buffer(batch)
     assert buf.tobytes() == b"".join(want)
-    assert offs.tolist() == [0] + list(pd.Series([len(w) for w in want]).cumsum())
+    assert offs.tolist() == [0] + np.cumsum([len(w) for w in want]).tolist()
+
+
+def test_generated_tier_reads_sliced_nested_arrow():
+    """The generated tier builds its value columns from Arrow child
+    arrays: a sliced batch with NULL structs, lists, elements and map
+    values, a nested NaN and nested timestamps encodes as
+    ``encode_datum`` encodes the same rows."""
+    ts = {"type": "long", "logicalType": "timestamp-micros"}
+    inner = {
+        "type": "record",
+        "name": "Inner",
+        "fields": [{"name": "x", "type": ["null", "double"]}, {"name": "t", "type": ts}],
+    }
+    schema = {
+        "type": "record",
+        "name": "Holes",
+        "fields": [
+            {"name": "s", "type": ["null", inner]},
+            {"name": "xs", "type": ["null", {"type": "array", "items": ["null", "long"]}]},
+            {"name": "m", "type": ["null", {"type": "map", "values": ["null", "string"]}]},
+        ],
+    }
+    t0 = dt.datetime(1999, 12, 31, 23, 59, 59, 999999)
+    rows = [
+        {"s": {"x": float("nan"), "t": t0}, "xs": [1, None, 3], "m": {"a": "x", "b": None}},
+        {"s": None, "xs": None, "m": None},
+        {"s": {"x": None, "t": dt.datetime(1960, 1, 1)}, "xs": [], "m": {}},
+        {"s": {"x": -0.5, "t": t0}, "xs": [None], "m": {"": "é"}},
+    ] * 3
+    parsed = parse_schema(schema)
+    arrow_schema = to_arrow_schema(avro_to_spark_type(parsed))
+    batch = pa.RecordBatch.from_pylist(rows, schema=arrow_schema).slice(1, len(rows) - 2)
+    enc = get_encoder(_canon(schema))
+    assert enc._vector is None and enc._generated is not None
+    assert enc.encode_arrow(batch).to_pylist() == [encode_datum(parsed, r) for r in rows[1:-1]]
 
 
 def test_only_the_ladder_chooses_a_tier():
@@ -234,3 +271,24 @@ def test_only_the_ladder_chooses_a_tier():
         if str(p.relative_to(pkg)) not in tier_modules and pattern.search(p.read_text())
     ]
     assert offenders == []
+
+
+def test_encode_sites_hand_the_ladder_arrow():
+    """Every Spark encode site passes Arrow: the pandas encode bridge
+    and the per-row sink loop stay gone, and the codec's encode path
+    imports no pandas."""
+    pkg = pathlib.Path(redshift_avro_spark.__file__).parent
+    gone = re.compile(
+        r"encode_pandas|columns_from_pandas|append_pandas|_struct_to_pandas|_row_to_dict"
+    )
+    offenders = [str(p.relative_to(pkg)) for p in pkg.rglob("*.py") if gone.search(p.read_text())]
+    assert offenders == []
+    imports_pandas = re.compile(r"^\s*(import pandas|from pandas\b)|pandas_udf", re.M)
+    arrow_only = [
+        "avroio/ladder.py",
+        "avroio/container.py",
+        "avroio/codegen.py",
+        "sources/files.py",
+        "sources/columns.py",
+    ]
+    assert [f for f in arrow_only if imports_pandas.search((pkg / f).read_text())] == []

@@ -4,6 +4,8 @@ Catalyst provides must actually show up in the physical plans.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from conftest import SF_SMOKE
@@ -70,6 +72,32 @@ def test_avro_decode_is_narrow(spark):
     hexed = e.select(to_hex(to_avro(F.struct(*_EVENT_COLS), EVENT_AVRO_SCHEMA)).alias("h"))
     decoded = hexed.select(from_avro(from_hex("h"), EVENT_AVRO_SCHEMA).alias("ev")).select("ev.*")
     assert shuffle_count(decoded) == 0
+
+
+def _lambda_bodies(plan: str, var: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` in a plan string whose
+    bound variable is ``var``."""
+    bodies = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        inner = plan[m.end() : i - 1]
+        if re.search(rf", lambda {var}#\d+, (true|false)$", inner):
+            bodies.append(inner)
+    return bodies
+
+
+def test_q168_window_lambda_computes_no_md5(spark):
+    """q168's per-window lambda (``j -> array_min(slice(__h, j, w))``)
+    reads each document's gram hashes; it must not recompute them. An
+    md5 inside it (the optimizer inlining ``__h`` into the filter that
+    ``explode`` infers) is O(L²) md5 calls per document."""
+    df = REGISTRY["q168_winnowing_fps"].fn(spark, SF_SMOKE)
+    bodies = _lambda_bodies(df._jdf.queryExecution().optimizedPlan().toString(), "j")
+    assert bodies
+    assert [b for b in bodies if "md5(" in b] == []
 
 
 def test_salted_join_matches_plain_join(spark):

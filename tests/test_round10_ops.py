@@ -195,28 +195,6 @@ class TestExternalDecontamPlantedLeak:
         )
 
 
-class TestEncodeKplSimple:
-    def test_byte_identical_to_general_encoder(self):
-        """encode_kpl_simple is a bulk fast path for the single-pk /
-        index-0 / no-tags shape q24 synthesizes — must stay
-        byte-identical to the general encoder."""
-        from redshift_avro_spark.sources.envelopes import (
-            KplAggregate,
-            KplRecord,
-            encode_kpl_aggregate,
-            encode_kpl_simple,
-        )
-
-        datas = [b"", b"x", b"hello world" * 20, bytes(range(256)) * 5]
-        general = encode_kpl_aggregate(
-            KplAggregate(
-                partition_key_table=["pk"],
-                records=[KplRecord(partition_key_index=0, data=d) for d in datas],
-            )
-        )
-        assert encode_kpl_simple("pk", datas) == general
-
-
 class TestSoakMemoryClamp:
     def test_cgroup_clamp_kills_overallocation(self):
         """VERDICT r9 #7: the soak's --max-rss-gib clamp must be a REAL

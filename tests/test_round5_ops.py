@@ -422,55 +422,6 @@ class TestShardPlan:
         ]
 
 
-class TestWinnowing:
-    def test_substring_guarantee(self, spark):
-        from redshift_avro_spark.queries import load_all
-        import os, tempfile, shutil
-
-        reg = load_all()
-        tmp = tempfile.mkdtemp(prefix="winnow_")
-        try:
-            # docs 1 and 2 share the 12-char substring "hello-world!"
-            # (>= k + w - 1 = 8): winnowing MUST surface a shared
-            # fingerprint in both. doc 3 shares nothing.
-            rows = [
-                (1, "xxxxhello-world!yyyy", "en", "a", 20),
-                (2, "zzhello-world!qq", "en", "b", 16),
-                (3, "abcdefghijklmnop", "en", "c", 16),
-            ]
-            spark.createDataFrame(
-                rows, "doc_id long, text string, lang string, source string, n_chars long"
-            ).write.mode("overwrite").parquet(os.path.join(tmp, "documents.parquet"))
-            out = {r["doc_id"]: r for r in reg["q168_winnowing_fps"].fn(spark, tmp).collect()}
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
-        assert out[1]["n_shared_fps"] >= 1
-        assert out[2]["n_shared_fps"] >= 1
-        assert out[3]["n_shared_fps"] == 0
-        for r in out.values():
-            assert 0 <= r["shared_ppm"] <= 1_000_000
-            assert r["n_fps"] >= 1
-
-    def test_compression_vs_full_gram_set(self, spark):
-        # winnowing selects ~2/(w+1) of all gram hashes; with w=4 the
-        # fingerprint set must be well under half the gram count
-        from redshift_avro_spark.queries import load_all
-
-        reg = load_all()
-        row = (
-            reg["q168_winnowing_fps"].fn(spark, SF_SMOKE)
-            .agg(
-                F.sum("n_fps").alias("fps"),
-            )
-            .collect()[0]
-        )
-        docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
-        total_grams = docs.select(
-            F.sum(F.greatest(F.length("text") - 4, F.lit(0))).alias("g")
-        ).collect()[0]["g"]
-        assert row["fps"] < total_grams / 2
-
-
 class TestLangidConfusion:
     def test_matrix_is_consistent(self, spark):
         from redshift_avro_spark.queries import load_all

@@ -523,6 +523,62 @@ class TestArrowBoundary:
             ("Alyssa", 256, None)
         ]
 
+    @pytest.mark.parametrize("shape", ["flat", "nested"])
+    @pytest.mark.parametrize("site", ["to_avro", "ContainerWriter.append_arrow", "write_avro"])
+    def test_null_double_is_the_null_branch(self, spark, tmp_path, site, shape):
+        """A NULL in a ``["null", "double"]`` field encodes as the null
+        branch and a NaN as the double NaN, exactly as ``encode_datum``
+        writes them, on the vector (flat) and generated (nested) tiers."""
+        import io
+
+        import pyarrow as pa
+
+        from redshift_avro_spark.avroio import encode_datum
+        from redshift_avro_spark.avroio.container import (
+            ContainerWriter,
+            iter_raw_blocks,
+            read_header,
+        )
+        from redshift_avro_spark.sources import write_avro
+
+        fields = [{"name": "d", "type": ["null", "double"]}]
+        if shape == "nested":
+            fields.append({"name": "xs", "type": {"type": "array", "items": "long"}})
+        schema = {"type": "record", "name": "topLevelRecord", "fields": fields}
+        rows = [(None, [1]), (float("nan"), []), (1.5, [2, 3])]
+        cols = [f["name"] for f in fields]
+        parsed = parse_schema(schema)
+        want = [encode_datum(parsed, dict(zip(cols, r))) for r in rows]
+        d_hex = ["00", "02000000000000f87f", "02000000000000f83f"]  # NULL, NaN, 1.5
+        assert all(w.hex().startswith(d) for w, d in zip(want, d_hex))
+        if site == "to_avro":
+            df = spark.createDataFrame(
+                [(i, *r) for i, r in enumerate(rows)], "i int, d double, xs array<long>"
+            )
+            got = df.select("i", to_avro(F.struct(*cols), schema).alias("b")).orderBy("i")
+            assert [bytes(r.b) for r in got.collect()] == want
+            return
+        if site == "ContainerWriter.append_arrow":
+            batch = pa.RecordBatch.from_pydict(
+                {
+                    "d": pa.array([r[0] for r in rows], pa.float64()),
+                    "xs": pa.array([r[1] for r in rows], pa.list_(pa.int64())),
+                }
+            ).select(cols)
+            buf = io.BytesIO()
+            with ContainerWriter(buf, schema) as w:
+                w.append_arrow(batch)
+            container = buf.getvalue()
+        else:
+            df = spark.createDataFrame(rows, "d double, xs array<long>").select(*cols)
+            out = tmp_path / "out"
+            write_avro(df.coalesce(1), str(out), compression="null", avro_schema=schema)
+            (part,) = [f for f in out.iterdir() if f.suffix == ".avro"]
+            container = part.read_bytes()
+        header = read_header(container)
+        payload = b"".join(p for _, p in iter_raw_blocks(container, header.header_len, header.sync))
+        assert payload == b"".join(want)
+
     def test_to_avro_null_long_beside_array(self, spark):
         """An array field makes the vector encoder decline; a NULL in the
         nullable long must still encode as the null branch."""

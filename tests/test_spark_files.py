@@ -150,6 +150,29 @@ class TestWrite:
         assert back.arr == [1, 2]
         assert back.m == {"k": 3.5}
 
+    def test_timestamps_ignore_session_time_zone(self, spark, tmp_path):
+        """The Arrow sink writes the UTC instant Spark holds: under a
+        non-UTC session time zone an epoch-0 timestamp still lands as
+        micros 0 in the file and reads back as the same instant."""
+        from redshift_avro_spark.avroio import iter_container
+
+        old_tz = spark.conf.get("spark.sql.session.timeZone")
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        try:
+            src = spark.sql("SELECT 1L AS id, timestamp_micros(0) AS ts")
+            out = str(tmp_path / "tz_avro")
+            write_avro(src, out)
+            back = read_avro(spark, out).select(F.unix_micros("ts").alias("us")).collect()
+        finally:
+            spark.conf.set("spark.sql.session.timeZone", old_tz)
+        assert [r.us for r in back] == [0]
+        records = []
+        for f in sorted(os.listdir(out)):
+            if f.endswith(".avro"):
+                with open(os.path.join(out, f), "rb") as fh:
+                    records.extend(iter_container(fh.read()))
+        assert [r["ts"] for r in records] == [dt.datetime(1970, 1, 1, tzinfo=dt.timezone.utc)]
+
     def test_overwrite_mode(self, spark, tmp_path):
         out = str(tmp_path / "ow_avro")
         write_avro(spark.range(10).select(F.col("id")), out)

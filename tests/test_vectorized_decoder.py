@@ -15,9 +15,12 @@ import json
 import math
 
 import numpy as np
+import pyarrow as pa
 import pytest
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from redshift_avro_spark.avroio.binary import BinaryReader, compile_decoder, encode_datum
+from redshift_avro_spark.avroio.convert import avro_to_spark_type
 from redshift_avro_spark.avroio.schema_model import parse_schema
 from redshift_avro_spark.avroio.vectorized import (
     VectorFallback,
@@ -166,12 +169,11 @@ def test_stream_decode_rejects_garbage():
 
 
 def test_append_pandas_layout_matches_per_datum_path():
-    """ContainerWriter.append_pandas (vector block write) must produce
+    """ContainerWriter.append_arrow (vector block write) must produce
     the same records AND the same block boundaries as append_encoded,
-    also when the frame arrives over several calls."""
+    also when the batch arrives over several calls (sliced batches, so
+    string columns start at a non-zero Arrow offset)."""
     import io
-
-    import pandas as pd
 
     from redshift_avro_spark.avroio.container import (
         ContainerReader,
@@ -193,21 +195,12 @@ def test_append_pandas_layout_matches_per_datum_path():
     with ContainerWriter(a, schema_json, sync_marker=sync) as w:
         for r in rows:
             w.append(r)
-    pdf = pd.DataFrame(
-        {
-            "event_id": [r["event_id"] for r in rows],
-            "ts": pd.to_datetime([r["ts"] for r in rows], unit="us"),
-            "user_id": [r["user_id"] for r in rows],
-            "event_type": [r["event_type"] for r in rows],
-            "value": [r["value"] for r in rows],
-            "props": pd.Series([r["props"] for r in rows], dtype=object),
-        }
-    )
+    batch = _rows_to_batch(MIXED, rows)
     for cuts in ([], [1234, 1235, 3000]):
         b = io.BytesIO()
         with ContainerWriter(b, schema_json, sync_marker=sync) as w:
             for lo, hi in zip([0] + cuts, cuts + [n]):
-                w.append_pandas(pdf.iloc[lo:hi])
+                w.append_arrow(batch.slice(lo, hi - lo))
         assert a.getvalue() == b.getvalue()  # byte-identical incl. blocks
     ha = read_header(a.getvalue())
     assert len(list(iter_raw_blocks(a.getvalue(), ha.header_len, ha.sync))) > 1
@@ -283,12 +276,10 @@ def test_ineligible_schemas_decline():
 
 def test_nullable_timestamp_roundtrips_all_paths():
     """Round 4 widened eligibility: nullable timestamps decode through
-    blob/stream/pandas paths matching the closure decoder, and NaT rows
+    blob/stream/pandas paths matching the closure decoder, and NULL rows
     ENCODE as the null branch byte-identically to the closure encoder
     (previously both sides declined the schema)."""
     import datetime as dt
-
-    import pandas as pd
 
     from redshift_avro_spark.avroio.vectorized import get_vector_encoder
 
@@ -308,11 +299,7 @@ def test_nullable_timestamp_roundtrips_all_paths():
     assert vd.decode_stream_arrow(b"".join(blobs), 3)["ts"].to_pylist() == want
     assert list(vd.decode_blobs_to_pandas(blobs)["ts"]) == want
     ve = get_vector_encoder(sj)
-    pdf = pd.DataFrame({
-        "id": pd.array([1, 2, 3]).astype("int64"),
-        "ts": pd.to_datetime([t1, None, dt.datetime(1970, 1, 1)]),
-    })
-    assert ve.encode_pandas_to_arrow(pdf).to_pylist() == blobs
+    assert _vector_encode(ve, _rows_to_batch(schema, rows)) == blobs
 
 
 def test_malformed_input_falls_back_not_garbage():
@@ -347,20 +334,24 @@ def _closure_encode(schema_dict, rows):
     return _encode_rows(schema_dict, rows)
 
 
-def _rows_to_pdf(schema_dict, rows):
-    import pandas as pd
+def _rows_to_batch(schema_dict, rows):
+    """Rows as the Arrow batch Spark hands an encode site: Spark's Arrow
+    types for the schema (int32 ints, float32 floats, UTC timestamps)."""
+    spark_type = avro_to_spark_type(parse_schema(json.dumps(schema_dict)))
+    return pa.RecordBatch.from_pylist(rows, schema=to_arrow_schema(spark_type))
 
-    names = [f["name"] for f in schema_dict["fields"]]
-    return pd.DataFrame({n: [r[n] for r in rows] for n in names})
+
+def _vector_encode(ve, batch):
+    offs, buf = ve.encode_buffer(batch)
+    return [buf[offs[i]:offs[i + 1]].tobytes() for i in range(len(offs) - 1)]
 
 
-def _assert_encodes_identical(schema_dict, rows, pdf=None):
+def _assert_encodes_identical(schema_dict, rows):
     from redshift_avro_spark.avroio.vectorized import get_vector_encoder
 
     ve = get_vector_encoder(json.dumps(schema_dict))
     assert ve is not None, "schema should be vector-eligible"
-    pdf = _rows_to_pdf(schema_dict, rows) if pdf is None else pdf
-    got = ve.encode_pandas_to_arrow(pdf).to_pylist()
+    got = _vector_encode(ve, _rows_to_batch(schema_dict, rows))
     want = _closure_encode(schema_dict, rows)
     assert len(got) == len(want)
     bad = [i for i, (g, w) in enumerate(zip(got, want)) if g != w]
@@ -377,17 +368,9 @@ def test_encoder_mixed_schema_byte_identical():
         {"event_id": -1, "ts": 2, "user_id": 63, "event_type": "x" * 300,
          "value": float("inf"), "props": None},
     ]
-    import pandas as pd
-
-    pdf = _rows_to_pdf(MIXED, rows)
-    # ts as datetime64 column (the Spark-delivered shape)
-    pdf["ts"] = pd.to_datetime(pdf["ts"], unit="us")
-    # closure expects raw micros or datetimes; datetime64 works via
-    # adapt — build reference rows with datetimes for exactness
-    ref_rows = [dict(r) for r in rows]
-    for r in ref_rows:
-        pass  # encode_datum accepts raw micros ints directly
-    _assert_encodes_identical(MIXED, rows, pdf=pdf)
+    # ts arrives as a timestamp[us, UTC] column (the Spark-delivered
+    # shape); encode_datum takes the same raw micros ints
+    _assert_encodes_identical(MIXED, rows)
 
 
 def test_encoder_all_kinds_byte_identical():
@@ -422,24 +405,9 @@ def test_encoder_all_kinds_byte_identical():
                 "ns": None if i % 4 == 0 else "αβ" * (i % 3),
             }
         )
-    import pandas as pd
-
-    pdf = _rows_to_pdf(schema, rows)
-    # pin the dtypes Spark's serializer actually delivers: numpy for
-    # non-null numerics, OBJECT (python values + None) for nullable
-    # columns (pandas' own float64+NaN widening of int+None lists is
-    # NOT the Spark shape — and on it every encoder path raises, the
-    # vector one via fallback to the generated error)
-    pdf["b"] = pdf["b"].astype(bool)
-    pdf["i"] = pdf["i"].astype("int64")
-    pdf["l"] = pdf["l"].astype("int64")
-    pdf["f"] = pdf["f"].astype("float32")
-    pdf["d"] = pdf["d"].astype("float64")
-    import pandas as pd2
-
-    pdf["ni"] = pd2.Series([r["ni"] for r in rows], dtype=object)
-    pdf["ns"] = pd2.Series([r["ns"] for r in rows], dtype=object)
-    _assert_encodes_identical(schema, rows, pdf=pdf)
+    # Spark's Arrow types: int32 "i", float32 "f", nulls in the
+    # validity bitmaps of "ni" and "ns"
+    _assert_encodes_identical(schema, rows)
 
 
 def test_encoder_varint_boundaries_byte_identical():
@@ -458,7 +426,7 @@ def test_encoder_roundtrips_through_vector_decoder():
          "value": i / 7.0, "props": None if i % 2 else f"p{i}"}
         for i in range(2000)
     ]
-    blobs = ve.encode_pandas_to_arrow(_rows_to_pdf(MIXED, rows)).to_pylist()
+    blobs = _vector_encode(ve, _rows_to_batch(MIXED, rows))
     cols = vd.decode_blobs_arrow(blobs)
     assert cols["event_id"].to_pylist() == [r["event_id"] for r in rows]
     assert cols["props"].to_pylist() == [r["props"] for r in rows]
@@ -519,8 +487,6 @@ def test_fuzz_vector_codec_differential(case):
     DECODER must value-match the closure decoder on closure-encoded
     bytes, and the vector ENCODER must be byte-identical to the
     closure encoder — both directions, any shape."""
-    import pandas as pd
-
     from redshift_avro_spark.avroio.vectorized import (
         get_vector_decoder,
         get_vector_encoder,
@@ -548,25 +514,8 @@ def test_fuzz_vector_codec_differential(case):
 
     ve = get_vector_encoder(sj)
     assert ve is not None
-    pdf = pd.DataFrame(
-        {f"f{i}": pd.Series([r[f"f{i}"] for r in rows], dtype=object) for i in range(len(kinds))}
-    )
-    # pin numpy dtypes for non-nullable numeric columns (Spark's shape)
-    for i, (kind, nullable) in enumerate(kinds):
-        col = f"f{i}"
-        if not nullable and len(rows):
-            if kind in ("int", "long"):
-                pdf[col] = pdf[col].astype("int64")
-            elif kind == "double":
-                pdf[col] = pdf[col].astype("float64")
-            elif kind == "float":
-                pdf[col] = pdf[col].astype("float32")
-            elif kind == "boolean":
-                pdf[col] = pdf[col].astype(bool)
-    got_bytes = ve.encode_pandas_to_arrow(pdf).to_pylist() if len(rows) else []
-    want_bytes = blobs if len(rows) else []
-    # float32 columns: pandas float32 → python float32 value identical
-    assert got_bytes == want_bytes
+    # float32 columns: Arrow float32 holds the drawn float32 values exactly
+    assert _vector_encode(ve, _rows_to_batch(schema, rows)) == blobs
 
 
 @settings(max_examples=60, deadline=None, suppress_health_check=[HealthCheck.too_slow])

@@ -839,7 +839,10 @@ def _value_matcher(schema: AvroSchema) -> Callable[[Any], bool]:
         if lt in ("time-millis", "time-micros"):
             return lambda v: isinstance(v, dt.time)
         if lt in ("timestamp-millis", "timestamp-micros"):
-            return lambda v: isinstance(v, dt.datetime)
+            # a raw epoch int encodes as it does in a plain timestamp field
+            return lambda v: isinstance(v, dt.datetime) or (
+                isinstance(v, _INT_TYPES) and not isinstance(v, _BOOL_TYPES)
+            )
         if lt == "uuid":
             return lambda v: isinstance(v, (str, uuid_mod.UUID))
         return {

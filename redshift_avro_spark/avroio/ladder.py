@@ -22,6 +22,14 @@ re-runs that batch on the next tier, so a surprise costs time, never a
 value. PERMISSIVE gives a null row for each undecodable datum on every
 tier.
 
+Raw datums enter as spans: :meth:`LadderDecoder.decode_spans` takes
+one buffer and the ``(start, end)`` of each datum in it — an Arrow
+binary column's own data buffer (:func:`arrow_spans`), or the bodies a
+scanner found inside an envelope buffer. The vector tier decodes the
+spans in place; the generated and closure tiers get one slice per row.
+:meth:`~LadderDecoder.decode_blobs` joins its blobs into one buffer
+and decodes those spans, so both entries share one path.
+
 Decoders hand Spark Arrow on every tier: a RecordBatch whose schema is
 Spark's Arrow form of the reader schema (``arrow_schema``), built by
 one :func:`_record_batch`. Arrow keeps a double NaN as NaN and a
@@ -53,9 +61,9 @@ from .binary import (
 from .codegen import get_batch_encoder, get_batch_resolver
 from .convert import avro_to_spark_type, nullable_struct
 from .schema_model import parse_schema
-from .vectorized import VectorFallback, get_vector_decoder, get_vector_encoder
+from .vectorized import VectorFallback, get_vector_decoder, get_vector_encoder, join_blobs
 
-__all__ = ["LadderDecoder", "LadderEncoder", "get_decoder", "get_encoder"]
+__all__ = ["LadderDecoder", "LadderEncoder", "arrow_spans", "get_decoder", "get_encoder"]
 
 # rows the generated and closure tiers gather before the block path
 # emits a RecordBatch (a vector block is always one batch)
@@ -85,15 +93,30 @@ class LadderDecoder:
 
     def decode_blobs(self, blobs, permissive: bool = False, null_mask=None):
         """One datum per blob (None → a row of nulls) → RecordBatch of
-        ``arrow_schema``. ``null_mask`` (True = None blob) saves the
-        vector tier a scan."""
+        ``arrow_schema``: the blobs joined into one buffer, then
+        :meth:`decode_spans`. ``null_mask`` (True = None blob) saves a
+        scan."""
+        data, starts, ends, null_mask = join_blobs(blobs, null_mask)
+        return self.decode_spans(data, starts, ends, permissive, null_mask)
+
+    def decode_spans(self, buf, starts, ends, permissive: bool = False, null_mask=None):
+        """Datum i is ``buf[starts[i]:ends[i]]`` → RecordBatch of
+        ``arrow_schema``. ``buf`` is any buffer-protocol object (bytes,
+        a pyarrow Buffer, a uint8 array); ``null_mask`` (True = null
+        row) gives a row of nulls. The vector tier decodes the spans in
+        place; the other tiers get one slice per row."""
         if self._vector is not None:
             try:
-                arrays = self._vector.decode_blobs_arrow(blobs, null_mask)
+                arrays = self._vector.decode_spans_arrow(buf, starts, ends, null_mask)
             except VectorFallback:
                 pass
             else:
-                return _record_batch(arrays, len(blobs), self.arrow_schema)
+                return _record_batch(arrays, len(starts), self.arrow_schema)
+        view = memoryview(np.frombuffer(buf, dtype=np.uint8))
+        blobs = [view[s:e] for s, e in zip(np.asarray(starts).tolist(), np.asarray(ends).tolist())]
+        if null_mask is not None:
+            for i in np.flatnonzero(null_mask).tolist():
+                blobs[i] = None
         cols = self._new_columns()
         if self._generated is not None:
             self._generated.decode_blobs(blobs, cols, permissive)
@@ -154,6 +177,26 @@ class LadderDecoder:
                 if n in arrow_schema.names
             }
         return _record_batch(named, len(cols[0]), arrow_schema)
+
+
+def arrow_spans(arr):
+    """pyarrow binary (or large_binary) Array → ``(buf, starts, ends,
+    null_mask)`` for :meth:`LadderDecoder.decode_spans`: cell i is
+    ``buf[starts[i]:ends[i]]`` of the array's own data buffer, read
+    through its offsets (``arr.offset`` taken into account) with no
+    per-cell object. ``null_mask`` is None when no cell is null."""
+    import pyarrow as pa
+
+    n = len(arr)
+    _, offsets, data = arr.buffers()
+    if n == 0 or offsets is None:
+        empty = np.zeros(0, dtype=np.int64)
+        return b"", empty, empty, None
+    dtype = np.dtype(np.int64 if pa.types.is_large_binary(arr.type) else np.int32)
+    offs = np.frombuffer(offsets, dtype=dtype, count=n + 1, offset=arr.offset * dtype.itemsize)
+    offs = offs.astype(np.int64)
+    null_mask = arr.is_null().to_numpy(zero_copy_only=False) if arr.null_count else None
+    return (b"" if data is None else data), offs[:-1], offs[1:], null_mask
 
 
 def _record_batch(columns: dict, n: int, arrow_schema):

@@ -11,8 +11,9 @@ This module decodes WHOLE BLOB BATCHES with numpy array passes (the
 raw-datum path: one Avro datum per cell — the reference's Redshift
 streaming-ingestion shape, README.md:12):
 
-- All blobs are joined into one contiguous ``uint8`` buffer; per-row
-  cursors live in an int64 ``pos`` array.
+- Each datum is a ``(start, end)`` span of one contiguous ``uint8``
+  buffer: an Arrow binary column's data buffer, or a batch's blobs
+  joined. Per-row cursors live in an int64 ``pos`` array.
 - Varints decode as an iterative frontier: each pass reads ONE byte for
   every still-continuing row (``arr[pos]``), accumulates ``(b & 0x7f)
   << shift`` and advances — a 1-byte varint costs one vector pass, so a
@@ -58,7 +59,7 @@ from .schema_model import (
     parse_schema,
 )
 
-__all__ = ["VectorFallback", "VectorizedBlobDecoder", "get_vector_decoder"]
+__all__ = ["VectorFallback", "VectorizedBlobDecoder", "get_vector_decoder", "join_blobs"]
 
 _TS_MIN_US = -62135596800000000
 _TS_MAX_US = 253402300799999999
@@ -437,7 +438,7 @@ class VectorizedBlobDecoder:
         Avro container block after decompression) → dict name →
         pyarrow.Array of length count.
 
-        The S2 container twin of :meth:`decode_blobs_arrow`: the block
+        The S2 container twin of :meth:`decode_spans_arrow`: the block
         is segmented with composed vectorized skip tables
         (:meth:`_segment`) and the fields then decode with the same
         frontier passes as the raw-datum path. The final cursor of
@@ -462,48 +463,41 @@ class VectorizedBlobDecoder:
 
     # -- whole batch ---------------------------------------------------
 
-    def decode_blobs_arrow(self, blobs, null_mask=None):
-        """blobs (sequence of bytes-like / None) → dict name →
-        pyarrow.Array (length n; None blobs → null in every column).
-        ``null_mask`` (bool array, True = null cell) skips the
-        per-blob None scan when the caller already has one (Arrow's
-        ``is_null()`` computes it at C speed).
+    def decode_spans_arrow(self, buf, starts, ends, null_mask=None):
+        """Datum i is ``buf[starts[i]:ends[i]]`` (any buffer-protocol
+        object; spans may sit anywhere in it, in any order) → dict name
+        → pyarrow.Array of length n. ``null_mask`` (bool array, True =
+        null row) gives a row of nulls and leaves that span unread.
 
         Raises VectorFallback on anything the vector path can't decode
         exactly."""
         import pyarrow as pa
 
-        n = len(blobs)
-        if null_mask is None:
-            null_mask = np.fromiter(
-                (b is None for b in blobs), dtype=bool, count=n
-            )
-        present = ~null_mask
-        if null_mask.any():
-            parts = [b for b, ok in zip(blobs, present) if ok]
-            lens = np.zeros(n, dtype=np.int64)
-            lens[present] = np.fromiter(
-                map(len, parts), dtype=np.int64, count=len(parts)
-            )
-        else:
-            parts = blobs if isinstance(blobs, list) else list(blobs)
-            lens = np.fromiter(map(len, parts), dtype=np.int64, count=n)
-        data = b"".join(parts)
-        arr = np.frombuffer(data, dtype=np.uint8)
-        ends = np.zeros(n, dtype=np.int64)
-        np.cumsum(lens, out=ends)
-        pos = ends - lens  # per-row start offsets (empty span if None)
-        live = np.flatnonzero(present)
-
+        arr = buf if isinstance(buf, np.ndarray) else np.frombuffer(buf, dtype=np.uint8)
+        n = len(starts)
+        pos = np.asarray(starts, dtype=np.int64)
+        ends = np.asarray(ends, dtype=np.int64)
+        live = (
+            np.arange(n, dtype=np.int64) if null_mask is None else np.flatnonzero(~null_mask)
+        )
         out, _final = self._decode_fields(pa, arr, pos, ends, live, n)
         return out
+
+    def decode_blobs_arrow(self, blobs, null_mask=None):
+        """blobs (sequence of bytes-like / None) → dict name →
+        pyarrow.Array (length n; None blobs → null in every column):
+        the blobs joined into one buffer, then :meth:`decode_spans_arrow`.
+        ``null_mask`` (bool array, True = null cell) skips the
+        per-blob None scan when the caller already has one."""
+        data, starts, ends, null_mask = join_blobs(blobs, null_mask)
+        return self.decode_spans_arrow(data, starts, ends, null_mask)
 
     def decode_blobs_to_pandas(self, blobs, null_mask=None):
         """blobs → dict name → pandas Series (numpy int64/float/bool and
         M8 for non-null columns, object-with-None for anything nullable,
         object str/bytes for text).
 
-        No engine path calls this: Spark gets :meth:`decode_blobs_arrow`
+        No engine path calls this: Spark gets :meth:`decode_spans_arrow`
         through the decoder ladder. It is kept only for the benchmark's
         flat-decode and ``accepted_share`` probes (perfbench/probes.py)."""
         import pandas as pd
@@ -527,6 +521,25 @@ class VectorizedBlobDecoder:
             else:
                 out[name] = pd.Series(a.to_numpy(zero_copy_only=False))
         return out
+
+
+def join_blobs(blobs, null_mask=None):
+    """blobs (bytes-like / None) → (joined bytes, int64 starts, int64
+    ends, bool null mask): blob i is ``data[starts[i]:ends[i]]``, and a
+    None blob is an empty span with its mask bit set."""
+    n = len(blobs)
+    if null_mask is None:
+        null_mask = np.fromiter((b is None for b in blobs), dtype=bool, count=n)
+    if null_mask.any():
+        present = ~null_mask
+        parts = [b for b, ok in zip(blobs, present) if ok]
+        lens = np.zeros(n, dtype=np.int64)
+        lens[present] = np.fromiter(map(len, parts), dtype=np.int64, count=len(parts))
+    else:
+        parts = blobs if isinstance(blobs, list) else list(blobs)
+        lens = np.fromiter(map(len, parts), dtype=np.int64, count=n)
+    ends = np.cumsum(lens, dtype=np.int64)
+    return b"".join(parts), ends - lens, ends, null_mask
 
 
 def _build(schema: AvroSchema) -> Optional[VectorizedBlobDecoder]:

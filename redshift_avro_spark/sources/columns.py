@@ -46,7 +46,7 @@ from ..avroio.block_codecs import get_codec
 from ..avroio.container import ContainerHeader, iter_container, iter_raw_blocks, read_header
 from ..avroio.convert import avro_to_spark_type, df_schema_to_avro, nullable_struct
 from ..avroio.jsonio import datum_to_json
-from ..avroio.ladder import get_decoder, get_encoder
+from ..avroio.ladder import arrow_spans, get_decoder, get_encoder
 from ..avroio.schema_model import AvroSchema, parse_schema
 
 __all__ = [
@@ -123,8 +123,8 @@ def from_avro(
     def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         dec = get_decoder(writer_json, reader_json)
         for arr in batches:
-            mask = arr.is_null().to_numpy(zero_copy_only=False)
-            yield dec.decode_blobs(arr.to_pylist(), permissive, mask).to_struct_array()
+            buf, starts, ends, nulls = arrow_spans(arr)
+            yield dec.decode_spans(buf, starts, ends, permissive, nulls).to_struct_array()
 
     return _decode(col)
 

@@ -27,11 +27,27 @@ these as pandas UDFs so a DataFrame pipeline can express
 ``mapInArrow`` stage when the pipeline only needs the decoded body —
 each chained UDF costs a JVM↔Python round trip, and the fused form pays
 it once, with Arrow in and out and no pandas in between.
+
+The fused stage does not build the parsers' per-record objects. A span
+scanner walks each cell of a batch's Arrow data buffer, KPL frame and
+then Spring header block, and emits the ``(start, end)`` of every Avro
+body inside that buffer; the decoder ladder's vector tier then decodes
+the bodies in place. The scanner takes only the common well-formed
+shape (key-table and record fields, records of key indexes and
+``data``, header walks in bounds). Any other cell — tags, other wire
+types, multi-byte tags, a truncation, a bad key or header — goes
+through :func:`decode_kpl_aggregate` and :func:`parse_spring_message`
+as a whole, so it yields their rows or raises their error. Header
+blocks are still validated: each distinct block of a batch is parsed
+once by :func:`parse_spring_message`. The column functions and the
+Redshift UDF keep the exact parsers, since they return headers and
+keys.
 """
 
 from __future__ import annotations
 
 import json
+from array import array
 from dataclasses import dataclass, field
 from typing import Iterator, Optional, Union
 
@@ -347,6 +363,164 @@ def explode_kpl(col: Union[str, Column]) -> Column:
     return _deagg(col)
 
 
+# --- fused unwrap: span scanner ---------------------------------------------
+
+
+def _varint_at(d: bytes, p: int, end: int) -> tuple[int, int]:
+    """Unsigned varint at ``d[p]`` that must end before ``end`` →
+    (value, next position), or (-1, p) when it runs past ``end``."""
+    n = shift = 0
+    while p < end:
+        b = d[p]
+        p += 1
+        n |= (b & 0x7F) << shift
+        if b < 0x80:
+            return n, p
+        shift += 7
+    return -1, p
+
+
+def _spring_end(d: bytes, p: int, end: int) -> int:
+    """End of the Spring header block starting with the magic byte at
+    ``d[p]``, or -1 when its walk would leave ``d[p:end]``."""
+    p += 1
+    if p >= end:
+        return -1
+    count = d[p]
+    p += 1
+    for _ in range(count):
+        if p >= end:
+            return -1
+        p += 1 + d[p]
+        if p + 4 > end:
+            return -1
+        p += 4 + int.from_bytes(d[p : p + 4], "big")
+        if p > end:
+            return -1
+    return p
+
+
+def _scan_cell(
+    d: bytes, p: int, e: int, starts: array, ends: array, seen: set, last: bytes
+) -> Optional[bytes]:
+    """Walk the KPL aggregate ``d[p:e]`` and append the ``(start, end)``
+    of every sub-record's Avro body, its Spring header block skipped,
+    to ``starts``/``ends``.
+
+    Returns None on any shape the walk does not take — the caller drops
+    this cell's partial spans and runs the exact parsers on it: a field
+    other than the two key tables and records, a record field other
+    than the two key indexes and ``data``, a multi-byte tag, a
+    truncation, an invalid-UTF-8 key, or a header block that
+    :func:`parse_spring_message` rejects. ``seen`` holds the header
+    blocks validated so far in this batch, ``last`` the latest of them;
+    a record starting with ``last`` skips it without a walk (the walk
+    only reads the block's own bytes). Returns the new ``last``."""
+    nlast = len(last)
+    while p < e:
+        tag = d[p]
+        if p + 1 >= e:
+            return None
+        ln = d[p + 1]
+        p += 2
+        if ln >= 0x80:
+            ln, p = _varint_at(d, p - 1, e)
+        q = p + ln
+        if ln < 0 or q > e:
+            return None
+        if tag == 0x1A:  # Record: the last ``data`` wins, as in _parse_record
+            ds = de = p
+            while p < q:
+                t = d[p]
+                if p + 1 >= q:
+                    return None
+                v = d[p + 1]
+                p += 2
+                if v >= 0x80:
+                    v, p = _varint_at(d, p - 1, q)
+                    if v < 0:
+                        return None
+                if t == 0x1A:
+                    ds, de = p, p + v
+                    if de > q:
+                        return None
+                    p = de
+                elif t != 0x08 and t != 0x10:
+                    return None
+            if ds < de and d[ds] == SPRING_MAGIC:
+                if d.startswith(last, ds) and ds + nlast <= de:
+                    ds += nlast
+                else:
+                    h = _spring_end(d, ds, de)
+                    if h < 0:
+                        return None
+                    block = d[ds:h]
+                    if block not in seen:
+                        try:
+                            parse_spring_message(block)
+                        except (ValueError, RecursionError):  # the exact path raises it
+                            return None
+                        seen.add(block)
+                    last, nlast, ds = block, h - ds, h
+            starts.append(ds)
+            ends.append(de)
+        elif tag == 0x0A or tag == 0x12:  # key tables: UTF-8 checked, dropped
+            try:
+                d[p:q].decode("utf-8")
+            except UnicodeDecodeError:
+                return None
+        else:
+            return None
+        p = q
+    return last
+
+
+def _unwrap_batch(dec, cells):
+    """One Arrow batch of KPL cells (binary, nulls skipped) → the
+    RecordBatch of every sub-record's decoded Avro body, in row order.
+
+    Each cell is scanned to body spans of the batch's data buffer
+    (:func:`_scan_cell`, on one bytes copy of it) and all spans decode
+    in one :meth:`~..avroio.ladder.LadderDecoder.decode_spans` call on
+    the Arrow buffer itself. A cell the scanner declines goes through
+    ``decode_kpl_aggregate`` → ``parse_spring_message`` as a whole, so
+    it gives the same bodies or raises the same error; its bodies are
+    appended past the buffer's end."""
+    import numpy as np
+
+    from ..avroio.ladder import arrow_spans
+
+    buf, lo, hi, null_mask = arrow_spans(cells)
+    d = buf if isinstance(buf, bytes) else buf.to_pybytes()
+    starts = array("q")
+    ends = array("q")
+    seen: set = set()
+    last = b"\x00"  # never a header block: those start with the magic byte
+    tail: list = []
+    tail_end = len(d)
+    nulls = null_mask.tolist() if null_mask is not None else [False] * len(lo)
+    for p, e, null in zip(lo.tolist(), hi.tolist(), nulls):
+        if null:
+            continue
+        mark = len(starts)
+        scanned = _scan_cell(d, p, e, starts, ends, seen, last)
+        if scanned is not None:
+            last = scanned
+            continue
+        del starts[mark:], ends[mark:]
+        for rec in decode_kpl_aggregate(d[p:e]).records:
+            _, body = parse_spring_message(rec.data)
+            tail.append(body)
+            starts.append(tail_end)
+            tail_end += len(body)
+            ends.append(tail_end)
+    data = b"".join([d, *tail]) if tail else buf
+    del d
+    return dec.decode_spans(
+        data, np.frombuffer(starts, dtype=np.int64), np.frombuffer(ends, dtype=np.int64)
+    )
+
+
 def unwrap_kpl_spring_avro(df, col: str, schema):
     """Fused envelope unwrap: KPL aggregate bytes → sub-records → Spring
     headers stripped → Avro datum decoded, in ONE ``mapInArrow`` stage
@@ -354,10 +528,18 @@ def unwrap_kpl_spring_avro(df, col: str, schema):
 
     Equivalent to ``explode(explode_kpl(col)) → extract_spring_headers →
     from_avro`` but pays the Python/Arrow stage cost once instead of
-    three times; each batch's Avro bodies decode in one call to the
-    decoder ladder (avroio/ladder.py). Headers and partition keys are
-    dropped — use the composable column functions when the pipeline
-    needs them."""
+    three times. Each batch's cells are scanned to the byte spans of
+    their Avro bodies inside the batch's own data buffer, and the
+    bodies decode there in one call to the decoder ladder
+    (avroio/ladder.py) — no per-record bytes, dataclass or JSON header
+    parse. The scanner takes the common well-formed shape; any other
+    cell (tags, other wire types or fields, truncation, a header block
+    that fails to parse) goes through :func:`decode_kpl_aggregate` and
+    :func:`parse_spring_message` as a whole, so rows and errors are
+    theirs. Each distinct header block of a batch is still parsed once,
+    so a bad key or JSON value raises as before. Headers and partition
+    keys are dropped — use the composable column functions when the
+    pipeline needs them."""
     from ..avroio.convert import avro_to_spark_type, nullable_struct
     from ..avroio.ladder import get_decoder
     from ..avroio.schema_model import AvroSchema
@@ -370,20 +552,8 @@ def unwrap_kpl_spring_avro(df, col: str, schema):
         raise TypeError("unwrap_kpl_spring_avro requires a record schema")
 
     def run(batches: Iterator) -> Iterator:
-        import numpy as np
-
         dec = get_decoder(schema_json)
         for batch in batches:
-            # unwrap the KPL/Spring envelopes first (per-record Python —
-            # protobuf/header parsing), collecting the Avro bodies so
-            # the datum decode itself can run as one vectorized batch
-            bodies: list = []
-            for blob in batch.column(0).to_pylist():
-                if blob is None:
-                    continue
-                for rec in decode_kpl_aggregate(blob).records:
-                    _, body = parse_spring_message(rec.data)
-                    bodies.append(body)
-            yield dec.decode_blobs(bodies, null_mask=np.zeros(len(bodies), dtype=bool))
+            yield _unwrap_batch(dec, batch.column(0))
 
     return df.select(col).mapInArrow(run, struct_type)

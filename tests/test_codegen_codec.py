@@ -16,7 +16,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from redshift_avro_spark.avroio import parse_schema
+from redshift_avro_spark.avroio import parse_schema, write_container
 from redshift_avro_spark.avroio.binary import (
     AvroDecodeError,
     BinaryReader,
@@ -205,6 +205,32 @@ class TestEncodeParity:
             {"a": 1, "b": "p"},
             {"a": 2, "b": "q"},
         ]
+
+    @pytest.mark.parametrize("unit", ["timestamp-millis", "timestamp-micros"])
+    @pytest.mark.parametrize("nullable", [True, False])
+    def test_epoch_int_timestamp_matches_generated(self, unit, nullable):
+        """A raw epoch int takes a timestamp field on the closure tier,
+        inside a nullable union too, with the generated tier's bytes."""
+        ts = {"type": "long", "logicalType": unit}
+        sch = parse_schema(
+            {
+                "type": "record",
+                "name": "T",
+                "fields": [{"name": "ts", "type": ["null", ts] if nullable else ts}],
+            }
+        )
+        values = [0, dt.datetime(2024, 1, 2, 3, 4, 5, 678000, tzinfo=dt.timezone.utc)]
+        if nullable:
+            values.append(None)
+        closure = compile_encoder(sch)
+        got = []
+        for v in values:
+            w = BinaryWriter()
+            closure(w, {"ts": v})
+            got.append(w.getvalue())
+        generated = get_batch_encoder(json.dumps(sch.to_json()))
+        assert got == generated.encode_columns([values], len(values))
+        assert write_container([{"ts": 0}], sch)  # the container path takes it too
 
 
 class TestTypedColumnSeries:

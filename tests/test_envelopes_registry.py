@@ -30,6 +30,8 @@ from redshift_avro_spark.sources.envelopes import (
     KplAggregate,
     KplRecord,
     KplTag,
+    _len_field,
+    _varint_field,
     build_spring_message,
     encode_kpl_aggregate,
     encode_kpl_simple,
@@ -282,3 +284,150 @@ class TestEncodeKplSimple:
             )
         )
         assert encode_kpl_simple("pk", datas) == general
+
+
+def _spring(headers: list, body: bytes) -> bytes:
+    """Spring message from raw (key bytes, value bytes) header pairs,
+    which need not be valid UTF-8 or JSON."""
+    out = bytearray([0xFF, len(headers)])
+    for k, v in headers:
+        out += bytes([len(k)]) + k + len(v).to_bytes(4, "big") + v
+    return bytes(out) + body
+
+
+def _user(i: int, name: str = "") -> bytes:
+    return encode_datum(
+        USER_SCHEMA,
+        {"name": name or f"user{i}", "favorite_number": i, "favorite_color": None if i % 2 else "red"},
+    )
+
+
+_CT = [(b"contentType", b'"application/avro"')]
+
+
+def _cell(datas: list) -> bytes:
+    return encode_kpl_aggregate(
+        KplAggregate(partition_key_table=["pk"], records=[KplRecord(data=d) for d in datas])
+    )
+
+
+def _plain(i: int) -> bytes:
+    return _cell([_spring(_CT, _user(i)), _spring(_CT, _user(i + 1))])
+
+
+# the block ends with 0x0A, the first byte of the next cell, so a body
+# cut one byte short of it still starts with the whole block in the buffer
+_NL = _spring([(b"n", b"1\n")], b"")
+
+SCANNER_CASES = {
+    "plain": [_plain(0), _plain(2)],
+    "tags": [
+        encode_kpl_aggregate(
+            KplAggregate(
+                partition_key_table=["pk"],
+                # the tag's key bytes read like a ``data`` field if the tag is not skipped
+                records=[KplRecord(data=_spring(_CT, _user(1)), tags=[KplTag("\x1a\x01Z")])],
+            )
+        )
+    ],
+    "explicit_hash_keys": [
+        encode_kpl_aggregate(
+            KplAggregate(
+                partition_key_table=["pk-a", "pk-b"],
+                explicit_hash_key_table=["123", "456"],
+                records=[
+                    KplRecord(partition_key_index=1, explicit_hash_key_index=1, data=_spring(_CT, _user(1))),
+                    KplRecord(partition_key_index=0, explicit_hash_key_index=0, data=_user(2)),
+                ],
+            )
+        )
+    ],
+    "two_byte_length_varint": [_cell([_spring(_CT, _user(5, "x" * 200)), _user(6, "y" * 300)])],
+    "no_magic": [_cell([_user(1), _user(2)])],
+    "magic_zero_headers": [_cell([_spring([], _user(1)), _spring([], _user(2))])],
+    "distinct_header_blocks": [
+        _cell([_spring([(b"k", f'"{i}"'.encode())], _user(i)) for i in range(5)])
+    ],
+    "record_without_data": [encode_kpl_aggregate(KplAggregate(["pk"])) + b"\x1a\x02\x08\x00"],
+    "last_data_wins": [
+        _len_field(1, b"pk")
+        + _len_field(3, _len_field(3, b"\x00\x00") + _len_field(3, _user(9)) + _varint_field(1, 0))
+    ],
+    "truncated_cell": [_plain(0)[:-3]],
+    "truncated_length_varint": [_plain(0) + b"\x1a\x85"],
+    "truncated_header_block": [_cell([_spring(_CT, b"")[:-2]])],
+    "header_cut_at_cell_end": [_cell([_NL + _user(1), _NL[:-1]]), _plain(0)],
+    "non_json_header_value": [_cell([_spring(_CT, _user(1)), _spring([(b"k", b"{oops")], _user(2))])],
+    "invalid_utf8_header_key": [_cell([_spring([(b"\xff\xfe", b'"v"')], _user(1))])],
+    "invalid_utf8_partition_key": [b"\x0a\x02\xff\xfe" + _plain(0)],
+    "unknown_aggregate_field": [_plain(0) + b"\x22\x01x"],
+    "i64_wire_type": [_plain(0) + b"\x29" + bytes(8)],
+    "multi_byte_tag": [_plain(0) + b"\x82\x01\x01x"],
+    "not_avro_body": [_cell([_spring(_CT, b"\x07")])],
+    "null_cells": [None, _plain(0), None, _plain(4), None],
+    "mixed_scanned_and_exact": [
+        _plain(0),
+        encode_kpl_aggregate(
+            KplAggregate(["pk"], records=[KplRecord(data=_user(7), tags=[KplTag("t")])])
+        ),
+        None,
+        _plain(10),
+        _cell([_user(20)]) + b"\x22\x00",
+        _plain(30),
+    ],
+}
+
+
+def _exact_unwrap(dec, cells: list):
+    """The reference the fused path must equal: the exact KPL and Spring
+    parsers, then one ``decode_blobs`` over the bodies."""
+    bodies = [
+        parse_spring_message(rec.data)[1]
+        for cell in cells
+        if cell is not None
+        for rec in decode_kpl_aggregate(cell).records
+    ]
+    return dec.decode_blobs(bodies)
+
+
+def _outcome(fn):
+    try:
+        return "rows", fn()
+    except Exception as exc:  # noqa: BLE001 — the exception IS the outcome
+        return "error", (type(exc), str(exc))
+
+
+class TestFusedUnwrapScanner:
+    """The fused unwrap's span scanner against the exact parsers: the
+    same rows, or the same exception type and message, on well-formed,
+    unusual and malformed cells."""
+
+    @pytest.mark.parametrize("case", list(SCANNER_CASES))
+    def test_matches_exact_parsers(self, case):
+        import pyarrow as pa
+
+        from redshift_avro_spark.avroio.ladder import get_decoder
+        from redshift_avro_spark.sources.envelopes import _unwrap_batch
+
+        cells = SCANNER_CASES[case]
+        dec = get_decoder(json.dumps(USER_SCHEMA.to_json()))
+        want = _outcome(lambda: _exact_unwrap(dec, cells))
+        got = _outcome(lambda: _unwrap_batch(dec, pa.array(cells, pa.binary())))
+        assert got[0] == want[0], (got, want)
+        if want[0] == "rows":
+            assert got[1].equals(want[1])
+            assert got[1].num_rows > 0
+        else:
+            assert got[1] == want[1]
+
+    def test_sliced_batch(self):
+        """A sliced cell column is read through its offset."""
+        import pyarrow as pa
+
+        from redshift_avro_spark.avroio.ladder import get_decoder
+        from redshift_avro_spark.sources.envelopes import _unwrap_batch
+
+        cells = SCANNER_CASES["mixed_scanned_and_exact"]
+        dec = get_decoder(json.dumps(USER_SCHEMA.to_json()))
+        got = _unwrap_batch(dec, pa.array(cells, pa.binary()).slice(1, 4))
+        assert got.equals(_exact_unwrap(dec, cells[1:5]))

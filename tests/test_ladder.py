@@ -167,11 +167,33 @@ def test_shape_picks_its_tier(shape):
         assert dec._generated is None and dec._closure is not None
 
 
-@pytest.mark.parametrize("shape", list(SHAPES))
-def test_blob_path_matches_closure_reference(shape):
+def _shared_spans(blobs: list):
+    """blobs (None → a null row) as spans of one shared buffer, each
+    behind a junk byte, so no span starts where a join would put it."""
+    buf = bytearray()
+    starts, ends = [], []
+    for b in blobs:
+        buf += b"\xee"
+        starts.append(len(buf))
+        buf += b or b""
+        ends.append(len(buf))
+    null_mask = np.array([b is None for b in blobs])
+    return bytes(buf), np.array(starts), np.array(ends), null_mask
+
+
+@pytest.mark.parametrize(
+    "shape, path",
+    [(s, "blobs") for s in SHAPES] + [(s, "spans") for s in SHAPES],
+    ids=[*SHAPES, *(f"{s}-spans" for s in SHAPES)],
+)
+def test_blob_path_matches_closure_reference(shape, path):
     dec, blobs, reference, arrow_schema, _ = _case(shape)
     want_rows = [reference(BinaryReader(b)) for b in blobs]
-    got = dec.decode_blobs(blobs + [None])
+    if path == "blobs":
+        got = dec.decode_blobs(blobs + [None])
+    else:
+        buf, starts, ends, null_mask = _shared_spans(blobs + [None])
+        got = dec.decode_spans(buf, starts, ends, null_mask=null_mask)
     assert got.schema == arrow_schema
     assert got.to_pydict() == _arrow_columns(want_rows + [None], arrow_schema)
 

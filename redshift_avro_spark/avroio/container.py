@@ -87,6 +87,14 @@ def read_header(data: bytes) -> ContainerHeader:
     )
 
 
+def _check_block_header(count: int, size: int) -> None:
+    """Reject a block header whose datum count or byte length is
+    negative: only corrupt varints read that way, and a negative count
+    would make a decoder silently yield nothing (or fail untyped)."""
+    if count < 0 or size < 0:
+        raise AvroDecodeError(f"corrupt block header (count={count}, size={size})")
+
+
 def iter_raw_blocks(data: bytes, pos: int, sync: bytes) -> Iterator[tuple[int, bytes]]:
     """Yield (datum_count, compressed_payload) for each block from ``pos``."""
     end = len(data)
@@ -94,9 +102,7 @@ def iter_raw_blocks(data: bytes, pos: int, sync: bytes) -> Iterator[tuple[int, b
     while r.pos < end:
         count = r.read_long()
         size = r.read_long()
-        if count < 0 or size < 0:  # corrupt varints — read_fixed also guards,
-            # but a negative count would silently yield nothing
-            raise AvroDecodeError(f"corrupt block header (count={count}, size={size})")
+        _check_block_header(count, size)
         payload = r.read_fixed(size)
         marker = r.read_fixed(SYNC_SIZE)
         if marker != sync:
@@ -399,6 +405,7 @@ def iter_block_spans(
         size = _read_varint_from(fobj)
         if size is None:
             raise AvroDecodeError("truncated block header")
+        _check_block_header(count, size)
         payload = fobj.read(size)
         if len(payload) != size:
             raise AvroDecodeError("truncated block payload")

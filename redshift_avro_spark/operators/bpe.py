@@ -57,10 +57,11 @@ def corpus_strings(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
 
 def stage_corpus(corpus: DataFrame) -> DataFrame:
-    """Lazily staged corpus (label ``bpe_corpus``): the next action
-    that reads it also writes it, so a learn round costs one corpus
-    pass instead of two."""
-    return materialize(corpus, label="bpe_corpus", default="checkpoint", eager=False)
+    """Staged corpus (label ``bpe_corpus``), so a learn round's pair
+    count and token count read it instead of recomputing it. Staging it
+    on first read instead measured within run-to-run spread on 4 cores
+    (SCALING.md, "Materialization boundaries")."""
+    return materialize(corpus, label="bpe_corpus", default="checkpoint")
 
 
 def learn_bpe_merges(
@@ -109,7 +110,7 @@ def learn_bpe_merges(
             .limit(1)
             .collect()
         )
-        if prev is not given:  # that collect staged `corpus`; its source can go
+        if prev is not given:  # `corpus` is staged; its source can go
             release(prev)
         if not top:
             break

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .staging import materialize, release
+from .staging import materialize, release, spread_small_input
 
 __all__ = [
     "content_hash",
@@ -145,33 +145,14 @@ def minhash_signatures_df(
 ) -> DataFrame:
     """(__id, sig) rows: the MinHash signature per document, computed
     through STAGED projections (words → shingles → md5 digests → two
-    32-bit lanes → signature) with a repartition first: a single small
-    input file would otherwise evaluate the whole md5 workload on one
-    core, and the staging keeps each array materialized once per row
-    instead of re-derived inside every lane's lambda — the
-    :func:`minhash_signature` COLUMN form re-evaluates its nested
-    higher-order lambdas per lane and measured ~12 ms/doc vs this
-    path's microseconds (q175's round-6 budget regression traced to
-    exactly that). cores/2 measured best at sf0.1 (cores×2's ~80-doc
-    tasks under-amortize task overhead: 0.42 s vs 0.36 s for the
-    signature stage).
-
-    The repartition is CONDITIONAL on the input's split count (round
-    11, guide §2.4 — "a repartition(n) someone added for parallelism"
-    is the canonical accidental shuffle): it exists to spread the md5
-    workload when the input arrives as one or two small file splits
-    (every local fixture), but for real multi-split input it shuffled
-    the full TEXT column — the heaviest bytes in the frame — for no
-    benefit, since Spark's own scan sizing already yields right-sized
-    tasks and the band aggregation downstream shuffles only 8-byte
-    lanes. ``inputFiles()`` is a ~10 ms driver-side probe; frames
-    whose lineage is not file-rooted (checkpoint-backed) report zero
-    files and keep the spread, i.e. exactly the previous behavior."""
-    n_part = max(2, df.sparkSession.sparkContext.defaultParallelism // 2)
-    try:
-        n_input = len(df.inputFiles())
-    except Exception:  # non-file-rooted lineage → unknown → spread
-        n_input = 0
+    32-bit lanes → signature), spread first by
+    :func:`~.staging.spread_small_input` so a single small input file
+    does not evaluate the whole md5 workload on one core. The staging
+    keeps each array materialized once per row instead of re-derived
+    inside every lane's lambda — the :func:`minhash_signature` COLUMN
+    form re-evaluates its nested higher-order lambdas per lane and
+    measured ~12 ms/doc vs this path's microseconds (q175's round-6
+    budget regression traced to exactly that)."""
     words = _words("__text")
     shingles = (
         f"transform(sequence(1, size(__w) - {shingle_k - 1}), "
@@ -181,9 +162,9 @@ def minhash_signatures_df(
         f"array_min(zip_with(__h1, __h2, (x, y) -> ({a} * x + {b} * y) % {_MH_P}))"
         for a, b in _MH_COEFFS[:n_hashes]
     )
-    src = df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text"))
-    if n_input < n_part:
-        src = src.repartition(n_part, "__id")
+    src = spread_small_input(
+        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__text")), "__id"
+    )
     return (
         src.select("__id", F.expr(words).alias("__w"))
         .where(F.size("__w") >= shingle_k)

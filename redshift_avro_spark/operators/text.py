@@ -797,8 +797,11 @@ def source_overlap(
     Both regimes ride the same 8-byte md5 BIGINT gram lane from birth
     (both engines hash the identical window string, so counts stay
     exact while shuffles move 8-byte keys, not ~25-char strings).
+    Input read from a few small files is spread on ``doc_col`` first
+    (:func:`~.staging.spread_small_input`); multi-file input keeps its
+    scan partitioning.
     """
-    from .staging import materialize
+    from .staging import materialize, spread_small_input
 
     w = F.expr(_WORDS.format(c=text_col))
     # bind the split ONCE (single-element-array lambda): the inline
@@ -815,9 +818,8 @@ def source_overlap(
     # spread the md5-per-window workload first: a single small input
     # file otherwise evaluates the whole gram fan-out on ONE core; the
     # exchange is absorbed by the aggregation that follows anyway
-    n_part = max(2, docs.sparkSession.sparkContext.defaultParallelism // 2)
     occ = (
-        docs.repartition(n_part, doc_col)
+        spread_small_input(docs, doc_col)
         .where(F.size(w) >= window)
         .select(source_col, F.explode(F.expr(grams_expr)).alias("gram"))
     )
@@ -922,9 +924,11 @@ def gram_novelty(
     100 TB shape: grams ride the 8-byte md5 BIGINT lane from birth;
     the corpus pays one ``(source, gram)`` DISTINCT and one per-gram
     ``MIN(source)`` aggregation — both uniform-key shuffles with
-    map-side partials, nothing pairwise. The rank/cumulative windows
-    run over the ≤ |sources| summary rows (the single-partition
-    window is bounded at the source count by construction)."""
+    map-side partials, nothing pairwise; input read from a few small
+    files is spread on ``doc_col`` first, as in :func:`source_overlap`.
+    The rank/cumulative windows run over the ≤ |sources| summary rows
+    (the single-partition window is bounded at the source count by
+    construction)."""
     w = F.expr(_WORDS.format(c=text_col))
     # bind the split ONCE (single-element-array lambda) — same
     # O(L²)-interpreted-lambda fix as source_overlap
@@ -935,15 +939,14 @@ def gram_novelty(
         f"array_join(slice(ws, i, {window}), ' ')"
         f"), 1, 15), 16, 10) AS BIGINT)))[0]"
     )
-    from .staging import materialize
+    from .staging import materialize, spread_small_input
 
-    n_part = max(2, docs.sparkSession.sparkContext.defaultParallelism // 2)
     # materialized: the gram explode + DISTINCT (the expensive stage)
     # feeds BOTH the per-source totals and the per-gram MIN — without
     # the boundary the whole fan-out is planned twice (the
     # source_overlap gsets rule)
     dist = materialize(
-        docs.repartition(n_part, doc_col)
+        spread_small_input(docs, doc_col)
         .where(F.size(w) >= window)
         .select(source_col, F.explode(F.expr(grams_expr)).alias("gram"))
         .distinct(),

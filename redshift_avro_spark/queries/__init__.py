@@ -23,9 +23,7 @@ Hash-stability rules used throughout (oracle compares by value):
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
-from functools import lru_cache as _lru_cache
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -80,38 +78,6 @@ def gated_names() -> list:
     family."""
     folded = {m for spec in REGISTRY.values() for m in spec.members}
     return sorted(n for n in REGISTRY if n not in folded)
-
-
-@_lru_cache(maxsize=512)
-def _parquet_file_count(sf_dir: str, name: str) -> int:
-    """Split count of a testdata table, from the filesystem — the
-    ``df.rdd.getNumPartitions()`` probe costs ~140 ms of driver-side
-    plan analysis PER CALL, while a cached listdir is free."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(1 for f in os.listdir(path) if f.startswith("part-"))
-    return 1
-
-
-def spread_codec_input(
-    df: DataFrame, spark: SparkSession, input_splits: Optional[int] = None
-) -> DataFrame:
-    """Partitioning guard for Arrow-batched codec stages.
-
-    A pandas-UDF codec stage pays two JVM↔Python Arrow hops per task, so
-    tasks must carry enough rows to amortize them: measured at sf0.1
-    (q20, 100k rows), 32 tasks of ~3k rows ran 1.70 s while 8 tasks of
-    ~12.5k rows ran 1.29 s — scheduling + worker-chain setup beats core
-    count for small inputs. Target cores/4 (≥2), and repartition ONLY
-    when the input's own split count (``input_splits``, e.g. from
-    :func:`_parquet_file_count`; unknown → assume small fixture) is
-    below that: real multi-split input (the 100 TB case, where Spark's
-    own maxPartitionBytes sizing already yields right-sized tasks)
-    keeps its partitioning and pays no shuffle."""
-    target = max(2, spark.sparkContext.defaultParallelism // 4)
-    if input_splits is not None and input_splits >= target:
-        return df
-    return df.repartition(target)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

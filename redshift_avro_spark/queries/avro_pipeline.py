@@ -23,7 +23,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import _parquet_file_count, load_table, register, spread_codec_input
+from . import load_table, register
+from ..operators.staging import spread_small_input
 from ..sources.columns import decode_container, from_avro, from_hex, to_avro, to_hex
 
 EVENT_AVRO_SCHEMA = {
@@ -64,13 +65,10 @@ def q20_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     decode back, and aggregate. The oracle sees the original table — any
     codec drift breaks the hash.
 
-    Partitioning via spread_codec_input: single-small-file input is
-    spread to cores/4 (tasks must amortize the two Python-worker Arrow
-    hops — cores/1 measured SLOWER at sf0.1); multi-split input keeps
-    its own partitioning, no shuffle."""
-    e = spread_codec_input(
-        load_table(spark, sf_dir, "events"), spark, _parquet_file_count(sf_dir, "events")
-    )
+    Partitioning via staging.spread_small_input: a one-file input is
+    spread round-robin to cores/2 tasks, few enough to amortize the two
+    Python-worker Arrow hops (cores/1 measured SLOWER at sf0.1)."""
+    e = spread_small_input(load_table(spark, sf_dir, "events"))
     hexed = e.select(to_hex(to_avro(F.struct(*_EVENT_COLS), EVENT_AVRO_SCHEMA)).alias("hexcell"))
     decoded = hexed.select(from_avro(from_hex("hexcell"), EVENT_AVRO_SCHEMA).alias("ev")).select("ev.*")
     return (
@@ -124,13 +122,9 @@ def q21_container_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             w.close()
             yield pa.RecordBatch.from_pydict({"cell": pa.array([buf.getvalue()], pa.binary())})
 
-    # spread cell building across cores when the input arrives as one
-    # small file split (real multi-split input makes this a cheap no-op)
-    cells = spread_codec_input(
-        e.select(*_EVENT_COLS), spark, _parquet_file_count(sf_dir, "events")
-    ).mapInArrow(
-        make_cells, "cell binary"
-    )
+    # spread cell building across cores when the input arrives as a
+    # few small files (multi-file input makes this a cheap no-op)
+    cells = spread_small_input(e.select(*_EVENT_COLS)).mapInArrow(make_cells, "cell binary")
     decoded = cells.select(
         F.explode(decode_container("cell", EVENT_AVRO_SCHEMA)).alias("ev")
     ).select("ev.*")
@@ -183,9 +177,7 @@ def q22_registry_streams(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry = InMemorySchemaRegistry(
         {"stream-a": _STREAM_A_SCHEMA, "stream-b": _STREAM_B_SCHEMA}
     )
-    e = spread_codec_input(
-        load_table(spark, sf_dir, "events"), spark, _parquet_file_count(sf_dir, "events")
-    )
+    e = spread_small_input(load_table(spark, sf_dir, "events"))
     a = e.where(F.col("event_id") % 2 == 0).select(
         F.lit("stream-a").alias("stream"),
         to_avro(F.struct(*_EVENT_COLS), registry.get_schema("stream-a")).alias("payload"),
@@ -238,9 +230,7 @@ def q23_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C5/C7 in-flight: data written with the full writer schema is read
     with an EVOLVED reader — extra writer fields skipped (ts, user_id,
     props), defaulted reader field filled (source) — then aggregated."""
-    e = spread_codec_input(
-        load_table(spark, sf_dir, "events"), spark, _parquet_file_count(sf_dir, "events")
-    )
+    e = spread_small_input(load_table(spark, sf_dir, "events"))
     payload = e.select(to_avro(F.struct(*_EVENT_COLS), EVENT_AVRO_SCHEMA).alias("payload"))
     decoded = payload.select(
         from_avro("payload", EVENT_AVRO_SCHEMA, reader_schema=_EVOLVED_READER).alias("ev")
@@ -321,11 +311,7 @@ def q24_kpl_spring_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pa.RecordBatch.from_pydict({"hexcell": pa.array([blob.hex()], pa.string())})
 
     e = load_table(spark, sf_dir, "events")
-    cells = spread_codec_input(
-        e.select(*kpl_cols), spark, _parquet_file_count(sf_dir, "events")
-    ).mapInArrow(
-        make_cells, "hexcell string"
-    )
+    cells = spread_small_input(e.select(*kpl_cols)).mapInArrow(make_cells, "hexcell string")
     decoded = unwrap_kpl_spring_avro(
         cells.select(F.unhex("hexcell").alias("agg")), "agg", _KPL_EVENT_SCHEMA
     )
@@ -373,9 +359,7 @@ def q25_logical_types_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical types survive an encode→decode roundtrip bit-exactly —
     the aggregate runs on the DECODED columns while the oracle reads
     the originals."""
-    o = spread_codec_input(
-        load_table(spark, sf_dir, "orders"), spark, _parquet_file_count(sf_dir, "orders")
-    )
+    o = spread_small_input(load_table(spark, sf_dir, "orders"))
     src = o.select(
         "o_orderkey",
         F.col("o_totalprice").cast("decimal(12,2)").alias("price"),

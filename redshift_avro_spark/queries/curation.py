@@ -27,11 +27,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from . import _parquet_file_count, load_table, register, spread_codec_input
+from . import load_table, register
 from .dedup import _NORM_DUCK, _NORM_SPARK, minhash_cte
 from .text import _LANG_PRED, _N_WORDS, _SCORE
 from ..operators.dedup import minhash_candidate_pairs, ngram_jaccard_pairs
-from ..operators.staging import materialize
+from ..operators.staging import materialize, spread_small_input
 from ..operators.text import language_id, quality_features, token_count
 
 _MIN_SCORE = 0.68
@@ -90,17 +90,13 @@ _MIN_WORDS = 20
 def q49_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filter → exact-dedup → near-dup-drop → token stats, end to end."""
     # spread the regex-heavy feature projection when the input arrives
-    # as a single small file split (real multi-split input keeps its
-    # partitioning — no shuffle at scale; the md5 window below shuffles
-    # anyway, so no extra boundary is added). cores/4 like the codec
-    # stages: all-cores left ~3k rows per task and measured ~0.5 s
-    # SLOWER at sf0.1 than cores/4 — tiny-stage scheduling overhead
+    # as a few small files (multi-file input keeps its partitioning —
+    # no shuffle at scale; the md5 window below shuffles anyway, so no
+    # extra boundary is added). all-cores left ~3k rows per task and
+    # measured ~0.5 s SLOWER at sf0.1 than cores/4 (2 tasks on 4
+    # cores, the same as cores/2) — tiny-stage scheduling overhead
     # compounds across this pipeline's many stages.
-    docs = spread_codec_input(
-        load_table(spark, sf_dir, "documents"),
-        spark,
-        _parquet_file_count(sf_dir, "documents"),
-    )
+    docs = spread_small_input(load_table(spark, sf_dir, "documents"))
     feat = docs.select(
         "doc_id",
         "text",
@@ -184,14 +180,10 @@ def _q157_frames(spark: SparkSession, sf_dir: str) -> dict:
     counting), and the survivors window reads it back. Values are
     bit-identical (same fragments, same filters); the second full
     feature pass is gone at every scale."""
-    # same partitioning guard as q49: a single-file fixture otherwise
-    # pins the regex-heavy feature projection to one task; real
-    # multi-split input keeps its partitioning and pays no shuffle
-    docs = spread_codec_input(
-        load_table(spark, sf_dir, "documents"),
-        spark,
-        _parquet_file_count(sf_dir, "documents"),
-    )
+    # same spreading rule as q49: a single-file fixture otherwise
+    # pins the regex-heavy feature projection to one task; multi-file
+    # input keeps its partitioning and pays no shuffle
+    docs = spread_small_input(load_table(spark, sf_dir, "documents"))
     feat = materialize(
         docs.select(
             "doc_id",
@@ -632,7 +624,13 @@ def _q187_final_counts(
     on doc_id — nd_drop by an explicit ``.distinct()``, hits by its
     groupBy — so the joins cannot duplicate rows), and the packing
     cum-token window runs conditionally over final rows only. See the
-    call site for the equivalence argument."""
+    call site for the equivalence argument.
+
+    The broadcasts are forced: nd_drop's checkpoint keeps its lineage's
+    size estimate (25 GB for 0 rows at sf0.1), so unhinted the planner
+    picks a sort-merge join and the survivor rows, text included, are
+    shuffled before AQE sees how small the side is: one more
+    ``hashpartitioning(doc_id)`` Exchange at sf0.01 and sf0.1."""
     m = (
         survivors.join(
             F.broadcast(nd_drop.withColumn("__nd", F.lit(True))), "doc_id", "left"

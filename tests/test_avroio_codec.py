@@ -280,6 +280,39 @@ class TestMultiBlockAndSplits:
                 got.extend(iter_file_split(str(p), s, min(s + step, total)))
             assert got == rows, f"splits={n_splits}"
 
+    @pytest.mark.parametrize(
+        "fields",
+        [
+            [{"name": "n", "type": "long"}, {"name": "s", "type": "string"}],
+            [{"name": "n", "type": "long"}, {"name": "tags", "type": {"type": "array", "items": "string"}}],
+        ],
+        ids=["flat", "nested"],
+    )
+    def test_negative_block_count_raises_typed(self, tmp_path, fields):
+        """A first block whose count varint reads -5 (0x09 for 0x0a) is
+        corrupt: the file-split path (``iter_block_spans``, the walker
+        behind ``read_avro``) raises AvroDecodeError, as the in-memory
+        walker does, instead of an untyped error or zero rows."""
+        from redshift_avro_spark.avroio import AvroDecodeError
+        from redshift_avro_spark.avroio.container import iter_block_spans
+        from redshift_avro_spark.avroio.ladder import get_decoder
+
+        schema = parse_schema({"type": "record", "name": "R", "fields": fields})
+        rows = [{"n": i, "s": f"s{i}", "tags": [f"t{i}"]} for i in range(5)]
+        rows = [{f["name"]: r[f["name"]] for f in fields} for r in rows]
+        blob = bytearray(write_container(rows, schema))
+        header = read_header(bytes(blob))
+        assert blob[header.header_len] == 0x0A  # zigzag(5)
+        blob[header.header_len] = 0x09  # zigzag(-5)
+        p = tmp_path / "corrupt.avro"
+        p.write_bytes(blob)
+
+        dec = get_decoder(json.dumps(schema.to_json()))
+        with open(p, "rb") as fobj, pytest.raises(AvroDecodeError, match="corrupt block header"):
+            list(dec.decode_blocks(iter_block_spans(fobj, header, 0, len(blob)), dec.arrow_schema))
+        with pytest.raises(AvroDecodeError, match="corrupt block header"):
+            list(iter_file_split(str(p), 0, len(blob)))
+
 
 class TestSchemaEvolution:
     def test_writer_extra_field_skipped(self):

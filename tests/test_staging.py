@@ -1,11 +1,14 @@
 """operators/staging.py: lineage cuts (materialize), generation release
-and eviction, and the per-corpus memo (memoized)."""
+and eviction, the per-corpus memo (memoized) and the small-input
+spreading rule (spread_small_input)."""
 
 from __future__ import annotations
 
+import inspect
 import logging
 import os
 import pathlib
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +16,7 @@ from pyspark.sql import functions as F
 from conftest import SF_SMOKE
 
 from redshift_avro_spark.operators import staging
+from redshift_avro_spark.queries import load_table
 
 
 def _persistent_rdd_count(spark) -> int:
@@ -244,3 +248,79 @@ class TestTokenizerEfficiency:
         assert a is b  # second consumer reads the same staged frame
         key = (spark.sparkContext.applicationId, os.path.abspath(SF_SMOKE))
         assert key in staging._MEMO["bpe_encoded"]
+
+
+def _spread_target(spark) -> int:
+    return max(2, spark.sparkContext.defaultParallelism // 2)
+
+
+def _executed_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+class TestSpreadSmallInput:
+    def test_one_file_spreads_to_target(self, spark):
+        df = load_table(spark, SF_SMOKE, "events")
+        assert len(df.inputFiles()) == 1
+        out = staging.spread_small_input(df)
+        assert out.rdd.getNumPartitions() == _spread_target(spark)
+        assert "RoundRobinPartitioning" in _executed_plan(out)
+
+    def test_keys_hash_partition(self, spark):
+        df = load_table(spark, SF_SMOKE, "documents")
+        out = staging.spread_small_input(df, "doc_id")
+        assert re.search(
+            rf"hashpartitioning\(doc_id#\d+L?, {_spread_target(spark)}\)", _executed_plan(out)
+        )
+
+    def test_many_files_keep_their_partitioning(self, spark, tmp_path):
+        n = _spread_target(spark)
+        spark.range(0, 100, numPartitions=n).write.parquet(str(tmp_path / "t"))
+        df = spark.read.parquet(str(tmp_path / "t"))
+        assert len(df.inputFiles()) >= n
+        assert staging.spread_small_input(df, "id") is df
+
+    def test_checkpoint_frame_spreads(self, spark):
+        cp = spark.range(50).localCheckpoint()
+        assert cp.inputFiles() == []
+        out = staging.spread_small_input(cp)
+        assert out is not cp
+        assert out.rdd.getNumPartitions() == _spread_target(spark)
+
+    def test_probe_starts_no_job(self, spark):
+        """``inputFiles()`` plans on the driver only; an aggregated,
+        joined frame (where ``rdd.getNumPartitions()`` would run the
+        shuffle stages under AQE) starts no Spark job."""
+        df = load_table(spark, SF_SMOKE, "documents")
+        agg = df.groupBy("source").count().join(df, "source")
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup())
+        staging.spread_small_input(agg, "doc_id")
+        assert set(tracker.getJobIdsForGroup()) == before
+
+
+def test_only_spread_small_input_sizes_to_the_cores():
+    """One rule spreads small input: ``defaultParallelism`` appears in
+    the package only inside :func:`staging.spread_small_input`, and
+    every other ``repartition(`` has its own stated reason."""
+    pkg = pathlib.Path(staging.__file__).parent.parent
+    helper = inspect.getsource(staging.spread_small_input)
+    uses = {
+        str(p.relative_to(pkg)): p.read_text().count("defaultParallelism")
+        for p in pkg.rglob("*.py")
+    }
+    assert {f: n for f, n in uses.items() if n} == {
+        "operators/staging.py": helper.count("defaultParallelism")
+    }
+    allowed = {
+        "operators/staging.py": (1, "the small-input rule itself"),
+        "sources/kinesis_wire.py": (1, "one fetch task per shard"),
+        "sources/kafka_wire.py": (1, "one fetch task per partition offset range"),
+        "sources/snapshots.py": (1, "compaction sets the output file count"),
+        "queries/streaming_q.py": (3, "the landing dir gets 8 files for the stream to pick up"),
+    }
+    found = {
+        str(p.relative_to(pkg)): len(re.findall(r"\.repartition\(", p.read_text()))
+        for p in pkg.rglob("*.py")
+    }
+    assert {f: n for f, n in found.items() if n} == {f: n for f, (n, _) in allowed.items()}

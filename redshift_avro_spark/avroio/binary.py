@@ -104,14 +104,10 @@ class BinaryReader:
         return v != 0
 
     def read_float(self) -> float:
-        v = _STRUCT_F.unpack_from(self.data, self.pos)[0]
-        self.pos += 4
-        return v
+        return _STRUCT_F.unpack(self.read_fixed(4))[0]
 
     def read_double(self) -> float:
-        v = _STRUCT_D.unpack_from(self.data, self.pos)[0]
-        self.pos += 8
-        return v
+        return _STRUCT_D.unpack(self.read_fixed(8))[0]
 
     def read_fixed(self, n: int) -> bytes:
         if n < 0:  # corrupt varint — never legal as a length

@@ -41,6 +41,7 @@ compiles once per schema):
 from __future__ import annotations
 
 import datetime as dt
+import struct
 import uuid as uuid_mod
 from functools import lru_cache
 from typing import Any, Callable, Optional
@@ -108,6 +109,7 @@ def _base_env() -> dict:
 
     return {
         "_ADE": AvroDecodeError,
+        "_SE": struct.error,
         "_AEE": AvroEncodeError,
         "_SRE": SchemaResolutionError,
         "_BR": BinaryReader,
@@ -1166,6 +1168,7 @@ def _assemble_decoder(
     null_row = "; ".join(f"{a}(None)" for a in aps)
     appends = "; ".join(f"{a}({v})" for a, v in zip(aps, fvars))
     body = ["            " + ln for ln in em.lines]
+    truncated = '"truncated varint" if type(_e) is IndexError else "truncated input"'
 
     src: list[str] = []
     src.append("def _dec_blobs(blobs, outs, permissive):")
@@ -1180,11 +1183,11 @@ def _assemble_decoder(
     src.append("        L = len(data)")
     src.append("        try:")
     src.extend(body)
-    src.append("        except IndexError:")
+    src.append("        except (IndexError, _SE) as _e:")  # _SE: a float or double cut short
     src.append("            if permissive:")
     src.append(f"                {null_row}")
     src.append("                continue")
-    src.append('            raise _ADE("truncated varint") from None')
+    src.append(f"            raise _ADE({truncated}) from None")
     src.append("        except Exception:")
     src.append("            if permissive:")
     src.append(f"                {null_row}")
@@ -1200,8 +1203,8 @@ def _assemble_decoder(
     src.append("    for _ in range(count):")
     src.append("        try:")
     src.extend(body)
-    src.append("        except IndexError:")
-    src.append('            raise _ADE("truncated varint") from None')
+    src.append("        except (IndexError, _SE) as _e:")
+    src.append(f"            raise _ADE({truncated}) from None")
     src.append(f"        {appends}")
     src.append("    return pos")
     glb = em.env

@@ -27,8 +27,10 @@ one buffer and the ``(start, end)`` of each datum in it — an Arrow
 binary column's own data buffer (:func:`arrow_spans`), or the bodies a
 scanner found inside an envelope buffer. The vector tier decodes the
 spans in place; the generated and closure tiers get one slice per row.
-:meth:`~LadderDecoder.decode_blobs` joins its blobs into one buffer
-and decodes those spans, so both entries share one path.
+Every Spark decode site of a raw datum column enters here:
+``from_avro``, ``from_avro_single_object`` (payload spans past each
+message's header) and ``unwrap_kpl_spring_avro``. Container cells and
+files enter as blocks (:meth:`LadderDecoder.decode_blocks`).
 
 Decoders hand Spark Arrow on every tier: a RecordBatch whose schema is
 Spark's Arrow form of the reader schema (``arrow_schema``), built by
@@ -61,7 +63,7 @@ from .binary import (
 from .codegen import get_batch_encoder, get_batch_resolver
 from .convert import avro_to_spark_type, nullable_struct
 from .schema_model import parse_schema
-from .vectorized import VectorFallback, get_vector_decoder, get_vector_encoder, join_blobs
+from .vectorized import VectorFallback, get_vector_decoder, get_vector_encoder
 
 __all__ = ["LadderDecoder", "LadderEncoder", "arrow_spans", "get_decoder", "get_encoder"]
 
@@ -90,14 +92,6 @@ class LadderDecoder:
             )
         self.names = [f.name for f in reader.fields]
         self.arrow_schema = to_arrow_schema(nullable_struct(avro_to_spark_type(reader)))
-
-    def decode_blobs(self, blobs, permissive: bool = False, null_mask=None):
-        """One datum per blob (None → a row of nulls) → RecordBatch of
-        ``arrow_schema``: the blobs joined into one buffer, then
-        :meth:`decode_spans`. ``null_mask`` (True = None blob) saves a
-        scan."""
-        data, starts, ends, null_mask = join_blobs(blobs, null_mask)
-        return self.decode_spans(data, starts, ends, permissive, null_mask)
 
     def decode_spans(self, buf, starts, ends, permissive: bool = False, null_mask=None):
         """Datum i is ``buf[starts[i]:ends[i]]`` → RecordBatch of

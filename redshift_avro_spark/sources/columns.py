@@ -34,6 +34,7 @@ from __future__ import annotations
 import json
 from typing import Iterator, Optional, Union
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -41,13 +42,14 @@ from pyspark.sql import types as T
 from pyspark.sql.functions import arrow_udf
 from pyspark.sql.pandas.types import to_arrow_type
 
-from ..avroio.binary import BinaryReader, compile_decoder, compile_resolver
+from ..avroio.binary import AvroDecodeError, BinaryReader, compile_decoder, compile_resolver
 from ..avroio.block_codecs import get_codec
-from ..avroio.container import ContainerHeader, iter_container, iter_raw_blocks, read_header
+from ..avroio.container import iter_container, iter_raw_blocks, read_header
 from ..avroio.convert import avro_to_spark_type, df_schema_to_avro, nullable_struct
 from ..avroio.jsonio import datum_to_json
 from ..avroio.ladder import arrow_spans, get_decoder, get_encoder
-from ..avroio.schema_model import AvroSchema, parse_schema
+from ..avroio.schema_model import AvroSchema, fingerprint64, parse_schema
+from ..avroio.single_object import HEADER_LEN
 
 __all__ = [
     "from_hex",
@@ -71,11 +73,14 @@ def _schema_json(schema: Union[AvroSchema, str, dict]) -> str:
     return json.dumps(_as_schema(schema).to_json())
 
 
-def _cell_blocks(blob: bytes, header: ContainerHeader) -> Iterator[tuple[int, bytes]]:
-    """A container cell's blocks as (datum count, decompressed payload)."""
-    codec = get_codec(header.codec)
-    for count, payload in iter_raw_blocks(blob, header.header_len, header.sync):
-        yield count, codec.decompress(payload)
+def _permissive(mode: str) -> bool:
+    """A decode mode → True for PERMISSIVE (a null row per undecodable
+    cell), False for FAILFAST (the task fails), in any letter case.
+    Any other mode is a ValueError, so a typo never silently runs
+    FAILFAST."""
+    if mode.upper() not in ("FAILFAST", "PERMISSIVE"):
+        raise ValueError(f"mode must be FAILFAST or PERMISSIVE, got {mode!r}")
+    return mode.upper() == "PERMISSIVE"
 
 
 def from_hex(col: Union[str, Column]) -> Column:
@@ -111,13 +116,13 @@ def from_avro(
     mode="PERMISSIVE" maps undecodable rows to null instead of failing
     the task.
     """
+    permissive = _permissive(mode)
     writer_json = _schema_json(schema)
     reader_json = _schema_json(reader_schema) if reader_schema is not None else None
     out_schema = _as_schema(reader_schema if reader_schema is not None else schema)
     struct_type = nullable_struct(avro_to_spark_type(out_schema))
     if not isinstance(struct_type, T.StructType):
         raise TypeError("from_avro requires a record schema at top level")
-    permissive = mode.upper() == "PERMISSIVE"
 
     @arrow_udf(returnType=struct_type)
     def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
@@ -182,6 +187,37 @@ def infer_container_struct(df: DataFrame, col: Union[str, Column]) -> tuple[str,
     return header.schema_json, struct
 
 
+def _container_target(df, col, schema, reader_schema) -> tuple[str, T.StructType]:
+    """The record schema container cells decode to: ``reader_schema``,
+    else ``schema``, else one sampled cell's writer schema
+    (:func:`infer_container_struct`) → (canonical JSON, nullable Spark
+    struct)."""
+    target = reader_schema if reader_schema is not None else schema
+    if target is None:
+        if df is None:
+            raise ValueError("decode_container needs schema= or df= to infer one")
+        target, _ = infer_container_struct(df, col)
+    parsed = _as_schema(target)
+    struct_type = nullable_struct(avro_to_spark_type(parsed))
+    if not isinstance(struct_type, T.StructType):
+        raise TypeError("container record schema required")
+    return json.dumps(parsed.to_json()), struct_type
+
+
+def _cell_batches(blob: bytes, target_json: str, record_schema) -> Iterator[pa.RecordBatch]:
+    """One container cell → RecordBatches of ``record_schema``: the
+    cell's own writer schema (from its header) resolved to
+    ``target_json``, block by block."""
+    header = read_header(blob)
+    dec = get_decoder(json.dumps(header.schema.to_json()), target_json)
+    codec = get_codec(header.codec)
+    blocks = (
+        (count, codec.decompress(payload))
+        for count, payload in iter_raw_blocks(blob, header.header_len, header.sync)
+    )
+    return dec.decode_blocks(blocks, record_schema)
+
+
 def decode_container(
     col: Union[str, Column],
     schema: Union[AvroSchema, str, dict, None] = None,
@@ -196,71 +232,43 @@ def decode_container(
 
     The container header embeds the writer schema, so ``schema`` is only
     needed to declare the output type without scanning data; when
-    omitted, one cell is sampled via ``df`` (:func:`infer_container_struct`).
+    neither it nor ``reader_schema`` is given, one cell is sampled via
+    ``df`` (:func:`infer_container_struct`).
     Each cell still decodes with its OWN embedded writer schema, resolved
     to the declared reader schema — heterogeneous cells are fine as long
     as they're compatible.
     """
-    if schema is None:
-        if df is None:
-            raise ValueError("decode_container needs schema= or df= to infer one")
-        schema_json_str, struct_type = infer_container_struct(df, col)
-    else:
-        schema_json_str = _schema_json(schema)
-        struct_type = avro_to_spark_type(_as_schema(schema))
-    if reader_schema is not None:
-        schema_json_str = _schema_json(reader_schema)
-        struct_type = avro_to_spark_type(_as_schema(reader_schema))
-    struct_type = nullable_struct(struct_type)
-    if not isinstance(struct_type, T.StructType):
-        raise TypeError("container record schema required")
-    permissive = mode.upper() == "PERMISSIVE"
-
+    permissive = _permissive(mode)
+    target_json, struct_type = _container_target(df, col, schema, reader_schema)
     list_spark_type = T.ArrayType(struct_type)
 
     @arrow_udf(returnType=list_spark_type)
     def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        target_canon = json.dumps(parse_schema(schema_json_str).to_json())
         arrow_struct = to_arrow_type(struct_type)
         record_schema = pa.schema(list(arrow_struct))
-
-        def decode_cell_struct(blob: bytes) -> "pa.Array":
-            header = read_header(blob)
-            dec = get_decoder(json.dumps(header.schema.to_json()), target_canon)
-            chunks = [
-                rb.to_struct_array()
-                for rb in dec.decode_blocks(_cell_blocks(blob, header), record_schema)
-            ]
-            return pa.concat_arrays(chunks) if chunks else pa.array([], type=arrow_struct)
-
         list_type = to_arrow_type(list_spark_type)
         for arr in batches:
             chunks = []
-            offs: list = [0]
-            mask: list = []
-            for blob in arr.to_pylist():
-                if blob is None:
-                    mask.append(True)
-                    offs.append(offs[-1])
-                    continue
-                if permissive:
+            lens = np.zeros(len(arr), dtype=np.int32)
+            mask = np.zeros(len(arr), dtype=bool)
+            for i, blob in enumerate(arr.to_pylist()):
+                cell = None
+                if blob is not None:
                     try:
-                        sa = decode_cell_struct(blob)
+                        rbs = _cell_batches(blob, target_json, record_schema)
+                        cell = [rb.to_struct_array() for rb in rbs]
                     except Exception:
-                        mask.append(True)
-                        offs.append(offs[-1])
-                        continue
-                else:
-                    sa = decode_cell_struct(blob)
-                chunks.append(sa)
-                mask.append(False)
-                offs.append(offs[-1] + len(sa))
-            values = (
-                pa.concat_arrays(chunks) if chunks else pa.array([], type=arrow_struct)
-            )
-            la = pa.ListArray.from_arrays(
-                pa.array(offs, pa.int32()), values, mask=pa.array(mask, pa.bool_())
-            )
+                        if not permissive:
+                            raise
+                if cell is None:  # a NULL cell, or an undecodable one under PERMISSIVE
+                    mask[i] = True
+                    continue
+                chunks += cell
+                lens[i] = sum(map(len, cell))
+            values = pa.concat_arrays(chunks) if chunks else pa.array([], type=arrow_struct)
+            offs = np.zeros(len(arr) + 1, dtype=np.int32)
+            np.cumsum(lens, out=offs[1:])
+            la = pa.ListArray.from_arrays(pa.array(offs), values, mask=pa.array(mask))
             yield la if la.type == list_type else la.cast(list_type)
 
     return _decode(col)
@@ -271,7 +279,7 @@ def decode_container_json(col: Union[str, Column], mode: str = "FAILFAST") -> Co
     ``json.dumps(list_of_records)`` string (avro-file-udf/
     lambda_function.py:15-21, K1). Schema-free: each cell decodes with
     its own embedded writer schema."""
-    permissive = mode.upper() == "PERMISSIVE"
+    permissive = _permissive(mode)
 
     @arrow_udf(returnType=T.StringType())
     def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
@@ -365,40 +373,75 @@ def explode_containers(
     this streams record batches out as it walks the blocks, so a
     multi-GB container cell never becomes a single in-memory array.
     ``keep_cols`` are carried through (repeated per datum)."""
-    if schema is None:
-        schema_json_str, struct_type = infer_container_struct(df, col)
-    else:
-        schema_json_str = _schema_json(schema)
-        struct_type = avro_to_spark_type(_as_schema(schema))
-    if reader_schema is not None:
-        schema_json_str = _schema_json(reader_schema)
-        struct_type = avro_to_spark_type(_as_schema(reader_schema))
-    struct_type = nullable_struct(struct_type)
-    if not isinstance(struct_type, T.StructType):
-        raise TypeError("container record schema required")
+    target_json, struct_type = _container_target(df, col, schema, reader_schema)
     keep = list(keep_cols or [])
     out_type = T.StructType(list(df.select(*keep).schema.fields) + list(struct_type.fields))
 
     def decode(batches: Iterator) -> Iterator:
-        import numpy as np
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        target_canon = json.dumps(parse_schema(schema_json_str).to_json())
         record_schema = pa.schema(list(to_arrow_type(struct_type)))
         for batch in batches:
             out_schema = pa.schema(list(batch.schema)[: len(keep)] + list(record_schema))
             for i, blob in enumerate(batch.column(len(keep)).to_pylist()):
                 if blob is None:
                     continue
-                header = read_header(blob)
-                dec = get_decoder(json.dumps(header.schema.to_json()), target_canon)
-                for rb in dec.decode_blocks(_cell_blocks(blob, header), record_schema):
+                for rb in _cell_batches(blob, target_json, record_schema):
                     idx = pa.array(np.full(rb.num_rows, i))
                     kept = [batch.column(j).take(idx) for j in range(len(keep))]
                     yield pa.RecordBatch.from_arrays(kept + rb.columns, schema=out_schema)
 
     return df.select(*keep, col).mapInArrow(decode, out_type)
+
+
+def _single_object_batch(by_fp: dict, reader_json: str, arr, permissive: bool):
+    """One Arrow batch of single-object messages (binary) → StructArray
+    of the reader schema, in row order.
+
+    The framing of every row is checked at once on the batch's own data
+    buffer (:func:`arrow_spans`), each fingerprint is read as one
+    ``<u8`` and rows are grouped by it, and each group's payloads
+    decode in place in one :meth:`~..avroio.ladder.LadderDecoder.decode_spans`
+    call. A NULL cell gives a row of nulls. So does a bad frame, an
+    unknown fingerprint or an undecodable payload under PERMISSIVE;
+    under FAILFAST the first such row in row order raises
+    AvroDecodeError. ``by_fp`` maps each known fingerprint to its
+    writer schema's canonical JSON."""
+    buf, starts, ends, nulls = arrow_spans(arr)
+    data = np.frombuffer(buf, dtype=np.uint8)
+    framed = ends - starts >= HEADER_LEN
+    if nulls is not None:
+        framed &= ~nulls
+    at = starts[framed]
+    framed[framed] = (data[at] == 0xC3) & (data[at + 1] == 0x01)
+    at = starts[framed]
+    fps, inv = np.unique(
+        data[at[:, None] + np.arange(2, HEADER_LEN)].view("<u8").ravel(), return_inverse=True
+    )
+    writers = [by_fp.get(fp) for fp in fps.tolist()]
+    ok = np.zeros(len(starts), dtype=bool)
+    ok[framed] = np.array([w is not None for w in writers], dtype=bool)[inv]
+    bad = ~ok if nulls is None else ~ok & ~nulls
+    if not permissive and bad.any():
+        i = int(np.argmax(bad))
+        cell = bytes(data[starts[i] : ends[i]])
+        if not framed[i]:
+            raise AvroDecodeError(f"bad single-object framing at row {i}: {cell[:2].hex()}")
+        fp = int.from_bytes(cell[2:HEADER_LEN], "little")
+        raise AvroDecodeError(f"unknown writer schema fingerprint {fp:#018x} at row {i}")
+    key = np.zeros(len(starts), dtype=np.int64)  # row → its writer's index in ``writers``
+    key[framed] = inv
+    live = np.unique(key[ok])
+    if not len(live):  # every row is null: any decoder gives them
+        live, writers = np.zeros(1, dtype=np.int64), [reader_json]
+    key[~ok] = live[0]  # null rows ride, masked, with the first group
+    order = np.argsort(key, kind="stable")
+    parts = []
+    for g, rows in zip(live, np.split(order, np.searchsorted(key[order], live[1:]))):
+        spans = (starts[rows] + HEADER_LEN, ends[rows], permissive, ~ok[rows])
+        parts.append(get_decoder(writers[g], reader_json).decode_spans(buf, *spans))
+    out = pa.concat_arrays([part.to_struct_array() for part in parts])
+    if (np.diff(key) < 0).any():  # rows not already in group order
+        out = out.take(pa.array(np.argsort(order)))
+    return out
 
 
 def from_avro_single_object(
@@ -418,20 +461,15 @@ def from_avro_single_object(
     ``reader_schema`` (default: ``schemas[0]``) is what every row
     evolves to.
 
-    Scale shape: per Arrow batch, rows are grouped by fingerprint and
-    each group decodes through the same decoder ladder as
-    :func:`from_avro` — per-row work is only the 10-byte header parse.
+    Scale shape: per Arrow batch, the framing of every row is checked
+    and its fingerprint read by numpy on the batch's own buffer; rows
+    are grouped by fingerprint and each group's payloads decode in place
+    through the same decoder ladder as :func:`from_avro`, with no
+    per-row Python work (:func:`_single_object_batch`).
     mode="PERMISSIVE" maps bad framing / unknown fingerprints /
     undecodable rows to null rows instead of failing.
     """
-    import struct as _struct
-
-    import numpy as np
-
-    from ..avroio.binary import AvroDecodeError
-    from ..avroio.schema_model import fingerprint64
-    from ..avroio.single_object import HEADER_LEN, V1_MARKER
-
+    permissive = _permissive(mode)
     schema_jsons = [_schema_json(s) for s in schemas]
     if not schema_jsons:
         raise ValueError("from_avro_single_object: schemas must be non-empty")
@@ -441,52 +479,11 @@ def from_avro_single_object(
     struct_type = nullable_struct(avro_to_spark_type(_as_schema(reader_json)))
     if not isinstance(struct_type, T.StructType):
         raise TypeError("from_avro_single_object requires a record schema at top level")
-    permissive = mode.upper() == "PERMISSIVE"
 
     @arrow_udf(returnType=struct_type)
     def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
         by_fp = {fingerprint64(parse_schema(sj)): sj for sj in schema_jsons}
-        arrow_struct = to_arrow_type(struct_type)
-
         for arr in batches:
-            vals = arr.to_pylist()
-            groups: dict = {}
-            null_rows = []
-            for i, b in enumerate(vals):
-                if b is None:
-                    null_rows.append(i)
-                    continue
-                if len(b) < HEADER_LEN or b[:2] != V1_MARKER:
-                    if permissive:
-                        null_rows.append(i)
-                        continue
-                    raise AvroDecodeError(
-                        f"bad single-object framing at row {i}: "
-                        f"{b[:2].hex() if len(b) >= 2 else b.hex()}"
-                    )
-                fp = _struct.unpack("<Q", b[2:HEADER_LEN])[0]
-                if fp not in by_fp:
-                    if permissive:
-                        null_rows.append(i)
-                        continue
-                    raise AvroDecodeError(
-                        f"unknown writer schema fingerprint {fp:#018x} at row {i}"
-                    )
-                groups.setdefault(fp, []).append(i)
-            parts, order = [], []
-            for fp, idxs in groups.items():
-                dec = get_decoder(by_fp[fp], reader_json)
-                payloads = [vals[i][HEADER_LEN:] for i in idxs]
-                parts.append(dec.decode_blobs(payloads, permissive).to_struct_array())
-                order.extend(idxs)
-            if null_rows:  # non-null structs of null fields, as from_avro gives
-                nulls = [pa.nulls(len(null_rows), f.type) for f in arrow_struct]
-                parts.append(pa.StructArray.from_arrays(nulls, fields=list(arrow_struct)))
-                order.extend(null_rows)
-            if not parts:
-                yield pa.array([], type=arrow_struct)
-                continue
-            # back to row order: out[i] is the part row holding input row i
-            yield pa.concat_arrays(parts).take(pa.array(np.argsort(order)))
+            yield _single_object_batch(by_fp, reader_json, arr, permissive)
 
     return _decode(F.col(col) if isinstance(col, str) else col)

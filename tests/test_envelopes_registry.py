@@ -380,14 +380,20 @@ SCANNER_CASES = {
 
 def _exact_unwrap(dec, cells: list):
     """The reference the fused path must equal: the exact KPL and Spring
-    parsers, then one ``decode_blobs`` over the bodies."""
+    parsers, then one ``decode_spans`` over the bodies as an Arrow
+    binary column."""
+    import pyarrow as pa
+
+    from redshift_avro_spark.avroio.ladder import arrow_spans
+
     bodies = [
         parse_spring_message(rec.data)[1]
         for cell in cells
         if cell is not None
         for rec in decode_kpl_aggregate(cell).records
     ]
-    return dec.decode_blobs(bodies)
+    buf, starts, ends, _ = arrow_spans(pa.array(bodies, pa.binary()))
+    return dec.decode_spans(buf, starts, ends)
 
 
 def _outcome(fn):

@@ -1,6 +1,6 @@
 """Decoder ladder (avroio/ladder.py), in process with no SparkSession:
 each schema shape reaches its tier by shape alone, every tier returns
-the closure reference's values, as Spark's Arrow types, on the blob and
+the closure reference's values, as Spark's Arrow types, on the span and
 block paths, PERMISSIVE
 nulls and FAILFAST errors hold on every tier, and the encoders, fed
 Arrow batches, are byte-identical to ``encode_datum``."""
@@ -26,7 +26,7 @@ from redshift_avro_spark.avroio.binary import (
     encode_datum,
 )
 from redshift_avro_spark.avroio.convert import avro_to_spark_type, nullable_struct
-from redshift_avro_spark.avroio.ladder import get_decoder, get_encoder
+from redshift_avro_spark.avroio.ladder import LadderDecoder, arrow_spans, get_decoder, get_encoder
 from redshift_avro_spark.avroio.schema_model import parse_schema
 
 FLAT = {
@@ -181,16 +181,23 @@ def _shared_spans(blobs: list):
     return bytes(buf), np.array(starts), np.array(ends), null_mask
 
 
+def _decode_arrow(dec, blobs: list, permissive: bool = False):
+    """blobs (None → a NULL cell) through the production entry: one
+    Arrow binary column's spans (:func:`arrow_spans`)."""
+    buf, starts, ends, null_mask = arrow_spans(pa.array(blobs, pa.binary()))
+    return dec.decode_spans(buf, starts, ends, permissive, null_mask)
+
+
 @pytest.mark.parametrize(
     "shape, path",
-    [(s, "blobs") for s in SHAPES] + [(s, "spans") for s in SHAPES],
+    [(s, "arrow") for s in SHAPES] + [(s, "spans") for s in SHAPES],
     ids=[*SHAPES, *(f"{s}-spans" for s in SHAPES)],
 )
 def test_blob_path_matches_closure_reference(shape, path):
     dec, blobs, reference, arrow_schema, _ = _case(shape)
     want_rows = [reference(BinaryReader(b)) for b in blobs]
-    if path == "blobs":
-        got = dec.decode_blobs(blobs + [None])
+    if path == "arrow":
+        got = _decode_arrow(dec, blobs + [None])
     else:
         buf, starts, ends, null_mask = _shared_spans(blobs + [None])
         got = dec.decode_spans(buf, starts, ends, null_mask=null_mask)
@@ -211,12 +218,12 @@ def test_block_path_matches_closure_reference(shape):
 def test_truncated_row_is_permissive_null_or_typed_error(shape):
     dec, blobs, reference, arrow_schema, _ = _case(shape)
     batch = [blobs[1], blobs[1][:-5], blobs[2]]
-    got = dec.decode_blobs(batch, permissive=True).to_pydict()
+    got = _decode_arrow(dec, batch, permissive=True).to_pydict()
     want = _arrow_columns([reference(BinaryReader(b)) for b in blobs[1:3]], arrow_schema)
     for n in dec.names:
         assert got[n] == [want[n][0], None, want[n][1]]
     with pytest.raises(AvroDecodeError):
-        dec.decode_blobs(batch)
+        _decode_arrow(dec, batch)
 
 
 @pytest.mark.parametrize("shape", list(SHAPES))
@@ -314,3 +321,13 @@ def test_encode_sites_hand_the_ladder_arrow():
         "sources/columns.py",
     ]
     assert [f for f in arrow_only if imports_pandas.search((pkg / f).read_text())] == []
+
+
+def test_decode_sites_hand_the_ladder_spans():
+    """Raw datums enter the ladder only as spans: the blob-list entry
+    and the container column's per-cell copies of the block loop stay
+    gone."""
+    assert not hasattr(LadderDecoder, "decode_blobs")
+    pkg = pathlib.Path(redshift_avro_spark.__file__).parent
+    columns = (pkg / "sources/columns.py").read_text()
+    assert re.findall(r"decode_blobs\(|_cell_blocks|decode_cell_struct", columns) == []

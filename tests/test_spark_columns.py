@@ -19,6 +19,7 @@ from redshift_avro_spark.sources import (
     from_hex,
     to_avro,
 )
+from redshift_avro_spark.sources.columns import from_avro_single_object
 
 USER_SCHEMA_JSON = {
     "type": "record",
@@ -600,3 +601,26 @@ class TestArrowBoundary:
         parsed = parse_schema(schema)
         want = [encode_datum(parsed, {"d": d, "xs": xs, "n": n}) for d, xs, n in rows]
         assert [bytes(r.b) for r in got] == want
+
+
+MODE_SITES = {
+    "from_avro": lambda mode: from_avro("p", USER_SCHEMA_JSON, mode=mode),
+    "from_avro_single_object": lambda mode: from_avro_single_object(
+        "p", [USER_SCHEMA_JSON], mode=mode
+    ),
+    "decode_container": lambda mode: decode_container("p", USER_SCHEMA_JSON, mode=mode),
+    "decode_container_json": lambda mode: decode_container_json("p", mode=mode),
+}
+
+
+@pytest.mark.parametrize("site", list(MODE_SITES))
+def test_unknown_decode_mode_is_rejected(spark, site):
+    """A mode other than FAILFAST or PERMISSIVE fails when the column is
+    built, instead of silently running FAILFAST; either mode is taken in
+    any letter case."""
+    build = MODE_SITES[site]
+    for typo in ("PERMISIVE", "DROPMALFORMED"):
+        with pytest.raises(ValueError, match="FAILFAST or PERMISSIVE"):
+            build(typo)
+    for mode in ("permissive", "FailFast"):
+        assert build(mode) is not None

@@ -5,8 +5,19 @@ node) — correct, but on a 100 TB decode the per-row cost is dominated by
 call overhead and ``BinaryReader`` attribute traffic. This module
 generates ONE flat Python function per schema (``exec`` of generated
 source): varint/zigzag/string reads inlined on local variables, no
-reader object, no per-field calls, and output assembled directly into
-per-field column lists (no rows-of-dicts pivot).
+reader object, no per-field calls.
+
+Decoders write leaf columns, not Python objects: a record's fields go
+to their own sinks, an array or map appends its per-value item count
+and decodes its items into child sinks, a union appends nulls to the
+members it did not take, and a reader-only field becomes one constant
+Arrow array per batch. No dict or list is built for a nested value;
+``BatchDecoder.column_array`` assembles Spark's Arrow values
+(``StructArray``, list and map arrays, offsets from the counts) with
+``from_arrays``/``from_buffers``. The values are Spark-mode (the values
+Spark's Arrow types take: naive-UTC datetimes, member-struct unions,
+time logical types as raw ints); python-mode values stay with the
+closures.
 
 Semantics are identical to the closure codecs (reference
 io.py:235-1337 parity lives there; this changes only the execution
@@ -15,24 +26,22 @@ strategy). Guarantees:
 - Any subtree the emitter can't inline (recursive named types, general
   unions on encode, oversized generated bodies) falls back to the
   closure codec for that subtree via a BinaryReader/BinaryWriter shim —
-  coverage is total.
+  coverage is total. On decode, a shim's objects are one leaf that
+  ``pa.array`` converts.
 - Any unexpected codegen failure makes ``get_batch_decoder`` /
   ``get_batch_encoder`` return ``None`` and the decoder ladder
   (:mod:`.ladder`) uses the closure path — a generator bug degrades to
   slow, never to wrong.
 
-Decoders emit Spark-mode values only (the values Spark's Arrow types
-take: naive-UTC datetimes, member-struct unions, time logical types as
-raw ints); python-mode values stay with the closures.
-
 Entry points (lru-cached per schema JSON, so each executor process
 compiles once per schema):
 
 - :func:`get_batch_decoder` / :func:`get_batch_resolver` →
-  :class:`BatchDecoder` with ``decode_blobs`` (one datum per blob →
-  columns), ``decode_stream`` (N consecutive datums from one buffer →
-  columns, for container blocks) and ``column_array`` (one column →
-  a pyarrow Array of Spark's Arrow type).
+  :class:`BatchDecoder` with ``new_columns`` (an empty
+  :class:`Columns`), ``decode_blobs`` (one datum per blob),
+  ``decode_stream`` (N consecutive datums from one buffer, for
+  container blocks) and ``column_array`` (one top-level field → a
+  pyarrow Array of Spark's Arrow type).
 - :func:`get_batch_encoder` → :class:`BatchEncoder` with
   ``columns_from_arrow`` (a RecordBatch → per-field value lists) and
   ``encode_columns`` (per-field value lists → list of datum bytes).
@@ -45,6 +54,8 @@ import struct
 import uuid as uuid_mod
 from functools import lru_cache
 from typing import Any, Callable, Optional
+
+import numpy as np
 
 from .binary import (
     _BOOL_TYPES,
@@ -91,6 +102,7 @@ from .schema_model import (
 
 __all__ = [
     "BatchDecoder",
+    "Columns",
     "BatchEncoder",
     "get_batch_decoder",
     "get_batch_encoder",
@@ -166,15 +178,121 @@ class _Emitter:
 # ---------------------------------------------------------------------------
 
 
+class _Sink:
+    """One node of a generated decoder's output plan: where the values
+    of one reader-schema position go. Lists are numbered; the batch's
+    :class:`Columns` holds them. ``kind``:
+
+    - ``leaf``: Python values in list ``vals``, one per value. A
+      top-level timestamp holds raw epoch ints (``unit`` 'us'/'ms'); a
+      recursive subtree's closure-shim objects are a leaf too.
+    - ``struct``: one child per record field or union member.
+    - ``list`` / ``map``: list ``counts`` gets each value's item count;
+      the items go to ``children`` (a map's key leaf, then its values).
+    - ``const``: a reader-only field's default ``value``, one Arrow array
+      per batch.
+
+    ``valid`` is a list of bools, only where the value itself can be
+    null under a union. ``level`` numbers the length domain (the rows,
+    or one array's or map's items) the node's lists grow in."""
+
+    __slots__ = ("kind", "level", "vals", "counts", "valid", "children", "unit", "value", "bound")
+
+    def __init__(self, kind: str, level: int) -> None:
+        self.kind = kind
+        self.level = level
+        self.vals = self.counts = self.valid = None
+        self.children: list = []
+        self.unit: Optional[str] = None
+        self.value: Any = None
+        self.bound = False
+
+
+class Columns:
+    """One batch's output lists: ``lists[k]`` is sink list k, ``n`` the
+    rows decoded so far, ``nulls`` the indices of null rows (a None
+    blob or a PERMISSIVE failure)."""
+
+    __slots__ = ("lists", "n", "nulls")
+
+    def __init__(self, n_lists: int) -> None:
+        self.lists: list[list] = [[] for _ in range(n_lists)]
+        self.n = 0
+        self.nulls: list[int] = []
+
+
+def _ts_unit(s: AvroSchema) -> Optional[str]:
+    if isinstance(s, PrimitiveSchema):
+        if s.logical == "timestamp-micros":
+            return "us"
+        if s.logical == "timestamp-millis":
+            return "ms"
+    return None
+
+
 class _DecEmitter(_Emitter):
-    """Emits top-level-column timestamps as raw epoch ints
-    (micros/millis) instead of datetime objects —
-    :meth:`BatchDecoder.column_array` views a whole column as an Arrow
-    timestamp array, skipping per-row datetime construction. Only where
-    the value lands directly in a column: the ``raw`` flag threads
-    through nullable unions but goes False inside records,
-    member-structs, arrays and maps, whose dict/list payloads carry
-    datetime objects."""
+    """Emits code that appends each decoded value to its sink's lists
+    (see :class:`_Sink`): a nested value leaves no dict or list behind,
+    only leaf values, counts and validity flags."""
+
+    def __init__(self) -> None:
+        super().__init__()
+        self.list_levels: list[int] = []
+        self.n_levels = 1
+        self.scratch: list[_Sink] = []  # sinks decoded into but never read
+        self.null_nodes: list[_Sink] = []
+        self._planning: set[int] = set()
+
+    # -- the output plan
+
+    def new_list(self, level: int) -> int:
+        self.list_levels.append(level)
+        return len(self.list_levels) - 1
+
+    def leaf(self, level: int, unit: Optional[str] = None) -> _Sink:
+        node = _Sink("leaf", level)
+        node.vals = self.new_list(level)
+        node.unit = unit
+        return node
+
+    def sink(self, s: AvroSchema, level: int, nullable: bool = False, raw: bool = False) -> _Sink:
+        """The plan for values of reader schema ``s``. ``raw`` (top-level
+        fields, through a nullable union) keeps timestamps as epoch ints;
+        ``nullable`` gives the node its own validity list."""
+        if isinstance(s, UnionSchema):
+            non_null = s.non_null_branches()
+            nullable = nullable or len(non_null) < len(s.branches)
+            if not non_null:
+                return self.leaf(level)
+            if len(non_null) == 1:
+                return self.sink(non_null[0], level, nullable, raw)
+            node = _Sink("struct", level)
+            node.children = [self.sink(b, level, nullable=True) for b in non_null]
+        elif isinstance(s, RecordSchema):
+            if id(s) in self._planning:  # recursive: closure shim objects
+                return self.leaf(level)
+            self._planning.add(id(s))
+            try:
+                node = _Sink("struct", level)
+                node.children = [self.sink(f.schema, level) for f in s.fields]
+            finally:
+                self._planning.discard(id(s))
+        elif isinstance(s, (ArraySchema, MapSchema)):
+            node = _Sink("list" if isinstance(s, ArraySchema) else "map", level)
+            node.counts = self.new_list(level)
+            inner = self.n_levels
+            self.n_levels += 1
+            if isinstance(s, ArraySchema):
+                node.children = [self.sink(s.items, inner)]
+            else:
+                node.children = [self.leaf(inner), self.sink(s.values, inner)]
+        else:
+            return self.leaf(level, _ts_unit(s) if raw else None)
+        if nullable:
+            node.valid = self.new_list(level)
+        return node
+
+    # -- code
 
     def varint(self, ind: int, dst: str) -> None:
         """Zigzag varint → signed int in ``dst`` (replica of
@@ -210,21 +328,90 @@ class _DecEmitter(_Emitter):
         self.w(ind, dst_expr("pos", e))
         self.w(ind, f"pos = {e}")
 
-    def fallback(self, ind: int, schema: AvroSchema, dst: str) -> None:
+    def put(self, ind: int, node: _Sink, expr: str) -> None:
+        self.w(ind, f"_a{node.vals}({expr})")
+
+    def valid(self, ind: int, node: _Sink, flag: bool) -> None:
+        if node.valid is not None:
+            self.w(ind, f"_a{node.valid}({flag})")
+
+    def null_into(self, ind: int, node: _Sink) -> None:
+        """Append a null to ``node``. Emitted as a marker that
+        :meth:`expand` spells out once the plan is final (a resolved
+        record's reader-only fields become constants after a union's
+        null branch may already have been emitted)."""
+        self.null_nodes.append(node)
+        self.w(ind, f"#null {len(self.null_nodes) - 1}")
+
+    def null_lines(self, node: _Sink) -> list[str]:
+        """A null for ``node``: None to a leaf, no items to a list or
+        map, a null to each child of a struct, nothing to a constant."""
+        out = [] if node.valid is None else [f"_a{node.valid}(False)"]
+        if node.kind == "leaf":
+            out.append(f"_a{node.vals}(None)")
+        elif node.kind == "struct":
+            for c in node.children:
+                out += self.null_lines(c)
+        elif node.kind in ("list", "map"):
+            out.append(f"_a{node.counts}(0)")
+        return out
+
+    def expand(self, lines: list[str]) -> list[str]:
+        """``lines`` with each null marker spelled out."""
+        out = []
+        for ln in lines:
+            body = ln.lstrip(" ")
+            if body.startswith("#null "):
+                pad = ln[: len(ln) - len(body)]
+                out += [pad + x for x in self.null_lines(self.null_nodes[int(body[6:])]) or ["pass"]]
+            else:
+                out.append(ln)
+        return out
+
+    def pass_if_empty(self, ind: int, mark: int) -> None:
+        if len(self.lines) == mark:
+            self.w(ind, "pass")
+
+    def fallback(self, ind: int, schema: AvroSchema, node: _Sink) -> None:
         fb = self.const("fb", _compile_dec(schema, {"__mode__": "spark"}))
         r = self.tmp()
         self.w(ind, f"{r} = _BR(data, pos)")
-        self.w(ind, f"{dst} = {fb}({r})")
+        self.put(ind, node, f"{fb}({r})")
         self.w(ind, f"pos = {r}.pos")
 
-    def emit(self, s: AvroSchema, dst: str, ind: int, raw: bool = False) -> None:
+    def items(self, ind: int, node: _Sink, each: Callable[[int], None], key: bool = False) -> None:
+        """An array's or map's blocks: per-value item count to
+        ``node.counts``; ``each(ind)`` decodes one item (after its key,
+        when ``key``)."""
+        n, c, sz = self.tmp(), self.tmp(), self.tmp()
+        w = self.w
+        w(ind, f"{c} = 0")
+        self.varint(ind, n)
+        w(ind, f"while {n} != 0:")
+        w(ind + 1, f"if {n} < 0:")
+        w(ind + 2, f"{n} = -{n}")
+        self.varint(ind + 2, sz)  # byte-size hint, discarded
+        w(ind + 1, f"{c} += {n}")
+        w(ind + 1, f"for _ in range({n}):")
+        if key:
+            kn = node.children[0]
+            self.length_prefixed(
+                ind + 2, lambda a, b: f'_a{kn.vals}(data[{a}:{b}].decode("utf-8"))'
+            )
+        mark = len(self.lines)
+        each(ind + 2)
+        self.pass_if_empty(ind + 2, mark)
+        self.varint(ind + 1, n)
+        w(ind, f"_a{node.counts}({c})")
+        self.valid(ind, node, True)
+
+    def scalar(self, s: AvroSchema, dst: str, ind: int, raw: bool = False) -> None:
+        """A non-null primitive, fixed or enum value → ``dst``."""
         w = self.w
         if isinstance(s, PrimitiveSchema):
             t, lt = s.type, s.logical
             if lt is None:
-                if t == "null":
-                    w(ind, f"{dst} = None")
-                elif t == "boolean":
+                if t == "boolean":
                     w(ind, "if pos >= L:")
                     w(ind + 1, 'raise _ADE("truncated input")')
                     w(ind, f"{dst} = data[pos] != 0; pos += 1")
@@ -298,96 +485,61 @@ class _DecEmitter(_Emitter):
             w(ind, f"{dst} = {sym}[{i}]")
             return
 
-        if isinstance(s, ArraySchema):
-            n = self.tmp()
-            item = self.tmp()
-            ap = self.tmp()
-            sz = self.tmp()
-            w(ind, f"{dst} = []")
-            w(ind, f"{ap} = {dst}.append")
-            self.varint(ind, n)
-            w(ind, f"while {n} != 0:")
-            w(ind + 1, f"if {n} < 0:")
-            w(ind + 2, f"{n} = -{n}")
-            self.varint(ind + 2, sz)  # byte-size hint, discarded
-            w(ind + 1, f"for _ in range({n}):")
-            self.emit(s.items, item, ind + 2)
-            self.w(ind + 2, f"{ap}({item})")
-            self.varint(ind + 1, n)
-            return
+        raise _Unsupported(repr(s))
 
-        if isinstance(s, MapSchema):
-            n = self.tmp()
-            k = self.tmp()
-            val = self.tmp()
-            sz = self.tmp()
-            w(ind, f"{dst} = {{}}")
-            self.varint(ind, n)
-            w(ind, f"while {n} != 0:")
-            w(ind + 1, f"if {n} < 0:")
-            w(ind + 2, f"{n} = -{n}")
-            self.varint(ind + 2, sz)
-            w(ind + 1, f"for _ in range({n}):")
-            self.length_prefixed(
-                ind + 2, lambda a, b: f'{k} = data[{a}:{b}].decode("utf-8")'
-            )
-            self.emit(s.values, val, ind + 2)
-            self.w(ind + 2, f"{dst}[{k}] = {val}")
-            self.varint(ind + 1, n)
+    def emit(self, s: AvroSchema, node: _Sink, ind: int) -> None:
+        """Decode one value of ``s`` into ``node``."""
+        w = self.w
+        if isinstance(s, PrimitiveSchema) and s.type == "null":
+            self.null_into(ind, node)
             return
 
         if isinstance(s, UnionSchema):
             i = self.tmp()
             self.varint(ind, i)
             non_null = s.non_null_branches()
-            member_struct = len(non_null) >= 2
-            members = [f"member{j}" for j in range(len(non_null))]
-            v = self.tmp()
             kw = "if"
             j = 0
             for bi, b in enumerate(s.branches):
                 w(ind, f"{kw} {i} == {bi}:")
                 kw = "elif"
-                if b.type == "null":
-                    w(ind + 1, f"{dst} = None")
-                    continue
-                if member_struct:
-                    self.emit(b, v, ind + 1, raw=False)
-                    parts = ", ".join(
-                        f"{m!r}: {v if jj == j else 'None'}" for jj, m in enumerate(members)
-                    )
-                    w(ind + 1, f"{dst} = {{{parts}}}")
-                    j += 1
+                mark = len(self.lines)
+                if b.type == "null" or len(non_null) == 1:
+                    # a nullable union's value is the branch's own node
+                    self.emit(b, node, ind + 1)
                 else:
-                    # nullable-single union: branch value lands directly
-                    # in the column, so raw-ts may thread through (multi-
-                    # branch bare unions could mix int-typed branches with
-                    # raw timestamps — keep those as datetimes)
-                    self.emit(b, dst, ind + 1, raw=raw and len(non_null) == 1)
+                    for k, member in enumerate(node.children):
+                        if k == j:
+                            self.emit(b, member, ind + 1)
+                        else:
+                            self.null_into(ind + 1, member)
+                    self.valid(ind + 1, node, True)
+                    j += 1
+                self.pass_if_empty(ind + 1, mark)
             w(ind, "else:")
             w(ind + 1, f'raise _ADE("union branch %d out of range" % {i})')
             return
 
         if isinstance(s, RecordSchema):
-            if id(s) in self._in_progress:  # recursive type → closure fallback
-                self.fallback(ind, s, dst)
+            if node.kind == "leaf":  # recursive type → closure fallback
+                self.fallback(ind, s, node)
                 return
-            self._in_progress.add(id(s))
-            try:
-                fvars = []
-                for f in s.fields:
-                    fv = self.tmp()
-                    self.emit(f.schema, fv, ind)
-                    fvars.append(fv)
-                parts = ", ".join(
-                    f"{f.name!r}: {fv}" for f, fv in zip(s.fields, fvars)
-                )
-                w(ind, f"{dst} = {{{parts}}}")
-            finally:
-                self._in_progress.discard(id(s))
+            for f, child in zip(s.fields, node.children):
+                self.emit(f.schema, child, ind)
+            self.valid(ind, node, True)
             return
 
-        raise _Unsupported(repr(s))
+        if isinstance(s, ArraySchema):
+            self.items(ind, node, lambda i2: self.emit(s.items, node.children[0], i2))
+            return
+
+        if isinstance(s, MapSchema):
+            self.items(ind, node, lambda i2: self.emit(s.values, node.children[1], i2), key=True)
+            return
+
+        v = self.tmp()
+        self.scalar(s, v, ind, raw=node.unit is not None)
+        self.put(ind, node, v)
 
 
 # ---------------------------------------------------------------------------
@@ -396,20 +548,21 @@ class _DecEmitter(_Emitter):
 
 
 class _ResEmitter(_DecEmitter):
-    """Two-schema emitter: decode writer-shaped bytes into reader-shaped
-    values — the generated twin of :func:`binary._compile_res` (Avro
-    resolution rules: promotions, writer-union branch dispatch, reader
-    defaults, enum symbol remap, skipped writer-only fields). Semantics
-    mirror the closure resolver exactly; compile-time resolution
-    failures raise :class:`SchemaResolutionError` just like
-    ``compile_resolver`` would (writer-union branches defer the raise to
-    runtime — a branch that can't resolve only errors if data uses it)."""
+    """Two-schema emitter: decode writer-shaped bytes into the sinks of
+    the reader's shape — the generated twin of
+    :func:`binary._compile_res` (Avro resolution rules: promotions,
+    writer-union branch dispatch, reader defaults, enum symbol remap,
+    skipped writer-only fields). Semantics mirror the closure resolver
+    exactly; compile-time resolution failures raise
+    :class:`SchemaResolutionError` just like ``compile_resolver`` would
+    (writer-union branches defer the raise to runtime — a branch that
+    can't resolve only errors if data uses it)."""
 
-    def res_fallback(self, ind: int, writer: AvroSchema, reader: AvroSchema, dst: str) -> None:
+    def res_fallback(self, ind: int, writer: AvroSchema, reader: AvroSchema, node: _Sink) -> None:
         fb = self.const("frb", _compile_res(writer, reader, {"__mode__": "spark"}))
         r = self.tmp()
         self.w(ind, f"{r} = _BR(data, pos)")
-        self.w(ind, f"{dst} = {fb}({r})")
+        self.put(ind, node, f"{fb}({r})")
         self.w(ind, f"pos = {r}.pos")
 
     # -- skips (writer-only fields; wire format depends on base type only)
@@ -428,27 +581,28 @@ class _ResEmitter(_DecEmitter):
         self.w(ind, "if pos > L:")
         self.w(ind + 1, 'raise _ADE("truncated input")')
 
+    def skip_fixed(self, ind: int, size: int) -> None:
+        self.w(ind, f"pos += {size}")
+        self.w(ind, "if pos > L:")
+        self.w(ind + 1, 'raise _ADE("truncated input")')
+
     def emit_skip(self, s: AvroSchema, ind: int) -> None:
         w = self.w
         if isinstance(s, PrimitiveSchema):
             t = s.type
             if t == "null":
                 return
-            if t == "boolean":
-                w(ind, "pos += 1")
+            if t in ("boolean", "float", "double"):
+                self.skip_fixed(ind, {"boolean": 1, "float": 4, "double": 8}[t])
             elif t in ("int", "long"):
                 self.skip_varint(ind)
-            elif t == "float":
-                w(ind, "pos += 4")
-            elif t == "double":
-                w(ind, "pos += 8")
             elif t in ("bytes", "string"):
                 self.skip_len_prefixed(ind)
             else:  # pragma: no cover
                 raise _Unsupported(t)
             return
         if isinstance(s, FixedSchema):
-            w(ind, f"pos += {s.size}")
+            self.skip_fixed(ind, s.size)
             return
         if isinstance(s, EnumSchema):
             self.skip_varint(ind)
@@ -472,7 +626,9 @@ class _ResEmitter(_DecEmitter):
                 self.skip_len_prefixed(ind + 3)
                 self.emit_skip(s.values, ind + 3)
             else:
+                mark = len(self.lines)
                 self.emit_skip(s.items, ind + 3)
+                self.pass_if_empty(ind + 3, mark)
             self.varint(ind + 1, n)
             return
         if isinstance(s, UnionSchema):
@@ -484,8 +640,7 @@ class _ResEmitter(_DecEmitter):
                 kw = "elif"
                 mark = len(self.lines)
                 self.emit_skip(b, ind + 1)
-                if len(self.lines) == mark:  # null branch: nothing to skip
-                    w(ind + 1, "pass")
+                self.pass_if_empty(ind + 1, mark)  # null branch: nothing to skip
             w(ind, "else:")
             w(ind + 1, f'raise _ADE("union branch %d out of range" % {i})')
             return
@@ -508,9 +663,9 @@ class _ResEmitter(_DecEmitter):
 
     # -- resolution
 
-    def emit_res(
-        self, w_s: AvroSchema, r_s: AvroSchema, dst: str, ind: int, raw: bool = False
-    ) -> None:
+    def emit_res(self, w_s: AvroSchema, r_s: AvroSchema, node: _Sink, ind: int) -> None:
+        """Decode one writer value of ``w_s`` into ``node``, the sink of
+        reader schema ``r_s``."""
         w = self.w
 
         # writer union: read branch index, resolve each branch to reader
@@ -523,11 +678,12 @@ class _ResEmitter(_DecEmitter):
                 kw = "elif"
                 mark = len(self.lines)
                 try:
-                    self.emit_res(b, r_s, dst, ind + 1, raw=raw)
+                    self.emit_res(b, r_s, node, ind + 1)
                 except SchemaResolutionError as exc:
                     del self.lines[mark:]
                     msg = self.const("msg", str(exc))
                     w(ind + 1, f"raise _SRE({msg})")
+                self.pass_if_empty(ind + 1, mark)
             w(ind, "else:")
             w(ind + 1, f'raise _ADE("union branch %d out of range" % {i})')
             return
@@ -545,20 +701,16 @@ class _ResEmitter(_DecEmitter):
                     f"writer {w_s.type} matches no branch of reader union"
                 )
             non_null = r_s.non_null_branches()
-            if len(non_null) >= 2:
-                if chosen.type == "null":
-                    w(ind, f"{dst} = None")
-                    return
+            if len(non_null) >= 2 and chosen.type != "null":
                 j = sum(1 for b in r_s.branches[:chosen_idx] if b.type != "null")
-                members = [f"member{k}" for k in range(len(non_null))]
-                v = self.tmp()
-                self.emit_res(w_s, chosen, v, ind, raw=False)
-                parts = ", ".join(
-                    f"{m!r}: {v if k == j else 'None'}" for k, m in enumerate(members)
-                )
-                w(ind, f"{dst} = {{{parts}}}")
+                for k, member in enumerate(node.children):
+                    if k == j:
+                        self.emit_res(w_s, chosen, member, ind)
+                    else:
+                        self.null_into(ind, member)
+                self.valid(ind, node, True)
                 return
-            self.emit_res(w_s, chosen, dst, ind, raw=raw and len(non_null) == 1)
+            self.emit_res(w_s, chosen, node, ind)
             return
 
         # primitives: same type -> reader decode (reader logical governs);
@@ -566,25 +718,26 @@ class _ResEmitter(_DecEmitter):
         if isinstance(w_s, PrimitiveSchema) and isinstance(r_s, PrimitiveSchema):
             wt, rt = w_s.type, r_s.type
             if wt == rt:
-                self.emit(r_s, dst, ind, raw=raw)
+                self.emit(r_s, node, ind)
                 return
             if rt in _PROMOTIONS.get(wt, ()):
+                v = self.tmp()
                 if wt in ("int", "long") and rt == "long":
-                    self.varint(ind, dst)
-                elif wt in ("int", "long") and rt in ("float", "double"):
-                    v = self.tmp()
                     self.varint(ind, v)
-                    w(ind, f"{dst} = float({v})")
+                elif wt in ("int", "long") and rt in ("float", "double"):
+                    self.varint(ind, v)
+                    w(ind, f"{v} = float({v})")
                 elif wt == "float" and rt == "double":
-                    w(ind, f"{dst} = _upf_f(data, pos)[0]; pos += 4")
+                    w(ind, f"{v} = _upf_f(data, pos)[0]; pos += 4")
                 elif wt == "string" and rt == "bytes":
-                    self.length_prefixed(ind, lambda a, b: f"{dst} = data[{a}:{b}]")
+                    self.length_prefixed(ind, lambda a, b: f"{v} = data[{a}:{b}]")
                 elif wt == "bytes" and rt == "string":
                     self.length_prefixed(
-                        ind, lambda a, b: f'{dst} = data[{a}:{b}].decode("utf-8")'
+                        ind, lambda a, b: f'{v} = data[{a}:{b}].decode("utf-8")'
                     )
                 else:  # pragma: no cover
                     raise _Unsupported(f"promotion {wt}->{rt}")
+                self.put(ind, node, v)
                 return
             raise SchemaResolutionError(f"cannot resolve writer {wt} to reader {rt}")
 
@@ -599,7 +752,7 @@ class _ResEmitter(_DecEmitter):
                     f"fixed mismatch: {w_s.fullname}({w_s.size}) vs "
                     f"{r_s.fullname}({r_s.size})"
                 )
-            self.emit(r_s, dst, ind)
+            self.emit(r_s, node, ind)
             return
 
         if isinstance(w_s, EnumSchema) and isinstance(r_s, EnumSchema):
@@ -614,54 +767,33 @@ class _ResEmitter(_DecEmitter):
             )
             tname = self.const("rsym", table)
             i = self.tmp()
+            v = self.tmp()
             self.varint(ind, i)
             w(ind, f"if not 0 <= {i} < {len(table)}:")
             w(ind + 1, f'raise _ADE("enum index %d out of range" % {i})')
-            w(ind, f"{dst} = {tname}[{i}]")
-            if any(v is None for v in table):
-                w(ind, f"if {dst} is None:")
+            w(ind, f"{v} = {tname}[{i}]")
+            if any(s is None for s in table):
+                w(ind, f"if {v} is None:")
                 w(
                     ind + 1,
                     f'raise _SRE("writer symbol absent from reader enum {r_s.fullname}")',
                 )
+            self.put(ind, node, v)
             return
 
         if isinstance(w_s, ArraySchema) and isinstance(r_s, ArraySchema):
-            n = self.tmp()
-            item = self.tmp()
-            ap = self.tmp()
-            sz = self.tmp()
-            w(ind, f"{dst} = []")
-            w(ind, f"{ap} = {dst}.append")
-            self.varint(ind, n)
-            w(ind, f"while {n} != 0:")
-            w(ind + 1, f"if {n} < 0:")
-            w(ind + 2, f"{n} = -{n}")
-            self.varint(ind + 2, sz)
-            w(ind + 1, f"for _ in range({n}):")
-            self.emit_res(w_s.items, r_s.items, item, ind + 2)
-            self.w(ind + 2, f"{ap}({item})")
-            self.varint(ind + 1, n)
+            self.items(
+                ind, node, lambda i2: self.emit_res(w_s.items, r_s.items, node.children[0], i2)
+            )
             return
 
         if isinstance(w_s, MapSchema) and isinstance(r_s, MapSchema):
-            n = self.tmp()
-            k = self.tmp()
-            val = self.tmp()
-            sz = self.tmp()
-            w(ind, f"{dst} = {{}}")
-            self.varint(ind, n)
-            w(ind, f"while {n} != 0:")
-            w(ind + 1, f"if {n} < 0:")
-            w(ind + 2, f"{n} = -{n}")
-            self.varint(ind + 2, sz)
-            w(ind + 1, f"for _ in range({n}):")
-            self.length_prefixed(
-                ind + 2, lambda a, b: f'{k} = data[{a}:{b}].decode("utf-8")'
+            self.items(
+                ind,
+                node,
+                lambda i2: self.emit_res(w_s.values, r_s.values, node.children[1], i2),
+                key=True,
             )
-            self.emit_res(w_s.values, r_s.values, val, ind + 2)
-            self.w(ind + 2, f"{dst}[{k}] = {val}")
-            self.varint(ind + 1, n)
             return
 
         if isinstance(w_s, RecordSchema) and isinstance(r_s, RecordSchema):
@@ -669,16 +801,11 @@ class _ResEmitter(_DecEmitter):
                 raise SchemaResolutionError(
                     f"record name mismatch: {w_s.fullname} vs {r_s.fullname}"
                 )
-            key = (id(w_s), id(r_s))
-            if key in self._in_progress:
-                self.res_fallback(ind, w_s, r_s, dst)
+            if node.kind == "leaf":  # recursive reader type → closure fallback
+                self.res_fallback(ind, w_s, r_s, node)
                 return
-            self._in_progress.add(key)
-            try:
-                out_vars = _emit_res_fields(self, w_s, r_s, ind)
-                w(ind, f"{dst} = {{{', '.join(f'{n!r}: {v}' for n, v in out_vars)}}}")
-            finally:
-                self._in_progress.discard(key)
+            _emit_res_fields(self, w_s, r_s, node, ind)
+            self.valid(ind, node, True)
             return
 
         raise SchemaResolutionError(
@@ -687,41 +814,53 @@ class _ResEmitter(_DecEmitter):
 
 
 def _emit_res_fields(
-    em: _ResEmitter, writer: RecordSchema, reader: RecordSchema, ind: int, raw: bool = False
-) -> list[tuple[str, str]]:
-    """Emit the record-resolution plan: writer fields in writer order
-    (matched -> decode into a var, unmatched -> skip), then reader-only
-    defaults as interned constants. Returns (reader field name, var/const
-    expr) in READER field order. Raises SchemaResolutionError exactly
-    where the closure resolver would."""
-    reader_by_name: dict[str, Field] = {}
-    for f in reader.fields:
-        reader_by_name[f.name] = f
+    em: _ResEmitter, writer: RecordSchema, reader: RecordSchema, node: _Sink, ind: int
+) -> None:
+    """Emit the record-resolution plan into struct ``node`` (one child
+    per reader field): writer fields in writer order (matched → decode
+    into the reader field's sink, unmatched → skip), then each
+    reader-only field's child becomes its default as a constant. Raises
+    SchemaResolutionError exactly where the closure resolver would."""
+    if node.bound:
+        # two writer records (union branches) into one reader record:
+        # a reader-only field would be a constant for one and not the other
+        raise _Unsupported("writer records share a reader record")
+    node.bound = True
+    reader_by_name: dict[str, tuple[int, Field]] = {}
+    for k, f in enumerate(reader.fields):
+        reader_by_name[f.name] = (k, f)
         for a in f.aliases:
-            reader_by_name.setdefault(a, f)
-    by_reader: dict[str, str] = {}
+            reader_by_name.setdefault(a, (k, f))
+    # two writer fields mapping to one reader slot (name + alias): the
+    # later decode wins, matching the closure resolver; the earlier one
+    # still decodes (same errors), into a sink nobody reads
+    last = {}
     for wf in writer.fields:
-        rf = reader_by_name.get(wf.name)
-        if rf is not None:
-            # two writer fields mapping to one reader slot (name + alias):
-            # later decode wins, matching the closure resolver
-            fv = em.tmp()
-            em.emit_res(wf.schema, rf.schema, fv, ind, raw=raw)
-            by_reader[rf.name] = fv
-        else:
+        hit = reader_by_name.get(wf.name)
+        if hit is not None:
+            last[hit[0]] = wf
+    for wf in writer.fields:
+        hit = reader_by_name.get(wf.name)
+        if hit is None:
             em.emit_skip(wf.schema, ind)
-    out: list[tuple[str, str]] = []
-    for rf in reader.fields:
-        v = by_reader.get(rf.name)
-        if v is None:
+            continue
+        k, rf = hit
+        if last[k] is wf:
+            target = node.children[k]
+        else:
+            target = em.sink(rf.schema, node.level)
+            em.scratch.append(target)
+        em.emit_res(wf.schema, rf.schema, target, ind)
+    for k, rf in enumerate(reader.fields):
+        if k not in last:
             if not rf.has_default:
                 raise SchemaResolutionError(
                     f"reader field {reader.fullname}.{rf.name} has no "
                     "default and is absent from writer schema"
                 )
-            v = em.const("df", adapt_spark_value(rf.schema, default_value(rf)))
-        out.append((rf.name, v))
-    return out
+            const = _Sink("const", node.level)
+            const.value = adapt_spark_value(rf.schema, default_value(rf))
+            node.children[k] = const
 
 
 # ---------------------------------------------------------------------------
@@ -1009,60 +1148,140 @@ _TS_MAX_US = 253402300799999999
 class BatchDecoder:
     """Generated columnar decoder for a top-level record schema.
 
-    ``decode_blobs`` / ``decode_stream`` fill per-field column lists of
-    Spark-mode values, except that top-level timestamp columns hold raw
-    epoch ints; :meth:`column_array` turns each column into a pyarrow
-    Array of Spark's Arrow type (timestamps by one buffer view)."""
+    ``decode_blobs`` / ``decode_stream`` append to the leaf columns of a
+    :class:`Columns` (:meth:`new_columns`): a record's fields go to
+    their own sinks, an array or map appends its per-value count and its
+    items to child sinks, a union appends nulls to the members it did not
+    take. :meth:`column_array` assembles one top-level field as a
+    pyarrow Array of Spark's Arrow type: ``StructArray``, list and map
+    arrays from the child arrays and offsets from the counts, top-level
+    timestamps by one buffer view, a reader-only field as one constant
+    array."""
 
-    __slots__ = ("names", "ts_units", "_blobs", "_stream")
+    __slots__ = ("names", "source", "_root", "_n_lists", "_blobs", "_stream")
 
-    def __init__(self, names, ts_units, blobs_fn, stream_fn) -> None:
+    def __init__(self, names, root, n_lists, source, blobs_fn, stream_fn) -> None:
         self.names = names
-        self.ts_units = ts_units
+        self.source = source
+        self._root = root
+        self._n_lists = n_lists
         self._blobs = blobs_fn
         self._stream = stream_fn
 
-    def new_columns(self) -> list[list]:
-        return [[] for _ in self.names]
+    def new_columns(self) -> Columns:
+        return Columns(self._n_lists)
 
-    def decode_blobs(self, blobs, outs, permissive: bool = False) -> None:
-        """One whole datum per blob (None blob → None in every column)."""
+    def decode_blobs(self, blobs, outs: Columns, permissive: bool = False) -> None:
+        """One whole datum per blob (None blob → a null row). PERMISSIVE
+        turns an undecodable blob into a null row, leaving no partial
+        value in any sink."""
         self._blobs(blobs, outs, permissive)
 
-    def decode_stream(self, data: bytes, pos: int, count: int, outs) -> int:
+    def decode_stream(self, data: bytes, pos: int, count: int, outs: Columns) -> int:
         """``count`` consecutive datums from ``data`` at ``pos`` → columns;
         returns the position after the last datum."""
         return self._stream(data, pos, count, outs)
 
-    def column_array(self, i: int, col: list, typ):
-        """Column ``i``'s list → pyarrow Array of ``typ``. NaN stays a
-        float value (``from_pandas=False``)."""
-        import pyarrow as pa
-        import pyarrow.compute as pc
+    def column_array(self, i: int, outs: Columns, typ):
+        """Top-level field ``i`` of ``outs`` → pyarrow Array of ``typ``.
+        NaN stays a float value (``from_pandas=False``)."""
+        null_rows = None
+        if outs.nulls:
+            null_rows = np.zeros(outs.n, dtype=bool)
+            null_rows[outs.nulls] = True
+        return _sink_array(outs.lists, self._root.children[i], typ, outs.n, null_rows)
 
-        unit = self.ts_units[i]
-        if unit is not None:
-            try:
-                ints = pa.array(col, type=pa.int64())
-            except (TypeError, ValueError, OverflowError):  # datetime reader defaults
-                ints = None
-            if ints is not None:
-                lo, hi = (_TS_MIN_US, _TS_MAX_US)
-                if unit == "ms":
-                    lo, hi = lo // 1000, hi // 1000
-                bounds = pc.min_max(ints)
-                if ints.null_count == len(ints) or (
-                    bounds["min"].as_py() >= lo and bounds["max"].as_py() <= hi
-                ):
-                    ts = ints.view(pa.timestamp(unit, typ.tz))
-                    return ts if ts.type == typ else ts.cast(typ)
-            kw = "microseconds" if unit == "us" else "milliseconds"
-            col = [
-                v if v is None or isinstance(v, dt.datetime)
-                else _EPOCH_NAIVE + dt.timedelta(**{kw: v})
-                for v in col
-            ]
-        return pa.array(col, type=typ, from_pandas=False)
+
+def _sink_array(lists: list, node: _Sink, typ, n: int, null_rows=None):
+    """``node``'s ``n`` values → pyarrow Array of ``typ``; ``null_rows``
+    (True = null) masks a top-level field's null rows."""
+    import pyarrow as pa
+
+    if node.kind == "leaf":
+        return _leaf_array(lists[node.vals], typ, node.unit)
+    if node.kind == "const":
+        idx = pa.array(np.zeros(n, dtype=np.int32), mask=null_rows)
+        return pa.array([node.value], type=typ, from_pandas=False).take(idx)
+    null = null_rows
+    if node.valid is not None:
+        invalid = ~np.array(lists[node.valid], dtype=bool)
+        null = invalid if null is None else null | invalid
+    if null is not None and not null.any():
+        null = None
+    if node.kind == "struct":
+        if not node.children:  # a record with no fields: no child to give the length
+            nulls = np.zeros(n, dtype=bool) if null is None else null
+            return pa.array([None if m else {} for m in nulls.tolist()], typ)
+        children = [_sink_array(lists, c, typ.field(k).type, n) for k, c in enumerate(node.children)]
+        return pa.StructArray.from_arrays(
+            children, fields=list(typ), mask=None if null is None else pa.array(null)
+        )
+    counts = np.array(lists[node.counts], dtype=np.int64)
+    offsets = np.zeros(n + 1, dtype=np.int64)
+    np.cumsum(counts, out=offsets[1:])
+    m = int(offsets[-1])
+    if node.kind == "list":
+        child = _sink_array(lists, node.children[0], typ.value_type, m)
+    else:
+        keys = pa.array(lists[node.children[0].vals], type=typ.key_type)
+        items = _sink_array(lists, node.children[1], typ.item_type, m)
+        keys, items, offsets = _last_key_wins(keys, items, offsets, counts)
+        child = pa.StructArray.from_arrays([keys, items], fields=[typ.key_field, typ.item_field])
+    validity = None if null is None else pa.py_buffer(np.packbits(~null, bitorder="little"))
+    return pa.Array.from_buffers(
+        typ, n, [validity, pa.py_buffer(offsets.astype(np.int32))], children=[child]
+    )
+
+
+def _last_key_wins(keys, items, offsets, counts):
+    """A map holding one key twice keeps the last value at the first
+    key's position, as a dict would. Most batches have no such map: a
+    numpy check finds that, and only then are the entries re-taken."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if not len(keys) or counts.max() <= 1:
+        return keys, items, offsets
+    owner = np.repeat(np.arange(len(counts)), counts)
+    multi = counts[owner] > 1
+    codes = pc.dictionary_encode(keys.filter(pa.array(multi))).indices.to_numpy()
+    pairs = owner[multi] * (len(keys) + 1) + codes
+    if np.unique(pairs).size == pairs.size:
+        return keys, items, offsets
+    names = keys.to_pylist()
+    bounds = offsets.tolist()
+    take: list[int] = []
+    for i in range(len(counts)):
+        last = {}
+        for j in range(bounds[i], bounds[i + 1]):
+            last[names[j]] = j
+        take.extend(last.values())
+        offsets[i + 1] = len(take)
+    idx = pa.array(take, type=pa.int64())
+    return keys.take(idx), items.take(idx), offsets
+
+
+def _leaf_array(col: list, typ, unit: Optional[str]):
+    """A leaf's values → pyarrow Array of ``typ``; ``unit`` marks raw
+    epoch-int timestamps, viewed as Arrow timestamps when all lie in
+    datetime's range."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if unit is not None:
+        ints = pa.array(col, type=pa.int64())
+        lo, hi = (_TS_MIN_US, _TS_MAX_US)
+        if unit == "ms":
+            lo, hi = lo // 1000, hi // 1000
+        bounds = pc.min_max(ints)
+        if ints.null_count == len(ints) or (
+            bounds["min"].as_py() >= lo and bounds["max"].as_py() <= hi
+        ):
+            ts = ints.view(pa.timestamp(unit, typ.tz))
+            return ts if ts.type == typ else ts.cast(typ)
+        kw = "microseconds" if unit == "us" else "milliseconds"
+        col = [None if v is None else _EPOCH_NAIVE + dt.timedelta(**{kw: v}) for v in col]
+    return pa.array(col, type=typ, from_pandas=False)
 
 
 class BatchEncoder:
@@ -1133,70 +1352,90 @@ def _arrow_values(arr) -> list:
     return out
 
 
-def _ts_unit(s: AvroSchema) -> Optional[str]:
-    """'us'/'ms' when a top-level field surfaces raw ints (mirrors the
-    emitter's raw threading through nullable unions)."""
-    if isinstance(s, UnionSchema):
-        non_null = s.non_null_branches()
-        if len(non_null) != 1:
-            return None
-        s = non_null[0]
-    if isinstance(s, PrimitiveSchema):
-        if s.logical == "timestamp-micros":
-            return "us"
-        if s.logical == "timestamp-millis":
-            return "ms"
-    return None
+def _rollback(levels: list[int]):
+    """PERMISSIVE undo of a failed row: list k goes back to the length
+    its level had when the row started."""
+
+    def rollback(lists: list, marks: tuple) -> None:
+        for lst, level in zip(lists, levels):
+            del lst[marks[level]:]
+
+    return rollback
+
+
+def _lists_of(*nodes: _Sink) -> set[int]:
+    """The lists the sinks under ``nodes`` append to."""
+    out: set[int] = set()
+    for node in nodes:
+        out.update(k for k in (node.vals, node.counts, node.valid) if k is not None)
+        out |= _lists_of(*node.children)
+    return out
 
 
 def _build_decoder(schema: AvroSchema) -> Optional[BatchDecoder]:
     if not isinstance(schema, RecordSchema) or not schema.fields:
         return None
     em = _DecEmitter()
-    fvars = [f"r{i}" for i in range(len(schema.fields))]
-    for f, fv in zip(schema.fields, fvars):
-        em.emit(f.schema, fv, 0, raw=True)
-    return _assemble_decoder(em, fvars, schema.fields, schema.fullname)
+    root = _Sink("struct", 0)
+    root.children = [em.sink(f.schema, 0, raw=True) for f in schema.fields]
+    for f, child in zip(schema.fields, root.children):
+        em.emit(f.schema, child, 0)
+    return _assemble_decoder(em, root, schema.fields, schema.fullname)
 
 
-def _assemble_decoder(
-    em: _DecEmitter, fvars: list, fields: list, fullname: str
-) -> BatchDecoder:
-    names = [f.name for f in fields]
-    aps = [f"_a{i}" for i in range(len(names))]
-    ap_bind = f"{', '.join(aps)}{',' if len(aps) == 1 else ''} = [_o.append for _o in outs]"
-    null_row = "; ".join(f"{a}(None)" for a in aps)
-    appends = "; ".join(f"{a}({v})" for a, v in zip(aps, fvars))
-    body = ["            " + ln for ln in em.lines]
+def _assemble_decoder(em: _DecEmitter, root: _Sink, fields: list, fullname: str) -> BatchDecoder:
+    n_lists = len(em.list_levels)
+    body = ["            " + ln for ln in em.expand(em.lines) or ["pass"]]
+    null_row = [ln for child in root.children for ln in em.null_lines(child)]
+    em.env["_rb"] = _rollback(em.list_levels)
+    # one list per level stands for its length when a row starts; a
+    # list left behind by a field that became a constant stays empty
+    live = sorted(_lists_of(root, *em.scratch))
+    first: dict[int, int] = {}
+    for k in live:
+        first.setdefault(em.list_levels[k], k)
+    marks = "".join(
+        f"len(_L[{first[lv]}]), " if lv in first else "0, " for lv in range(em.n_levels)
+    )
+    binds = [f"_a{k} = _L[{k}].append" for k in live]
     truncated = '"truncated varint" if type(_e) is IndexError else "truncated input"'
+
+    def null_lines(ind: str) -> list[str]:
+        return [ind + ln for ln in null_row] + [f"{ind}_nl(_n0 + _i)"]
 
     src: list[str] = []
     src.append("def _dec_blobs(blobs, outs, permissive):")
-    src.append(f"    {ap_bind}")
-    src.append("    for data in blobs:")
+    src.append("    _L = outs.lists")
+    src.extend("    " + b for b in binds)
+    src.append("    _nl = outs.nulls.append")
+    src.append("    _n0 = outs.n")
+    src.append("    for _i, data in enumerate(blobs):")
     src.append("        if data is None:")
-    src.append(f"            {null_row}")
+    src.extend(null_lines("            "))
     src.append("            continue")
     src.append("        if type(data) is not bytes:")
     src.append("            data = bytes(data)")
     src.append("        pos = 0")
     src.append("        L = len(data)")
+    src.append("        if permissive:")
+    src.append(f"            _mk = ({marks})")
     src.append("        try:")
     src.extend(body)
     src.append("        except (IndexError, _SE) as _e:")  # _SE: a float or double cut short
-    src.append("            if permissive:")
-    src.append(f"                {null_row}")
-    src.append("                continue")
-    src.append(f"            raise _ADE({truncated}) from None")
+    src.append("            if not permissive:")
+    src.append(f"                raise _ADE({truncated}) from None")
+    src.append("            _rb(_L, _mk)")
+    src.extend(null_lines("            "))
     src.append("        except Exception:")
-    src.append("            if permissive:")
-    src.append(f"                {null_row}")
-    src.append("                continue")
-    src.append("            raise")
-    src.append(f"        {appends}")
+    src.append("            if not permissive:")
+    src.append("                raise")
+    src.append("            _rb(_L, _mk)")
+    src.extend(null_lines("            "))
+    src.append("    outs.n = _n0 + len(blobs)")
     src.append("")
     src.append("def _dec_stream(data, pos, count, outs):")
-    src.append(f"    {ap_bind}")
+    src.append("    _L = outs.lists")
+    src.extend("    " + b for b in binds)
     src.append("    if type(data) is not bytes:")
     src.append("        data = bytes(data)")
     src.append("    L = len(data)")
@@ -1205,12 +1444,13 @@ def _assemble_decoder(
     src.extend(body)
     src.append("        except (IndexError, _SE) as _e:")
     src.append(f"            raise _ADE({truncated}) from None")
-    src.append(f"        {appends}")
+    src.append("    outs.n += count")
     src.append("    return pos")
+    code = "\n".join(src)
     glb = em.env
-    exec(compile("\n".join(src), f"<avro-dec:{fullname}>", "exec"), glb)  # noqa: S102
-    ts_units = [_ts_unit(f.schema) for f in fields]
-    return BatchDecoder(names, ts_units, glb["_dec_blobs"], glb["_dec_stream"])
+    exec(compile(code, f"<avro-dec:{fullname}>", "exec"), glb)  # noqa: S102
+    names = [f.name for f in fields]
+    return BatchDecoder(names, root, n_lists, code, glb["_dec_blobs"], glb["_dec_stream"])
 
 
 def _build_resolver(writer: AvroSchema, reader: AvroSchema) -> Optional[BatchDecoder]:
@@ -1225,8 +1465,10 @@ def _build_resolver(writer: AvroSchema, reader: AvroSchema) -> Optional[BatchDec
             f"record name mismatch: {writer.fullname} vs {reader.fullname}"
         )
     em = _ResEmitter()
-    fvars = [v for _, v in _emit_res_fields(em, writer, reader, 0, raw=True)]
-    return _assemble_decoder(em, fvars, reader.fields, f"{writer.fullname}->{reader.fullname}")
+    root = _Sink("struct", 0)
+    root.children = [em.sink(f.schema, 0, raw=True) for f in reader.fields]
+    _emit_res_fields(em, writer, reader, root, 0)
+    return _assemble_decoder(em, root, reader.fields, f"{writer.fullname}->{reader.fullname}")
 
 
 def _build_encoder(schema: AvroSchema) -> Optional[BatchEncoder]:

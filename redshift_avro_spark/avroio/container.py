@@ -276,6 +276,26 @@ class ContainerWriter:
         self.close()
 
 
+def read_file_header(path: str) -> ContainerHeader:
+    """The header of the container file at ``path``, read from a growing
+    prefix (64 KiB, then ×8) until it parses, so a large metadata map
+    reads whole without reading the whole file. Raises
+    :class:`AvroDecodeError` when ``path`` is not a container file."""
+    size = 1 << 16
+    with open(path, "rb") as f:
+        while True:
+            f.seek(0)
+            head = f.read(size)
+            if head[:4] != MAGIC:  # fail fast — no prefix size will fix this
+                raise AvroDecodeError(f"not an Avro container file (magic {head[:4]!r})")
+            try:
+                return read_header(head)
+            except AvroDecodeError:
+                if len(head) < size:  # whole file read and still truncated/bad
+                    raise
+                size *= 8
+
+
 def open_append(
     path: str, sync_interval: int = DEFAULT_SYNC_INTERVAL
 ) -> ContainerWriter:
@@ -287,23 +307,7 @@ def open_append(
     container. The returned writer owns the file handle and closes it
     on ``close()``/context exit. Raises :class:`AvroDecodeError` when
     ``path`` is not a container file."""
-    # the header is metadata-map-sized; read a growing prefix until it
-    # parses completely rather than the whole (possibly huge) file
-    size = 1 << 16
-    while True:
-        with open(path, "rb") as f:
-            head = f.read(size)
-        if head[:4] != MAGIC:  # fail fast — no prefix size will fix this
-            raise AvroDecodeError(
-                f"not an Avro container file (magic {head[:4]!r})"
-            )
-        try:
-            header = read_header(head)
-            break
-        except AvroDecodeError:
-            if len(head) < size:  # whole file read and still truncated/bad
-                raise
-            size *= 8
+    header = read_file_header(path)
     sink = open(path, "ab")
     w = ContainerWriter(
         sink,
@@ -426,8 +430,7 @@ def iter_file_split(
     """Decode every datum in one byte-range split of a container file."""
     with open(path, "rb") as fobj:
         if header is None:
-            head = fobj.read(1 << 16)
-            header = read_header(head)
+            header = read_file_header(path)
         decode = (
             compile_resolver(header.schema, reader_schema)
             if reader_schema is not None

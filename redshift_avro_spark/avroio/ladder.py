@@ -4,13 +4,17 @@ Spark-mode values.
 Three tiers decode (and encode) the same values:
 
 - **vector** (:mod:`.vectorized`): whole-batch numpy passes, flat
-  records only, no schema resolution. Measured on the 6-field Event
-  schema, 100k rows: ~0.3 µs/row.
+  records only, no schema resolution: ~0.4 µs/row on the benchmark's
+  4-field flat datums as spans.
 - **generated** (:mod:`.codegen`): one exec-compiled function per
   schema, any record codegen accepts (nested records, arrays, maps,
-  unions, evolved writer→reader pairs): ~2.9 µs/row on the same schema.
-  It owns exact per-row error semantics (PERMISSIVE nulls, typed
-  errors) for the batches the vector tier gives up on.
+  unions, evolved writer→reader pairs). Nested values go straight into
+  Arrow leaf columns: ~6.5 µs/row, decode plus Arrow assembly, on the
+  benchmark's nested blocks read with an evolved schema (10.5–11.3
+  µs/row when each nested value was a Python dict or list). Both
+  figures: ``tools/codec_us_per_row.py``, best of 7, in process, on a
+  4-core host. It owns exact per-row error semantics (PERMISSIVE
+  nulls, typed errors) for the batches the vector tier gives up on.
 - **closures** (:mod:`.binary`): the semantic reference, for what
   codegen declines (e.g. a record too wide for one generated body).
 
@@ -60,7 +64,7 @@ from .binary import (
     compile_encoder,
     compile_resolver,
 )
-from .codegen import get_batch_encoder, get_batch_resolver
+from .codegen import Columns, get_batch_encoder, get_batch_resolver
 from .convert import avro_to_spark_type, nullable_struct
 from .schema_model import parse_schema
 from .vectorized import VectorFallback, get_vector_decoder, get_vector_encoder
@@ -80,17 +84,17 @@ class LadderDecoder:
         from pyspark.sql.pandas.types import to_arrow_schema
 
         self._vector = get_vector_decoder(writer_json) if writer_json == reader_json else None
-        self._generated = get_batch_resolver(writer_json, reader_json, mode="spark")
-        self._closure = None
         reader = parse_schema(reader_json)
-        if self._generated is None:
+        self.names = [f.name for f in reader.fields]
+        self._rows = get_batch_resolver(writer_json, reader_json, mode="spark")
+        if self._rows is None:
             writer = parse_schema(writer_json)
-            self._closure = (
+            self._rows = _Closures(
                 compile_decoder(writer, mode="spark")
                 if writer_json == reader_json
-                else compile_resolver(writer, reader, mode="spark")
+                else compile_resolver(writer, reader, mode="spark"),
+                self.names,
             )
-        self.names = [f.name for f in reader.fields]
         self.arrow_schema = to_arrow_schema(nullable_struct(avro_to_spark_type(reader)))
 
     def decode_spans(self, buf, starts, ends, permissive: bool = False, null_mask=None):
@@ -111,27 +115,15 @@ class LadderDecoder:
         if null_mask is not None:
             for i in np.flatnonzero(null_mask).tolist():
                 blobs[i] = None
-        cols = self._new_columns()
-        if self._generated is not None:
-            self._generated.decode_blobs(blobs, cols, permissive)
-        else:
-            for blob in blobs:
-                row = None
-                if blob is not None:
-                    try:
-                        row = self._closure(BinaryReader(bytes(blob)))
-                    except Exception:
-                        if not permissive:
-                            raise
-                for c, n in zip(cols, self.names):
-                    c.append(None if row is None else row[n])
+        cols = self._rows.new_columns()
+        self._rows.decode_blobs(blobs, cols, permissive)
         return self._flush(cols, self.arrow_schema)
 
     def decode_blocks(self, blocks: Iterable[tuple[int, bytes]], arrow_schema) -> Iterator:
         """Decompressed container blocks ``(count, data)`` → RecordBatches
         of ``arrow_schema``, whose fields are taken by name (absent ones
         are null). Row order follows the blocks."""
-        cols = self._new_columns()
+        cols = self._rows.new_columns()
         for count, data in blocks:
             if self._vector is not None:
                 try:
@@ -139,38 +131,66 @@ class LadderDecoder:
                 except VectorFallback:
                     pass
                 else:
-                    if cols[0]:
+                    if cols.n:
                         yield self._flush(cols, arrow_schema)
-                        cols = self._new_columns()
+                        cols = self._rows.new_columns()
                     yield _record_batch(arrays, count, arrow_schema)
                     continue
-            if self._generated is not None:
-                self._generated.decode_stream(data, 0, count, cols)
-            else:
-                br = BinaryReader(data)
-                for _ in range(count):
-                    row = self._closure(br)
-                    for c, n in zip(cols, self.names):
-                        c.append(row[n])
-            if len(cols[0]) >= BATCH_ROWS:
+            self._rows.decode_stream(data, 0, count, cols)
+            if cols.n >= BATCH_ROWS:
                 yield self._flush(cols, arrow_schema)
-                cols = self._new_columns()
-        if cols[0]:
+                cols = self._rows.new_columns()
+        if cols.n:
             yield self._flush(cols, arrow_schema)
 
-    def _new_columns(self) -> list[list]:
-        return [[] for _ in self.names]
+    def _flush(self, cols, arrow_schema):
+        """Generated or closure columns → RecordBatch."""
+        named = {
+            n: self._rows.column_array(i, cols, arrow_schema.field(n).type)
+            for i, n in enumerate(self.names)
+            if n in arrow_schema.names
+        }
+        return _record_batch(named, cols.n, arrow_schema)
 
-    def _flush(self, cols: list[list], arrow_schema):
-        """Generated or closure column lists → RecordBatch."""
-        named = dict(zip(self.names, cols))
-        if self._generated is not None:
-            named = {
-                n: self._generated.column_array(i, c, arrow_schema.field(n).type)
-                for i, (n, c) in enumerate(named.items())
-                if n in arrow_schema.names
-            }
-        return _record_batch(named, len(cols[0]), arrow_schema)
+
+class _Closures:
+    """The closure tier behind the generated tier's interface: each row
+    is a dict of Spark-mode values, and each column's values become
+    Arrow by ``pa.array``."""
+
+    def __init__(self, decode, names: list[str]) -> None:
+        self._decode = decode
+        self._names = names
+
+    def new_columns(self) -> Columns:
+        return Columns(len(self._names))
+
+    def decode_blobs(self, blobs, cols: Columns, permissive: bool) -> None:
+        for blob in blobs:
+            row = None
+            if blob is not None:
+                try:
+                    row = self._decode(BinaryReader(bytes(blob)))
+                except Exception:
+                    if not permissive:
+                        raise
+            self._append(cols, row)
+
+    def decode_stream(self, data: bytes, pos: int, count: int, cols: Columns) -> int:
+        br = BinaryReader(data, pos)
+        for _ in range(count):
+            self._append(cols, self._decode(br))
+        return br.pos
+
+    def _append(self, cols: Columns, row) -> None:
+        for c, n in zip(cols.lists, self._names):
+            c.append(None if row is None else row[n])
+        cols.n += 1
+
+    def column_array(self, i: int, cols: Columns, typ):
+        import pyarrow as pa
+
+        return pa.array(cols.lists[i], type=typ, from_pandas=False)
 
 
 def arrow_spans(arr):

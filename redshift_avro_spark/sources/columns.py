@@ -32,6 +32,7 @@ lambda_function.py:9-30).
 from __future__ import annotations
 
 import json
+from functools import lru_cache
 from typing import Iterator, Optional, Union
 
 import numpy as np
@@ -327,34 +328,65 @@ def from_avro_with_errors(
 
     @arrow_udf(returnType=wrapped)
     def _decode(batches: Iterator[pa.Array]) -> Iterator[pa.Array]:
-        writer = parse_schema(writer_json)
-        if reader_json is not None:
-            fn = compile_resolver(writer, parse_schema(reader_json), mode="spark")
-        else:
-            fn = compile_decoder(writer, mode="spark")
+        dec = get_decoder(writer_json, reader_json)
         fields = list(to_arrow_type(wrapped))
         for arr in batches:
-            recs, errs = [], []
-            for blob in arr.to_pylist():
-                if blob is None:
-                    recs.append(None)
-                    errs.append("null input cell")
-                    continue
-                try:
-                    recs.append(fn(BinaryReader(blob)))
-                    errs.append(None)
-                except Exception as ex:  # noqa: BLE001 — error channel
-                    recs.append(None)
-                    errs.append(f"{type(ex).__name__}: {ex}")
-            yield pa.StructArray.from_arrays(
-                [
-                    pa.array(recs, type=fields[0].type, from_pandas=False),
-                    pa.array(errs, type=fields[1].type),
-                ],
-                fields=fields,
-            )
+            yield _with_errors_batch(dec, writer_json, reader_json, arr, fields)
 
     return _decode(col)
+
+
+def _with_errors_batch(dec, writer_json: str, reader_json: Optional[str], arr: pa.Array, fields: list):
+    """One batch of :func:`from_avro_with_errors` → its
+    ``struct<record, _error>`` array. The ladder decodes the whole
+    batch FAILFAST on the batch's own buffer; a NULL cell is a null
+    record with ``_error`` "null input cell". Only a batch that raises
+    goes row by row through the closure tier, whose exception text
+    fills ``_error``."""
+    buf, starts, ends, nulls = arrow_spans(arr)
+    try:
+        batch = dec.decode_spans(buf, starts, ends, False, nulls)
+    except Exception:  # noqa: BLE001 — the per-row loop finds the bad rows
+        pass
+    else:
+        if nulls is None:
+            record = pa.StructArray.from_arrays(batch.columns, fields=list(fields[0].type))
+            errs = pa.nulls(len(arr), pa.string())
+        else:
+            record = pa.StructArray.from_arrays(
+                batch.columns, fields=list(fields[0].type), mask=pa.array(nulls)
+            )
+            errs = pa.array(np.where(nulls, "null input cell", None).tolist(), type=pa.string())
+        return pa.StructArray.from_arrays([record, errs], fields=fields)
+    fn = _closure_decoder(writer_json, reader_json)
+    recs, errs = [], []
+    for blob in arr.to_pylist():
+        if blob is None:
+            recs.append(None)
+            errs.append("null input cell")
+            continue
+        try:
+            recs.append(fn(BinaryReader(blob)))
+            errs.append(None)
+        except Exception as ex:  # noqa: BLE001 — error channel
+            recs.append(None)
+            errs.append(f"{type(ex).__name__}: {ex}")
+    return pa.StructArray.from_arrays(
+        [
+            pa.array(recs, type=fields[0].type, from_pandas=False),
+            pa.array(errs, type=fields[1].type),
+        ],
+        fields=fields,
+    )
+
+
+@lru_cache(maxsize=64)
+def _closure_decoder(writer_json: str, reader_json: Optional[str]):
+    """The closure tier (the semantic reference) for one schema pair."""
+    writer = parse_schema(writer_json)
+    if reader_json is not None:
+        return compile_resolver(writer, parse_schema(reader_json), mode="spark")
+    return compile_decoder(writer, mode="spark")
 
 
 def explode_containers(

@@ -1,29 +1,34 @@
-"""Avro file source & sink as a PySpark Python DataSource.
+"""Avro file source & sink for PySpark.
 
 The runtime has no spark-avro jar, so ``spark.read.format("avro")``
-would fail; this module registers a Python DataSource (Spark 4 API)
-named ``avro_py`` ("avro" itself is reserved by Spark's resolver for
-the absent built-in module) providing:
+would fail. This module provides:
 
-- **Splittable reads**: the driver lists files and cuts them into byte
-  ranges; each task re-synchronizes on the 16-byte sync marker and
-  decodes only the blocks starting inside its range (the classic
-  Hadoop-Avro split protocol — reference datafile.py:38,192 sync
-  markers "enable parallel splits", SURVEY §4). One 100 TB file fans
-  out across executors with no coordination.
+- **Splittable reads** (:func:`read_avro`): the driver lists the files,
+  reads each header once and cuts every file into byte-range splits
+  (``_plan_splits``); one ``mapInArrow`` stage over
+  ``spark.range(0, n, 1, n)`` decodes split ``i`` in task ``i``
+  (``_decode_split``). Each task re-synchronizes on the 16-byte sync
+  marker and decodes only the blocks starting inside its range (the
+  classic Hadoop-Avro split protocol — reference datafile.py:38,192
+  sync markers "enable parallel splits", SURVEY §4), so one 100 TB file
+  fans out across executors with no coordination. No Python DataSource
+  planner runs for a read.
 - **Schema-on-read with evolution**: the reader schema defaults to the
   first file's embedded writer schema; pass ``avroSchema`` to resolve
   heterogeneous/evolved files to one shape (reference io.py:990-1039).
-- **Arrow-batched decode**: tasks yield pyarrow RecordBatches, skipping
-  row-by-row Python→JVM conversion.
-- **Writes**: Arrow writers (batch and streaming) — each task takes
-  Spark's Arrow batches and encodes them through the codec ladder
-  (vector, generated or closure tier) into one container file per
-  partition with the configured codec (``compression`` option:
+- **Arrow-batched decode**: tasks yield pyarrow RecordBatches from the
+  codec ladder; nested values are decoded straight into Arrow leaf
+  columns, with no row-by-row Python→JVM conversion.
+- **The ``avro_py`` Python DataSource** (Spark 4 API; "avro" itself is
+  reserved by Spark's resolver for the absent built-in module) serves
+  ``spark.read.format("avro_py")`` with the same two functions, and the
+  writes: Arrow writers (batch and streaming) — each task takes Spark's
+  Arrow batches and encodes them through the codec ladder (vector,
+  generated or closure tier) into one container file per partition
+  with the configured codec (``compression`` option:
   null/deflate/bzip2/...), block-buffered at SYNC_INTERVAL like the
-  reference writer (datafile.py:39). Timestamps are written as the
-  UTC instants Arrow holds, whatever the session time zone.
-
+  reference writer (datafile.py:39). Timestamps are written as the UTC
+  instants Arrow holds, whatever the session time zone.
 - **Streaming reads** (round 3): :class:`AvroStreamReader` turns a
   landing-zone directory into a checkpointed micro-batch stream —
   ``{"n": k}`` offsets over the (mtime, name)-ordered file ledger,
@@ -32,7 +37,7 @@ the absent built-in module) providing:
   resumes exactly after the consumed prefix (test_stream_source).
 
 Helpers :func:`read_avro` / :func:`write_avro` /
-:func:`read_avro_stream` wrap the registration.
+:func:`read_avro_stream` are the entry points.
 """
 
 from __future__ import annotations
@@ -40,6 +45,7 @@ from __future__ import annotations
 import glob as globmod
 import json
 import os
+import sys
 import uuid
 from dataclasses import dataclass
 from typing import Any, Iterator, Optional, Union
@@ -59,7 +65,7 @@ from pyspark.sql.datasource import (
 from ..avroio.container import (
     ContainerWriter,
     iter_block_spans,
-    read_header,
+    read_file_header,
 )
 from ..avroio.convert import avro_to_spark_type, df_schema_to_avro
 from ..avroio.ladder import get_decoder
@@ -90,16 +96,64 @@ class AvroSplit(InputPartition):
     path: str
     start: int
     end: int
-    schema_json: str  # file's own header schema (saves re-reading header)
+    schema_json: str  # the file's writer schema, canonical JSON
     codec: str
     sync: bytes
     header_len: int
 
 
+def _canonical(schema: Union[AvroSchema, str, dict, None]) -> Optional[str]:
+    """Canonical schema JSON (the codec ladder's cache key), or None."""
+    if schema is None:
+        return None
+    if not isinstance(schema, AvroSchema):
+        schema = parse_schema(schema)
+    return json.dumps(schema.to_json())
+
+
+def _plan_splits(files: list[str], split_size: Optional[int]) -> list[AvroSplit]:
+    """Cut each file into byte-range splits of about ``split_size``
+    bytes (None: one split per file), reading each header once. Splits
+    of one writer schema share one (interned) canonical JSON string, so
+    a pickled split list holds each distinct writer schema once."""
+    canonical: dict[str, str] = {}
+    splits: list[AvroSplit] = []
+    for path in files:
+        size = os.path.getsize(path)
+        header = read_file_header(path)
+        writer_json = canonical.get(header.schema_json)
+        if writer_json is None:
+            writer_json = canonical[header.schema_json] = sys.intern(_canonical(header.schema))
+        n = 1 if split_size is None else max(1, -(-size // split_size))
+        step = -(-size // n)
+        for s in range(0, size, step):
+            splits.append(
+                AvroSplit(
+                    path=path,
+                    start=s,
+                    end=min(s + step, size),
+                    schema_json=writer_json,
+                    codec=header.codec,
+                    sync=header.sync,
+                    header_len=header.header_len,
+                )
+            )
+    return splits
+
+
+def _spark_schema(schema_json: str) -> T.StructType:
+    """The DataFrame schema of a read with this (reader, else the first
+    file's writer) schema."""
+    dtype = avro_to_spark_type(schema_json)
+    if not isinstance(dtype, T.StructType):
+        raise TypeError("top-level Avro schema must be a record")
+    return dtype
+
+
 class AvroReader(DataSourceReader):
     def __init__(self, spark_schema: T.StructType, options: dict) -> None:
         self.spark_schema = spark_schema
-        self.reader_schema_json = options.get("avroschema")
+        self.reader_json = _canonical(options.get("avroschema"))
         path = options.get("path")
         if not path:
             raise ValueError("avro reader requires a path")
@@ -107,56 +161,34 @@ class AvroReader(DataSourceReader):
         self.files = _list_files(path)
 
     def partitions(self) -> list[AvroSplit]:
-        splits: list[AvroSplit] = []
-        for path in self.files:
-            size = os.path.getsize(path)
-            with open(path, "rb") as fh:
-                header = read_header(fh.read(1 << 16))
-            n = max(1, (size + self.split_size - 1) // self.split_size)
-            step = (size + n - 1) // n
-            for s in range(0, size, step):
-                splits.append(
-                    AvroSplit(
-                        path=path,
-                        start=s,
-                        end=min(s + step, size),
-                        schema_json=header.schema_json,
-                        codec=header.codec,
-                        sync=header.sync,
-                        header_len=header.header_len,
-                    )
-                )
-        return splits
+        return _plan_splits(self.files, self.split_size)
 
     def read(self, partition: AvroSplit) -> Iterator[Any]:
-        return _decode_split(self.spark_schema, self.reader_schema_json, partition)
+        return _decode_split(self.spark_schema, self.reader_json, partition)
 
 
 def _decode_split(
-    spark_schema: T.StructType, reader_schema_json: Optional[str], partition: AvroSplit
+    spark_schema: T.StructType, reader_json: Optional[str], split: AvroSplit
 ) -> Iterator[Any]:
     """Decode one byte-range split of a container file into Arrow
-    RecordBatches (shared by the batch reader and the streaming
-    reader below)."""
+    RecordBatches (shared by ``read_avro``, the batch reader and the
+    streaming reader). ``reader_json`` is canonical, or None to read
+    with the writer schema."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from ..avroio.container import ContainerHeader
 
-    writer_json = json.dumps(parse_schema(partition.schema_json).to_json())
-    target_json = (
-        json.dumps(parse_schema(reader_schema_json).to_json()) if reader_schema_json else None
-    )
     header = ContainerHeader(
-        schema_json=partition.schema_json,
-        codec=partition.codec,
-        sync=partition.sync,
+        schema_json=split.schema_json,
+        codec=split.codec,
+        sync=split.sync,
         meta={},
-        header_len=partition.header_len,
+        header_len=split.header_len,
     )
-    decoder = get_decoder(writer_json, target_json)
-    with open(partition.path, "rb") as fobj:
+    decoder = get_decoder(split.schema_json, reader_json)
+    with open(split.path, "rb") as fobj:
         yield from decoder.decode_blocks(
-            iter_block_spans(fobj, header, partition.start, partition.end),
+            iter_block_spans(fobj, header, split.start, split.end),
             to_arrow_schema(spark_schema),
         )
 
@@ -254,17 +286,11 @@ class AvroDataSource(DataSource):
     def schema(self) -> T.StructType:
         reader_json = self.options.get("avroschema")
         if reader_json:
-            dtype = avro_to_spark_type(parse_schema(reader_json))
-        else:
-            path = self.options.get("path")
-            if not path:
-                raise ValueError("avro source requires a path")
-            first = _list_files(path)[0]
-            with open(first, "rb") as fh:
-                dtype = avro_to_spark_type(read_header(fh.read(1 << 16)).schema)
-        if not isinstance(dtype, T.StructType):
-            raise TypeError("top-level Avro schema must be a record")
-        return dtype
+            return _spark_schema(reader_json)
+        path = self.options.get("path")
+        if not path:
+            raise ValueError("avro source requires a path")
+        return _spark_schema(read_file_header(_list_files(path)[0]).schema_json)
 
     def reader(self, schema: T.StructType) -> AvroReader:
         return AvroReader(schema, dict(self.options))
@@ -295,14 +321,23 @@ def read_avro(
     reader_schema: Union[AvroSchema, str, dict, None] = None,
     split_size: int = DEFAULT_SPLIT_SIZE,
 ) -> DataFrame:
-    """Read Avro container files as a DataFrame (splittable, Arrow-batched)."""
-    register_avro_datasource(spark)
-    reader = spark.read.format("avro_py").option("splitSize", str(split_size))
-    if reader_schema is not None:
-        if not isinstance(reader_schema, AvroSchema):
-            reader_schema = parse_schema(reader_schema)
-        reader = reader.option("avroSchema", json.dumps(reader_schema.to_json()))
-    return reader.load(path)
+    """Read Avro container files as a DataFrame (splittable, Arrow-batched).
+
+    The driver lists the files and plans their byte-range splits; one
+    ``mapInArrow`` stage over ``spark.range(0, n, 1, n)`` decodes split
+    ``i`` in task ``i``. No Python DataSource planner runs, so a read
+    starts no planner process."""
+    reader_json = _canonical(reader_schema)
+    splits = _plan_splits(_list_files(path), split_size)
+    spark_schema = _spark_schema(reader_json or splits[0].schema_json)
+
+    def decode(batches: Iterator[Any]) -> Iterator[Any]:
+        for batch in batches:
+            for i in batch.column(0).to_pylist():
+                yield from _decode_split(spark_schema, reader_json, splits[i])
+
+    n = len(splits)
+    return spark.range(0, n, 1, n).mapInArrow(decode, spark_schema)
 
 
 def write_avro(
@@ -356,7 +391,7 @@ class AvroStreamReader(DataSourceStreamReader):
 
     def __init__(self, spark_schema: T.StructType, options: dict) -> None:
         self.spark_schema = spark_schema
-        self.reader_schema_json = options.get("avroschema")
+        self.reader_json = _canonical(options.get("avroschema"))
         self.path = options.get("path")
         if not self.path:
             raise ValueError("avro stream reader requires a path")
@@ -407,26 +442,10 @@ class AvroStreamReader(DataSourceStreamReader):
                 f"landed files — files were removed from {self.path!r}, which the "
                 "landing-zone convention (atomic, immutable) forbids"
             )
-        splits = []
-        for path in self._ledger[start["n"] : end["n"]]:
-            size = os.path.getsize(path)
-            with open(path, "rb") as fh:
-                header = read_header(fh.read(1 << 16))
-            splits.append(
-                AvroSplit(
-                    path=path,
-                    start=0,
-                    end=size,
-                    schema_json=header.schema_json,
-                    codec=header.codec,
-                    sync=header.sync,
-                    header_len=header.header_len,
-                )
-            )
-        return splits
+        return _plan_splits(self._ledger[start["n"] : end["n"]], None)
 
     def read(self, partition: AvroSplit) -> Iterator[Any]:
-        return _decode_split(self.spark_schema, self.reader_schema_json, partition)
+        return _decode_split(self.spark_schema, self.reader_json, partition)
 
     def commit(self, end: dict) -> None:
         self._committed = end["n"]

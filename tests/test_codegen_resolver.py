@@ -22,7 +22,7 @@ from redshift_avro_spark.avroio.binary import (
     encode_datum,
 )
 from redshift_avro_spark.avroio.codegen import get_batch_resolver
-from tests.test_codegen_codec import arrow_schema, stream_rows
+from tests.test_codegen_codec import arrow_rows, arrow_schema, stream_rows
 
 
 def _pair(writer: dict, reader: dict):
@@ -38,15 +38,15 @@ def _assert_parity(writer: dict, reader: dict, rows: list[dict]):
     want = [res(BinaryReader(b)) for b in blobs]
     br = get_batch_resolver(wj, rj, "spark")
     assert br is not None, "codegen declined"
-    got, end = stream_rows(br, payload, len(blobs))
+    types = arrow_schema(rs)
+    got, end = stream_rows(br, payload, len(blobs), types)
     assert end == len(payload)
-    assert got == want
+    assert got == arrow_rows(want, types)
     outs = br.new_columns()
     br.decode_blobs(blobs, outs, False)
-    types = arrow_schema(rs)
     for i, name in enumerate(br.names):
         typ = types.field(name).type
-        got_col = br.column_array(i, outs[i], typ).to_pylist()
+        got_col = br.column_array(i, outs, typ).to_pylist()
         assert got_col == pa.array([r[name] for r in want], typ).to_pylist(), name
     return br
 
@@ -141,9 +141,9 @@ class TestKitchenEvolution:
         assert br is not None
         rows = _rows(5)
         blobs = [encode_datum(ws, r) for r in rows]
-        out, _ = stream_rows(br, b"".join(blobs), len(blobs))
+        out, _ = stream_rows(br, b"".join(blobs), len(blobs), arrow_schema(ws))
         res = compile_resolver(ws, ws, mode="spark")
-        assert out == [res(BinaryReader(b)) for b in blobs]
+        assert out == arrow_rows([res(BinaryReader(b)) for b in blobs], arrow_schema(ws))
 
 
 class TestUnionResolution:
@@ -163,7 +163,7 @@ class TestUnionResolution:
         # spark mode must surface member-structs keyed by READER branch order
         ws, rs, wj, rj = _pair(writer, reader)
         blobs = [encode_datum(ws, r) for r in rows]
-        out, _ = stream_rows(get_batch_resolver(wj, rj, "spark"), b"".join(blobs), len(blobs))
+        out, _ = stream_rows(get_batch_resolver(wj, rj, "spark"), b"".join(blobs), len(blobs), arrow_schema(rs))
         assert out[0]["u"] == {"member0": None, "member1": 5}
         assert out[1]["u"] == {"member0": "s", "member1": None}
         assert out[2]["u"] is None
@@ -270,9 +270,13 @@ class TestErrorsAndFallbacks:
         br = get_batch_resolver(wj, rj, "spark")
         if br is None:  # declined entirely — closure path covers it
             return
-        out, end = stream_rows(br, blob, 1)
+        want = [compile_resolver(ws, rs, mode="spark")(BinaryReader(blob))]
+        # Spark has no recursive type: spell out the value's depth
+        tail = pa.struct([("v", pa.int64()), ("next", pa.null())])
+        types = pa.schema([("v", pa.int64()), ("next", tail)])
+        out, end = stream_rows(br, blob, 1, types)
         assert end == len(blob)
-        assert out == [compile_resolver(ws, rs, mode="spark")(BinaryReader(blob))]
+        assert out == arrow_rows(want, types)
 
     def test_truncated_input_same_error(self):
         from redshift_avro_spark.avroio.binary import AvroDecodeError
@@ -285,6 +289,23 @@ class TestErrorsAndFallbacks:
 
 
 class TestSkipFastPaths:
+    @pytest.mark.parametrize("dropped", ["boolean", "float", "double", {"type": "fixed", "name": "F", "size": 3}])
+    def test_truncated_skipped_fixed_width_field_raises(self, dropped):
+        """A datum cut inside a writer-only fixed-width field is
+        truncated input on both tiers, not a clean row."""
+        from redshift_avro_spark.avroio.binary import AvroDecodeError
+
+        writer = {"type": "record", "name": "S", "fields": [{"name": "keep", "type": "long"}, {"name": "drop", "type": dropped}]}
+        reader = {"type": "record", "name": "S", "fields": [{"name": "keep", "type": "long"}]}
+        ws, rs, wj, rj = _pair(writer, reader)
+        value = {"boolean": True, "float": 1.5, "double": 2.5}.get(str(dropped), b"abc")
+        blob = encode_datum(ws, {"keep": 7, "drop": value})[:-1]
+        with pytest.raises(AvroDecodeError):
+            compile_resolver(ws, rs, mode="spark")(BinaryReader(blob))
+        br = get_batch_resolver(wj, rj, "spark")
+        with pytest.raises(AvroDecodeError):
+            br.decode_stream(blob, 0, 1, br.new_columns())
+
     def test_skipped_block_with_bytesize_hint(self):
         """Writer-only array encoded with the negative-count byte-size
         form must be skipped via the size hint."""
@@ -319,6 +340,6 @@ class TestSkipFastPaths:
         blob = w.getvalue()
         want = compile_resolver(ws, rs, mode="spark")(BinaryReader(blob))
         br = get_batch_resolver(wj, rj, "spark")
-        out, end = stream_rows(br, blob, 1)
+        out, end = stream_rows(br, blob, 1, arrow_schema(rs))
         assert end == len(blob)
         assert out == [want] == [{"keep": "kept"}]

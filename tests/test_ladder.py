@@ -25,6 +25,7 @@ from redshift_avro_spark.avroio.binary import (
     compile_resolver,
     encode_datum,
 )
+from redshift_avro_spark.avroio.codegen import BatchDecoder
 from redshift_avro_spark.avroio.convert import avro_to_spark_type, nullable_struct
 from redshift_avro_spark.avroio.ladder import LadderDecoder, arrow_spans, get_decoder, get_encoder
 from redshift_avro_spark.avroio.schema_model import parse_schema
@@ -151,7 +152,7 @@ def _case(shape: str):
 def _tier(dec) -> str:
     if dec._vector is not None:
         return "vector"
-    return "generated" if dec._generated is not None else "closure"
+    return "generated" if isinstance(dec._rows, BatchDecoder) else "closure"
 
 
 def _arrow_columns(rows: list, arrow_schema) -> dict:
@@ -164,7 +165,7 @@ def test_shape_picks_its_tier(shape):
     dec, *_, tier = _case(shape)
     assert _tier(dec) == tier
     if shape == "wide":  # codegen declines: a failed vector batch falls to closures
-        assert dec._generated is None and dec._closure is not None
+        assert not isinstance(dec._rows, BatchDecoder)
 
 
 def _shared_spans(blobs: list):

@@ -7,6 +7,7 @@ import datetime as dt
 import json
 from decimal import Decimal
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -414,6 +415,7 @@ NAN_SCHEMAS = {
     },
 }
 NAN_SITES = [
+    "read_avro",
     "from_avro",
     "from_avro_with_errors",
     "from_avro_single_object",
@@ -427,7 +429,7 @@ TS_SCHEMA = {
 }
 
 
-def _nan_column(spark, site: str, schema: dict, datum: dict):
+def _nan_column(spark, site: str, schema: dict, datum: dict, tmp_path):
     """One datum through ``site`` → a one-row frame of its ``d``."""
     import struct as _struct
 
@@ -441,6 +443,13 @@ def _nan_column(spark, site: str, schema: dict, datum: dict):
 
     parsed = parse_schema(schema)
     blob = encode_datum(parsed, datum)
+    if site == "read_avro":
+        from redshift_avro_spark.sources import read_avro
+
+        d = tmp_path / "nan_site"
+        d.mkdir()
+        (d / "nan.avro").write_bytes(write_container([datum], parsed))
+        return read_avro(spark, str(d)).select("d")
     if site == "unwrap_kpl_spring_avro":
         agg = envelopes.encode_kpl_aggregate(
             envelopes.KplAggregate(
@@ -478,13 +487,16 @@ class TestArrowBoundary:
         with open(tmp_path / "nan.avro", "wb") as fh:
             fh.write(write_container([datum], parse_schema(schema)))
         want = [repr(r.d) for r in read_avro(spark, str(tmp_path)).select("d").collect()]
-        got = [repr(r.d) for r in _nan_column(spark, site, schema, datum).collect()]
+        got = [repr(r.d) for r in _nan_column(spark, site, schema, datum, tmp_path).collect()]
         assert got == want == ["nan"]
 
-    def test_timestamps_ignore_session_time_zone(self, spark):
+    def test_timestamps_ignore_session_time_zone(self, spark, tmp_path):
         from redshift_avro_spark.avroio import encode_datum
+        from redshift_avro_spark.sources import read_avro
+        from redshift_avro_spark.sources.columns import from_avro_with_errors
 
         parsed = parse_schema(TS_SCHEMA)
+        (tmp_path / "ts.avro").write_bytes(write_container([{"ts": 0}], parsed))
         blob = bytearray(encode_datum(parsed, {"ts": 0}))
         cell = bytearray(write_container([{"ts": 0}], parsed))
         old_tz = spark.conf.get("spark.sql.session.timeZone")
@@ -492,6 +504,12 @@ class TestArrowBoundary:
         try:
             blobs = spark.createDataFrame([(blob,)], "p binary")
             got = blobs.select(F.unix_micros(from_avro("p", TS_SCHEMA).ts).alias("us")).collect()
+            assert [r.us for r in got] == [0]
+            got = blobs.select(
+                F.unix_micros(from_avro_with_errors("p", TS_SCHEMA).record.ts).alias("us")
+            ).collect()
+            assert [r.us for r in got] == [0]
+            got = read_avro(spark, str(tmp_path)).select(F.unix_micros("ts").alias("us")).collect()
             assert [r.us for r in got] == [0]
             cells = spark.createDataFrame([(cell,)], "c binary")
             got = (
@@ -624,3 +642,106 @@ def test_unknown_decode_mode_is_rejected(spark, site):
             build(typo)
     for mode in ("permissive", "FailFast"):
         assert build(mode) is not None
+
+
+WITH_ERRORS_SCHEMAS = {
+    # vector tier, generated tier, generated resolver
+    "flat": (
+        {"type": "record", "name": "E", "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "d", "type": "double"},
+            {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}},
+            {"name": "s", "type": ["null", "string"]},
+        ]},
+        None,
+    ),
+    "nested": (
+        {"type": "record", "name": "E", "fields": [
+            {"name": "id", "type": "long"},
+            {"name": "d", "type": "double"},
+            {"name": "xs", "type": {"type": "array", "items": "double"}},
+            {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+        ]},
+        None,
+    ),
+    "evolved": (
+        {"type": "record", "name": "E", "fields": [
+            {"name": "id", "type": "int"},
+            {"name": "d", "type": "double"},
+        ]},
+        {"type": "record", "name": "E", "fields": [
+            {"name": "d", "type": "double"},
+            {"name": "id", "type": "long"},
+            {"name": "tag", "type": "string", "default": "t"},
+        ]},
+    ),
+}
+
+
+def _with_errors_cells(shape: str, case: str) -> list:
+    import datetime as _dt
+
+    from redshift_avro_spark.avroio import encode_datum
+
+    writer = parse_schema(WITH_ERRORS_SCHEMAS[shape][0])
+    names = {f.name for f in writer.fields}
+
+    def datum(i, d=None):
+        row = {"id": i, "d": i / 4 if d is None else d, "s": None if i % 2 else f"s{i}", "xs": [i / 2] * (i % 3)}
+        row["ts"] = _dt.datetime(1969, 12, 31, 23, 0) + _dt.timedelta(hours=i)
+        return encode_datum(writer, {k: v for k, v in row.items() if k in names})
+
+    cells = [datum(i) for i in range(6)]
+    if case == "null":
+        cells[2] = None
+    elif case == "poisoned":
+        cells[1] = b"\xff\xff\xff\xff\xff\xff\xff\xff\xff\xff\xff"
+        cells[4] = cells[4][:-1]
+    elif case == "nan":
+        cells = [datum(i, float("nan") if i % 2 else float("-inf")) for i in range(6)]
+    return cells
+
+
+@pytest.mark.parametrize("case", ["clean", "null", "poisoned", "nan"])
+@pytest.mark.parametrize("shape", list(WITH_ERRORS_SCHEMAS))
+def test_with_errors_batch_matches_the_row_loop(shape, case):
+    """``from_avro_with_errors``' per-batch body decodes through the
+    ladder and gives what the per-row closure loop gives: the same
+    records, the same NULL-cell and exception texts."""
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    from redshift_avro_spark.avroio.binary import BinaryReader, compile_decoder, compile_resolver
+    from redshift_avro_spark.avroio.convert import avro_to_spark_type, nullable_struct
+    from redshift_avro_spark.avroio.ladder import get_decoder
+    from redshift_avro_spark.sources.columns import _with_errors_batch
+
+    writer, reader = WITH_ERRORS_SCHEMAS[shape]
+    wj = json.dumps(parse_schema(writer).to_json())
+    rj = json.dumps(parse_schema(reader).to_json()) if reader else None
+    wrapped = T.StructType([
+        T.StructField("record", nullable_struct(avro_to_spark_type(reader or writer)), True),
+        T.StructField("_error", T.StringType(), True),
+    ])
+    fields = list(to_arrow_type(wrapped))
+    arr = pa.array(_with_errors_cells(shape, case), type=pa.binary())
+    got = _with_errors_batch(get_decoder(wj, rj), wj, rj, arr.slice(1), fields)
+    fn = (
+        compile_resolver(parse_schema(writer), parse_schema(reader), mode="spark")
+        if reader
+        else compile_decoder(parse_schema(writer), mode="spark")
+    )
+    recs, errs = [], []
+    for blob in arr.slice(1).to_pylist():
+        try:
+            recs.append(None if blob is None else fn(BinaryReader(blob)))
+            errs.append("null input cell" if blob is None else None)
+        except Exception as ex:  # noqa: BLE001
+            recs.append(None)
+            errs.append(f"{type(ex).__name__}: {ex}")
+    want = pa.StructArray.from_arrays(
+        [pa.array(recs, type=fields[0].type, from_pandas=False), pa.array(errs, type=pa.string())],
+        fields=fields,
+    )
+    assert got.type == want.type
+    assert repr(got.to_pylist()) == repr(want.to_pylist())
+    assert (got.field(1).null_count == len(got)) == (case in ("clean", "nan"))

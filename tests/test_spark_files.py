@@ -11,8 +11,10 @@ from decimal import Decimal
 import pytest
 from pyspark.sql import functions as F
 
-from redshift_avro_spark.avroio import parse_schema, write_container
+from redshift_avro_spark.avroio import ContainerReader, ContainerWriter, parse_schema, write_container
+from redshift_avro_spark.avroio.container import iter_file_split
 from redshift_avro_spark.sources import read_avro, write_avro
+from redshift_avro_spark.sources.files import _plan_splits, register_avro_datasource
 
 USER_SCHEMA = parse_schema(
     {
@@ -114,6 +116,128 @@ class TestRead:
         row = df.orderBy("name").first()
         assert row.tier == "free"
         assert df.schema["favorite_number"].dataType.typeName() == "long"
+
+
+ORDER = {
+    "type": "record",
+    "name": "Order",
+    "fields": [
+        {"name": "id", "type": "long"},
+        {
+            "name": "customer",
+            "type": [
+                "null",
+                {"type": "record", "name": "Customer", "fields": [
+                    {"name": "name", "type": "string"},
+                    {"name": "email", "type": ["null", "string"]},
+                ]},
+            ],
+        },
+        {
+            "name": "items",
+            "type": {"type": "array", "items": {"type": "record", "name": "Item", "fields": [
+                {"name": "sku", "type": "string"},
+                {"name": "qty", "type": "int"},
+            ]}},
+        },
+        {"name": "tags", "type": {"type": "map", "values": "long"}},
+    ],
+}
+ORDER_EVOLVED = {
+    **ORDER,
+    "fields": [f for f in ORDER["fields"] if f["name"] != "tags"]
+    + [{"name": "channel", "type": "string", "default": "web"}],
+}
+
+
+@pytest.fixture(scope="module")
+def nested_dir(tmp_path_factory):
+    d = tmp_path_factory.mktemp("nested_avro")
+    for fi in range(2):
+        rows = [
+            {
+                "id": fi * 10_000 + i,
+                "customer": None if i % 5 == 0 else {"name": f"c{i}", "email": None if i % 2 else f"c{i}@x"},
+                "items": [{"sku": f"s{i}.{j}", "qty": j} for j in range(i % 4)],
+                "tags": {f"t{j}": i * j for j in range(i % 3)},
+            }
+            for i in range(1500)
+        ]
+        blob = write_container(rows, ORDER, codec="deflate", sync_interval=2048)
+        (d / f"part-{fi}.avro").write_bytes(blob)
+    return str(d)
+
+
+class TestReadDispatch:
+    """``read_avro`` plans splits on the driver and decodes them in one
+    ``mapInArrow`` stage; ``spark.read.format("avro_py")`` reads the same
+    files through the Python DataSource. Both give the same frame."""
+
+    @pytest.mark.parametrize("case", ["multi_split", "evolved", "nested", "nested_evolved"])
+    def test_read_avro_matches_the_data_source(self, spark, avro_dir, nested_dir, case):
+        reader = {
+            "evolved": {
+                "type": "record",
+                "name": "User",
+                "namespace": "example.avro",
+                "fields": [
+                    {"name": "favorite_number", "type": ["null", "long"]},
+                    {"name": "name", "type": "string"},
+                    {"name": "tier", "type": "string", "default": "free"},
+                ],
+            },
+            "nested_evolved": ORDER_EVOLVED,
+        }.get(case)
+        path = nested_dir if case.startswith("nested") else avro_dir
+        split = 4096 if case == "multi_split" else 1 << 20
+        got = read_avro(spark, path, reader_schema=reader, split_size=split)
+        register_avro_datasource(spark)
+        fmt = spark.read.format("avro_py").option("splitSize", str(split))
+        if reader is not None:
+            fmt = fmt.option("avroSchema", json.dumps(reader))
+        want = fmt.load(path)
+        assert got.schema == want.schema
+        assert got.rdd.getNumPartitions() == want.rdd.getNumPartitions()
+        rows = sorted(repr(r) for r in got.collect())
+        assert rows == sorted(repr(r) for r in want.collect())
+        assert len(rows) == (3000 if case.startswith("nested") else 6000)
+
+    def test_read_avro_plan_is_map_in_arrow_over_range(self, spark, avro_dir):
+        plan = read_avro(spark, avro_dir)._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" in plan and "Range" in plan
+        register_avro_datasource(spark)
+        scan = spark.read.format("avro_py").load(avro_dir)._jdf.queryExecution().executedPlan().toString()
+        assert "MapInArrow" not in scan
+        # the DataSource's scan node names the source; read_avro's plan has none
+        assert "avro_py" in scan.lower() and "avro_py" not in plan.lower()
+
+    def test_split_table_holds_each_writer_schema_once(self, avro_dir):
+        import pickle
+
+        splits = _plan_splits(sorted(os.path.join(avro_dir, f) for f in os.listdir(avro_dir)), 4096)
+        assert len(splits) > 3
+        writer_json = splits[0].schema_json
+        assert all(s.schema_json is writer_json for s in splits)
+        assert pickle.dumps(splits).count(writer_json.encode("utf-8")) == 1
+
+    def test_header_over_64_kib(self, spark, tmp_path):
+        d = tmp_path / "big_header"
+        d.mkdir()
+        path = d / "part-0.avro"
+        rows = [{"name": f"u{i}", "favorite_number": i, "favorite_color": None} for i in range(3)]
+        with open(path, "wb") as fh, ContainerWriter(
+            fh, USER_SCHEMA, extra_meta={"app.lineage": b"y" * 100_000}
+        ) as w:
+            for r in rows:
+                w.append(r)
+        with open(path, "rb") as fh:
+            assert list(ContainerReader(fh)) == rows
+        assert list(iter_file_split(str(path), 0, path.stat().st_size)) == rows
+        names = [f"u{i}" for i in range(3)]
+        assert sorted(r.name for r in read_avro(spark, str(d)).collect()) == names
+        register_avro_datasource(spark)
+        got = spark.read.format("avro_py").load(str(d)).collect()
+        assert sorted(r.name for r in got) == names
 
 
 class TestWrite:

@@ -108,6 +108,23 @@ def test_stream_matches_batch_read(spark, tmp_path):
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, batch.collect()))
 
 
+def test_stream_reads_header_over_64_kib(spark, tmp_path):
+    """A landed file whose header (metadata map) is larger than the
+    first 64 KiB of the file still plans and decodes."""
+    from redshift_avro_spark.avroio.container import ContainerWriter
+
+    register_avro_datasource(spark)
+    feed = str(tmp_path / "landing_big_header")
+    os.makedirs(feed)
+    with open(os.path.join(feed, "chunk-0000.avro"), "wb") as fh, ContainerWriter(
+        fh, SCHEMA, extra_meta={"app.lineage": b"y" * 100_000}
+    ) as w:
+        for i in range(3):
+            w.append({"tick_id": i, "label": f"t{i}"})
+    got = _drain(spark, feed, str(tmp_path / "ckpt_big"), f"ticks_{uuid.uuid4().hex[:8]}")
+    assert sorted(map(tuple, got.collect())) == [(i, f"t{i}") for i in range(3)]
+
+
 def test_max_files_per_batch_bounds_microbatches(spark, tmp_path):
     register_avro_datasource(spark)
     feed = str(tmp_path / "landing3")
